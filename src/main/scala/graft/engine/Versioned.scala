@@ -259,6 +259,18 @@ object Versioned {
   private[graft] def stageDirVersion(name: String): Option[Long] =
     scala.util.Try(name.takeWhile(_ != '_').toLong).toOption
 
+  /** An EMPTY frame at the schema of `man`'s newest-staged entry — the
+    * authoritative schema under the batch-wins evolution rule — read
+    * from that ONE entry, so an all-pruned read or a schema probe costs
+    * one directory listing, not a metadata walk over every partition. */
+  private[graft] def emptyFrame(s: SparkSession, dir: String,
+                                man: Seq[(String, String)],
+                                partCol: Option[String]): DataFrame = {
+    val newest = man.maxBy(e =>
+      stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
+    readEntries(s, dir, Seq(newest), partCol).limit(0)
+  }
+
   /** All committed versions, ascending — one bounded metadata listing.
     * May have gaps: a crashed or race-losing writer burns its version
     * number (see [[nextVersion]]), so consumers iterate THIS list, never
@@ -1280,26 +1292,15 @@ object Versioned {
     finally out.close()
   }
 
-  /** The COMMITTED zone-map sidecar of version `v` (resolved through the
-    * marker token), empty if the winning attempt wrote none. Reads the
-    * single-key (3-field) form; multi-column lines are skipped — a
-    * multi-column table is read through [[readStatsMulti]]. */
-  def readStats(s: SparkSession, dir: String,
-                v: Long): Map[String, (Long, Long)] =
-    readStatsLines(s, dir, v).flatMap { line =>
-      val parts = line.split('\t')
-      if (parts.length == 3)
-        Some(parts(0) -> (parts(1).toLong, parts(2).toLong))
-      else None
-    }.toMap
-
   /** Per-partition, per-column committed bounds of version `v` —
-    * partition dir name → column → (lo, hi). Legacy 3-field lines
-    * surface under the column name `__key__` so a single-key table is
-    * readable through the multi API too. Dictionary lines (see
-    * [[readStatsDict]]) ride the same sidecar and are skipped here —
-    * each reader takes the line forms it understands (stats are an
-    * optimization, never a correctness gate). */
+    * partition dir name → column → (lo, hi) of the committed stats
+    * sidecar (resolved through the marker token; empty if the winning
+    * attempt wrote none). Unnamed legacy 3-field lines, which writers
+    * no longer produce, surface under the column name `__key__` — no
+    * pruning hint names that column, so they never prune. Dictionary
+    * lines (see [[readStatsDict]]) ride the same sidecar and are
+    * skipped here — each reader takes the line forms it understands
+    * (stats are an optimization, never a correctness gate). */
   def readStatsMulti(s: SparkSession, dir: String,
                      v: Long): Map[String, Map[String, (Long, Long)]] =
     readStatsLines(s, dir, v).flatMap { line =>

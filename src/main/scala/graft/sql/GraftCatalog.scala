@@ -42,16 +42,17 @@ import graft.ops.MergeOps
   * catalog resolves `graft.<name>` to the store at `<root>/<name>`;
   * the table's `ScanBuilder` takes Spark's pushed `Filter`s
   * (`SupportsPushDownFilters`) and pruned columns
-  * (`SupportsPushDownRequiredColumns`); the scan routes equality/IN
-  * filters into the dictionary+bloom probes, integral comparisons into
-  * the range zone maps, and partition-column equality into the
-  * manifest names themselves, then reads ONLY the surviving entries —
-  * through [[graft.engine.Versioned.readEntriesLive]], so MOR deletes
-  * apply exactly as the Scala path. The scan hands Spark a `V1Scan`
-  * relation (the JDBC-connector migration idiom) whose inner plan is a
-  * plain pruned parquet read: whole-stage codegen, vectorization, and
-  * parquet row-group pushdown (via the typed residuals of
-  * [[graft.ops.MergeOps.typedInResidual]]) all apply inside it.
+  * (`SupportsPushDownRequiredColumns`); the shared extractor
+  * ([[graft.ops.MergeOps.filterPruneHints]]) turns equality/IN filters
+  * into dictionary+bloom probes (and manifest-name probes on the
+  * partition column) and integral comparisons into range zone-map
+  * probes, and the scan reads ONLY the surviving entries through the
+  * same pruned reader as [[graft.ops.MergeOps.readCorpusSkipPruned]] —
+  * live, so MOR deletes apply exactly as on the Scala path. The scan
+  * hands Spark a `V1Scan` relation (the JDBC-connector migration idiom)
+  * whose inner plan is a plain pruned parquet read: whole-stage
+  * codegen, vectorization, and parquet row-group pushdown (via the
+  * reader's typed residuals) all apply inside it.
   *
   * Contract kept everywhere: pruning is ADVISORY — every pushed filter
   * is also returned to Spark as a post-scan filter, so a sidecar false
@@ -554,10 +555,8 @@ private[sql] object ExtraCols {
     val declared = read(spark, dir).fieldNames
     if (declared.isEmpty) Nil
     else {
-      val newest = man.maxBy(e =>
-        Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-      val inFiles = Versioned.readEntries(spark, dir, Seq(newest),
-        partCol).schema.fieldNames
+      val inFiles =
+        Versioned.emptyFrame(spark, dir, man, partCol).schema.fieldNames
       declared.filterNot(n =>
         inFiles.exists(_.equalsIgnoreCase(n))).toSeq
     }
@@ -791,10 +790,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
     * `ALTER TABLE ADD COLUMNS` before a write carries them; reads
     * null-fill, the next carrying write materializes). */
   override val schema: StructType = {
-    val newest = man.maxBy(e =>
-      Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-    val fromFiles =
-      Versioned.readEntries(spark, dir, Seq(newest), partCol).schema
+    val fromFiles = Versioned.emptyFrame(spark, dir, man, partCol).schema
     val declared = ExtraCols.read(spark, dir).fields.filterNot(f =>
       fromFiles.fieldNames.exists(_.equalsIgnoreCase(f.name)))
     val masked = ExtraCols.dropped(spark, dir)
@@ -1045,12 +1041,14 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
         k.toLowerCase(java.util.Locale.ROOT) -> v })
 }
 
-/** Routes Spark's pushed filters into prune specs: equality/IN on any
+/** Routes Spark's pushed filters into prune specs through the shared
+  * rule, [[graft.ops.MergeOps.filterPruneHints]]: equality/IN on any
   * column → the dictionary/bloom `values` probes (and the manifest-name
   * tier when the column IS the partition key); integral comparisons →
-  * the range zone maps. EVERY filter is returned to Spark for
-  * post-scan evaluation — pruning is advisory, correctness never rides
-  * on a sidecar. */
+  * the range zone maps. Every filter except a consumed partition filter
+  * (see `exactPartitionFilter`) is returned to Spark for post-scan
+  * evaluation — pruning is advisory, correctness never rides on a
+  * sidecar. */
 class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
                        man: Seq[(String, String)],
                        partCol: Option[String], fullSchema: StructType,
@@ -1065,65 +1063,11 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
   private var ranges: Seq[(String, Long, Long)] = Nil
   private var values: Seq[(String, Seq[String])] = Nil
 
-  /** Render a pushed literal EXACTLY as the sidecar writer rendered the
-    * column: the dict/bloom sidecars record `col.cast("string")` values
-    * (and the manifest names hold Spark's own partition-value
-    * rendering), so the probe must go through Spark's `Cast` too —
-    * `String.valueOf` disagrees for timestamps (`java.time.Instant`
-    * stringifies ISO-8601 `2026-08-16T00:00:00Z`, `java.sql.Timestamp`
-    * appends `.0`; the recorded cast form is `2026-08-16 00:00:00`),
-    * and a rendering mismatch is a FALSE-NEGATIVE prune — silently
-    * missing rows, the one failure advisory pruning cannot absorb. A
-    * value `Cast` cannot render returns None, which withholds the
-    * probe: no pruning, never a wrong answer. */
-  private def str(v: Any): Option[String] = v match {
-    case null => None
-    case s: String => Some(s)
-    case other =>
-      scala.util.Try {
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-        val c = Cast(Literal(other),
-          org.apache.spark.sql.types.StringType,
-          Option(spark.sessionState.conf.sessionLocalTimeZone))
-        Option(c.eval(null)).map(_.toString)
-      }.toOption.flatten
-  }
-
-  private def longOf(v: Any): Option[Long] = v match {
-    case i: java.lang.Integer => Some(i.longValue)
-    case l: java.lang.Long => Some(l.longValue)
-    case s: java.lang.Short => Some(s.longValue)
-    case b: java.lang.Byte => Some(b.longValue)
-    case _ => None
-  }
-
-  /** Fold one filter into the prune specs; true if it contributed. */
-  private def accept(f: Filter): Boolean = f match {
-    case EqualTo(c, v) =>
-      val asVal = str(v).map(s => values :+= ((c, Seq(s)))).isDefined
-      longOf(v).foreach(n => ranges :+= ((c, n, n)))
-      asVal
-    case In(c, vs) if vs != null && vs.nonEmpty && vs.forall(_ != null) =>
-      // all-or-nothing: probing a SUBSET of the IN values would prune a
-      // partition holding only an unrendered value — a false negative
-      val rendered = vs.flatMap(str)
-      if (rendered.length == vs.length) {
-        values :+= ((c, rendered.toSeq)); true
-      } else false
-    case GreaterThan(c, v) =>
-      longOf(v).filter(_ < Long.MaxValue).exists { n =>
-        ranges :+= ((c, n + 1, Long.MaxValue)); true }
-    case GreaterThanOrEqual(c, v) =>
-      longOf(v).exists { n => ranges :+= ((c, n, Long.MaxValue)); true }
-    case LessThan(c, v) =>
-      longOf(v).filter(_ > Long.MinValue).exists { n =>
-        ranges :+= ((c, Long.MinValue, n - 1)); true }
-    case LessThanOrEqual(c, v) =>
-      longOf(v).exists { n => ranges :+= ((c, Long.MinValue, n)); true }
-    case And(l, r) =>
-      val a = accept(l); val b = accept(r); a || b
-    case _ => false
-  }
+  /** The hints one pushed filter contributes, by the shared rule. */
+  private def hints(f: Filter)
+      : (Seq[(String, Long, Long)], Seq[(String, Seq[String])]) =
+    MergeOps.filterPruneHints(f,
+      Option(spark.sessionState.conf.sessionLocalTimeZone))
 
   /** A partition-column equality/IN is CONSUMED (not returned for
     * post-scan re-evaluation) exactly when the manifest is SINGLE-
@@ -1142,11 +1086,10 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
         man.forall(_._1.toLowerCase(java.util.Locale.ROOT)
           .startsWith(pc.toLowerCase(java.util.Locale.ROOT) + "=")))
     f match {
-      case EqualTo(c, v) =>
-        singleLayoutOn(c) && v != null && str(v).isDefined
-      case In(c, vs) =>
-        singleLayoutOn(c) && vs != null && vs.nonEmpty &&
-          vs.forall(_ != null) && vs.flatMap(str).length == vs.length
+      // consumed only when the name tier really applies it: the
+      // filter's value hint exists (see MergeOps.filterPruneHints)
+      case EqualTo(c, _) => singleLayoutOn(c) && hints(f)._2.nonEmpty
+      case In(c, _) => singleLayoutOn(c) && hints(f)._2.nonEmpty
       // Spark plants IsNotNull beside every partition equality: a
       // `col=value` dir name IS a non-null witness for every row
       // inside, except the default-partition dir — consuming this
@@ -1169,7 +1112,11 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.filter(accept)
+    val perFilter = filters.map(f => f -> hints(f))
+    accepted = perFilter.collect {
+      case (f, (r, v)) if r.nonEmpty || v.nonEmpty => f }
+    ranges = perFilter.toSeq.flatMap(_._2._1)
+    values = perFilter.toSeq.flatMap(_._2._2)
     consumedNotNull = filters.collect {
       case f @ IsNotNull(_) if exactPartitionFilter(f) => partCol.get
     }.toSet
@@ -1315,8 +1262,8 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     if ((minMaxCols.exists(c => isPart(c)) || groupCol.isDefined) &&
         !singleLayout)
       return None
-    val kept = MergeOps.skipEntries(spark, dir, version, scanMan,
-      ranges, values, Map.empty, Map.empty, Map.empty)
+    val kept = MergeOps.skipEntries(scanMan, ranges, values,
+      Map.empty, Map.empty, Map.empty)
     // exact doomed-row count per kept entry, from the dv sidecars
     // alone: every line fully position-mapped, positions unioned per
     // file across stacked generations (bare legacy names qualified by
@@ -1584,8 +1531,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
       : org.apache.spark.sql.connector.read.Statistics = {
     val fsys = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lazy val nameKept = MergeOps.skipEntries(spark, dir, version, man,
-      ranges, values, Map.empty, Map.empty, Map.empty)
+    lazy val nameKept = MergeOps.skipEntries(man, ranges, values,
+      Map.empty, Map.empty, Map.empty)
     val bytes = scala.util.Try {
       nameKept.map(_._2).distinct
         .map(rel => fsys.getContentSummary(new Path(s"$dir/$rel"))
@@ -1688,37 +1635,14 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
     override def schema: StructType = required
 
     override def buildScan(): RDD[Row] = {
-      // sidecars load lazily and only for probed columns; partition-key
-      // values additionally prune on the manifest names themselves
-      val stats =
-        if (ranges.nonEmpty) Versioned.readStatsMulti(spark, dir, version)
-        else Map.empty[String, Map[String, (Long, Long)]]
-      val probed = values.map(_._1).toSet
-      val dicts =
-        if (values.nonEmpty) Versioned.readStatsDict(spark, dir, version)
-        else Map.empty[String, Map[String, Set[String]]]
-      val blooms =
-        if (values.nonEmpty)
-          Versioned.readStatsBloom(spark, dir, version, Some(probed))
-        else Map.empty[String, Map[String, graft.engine.LazyBloom]]
-      val kept = MergeOps.skipEntries(spark, dir, version, man,
-        ranges, values, stats, dicts, blooms)
+      // the shared pruned reader: sidecars load only for the probed
+      // tiers and columns, partition-key values also prune on the
+      // manifest names, and the typed residuals run INSIDE the inner
+      // plan so parquet row-group stats skip within survivors; Spark
+      // re-applies the original filters post-scan
+      val (kept, filtered) = MergeOps.skipPrunedRead(spark, dir, version,
+        man, partCol, ranges, values)
       GraftScanObservable.lastKeptDirs = kept.map(_._1)
-      val base =
-        if (kept.isEmpty) {
-          val newest = man.maxBy(e =>
-            Versioned.stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-          Versioned.readEntries(spark, dir, Seq(newest), partCol).limit(0)
-        }
-        else Versioned.readEntriesLive(spark, dir, version, kept, partCol)
-      // typed residuals INSIDE the inner plan: parquet row-group stats
-      // skip within survivors; Spark re-applies the originals post-scan
-      val preds =
-        ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi } ++
-          values.map { case (c, vals) =>
-            MergeOps.typedInResidual(base, c, vals) }
-      val filtered =
-        if (preds.nonEmpty) base.where(preds.reduce(_ && _)) else base
       // declared-but-unmaterialized columns (ALTER TABLE ADD COLUMNS,
       // see ExtraCols) null-fill here: no kept file carries them yet
       val withDeclared = required.fields.toSeq.foldLeft(filtered) {

@@ -551,8 +551,8 @@ class ProtocolModelSpec extends SparkTestBase {
       // less repair commit) produced the current version
       val lo = rnd.nextInt(30).toLong
       val hi = lo + rnd.nextInt(15).toLong
-      val prunedGot = MergeOps.readCorpusPruned(spark, dir, "p",
-          Seq(("k", lo, hi))).select("k", "v", "p").collect()
+      val prunedGot = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+          ranges = Seq(("k", lo, hi))).select("k", "v", "p").collect()
         .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap
       val prunedWant = model.current.filter { case (k, _) => k >= lo && k <= hi }
       assert(prunedGot == prunedWant,

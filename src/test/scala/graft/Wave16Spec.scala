@@ -218,8 +218,9 @@ class Wave16Spec extends SparkTestBase {
     // three key-range partitions: [1,10] in A, [11,20] in B, [21,30] in C
     MergeOps.mergeUpsert(spark, dir,
       Seq((1L, "A"), (10L, "A"), (11L, "B"), (20L, "B"), (21L, "C"),
-          (30L, "C")).toDF("k", "p"), "k", "p", statsKey = Some("k"))
-    val pruned = MergeOps.readCorpusKeyPruned(spark, dir, "p", "k", 12L, 19L)
+          (30L, "C")).toDF("k", "p"), "k", "p", statsKeys = Seq("k"))
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      ranges = Seq(("k", 12L, 19L)))
     val rows = pruned.collect().map(_.getLong(0)).toSet
     assert(rows == Set[Long](),
       s"range 12..19 holds no keys (11 and 20 are outside): $rows")
@@ -229,8 +230,9 @@ class Wave16Spec extends SparkTestBase {
     assert(plan.contains("p=B"), "overlapping partition B must be read")
     // a merge into B refreshes its stats and keeps pruning correct
     MergeOps.mergeUpsert(spark, dir, Seq((15L, "B")).toDF("k", "p"),
-                         "k", "p", statsKey = Some("k"))
-    val after = MergeOps.readCorpusKeyPruned(spark, dir, "p", "k", 12L, 19L)
+                         "k", "p", statsKeys = Seq("k"))
+    val after = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      ranges = Seq(("k", 12L, 19L)))
       .collect().map(_.getLong(0)).toSet
     assert(after == Set(15L), s"post-merge pruned read: $after")
     // stats are an optimization, not a gate: a corpus without stats
@@ -239,7 +241,8 @@ class Wave16Spec extends SparkTestBase {
       .createTempDirectory("graft_zonemap_ns").toString
     MergeOps.mergeUpsert(spark, dir2,
       Seq((1L, "A"), (25L, "C")).toDF("k", "p"), "k", "p")
-    val ns = MergeOps.readCorpusKeyPruned(spark, dir2, "p", "k", 0L, 100L)
+    val ns = MergeOps.readCorpusSkipPruned(spark, dir2, "p",
+      ranges = Seq(("k", 0L, 100L)))
       .collect().map(_.getLong(0)).toSet
     assert(ns == Set(1L, 25L), s"stats-less corpus must read fully: $ns")
   }

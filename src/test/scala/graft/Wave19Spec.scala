@@ -189,8 +189,8 @@ class Wave19Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, rows(0L until 100L), "k", "b",
       statsKeys = Seq("a", "c"))                                    // v1
     def prune(aLo: Long, aHi: Long, cLo: Long, cHi: Long) =
-      MergeOps.readCorpusPruned(spark, dir, "b",
-        Seq(("a", aLo, aHi), ("c", cLo, cHi)))
+      MergeOps.readCorpusSkipPruned(spark, dir, "b",
+        ranges = Seq(("a", aLo, aHi), ("c", cLo, cHi)))
     // a ∈ [60,150] keeps k ∈ [20,50]; c ∈ [880,940] keeps k ∈ [20,40]
     // → intersection k ∈ [20,40] = buckets 2..4 of 10
     val got = prune(60, 150, 880, 940).select("k").collect()
@@ -226,10 +226,21 @@ class Wave19Spec extends SparkTestBase {
       .map(_.getLong(0)).toSet
     assert(afterK == ((20L to 40L).toSet - 25L),
       s"post-maintenance prune must reflect the merge, got $afterK")
-    // a single-key legacy table reads through the multi API as __key__
+    // an unnamed legacy 3-field line (no longer written; rewritten by
+    // hand here) reads through the multi API as __key__
     val dirL = freshDir("graft_legacyzone")
     MergeOps.mergeUpsert(spark, dirL, rows(0L until 30L), "k", "b",
-      statsKey = Some("a"))
+      statsKeys = Seq("a"))
+    val statsFile = graft.engine.Versioned
+      .committedSidecar(spark, dirL, 1L, "stats").get
+    val sfs = fsOf(dirL)
+    val named = graft.engine.Versioned.readStatsLines(spark, dirL, 1L)
+    sfs.delete(statsFile, false)
+    val out = sfs.create(statsFile, false)
+    try out.write(named.map(_.split('\t')).collect {
+        case Array(part, "a", lo, hi) => s"$part\t$lo\t$hi"
+      }.mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
     val sl = graft.engine.Versioned.readStatsMulti(spark, dirL, 1L)
     assert(sl("b=1")("__key__") == (30L, 57L),
       s"legacy 3-field lines must lift to __key__, got $sl")
@@ -243,8 +254,9 @@ class Wave19Spec extends SparkTestBase {
     val sn = graft.engine.Versioned.readStatsMulti(spark, dirN, 1L)
     assert(!sn("b=1").contains("a") && sn("b=1").contains("c"),
       s"all-null column must have no bounds, others keep theirs: $sn")
-    val nGot = MergeOps.readCorpusPruned(spark, dirN, "b",
-        Seq(("a", 0L, 20L))).select("k").collect().map(_.getLong(0)).toSet
+    val nGot = MergeOps.readCorpusSkipPruned(spark, dirN, "b",
+        ranges = Seq(("a", 0L, 20L))).select("k").collect()
+      .map(_.getLong(0)).toSet
     assert(nGot == (0L to 6L).toSet,
       s"boundless partitions are pruned by the RESIDUAL only, got $nGot")
   }
@@ -359,7 +371,8 @@ class Wave19Spec extends SparkTestBase {
     assert(s2("p=d1")("k") == (1L, 3L) && s2("p=d3")("k") == (7L, 9L) &&
       !s2.contains("p=d2"), s"stats carry, got $s2")
     // pruning still correct with the superset bounds
-    val pr = MergeOps.readCorpusPruned(spark, dir, "p", Seq(("k", 1L, 3L)))
+    val pr = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+        ranges = Seq(("k", 1L, 3L)))
       .select("k").collect().map(_.getLong(0)).toSet
     assert(pr == Set(1L, 3L))
     // CDC sees the row deletes as deletes — downstream consumers

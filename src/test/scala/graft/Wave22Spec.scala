@@ -30,8 +30,8 @@ class Wave22Spec extends SparkTestBase {
   }
 
   private def prunedKeys(dir: String, vals: Seq[String]): Set[Long] =
-    MergeOps.readCorpusDictPruned(spark, dir, "y",
-        Seq(("status", vals))).select("k")
+    MergeOps.readCorpusSkipPruned(spark, dir, "y",
+        values = Seq(("status", vals))).select("k")
       .collect().map(_.getLong(0)).toSet
 
   private def plainKeys(dir: String, vals: Seq[String]): Set[Long] =
@@ -56,8 +56,8 @@ class Wave22Spec extends SparkTestBase {
     assert(prunedKeys(dir, Seq("A", "C")) == plainKeys(dir, Seq("A", "C")))
     // a value nowhere recorded → every partition pruned, empty result
     // with the right schema
-    val none = MergeOps.readCorpusDictPruned(spark, dir, "y",
-      Seq(("status", Seq("Z"))))
+    val none = MergeOps.readCorpusSkipPruned(spark, dir, "y",
+      values = Seq(("status", Seq("Z"))))
     assert(none.count() == 0L && none.columns.contains("status"))
   }
 
@@ -85,9 +85,9 @@ class Wave22Spec extends SparkTestBase {
       (1L, 10L), "range reader must skip dict lines")
     assert(Versioned.readStatsDict(spark, dir2, 1L)("y=3")("status") ==
       Set("B"), "dict reader must skip range lines")
-    // both pruners work off the shared sidecar
-    assert(MergeOps.readCorpusPruned(spark, dir2, "y",
-      Seq(("k", 1L, 5L))).count() == 5L)
+    // the range and dictionary tiers both work off the shared sidecar
+    assert(MergeOps.readCorpusSkipPruned(spark, dir2, "y",
+      ranges = Seq(("k", 1L, 5L))).count() == 5L)
     assert(prunedKeys(dir2, Seq("C")) == (31L to 40L by 2).toSet)
   }
 

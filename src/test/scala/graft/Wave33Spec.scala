@@ -32,8 +32,8 @@ class Wave33Spec extends SparkTestBase {
     val blooms = Versioned.readStatsBloom(spark, dir, 1L)
     assert(blooms.size == 4 && blooms.values.forall(_.contains("k")),
       "every partition must have recorded a doc-level bloom on k")
-    val pruned = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("41"))))
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("41"))))
     val rows = pruned.collect().map(r => (r.getLong(0), r.get(2).toString))
     assert(rows.toSeq == Seq((41L, "1")))
     // the never-reads pin: input files ⊆ dirs of partitions whose bloom
@@ -68,12 +68,12 @@ class Wave33Spec extends SparkTestBase {
     assert(!blooms2.contains("p=2") && blooms2.size == 3,
       "the restaged partition's bloom line must drop")
     // 999 is only in the lineless partition: found via the always-read
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("999")))).collect()
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("999")))).collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(999L))
     // absent value: exact empty whatever the blooms said
-    val absent = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("123456789"))))
+    val absent = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("123456789"))))
     assert(absent.count() == 0L)
     assert(absent.columns.toSeq == Seq("k", "v", "p"))
   }
@@ -100,8 +100,8 @@ class Wave33Spec extends SparkTestBase {
     assert(b3.keySet == b2.keySet - "p=3",
       "retention must carry surviving partitions' bloom lines and drop " +
         "the retired partition's")
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("601", "42")))).collect()
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("601", "42")))).collect()
       .map(_.getLong(0)).toSeq.sorted
     assert(got == Seq(42L, 601L))
     Versioned.rollback(spark, dir, 2L)                               // v4
@@ -174,8 +174,8 @@ class Wave33Spec extends SparkTestBase {
     val b5 = Versioned.readStatsBloom(spark, dir, 5L)
     assert(b5.size == 4 &&
       b5("p=2")("k").mightContainLong(MergeOps.bloomProbeHash("42")))
-    val got = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("42", "41")))).collect().map(_.getLong(0)).toSeq
+    val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("42", "41")))).collect().map(_.getLong(0)).toSeq
     assert(got == Seq(42L))
   }
 }

@@ -59,11 +59,11 @@ class Wave35Spec extends SparkTestBase {
       s"bloom lines must re-key to the new layout, got ${b2.keySet}")
     assert(Versioned.readStatsMulti(spark, dir, 2L).keySet ==
       Set("q=E", "q=O"))
-    val pruned = MergeOps.readCorpusBloomPruned(spark, dir, "q",
-      Seq(("k", Seq("42")))).collect()
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "q",
+      values = Seq(("k", Seq("42")))).collect()
     assert(pruned.map(_.getLong(0)).toSeq == Seq(42L))
-    val ranged = MergeOps.readCorpusPruned(spark, dir, "q",
-      Seq(("k", 10L, 12L))).collect().map(_.getLong(0)).sorted
+    val ranged = MergeOps.readCorpusSkipPruned(spark, dir, "q",
+      ranges = Seq(("k", 10L, 12L))).collect().map(_.getLong(0)).sorted
     assert(ranged.toSeq == Seq(10L, 11L, 12L))
   }
 

@@ -41,8 +41,8 @@ class Wave36Spec extends SparkTestBase {
     val dir = freshDir("graft_typed_resid")
     MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p",
                          bloomKeys = Seq("k"))
-    val pruned = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("2", "23", "41"))))
+    val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("2", "23", "41"))))
     val plan = pruned.queryExecution.executedPlan.toString
     assert(!plan.contains("cast(k"),
       s"the residual must not cast the column:\n$plan")
@@ -87,12 +87,12 @@ class Wave36Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, corpus(100), "k", "p",
                          bloomKeys = Seq("k"))
     // mixed castable/uncastable: the uncastable value just drops
-    val mixed = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("41", "not-a-number"))))
+    val mixed = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("41", "not-a-number"))))
     assert(mixed.collect().map(_.getLong(0)).toSeq == Seq(41L))
     // all-uncastable: residual is false — exact empty, right schema
-    val none = MergeOps.readCorpusBloomPruned(spark, dir, "p",
-      Seq(("k", Seq("abc"))))
+    val none = MergeOps.readCorpusSkipPruned(spark, dir, "p",
+      values = Seq(("k", Seq("abc"))))
     assert(none.count() == 0L &&
       none.columns.toSeq == Seq("k", "v", "p"))
   }

@@ -37,7 +37,8 @@ class Wave56Spec extends SparkTestBase {
   test("predPruneHints: simple AND conjuncts extract; derived exprs, " +
        "ORs and rendering-unsafe literals decline") {
     val probe = spark.range(1).select(col("id").as("k"),
-      col("id").cast("double").as("v"), col("id").cast("string").as("s"))
+      col("id").cast("double").as("v"), col("id").cast("string").as("s"),
+      col("id").cast("int").as("i"))
     val (r1, v1) = MergeOps.predPruneHints(probe,
       col("k") >= 950 && col("v") > 1.5)
     assert(r1 == Seq(("k", 950L, Long.MaxValue)),
@@ -61,6 +62,83 @@ class Wave56Spec extends SparkTestBase {
     // IN is all-or-nothing
     val (_, v6) = MergeOps.predPruneHints(probe, col("s").isin("a", "b"))
     assert(v6 == Seq(("s", Seq("a", "b"))))
+    // a NARROWING cast wraps (non-ANSI): CAST(k AS INT) > 5 holds for
+    // k = -4294967286, so no bound on k itself may be extracted
+    for (p <- Seq(col("k").cast("int") > 5, col("k").cast("int") === 10,
+                  col("k").cast("int").isin(10, 11))) {
+      val (r, v) = MergeOps.predPruneHints(probe, p)
+      assert(r.isEmpty && v.isEmpty, s"narrowing cast must not hint: $p")
+    }
+    // a WIDENING cast unwraps to a bound on the column itself
+    val (r7, _) = MergeOps.predPruneHints(probe,
+      col("i").cast("long") > lit(5L))
+    assert(r7 == Seq(("i", 6L, Long.MaxValue)))
+    // FLOAT/DOUBLE literals never give a value hint (-0.0 = 0.0)
+    val (r8, v8) = MergeOps.predPruneHints(probe, col("v") === 0.0)
+    assert(r8.isEmpty && v8.isEmpty)
+  }
+
+  test("DELETE WHERE through a narrowing cast deletes the row the " +
+       "zone maps alone would have pruned") {
+    import spark.implicits._
+    val dir = freshDir("graft_prune_narrow")
+    // -4294967286 casts to INT 10 (wraps), so it satisfies the
+    // predicate although its partition's k bounds lie far below 5
+    MergeOps.mergeUpsert(spark, dir,
+      Seq((1L, 0L), (2L, 0L), (-4294967286L, 1L)).toDF("k", "b"), "k", "b",
+      statsKeys = Seq("k"))
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.ansi.enabled")
+    conf.set("spark.sql.ansi.enabled", "false")
+    try MergeOps.mergeDeleteWhere(spark, dir, col("k").cast("int") > 5, "b")
+    finally saved.fold(conf.unset("spark.sql.ansi.enabled"))(
+      conf.set("spark.sql.ansi.enabled", _))
+    val left = MergeOps.readCorpus(spark, dir, "b").select("k").collect()
+      .map(_.getLong(0)).toSet
+    assert(left == Set(1L, 2L), s"the wrapped hit row must be deleted: $left")
+  }
+
+  test("signed zero: WHERE v = 0.0 finds a -0.0 row through the SQL " +
+       "front door and through DELETE WHERE, dict and bloom tiers on v") {
+    import spark.implicits._
+    // the session caches the catalog with the root its first user set:
+    // every suite uses the JVM temp dir
+    val root = new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath
+    val dir = new java.io.File(root, "graft_w56_zero").getAbsolutePath
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+    // partition b holds only -0.0, whose dict/bloom rendering is "-0.0"
+    val rows = Seq((1L, 1.0, "a"), (2L, 2.0, "a"), (3L, -0.0, "b"))
+      .toDF("k", "v", "p")
+    MergeOps.mergeUpsert(spark, dir, rows, "k", "p",
+      dictKeys = Seq("v"), bloomKeys = Seq("v"))
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sql.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.root", root)
+    val got = spark.sql("SELECT k FROM graft.graft_w56_zero WHERE v = 0.0")
+      .collect().map(_.getLong(0)).toSeq
+    assert(got == Seq(3L), s"-0.0 = 0.0 must hold through the catalog: $got")
+    MergeOps.mergeDeleteWhere(spark, dir, col("v") === 0.0, "p")
+    val left = MergeOps.readCorpus(spark, dir, "p").select("k").collect()
+      .map(_.getLong(0)).toSet
+    assert(left == Set(1L, 2L), s"the -0.0 row must be deleted: $left")
+  }
+
+  test("signed zero: a mixed-layout upsert of key 0.0 replaces the " +
+       "stored -0.0 key, as a same-layout upsert does") {
+    import spark.implicits._
+    val dir = freshDir("graft_prune_zero_key")
+    MergeOps.mergeUpsert(spark, dir,
+      Seq((-0.0, "a", "x"), (1.0, "b", "y")).toDF("k", "p", "q"), "k", "p",
+      dictKeys = Seq("k"))                                          // v1
+    // the layout moves to q, so the p= entries are foreign and only the
+    // key probe finds the one holding -0.0, which joins the batch's 0.0
+    MergeOps.mergeUpsert(spark, dir,
+      Seq((0.0, "a", "x")).toDF("k", "p", "q"), "k", "q")           // v2
+    val keys = MergeOps.readCorpus(spark, dir, "q").select("k").collect()
+      .map(_.getDouble(0)).sorted.toSeq
+    assert(keys == Seq(0.0, 1.0), s"key 0.0 must replace -0.0: $keys")
   }
 
   test("DELETE WHERE: the probe scans only zone-map-admitted " +
