@@ -221,8 +221,6 @@ object Versioned {
       (if (paths.length == 1) paths.head
        else paths.sorted.mkString("\u0001"))
     val rd = basePath.fold(s.read)(bp => s.read.option("basePath", bp))
-    if (sys.env.contains("SPARK_GRAFT_NO_SCHEMA_MEMO"))
-      return rd.parquet(paths: _*)
     schemaMemo.get(key) match {
       case null =>
         val df = rd.parquet(paths: _*)

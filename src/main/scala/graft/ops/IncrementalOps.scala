@@ -56,17 +56,6 @@ object IncrementalOps {
     // see [[Versioned.appliedLedgerIds]].
     Versioned.appliedLedgerIds(s, dir, v)
 
-  /** WRITE-ONCE at the attempt's own tokenized name, like the manifest:
-    * concurrent attempts can never collide on the file (each has its
-    * own token); the single-winner fight happens at the commit marker
-    * inside publish. Uses [[Versioned.createExclusive]], which only
-    * translates a REAL already-exists into the commit-race signal — a
-    * transient IO failure propagates as itself instead of masquerading
-    * as a race (r9 advice). */
-  private def writeApplied(s: SparkSession, dir: String, v: Long,
-                           token: String, ids: Set[String]): Unit =
-    Versioned.writeLedgerIds(s, dir, v, token, ids)
-
   /** Partial day-level rollup of a batch of event rows. The measures are
     * the mergeable four; the sum is DECIMAL(18,2) of the 2-dp-rounded
     * value so fold order can never move the result (same determinism
@@ -133,19 +122,19 @@ object IncrementalOps {
                             roll: DataFrame => DataFrame,
                             mergeP: DataFrame => DataFrame): Unit = {
     require(!batchId.contains("\n"), "batchId must be single-line")
+    // the ledger is written with the fold's own attempt token by the
+    // commit kernel, so id and data publish together
+    def fold(v: Option[Long], man: Seq[(String, String)],
+             rows: DataFrame): Unit =
+      MergeOps.commit(s, dir, v, man,
+        Some(MergeOps.Stage(rows, Some(DayCol))),
+        // a restaged day's counts and sums grew: its lines drop
+        stats = MergeOps.CarryUnchanged,
+        ledgerId = Some(batchId), declareTouch = false)
     Versioned.currentVersion(s, dir) match {
-      case None =>
-        val nv = 1L  // OCC: snapshot+1, see MergeOps.mergeUpsert
-        val tok = Versioned.newToken()
-        val stageRel = Versioned.newStageRel(nv, tok)
-        roll(batch).write.mode("overwrite").partitionBy(DayCol)
-          .parquet(s"$dir/$stageRel")
-        writeApplied(s, dir, nv, tok, Set(batchId))
-        Versioned.publish(s, dir, nv, tok,
-          Versioned.listStagedPartDirs(s, dir, stageRel, DayCol))
+      case None => fold(None, Nil, roll(batch))
       case Some(v) =>
-        val applied = appliedIds(s, dir, v)
-        if (Versioned.ledgerContains(applied, batchId)) return
+        if (Versioned.ledgerContains(appliedIds(s, dir, v), batchId)) return
         val part = roll(batch)
         // Bounded driver-side list: the batch's DAY values (#days, not
         // #rows) — the manifest-pruning predicate, as in mergeUpsert.
@@ -164,16 +153,7 @@ object IncrementalOps {
               .withColumn(DayCol, col(DayCol).cast("string"))
               .selectExpr(part.columns: _*)
               .unionByName(part))
-        val nv = v + 1  // OCC: snapshot+1, see MergeOps.mergeUpsert
-        val tok = Versioned.newToken()
-        val stageRel = Versioned.newStageRel(nv, tok)
-        merged.write.mode("overwrite").partitionBy(DayCol)
-          .parquet(s"$dir/$stageRel")
-        writeApplied(s, dir, nv, tok, Versioned.ledgerAdd(applied, batchId))
-        val staged = Versioned.listStagedPartDirs(s, dir, stageRel, DayCol)
-        val stagedNames = staged.map(_._1).toSet
-        Versioned.publish(s, dir, nv, tok,
-          man.filterNot(e => stagedNames.contains(e._1)) ++ staged)
+        fold(Some(v), man, merged)
     }
   }
 

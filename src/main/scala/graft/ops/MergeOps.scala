@@ -288,13 +288,10 @@ object MergeOps {
     checkConstraints(
       Versioned.readVersion(s, corpusDir, v, Some(partCol)),
       Seq((name, expr(exprSql))), what = s"ADD CONSTRAINT on existing data")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    carrySidecars(s, corpusDir, v, nv, tok)
-    Versioned.writeConstraintLines(s, corpusDir, nv, tok,
-      (existing :+ (name, exprSql)).map { case (n, e) => s"$n\t$e" })
-    Versioned.publish(s, corpusDir, nv, tok,
-      Versioned.manifest(s, corpusDir, v))
+    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
+      stats = CarryAll, declareTouch = false,
+      extra = Versioned.writeConstraintLines(s, corpusDir, _, _,
+        (existing :+ (name, exprSql)).map { case (n, e) => s"$n\t$e" }))
   }
 
   /** SET TBLPROPERTIES: merge `props` into the table's persisted
@@ -320,13 +317,10 @@ object MergeOps {
       throw new IllegalStateException(
         s"no committed version under $corpusDir — create the corpus " +
           "before annotating it"))
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    carrySidecars(s, corpusDir, v, nv, tok)
-    Versioned.writePropsLines(s, corpusDir, nv, tok,
-      Versioned.tableProps(s, corpusDir, v) ++ props)
-    Versioned.publish(s, corpusDir, nv, tok,
-      Versioned.manifest(s, corpusDir, v))
+    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
+      stats = CarryAll, declareTouch = false,
+      extra = Versioned.writePropsLines(s, corpusDir, _, _,
+        Versioned.tableProps(s, corpusDir, v) ++ props))
   }
 
   /** UNSET TBLPROPERTIES: commit the shrunken property set (possibly
@@ -343,12 +337,9 @@ object MergeOps {
     require(missing.isEmpty,
       s"no properties ${missing.mkString(", ")} on $corpusDir — live " +
         s"properties: ${existing.keys.toSeq.sorted.mkString(", ")}")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    carrySidecars(s, corpusDir, v, nv, tok)
-    Versioned.writePropsLines(s, corpusDir, nv, tok, existing -- keys)
-    Versioned.publish(s, corpusDir, nv, tok,
-      Versioned.manifest(s, corpusDir, v))
+    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
+      stats = CarryAll, declareTouch = false,
+      extra = Versioned.writePropsLines(s, corpusDir, _, _, existing -- keys))
   }
 
   /** DROP CONSTRAINT: commit the shrunken set (possibly EMPTY — an
@@ -363,13 +354,10 @@ object MergeOps {
     require(existing.exists(_._1 == name),
       s"no constraint '$name' on $corpusDir — live constraints: " +
         existing.map(_._1).sorted.mkString(", "))
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    carrySidecars(s, corpusDir, v, nv, tok)
-    Versioned.writeConstraintLines(s, corpusDir, nv, tok,
-      existing.filterNot(_._1 == name).map { case (n, e) => s"$n\t$e" })
-    Versioned.publish(s, corpusDir, nv, tok,
-      Versioned.manifest(s, corpusDir, v))
+    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
+      stats = CarryAll, declareTouch = false,
+      extra = Versioned.writeConstraintLines(s, corpusDir, _, _,
+        existing.filterNot(_._1 == name).map { case (n, e) => s"$n\t$e" }))
   }
 
   /** Validate the STAGED files (read-back) against the table's
@@ -396,36 +384,217 @@ object MergeOps {
     }
   }
 
-  /** Carry the stats and MOR sidecars of `v` verbatim onto attempt
-    * (`nv`, `tok`) — the manifest-carry commit shape metadata-only
-    * writers (constraint DDL, ledger ticks) share. The ledger and
-    * constraints sidecars need no carry: their readers walk back. */
-  private def carrySidecars(s: SparkSession, corpusDir: String, v: Long,
-                            nv: Long, tok: String): Unit = {
-    val stats = Versioned.readStatsLines(s, corpusDir, v)
-    if (stats.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, stats)
-    carryMorSidecars(s, corpusDir, v, nv, tok, _ => false)
+  /** Which committed stats lines of the base a commit carries. The
+    * pruning-soundness argument lives here: a carried line must still
+    * bound every row its partition holds after the commit (stats are
+    * never a correctness gate the other way — a missing line only
+    * reads). "Changed" below is the commit's touch set
+    * ([[commit]]). Every commit names its rule: there is no default. */
+  private[ops] sealed trait StatsCarry
+  /** Multiset-preserving rewrite or metadata-only commit (compaction,
+    * DDL, ledger tick, MOR delete): every line stays a valid bound.
+    * Sound only when no partition gains a row or changes a value. */
+  private[ops] case object CarryAll extends StatsCarry
+  /** Rows were only removed (delete, DV materialization, retention): a
+    * restaged partition's old bounds and dictionaries stay valid
+    * supersets, a changed partition that staged nothing left the
+    * manifest and its lines go with it. */
+  private[ops] case object CarrySuperset extends StatsCarry
+  /** Rows of changed partitions may have widened (upsert, update,
+    * changelog, MOR update, scd2 and rollup-fold restages): their lines
+    * drop. */
+  private[ops] case object CarryUnchanged extends StatsCarry
+  /** Multiset-preserving full restage that recomputes some forms
+    * (z-order, refresh): every line carries except those forms
+    * ([[statsLineReplaced]]). */
+  private[ops] case object CarryUnrecomputed extends StatsCarry
+  /** New layout or new content (replace, repartition; a bootstrap has
+    * no base lines). */
+  private[ops] case object CarryNone extends StatsCarry
+
+  /** The rows a commit stages: made [[stageable]] for `partCol`,
+    * clustered one task per partition value when `cluster`, sorted
+    * within partitions by `partCol` then `sortBy` when that is
+    * non-empty, and written `partitionBy(partCol)` (whose planned write
+    * already sorts an unordered child by `partCol`); `partCol` None
+    * stages one unpartitioned whole-table entry. */
+  private[ops] final case class Stage(rows: DataFrame,
+                                      partCol: Option[String],
+                                      sortBy: Seq[String] = Nil,
+                                      cluster: Boolean = false)
+
+  /** Write `st` under `rel` and list what landed as manifest entries —
+    * the one place a staged dir becomes entries. */
+  private def writeStage(s: SparkSession, dir: String, st: Stage,
+                         rel: String): Seq[(String, String)] =
+    st.partCol match {
+      case None =>
+        st.rows.write.mode("overwrite").parquet(s"$dir/$rel")
+        Versioned.wholeTableEntryAt(rel)
+      case Some(pc) =>
+        val safe = stageable(st.rows, pc)
+        val clustered = if (st.cluster) safe.repartition(col(pc)) else safe
+        val sorted =
+          if (st.sortBy.isEmpty) clustered
+          else clustered.sortWithinPartitions((pc +: st.sortBy).map(col): _*)
+        sorted.write.mode("overwrite").partitionBy(pc)
+          .parquet(s"$dir/$rel")
+        Versioned.listStagedPartDirs(s, dir, rel, pc)
+    }
+
+  /** Stage a merge-on-read sidecar dir (`dvdata/`, `uvdata/`) and return
+    * the partition names that landed; an empty stage is removed. */
+  private def writeMorStage(s: SparkSession, dir: String, rows: DataFrame,
+                            partCol: String, rel: String): Seq[String] = {
+    val names = writeStage(s, dir, Stage(rows, Some(partCol)), rel).map(_._1)
+    if (names.isEmpty) {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    names
   }
 
-  /** Carry BOTH merge-on-read sidecars (dv tombstone refs, uv image
-    * refs) of `v` onto attempt (`nv`, `tok`), DROPPING the lines of
-    * partitions `drop` — the shared rule: a restaging writer reads its
-    * partitions LIVE (tombstones anti-joined, images substituted), so
-    * the restage is the materialization point and stale refs must not
-    * survive it; untouched partitions' refs are CORRECTNESS state and
-    * carry verbatim. */
-  private def carryMorSidecars(s: SparkSession, corpusDir: String, v: Long,
-                               nv: Long, tok: String,
-                               drop: String => Boolean): Unit = {
-    val dvKept = Versioned.readDvLines(s, corpusDir, v)
-      .filterNot(l => drop(Versioned.statsLinePart(l)))
-    if (dvKept.nonEmpty)
-      Versioned.writeDvLines(s, corpusDir, nv, tok, dvKept)
-    val uvKept = Versioned.readUvLines(s, corpusDir, v)
-      .filterNot(l => drop(Versioned.statsLinePart(l)))
-    if (uvKept.nonEmpty)
-      Versioned.writeUvLines(s, corpusDir, nv, tok, uvKept)
+  /** THE COMMIT KERNEL: every write verb's copy-on-write tail. Derives
+    * version base+1 (the OCC rule: allocate from the snapshot the write
+    * derives from, never from a re-listing of current — a racer
+    * committing in between must make the claim FAIL, not shift it to
+    * an uncontested number carrying a stale snapshot; the Wave18
+    * threaded-race lost update) under attempt token `tok`, and:
+    *
+    *  1. stages `stage` under `data/<v>_<tok>`, validates the persisted
+    *     `constraints` on the staged read-back ([[validateStaged]]) and
+    *     lists the staged entries;
+    *  2. RESTAGED = `replaced` ∪ staged names: those entries leave the
+    *     base manifest and the staged ones join it (publish replaces by
+    *     name). CHANGED = restaged ∪ `alsoChanged` (partitions a MOR
+    *     write changed in place) is the touch set; `emptyGuard` refuses
+    *     a manifest left empty (an empty table cannot be read back);
+    *  3. derives every sidecar from the base: stats by `stats`
+    *     ([[StatsCarry]]) plus lines fresh from the staged footers for
+    *     the requested keys (and `freshLines`); dv/uv lines of restaged
+    *     partitions drop — the restage read them live, so it is their
+    *     materialization point — the rest carry, plus `newDv` /
+    *     `newUv(staged names)`; the ledger gains `ledgerId`; `extra`
+    *     writes verb-owned sidecars;
+    *  4. declares CHANGED as the touch set unless `declareTouch` is off
+    *     (an undeclared commit touches everything — full rewrites, DDL,
+    *     retention), then publishes.
+    *
+    * The touch declaration is what [[publishOrRebase]] trusts: it names
+    * every partition whose live content the commit may have changed, so
+    * a racing upsert whose own changed set is disjoint may re-publish
+    * its staged dirs onto this commit. With `rebase` (upserts only) the
+    * stage is pinned against vacuum from before its first byte until
+    * the claim resolves, and a lost claim rebases through
+    * [[publishOrRebase]], every attempt re-deriving step 3 from its own
+    * base. */
+  private[ops] def commit(s: SparkSession, dir: String,
+                          base: Option[Long], man: Seq[(String, String)],
+                          stage: Option[Stage] = None,
+                          replaced: Set[String] = Set.empty,
+                          alsoChanged: Set[String] = Set.empty,
+                          stats: StatsCarry,
+                          statsKeys: Seq[String] = Nil,
+                          dictKeys: Seq[String] = Nil,
+                          bloomKeys: Seq[String] = Nil,
+                          freshLines: Seq[String] = Nil,
+                          constraints: Seq[(String, Column)] = Nil,
+                          ledgerId: Option[String] = None,
+                          newDv: Seq[String] = Nil,
+                          newUv: Set[String] => Seq[String] = _ => Nil,
+                          extra: (Long, String) => Unit = (_, _) => (),
+                          emptyGuard: Option[String] = None,
+                          declareTouch: Boolean = true,
+                          rebase: Boolean = false,
+                          tok: String = Versioned.newToken()): Unit = {
+    val stageRel = Versioned.newStageRel(base.fold(1L)(_ + 1), tok)
+    // pin BEFORE the first staged byte: the moment a racing winner
+    // commits our number, this dir sits unreferenced at a version
+    // ≤ current — vacuum's reclaim shape — yet a rebase may still
+    // publish it (the pin-before-stage order is what makes vacuum's
+    // later pin read sound); the heartbeat keeps a multi-hour stage
+    // from aging past vacuum's pinGraceMs
+    if (rebase) Versioned.pinStage(s, dir, tok, Seq(stageRel))
+    val beat = if (rebase) Some(Versioned.pinHeartbeat(s, dir, tok)) else None
+    try {
+      val staged = stage.fold(Seq.empty[(String, String)]) { st =>
+        val entries = writeStage(s, dir, st, stageRel)
+        validateStaged(s, dir, stageRel, constraints)
+        entries
+      }
+      val stagedNames = staged.map(_._1).toSet
+      val restaged = replaced ++ stagedNames
+      val changed = restaged ++ alsoChanged
+      emptyGuard.foreach(msg =>
+        require(man.exists(e => !restaged(e._1)) || staged.nonEmpty, msg))
+      // computed once: the staged bytes are immutable, so every attempt
+      // publishes the same fresh lines
+      val fresh = freshLines ++ (stage.flatMap(_.partCol) match {
+        case Some(pc) if statsKeys.nonEmpty || dictKeys.nonEmpty ||
+                         bloomKeys.nonEmpty =>
+          freshStatsLinesStaged(s, dir, stageRel, pc, statsKeys, dictKeys,
+                                bloomKeys)
+        case _ => Nil
+      })
+      // a stage that restages FOREIGN-layout entries moves their rows
+      // into current-spec partitions, any staged one of which may then
+      // hold rows its old line never bounded: no staged line carries
+      val migrates = stage.flatMap(_.partCol).exists(pc =>
+        replaced.exists(n => !n.startsWith(s"$pc=")))
+      val rule: String => Boolean = stats match {
+        case CarryAll => _ => true
+        case CarrySuperset => l => {
+          val n = Versioned.statsLinePart(l)
+          !changed(n) || stagedNames(n)
+        }
+        case CarryUnchanged => l => !changed(Versioned.statsLinePart(l))
+        case CarryUnrecomputed =>
+          l => !statsLineReplaced(statsKeys, dictKeys, bloomKeys)(l)
+        case CarryNone => _ => false
+      }
+      val carry: String => Boolean = l =>
+        rule(l) && !(migrates && stagedNames(Versioned.statsLinePart(l)))
+      def attempt(b: Option[Long]): Unit = {
+        val t = if (b == base) tok else Versioned.newToken()
+        val nv = b.fold(1L)(_ + 1)
+        def kept(read: (SparkSession, String, Long) => Seq[String]) =
+          b.fold(Seq.empty[String])(read(s, dir, _))
+        val statsOut = (kept(Versioned.readStatsLines).filter(carry) ++
+          fresh).sorted
+        if (statsOut.nonEmpty)
+          Versioned.writeStatsLines(s, dir, nv, t, statsOut)
+        def mor(read: (SparkSession, String, Long) => Seq[String],
+                added: Seq[String]): Seq[String] = {
+          val k = kept(read).filterNot(l =>
+            restaged(Versioned.statsLinePart(l)))
+          if (added.isEmpty) k else (k ++ added).sorted
+        }
+        val dv = mor(Versioned.readDvLines, newDv)
+        if (dv.nonEmpty) Versioned.writeDvLines(s, dir, nv, t, dv)
+        val uv = mor(Versioned.readUvLines, newUv(stagedNames))
+        if (uv.nonEmpty) Versioned.writeUvLines(s, dir, nv, t, uv)
+        // exactly-once id: the ledger lands under the attempt's token
+        // BEFORE publish, so id and data commit together
+        ledgerId.foreach(id => Versioned.writeLedgerIds(s, dir, nv, t,
+          b.fold(Set(id))(bb => Versioned.ledgerAdd(
+            Versioned.appliedLedgerIds(s, dir, bb), id))))
+        extra(nv, t)
+        if (declareTouch)
+          Versioned.writeTouchLines(s, dir, nv, t, changed.toSeq)
+        val baseMan =
+          if (b == base) man else Versioned.manifest(s, dir, b.get)
+        Versioned.publish(s, dir, nv, t,
+          baseMan.filterNot(e => restaged(e._1)) ++ staged)
+      }
+      if (rebase) {
+        Hooks.onBeforePublish()
+        publishOrRebase(s, dir, base.get, changed, ledgerId,
+                        b => attempt(Some(b)))
+      } else attempt(base)
+    } finally beat.foreach { b =>
+      b.close()
+      Versioned.unpinStage(s, dir, tok)
+    }
   }
 
   /** The REPLACE rule an ANALYZE-style refresh shares with the z-order
@@ -753,9 +922,10 @@ object MergeOps {
     // the input's first possible evaluation, exactly as un-cached code
     // ordered it.
     val v0 = Versioned.currentVersion(s, corpusDir)
-    // bootstrap (no committed version) writes the batch in a single
-    // pass — materializing it would pay a cache write for no reuse
-    if (v0.isEmpty)
+    // an unconstrained bootstrap (no committed version) writes the batch
+    // in a single pass — materializing it would pay a cache write for no
+    // reuse; a constrained one must stage exactly the rows its check saw
+    if (v0.isEmpty && constraints.isEmpty)
       mergeUpsertImpl(s, corpusDir, v0, batch, keyCol, partCol,
         statsKeys, ledgerId, dictKeys, constraints, bloomKeys)
     else withMaterialized(batch) { b =>
@@ -800,43 +970,21 @@ object MergeOps {
                   constraints: Seq[(String, Column)],
                   bloomKeys: Seq[String]): Unit = {
     checkConstraints(batch, constraints)
-    def freshStats(stageRel: String): Seq[String] =
-      freshStatsLinesStaged(s, corpusDir, stageRel, partCol,
-                            statsKeys, dictKeys, bloomKeys)
-    val wantStats = statsKeys.nonEmpty ||
-      dictKeys.nonEmpty || bloomKeys.nonEmpty
+    // write-time clustering: a task-local sort by (partition, key)
+    // before the partitioned write — the dynamic-partition writer's
+    // required ordering is then already satisfied (no second sort),
+    // each partition's rows land key-ordered, and parquet row-group
+    // min/max skipping becomes effective on key residuals INSIDE
+    // the partitions manifest pruning keeps. Two-level skipping for
+    // one local sort: at 100 TB the row-group tier is what keeps a
+    // narrow key range from reading a whole partition.
+    def staging(rows: DataFrame) =
+      Some(Stage(rows, Some(partCol), Seq(keyCol)))
     v0 match {
       case None =>
-        // OCC rule: allocate from the snapshot this write DERIVES from
-        // (here: the empty table → version 1), never from a re-listing
-        // of current — a racer committing between derivation and
-        // allocation must make the claim FAIL, not shift it to an
-        // uncontested higher number carrying a stale snapshot (the
-        // Wave18 threaded-race lost update).
-        val nv = 1L
-        val tok = Versioned.newToken()
-        val stageRel = Versioned.newStageRel(nv, tok)
-        // write-time clustering: a task-local sort by (partition, key)
-        // before the partitioned write — the dynamic-partition writer's
-        // required ordering is then already satisfied (no second sort),
-        // each partition's rows land key-ordered, and parquet row-group
-        // min/max skipping becomes effective on key residuals INSIDE
-        // the partitions manifest pruning keeps. Two-level skipping for
-        // one local sort: at 100 TB the row-group tier is what keeps a
-        // narrow key range from reading a whole partition.
-        batch.sortWithinPartitions(col(partCol), col(keyCol))
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"$corpusDir/$stageRel")
-        if (wantStats) Versioned.writeStatsLines(s, corpusDir, nv, tok,
-          freshStats(stageRel).sorted)
-        // exactly-once id (mirror bootstrap and friends): the ledger
-        // lands tokenized BEFORE publish, so id and data commit together
-        ledgerId.foreach(id =>
-          Versioned.writeLedgerIds(s, corpusDir, nv, tok, Set(id)))
-        val staged1 =
-          Versioned.listStagedPartDirs(s, corpusDir, stageRel, partCol)
-        Versioned.writeTouchLines(s, corpusDir, nv, tok, staged1.map(_._1))
-        Versioned.publish(s, corpusDir, nv, tok, staged1)
+        commit(s, corpusDir, None, Nil, staging(batch), stats = CarryNone,
+          statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+          ledgerId = ledgerId)
       case Some(v) =>
         // a replayed identified write no-ops: its id is already in the
         // committed ledger, so the work (and the version) must not repeat
@@ -950,75 +1098,14 @@ object MergeOps {
               .selectExpr(cols: _*)
               .unionByName(batch)
           }
-        // OCC: publish at snapshot+1 (v is the version this merge
-        // derived from) so a concurrent commit makes this claim lose
-        // loudly instead of being leapfrogged (see the None branch).
-        val nv = v + 1
-        val tok = Versioned.newToken()
-        val stageRel = Versioned.newStageRel(nv, tok)
-        // PIN the stage against a racing vacuum BEFORE the first staged
-        // byte: the moment a racing winner commits `nv`, this dir sits
-        // at version ≤ current unreferenced — exactly vacuum's reclaim
-        // shape — yet publishOrRebase may still re-publish it at a
-        // higher version (the round-12 vacuum-vs-rebase window). The
-        // pin-before-stage order is what makes vacuum's later pin read
-        // sound; cleared in the finally once the claim is decided.
-        Versioned.pinStage(s, corpusDir, tok, Seq(stageRel))
-        // heartbeat the pin for the whole stage->publish window: a
-        // multi-hour restage must never age past vacuum's pinGraceMs
-        val beat = Versioned.pinHeartbeat(s, corpusDir, tok)
-        try {
-        merged.sortWithinPartitions(col(partCol), col(keyCol))
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"$corpusDir/$stageRel")
-        validateStaged(s, corpusDir, stageRel, persisted)
-        val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                                  partCol)
-        val stagedNames = staged.map(_._1).toSet
-        // Fresh stats come from the STAGED files (read-back, partition-
-        // local) — not from re-evaluating the merged plan; computed once,
-        // they are stable across publish attempts (the staged bytes are
-        // immutable).
-        val fresh =
-          if (wantStats) freshStats(stageRel)
-          else Seq.empty
-        // Publish the staged write against base version `base` as a new
-        // attempt: all sidecars re-derive from the base so a REBASE (base
-        // > v, see below) picks up every intervening commit's carried
-        // state. Untouched partitions' stats lines carry VERBATIM
-        // regardless of whether THIS write requested stats (format-
-        // preserving, see Versioned.readStatsLines); restaged partitions'
-        // DV lines drop (their tombstones materialized in the live read
-        // above); the ledger unions the base's applied ids.
-        def attemptPublish(base: Long): Unit = {
-          val tok2 = if (base == v) tok else Versioned.newToken()
-          val baseMan =
-            if (base == v) man else Versioned.manifest(s, corpusDir, base)
-          val carried = Versioned.readStatsLines(s, corpusDir, base)
-            .filterNot(l => stagedNames(Versioned.statsLinePart(l)))
-          if ((carried ++ fresh).nonEmpty)
-            Versioned.writeStatsLines(s, corpusDir, base + 1, tok2,
-              (carried ++ fresh).sorted)
-          carryMorSidecars(s, corpusDir, base, base + 1, tok2,
-            n => touchedAll(n) || stagedNames(n))
-          ledgerId.foreach(id => Versioned.writeLedgerIds(s, corpusDir,
-            base + 1, tok2,
-            Versioned.ledgerAdd(
-              Versioned.appliedLedgerIds(s, corpusDir, base), id)))
-          Versioned.writeTouchLines(s, corpusDir, base + 1, tok2,
-            (touchedAll ++ stagedNames).toSeq)
-          Versioned.publish(s, corpusDir, base + 1, tok2,
-            baseMan.filterNot(e =>
-              stagedNames.contains(e._1) || touchedAll.contains(e._1))
-              ++ staged)
-        }
-        Hooks.onBeforePublish()
-        publishOrRebase(s, corpusDir, v, touchedAll ++ stagedNames,
-                        ledgerId, attemptPublish)
-        } finally {
-          beat.close()
-          Versioned.unpinStage(s, corpusDir, tok)
-        }
+        // Restaged partitions' stats drop unless this write recomputes
+        // them from the staged files; their DV lines drop (tombstones
+        // materialized in the live read above); a lost claim rebases
+        // when every intervening commit is disjoint ([[publishOrRebase]]).
+        commit(s, corpusDir, Some(v), man, staging(merged),
+          replaced = touchedAll, stats = CarryUnchanged,
+          statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+          constraints = persisted, ledgerId = ledgerId, rebase = true)
     }
   }
 
@@ -1251,30 +1338,11 @@ object MergeOps {
     val survivors = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
         Some(partCol))
       .join(keys.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    stageable(survivors, partCol)
-      .sortWithinPartitions(col(partCol), col(keyCol))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val newMan = man.filterNot(e => touchedNames.contains(e._1)) ++ staged
-    require(newMan.nonEmpty,
-      s"delete would remove every row of $corpusDir — an empty table " +
-        "cannot be read back; delete the table instead")
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filter { l =>
-        val n = Versioned.statsLinePart(l)
-        !touchedNames(n) || stagedNames(n)
-      }
-    if (carried.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, carried)
-    carryMorSidecars(s, corpusDir, v, nv, tok, touchedNames)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, touchedNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(survivors, Some(partCol), Seq(keyCol))),
+      replaced = touchedNames, stats = CarrySuperset,
+      emptyGuard = Some(s"delete would remove every row of $corpusDir — " +
+        "an empty table cannot be read back; delete the table instead"))
   }
 
   /** Pruning hints from a WHERE-verb predicate: Spark's own rules turn
@@ -1385,31 +1453,12 @@ object MergeOps {
     val survivors = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
         Some(partCol))
       .where(!hit)
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    val survivable = stageable(survivors, partCol)
-    sortCol.fold(survivable.sortWithinPartitions(col(partCol)))(c =>
-        survivable.sortWithinPartitions(col(partCol), col(c)))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val newMan = man.filterNot(e => touchedNames.contains(e._1)) ++ staged
-    require(newMan.nonEmpty,
-      s"DELETE WHERE would remove every row of $corpusDir — an empty " +
-        "table cannot be read back; delete the table instead")
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filter { l =>
-        val n = Versioned.statsLinePart(l)
-        !touchedNames(n) || stagedNames(n)
-      }
-    if (carried.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, carried)
-    carryMorSidecars(s, corpusDir, v, nv, tok, touchedNames)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, touchedNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(survivors, Some(partCol), sortCol.toSeq)),
+      replaced = touchedNames, stats = CarrySuperset,
+      emptyGuard = Some(s"DELETE WHERE would remove every row of " +
+        s"$corpusDir — an empty table cannot be read back; delete the " +
+        "table instead"))
   }
 
   /** SQL UPDATE WHERE: apply the `set` column transforms to every
@@ -1482,35 +1531,15 @@ object MergeOps {
         case None => col(c)
       }
     }: _*)
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    stageable(updated, partCol)
-      .sortWithinPartitions(col(partCol), col(keyCol))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
     // persisted constraints: a SET transform can manufacture violations
     // in rows that were clean at ingest — the read-back over the staged
     // files is the only check that sees the transformed values
-    validateStaged(s, corpusDir, stageRel, persistedConstraintCols(
-      tableConstraints(s, corpusDir, v), old.columns.toSeq))
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filterNot(l => touchedNames(Versioned.statsLinePart(l)))
-    val fresh =
-      if (statsKeys.isEmpty && dictKeys.isEmpty && bloomKeys.isEmpty)
-        Seq.empty
-      else freshStatsLinesStaged(s, corpusDir, stageRel, partCol,
-                                 statsKeys, dictKeys, bloomKeys)
-    if ((carried ++ fresh).nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok,
-                                (carried ++ fresh).sorted)
-    carryMorSidecars(s, corpusDir, v, nv, tok, touchedNames)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, touchedNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok,
-      man.filterNot(e => touchedNames.contains(e._1)) ++ staged)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(updated, Some(partCol), Seq(keyCol))),
+      replaced = touchedNames, stats = CarryUnchanged,
+      statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+      constraints = persistedConstraintCols(
+        tableConstraints(s, corpusDir, v), old.columns.toSeq))
   }
 
   /** MERGE-ON-READ UPDATE (round 12 — the update twin of
@@ -1576,20 +1605,10 @@ object MergeOps {
         case None => col(c)
       }
     }: _*)
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
     val tok = Versioned.newToken()
-    val uvRel = s"uvdata/${nv}_$tok"
-    stageable(images, partCol).write.mode("overwrite")
-      .partitionBy(partCol)
-      .parquet(s"$corpusDir/$uvRel")
-    val touched = Versioned.listStagedPartDirs(s, corpusDir, uvRel, partCol)
-      .map(_._1)
-    if (touched.isEmpty) {
-      new org.apache.hadoop.fs.Path(s"$corpusDir/$uvRel")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(s"$corpusDir/$uvRel"), true)
-      return
-    }
+    val uvRel = s"uvdata/${v + 1}_$tok"
+    val touched = writeMorStage(s, corpusDir, images, partCol, uvRel)
+    if (touched.isEmpty) return
     validateStaged(s, corpusDir, uvRel, persistedConstraintCols(
       tableConstraints(s, corpusDir, v), corpus.columns.toSeq))
     val touchedSet = touched.toSet
@@ -1634,28 +1653,18 @@ object MergeOps {
       if (foreignHolders.isEmpty) Nil
       else expandForMigration(s, corpusDir, man,
         man.filter(e => foreignHolders.contains(e._1)), partCol)
-    val migrateNames = migrate.map(_._1).toSet
-    val (newMan, stagedNames) =
-      if (migrate.isEmpty) (man, Set.empty[String])
-      else {
-        // pure migration: the update is NOT applied here — the images
-        // substitute on read exactly as they do for in-place holders;
-        // old dv/uv refs on the migrated entries materialize in the
-        // live read and their lines drop below
-        val stageRel = Versioned.newStageRel(nv, tok)
-        stageable(Versioned.readEntriesLive(s, corpusDir, v, migrate,
-            Some(partCol)), partCol)
-          .sortWithinPartitions(col(partCol), col(keyCol))
-          .write.mode("overwrite").partitionBy(partCol)
-          .parquet(s"$corpusDir/$stageRel")
-        val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                                  partCol)
-        (man.filterNot(e => migrateNames.contains(e._1)) ++ staged,
-          staged.map(_._1).toSet)
-      }
-    val uvLines = Versioned.readUvLines(s, corpusDir, v)
-      .filterNot(l => migrateNames(Versioned.statsLinePart(l))) ++
-      touched.map { p =>
+    // pure migration: the update is NOT applied by the restage — the
+    // images substitute on read exactly as they do for in-place
+    // holders; old dv/uv refs on the migrated entries materialize in
+    // the live read and their lines drop. An update can widen bounds:
+    // stats of imaged and migrated partitions drop.
+    commit(s, corpusDir, Some(v), man,
+      if (migrate.isEmpty) None
+      else Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, migrate,
+        Some(partCol)), Some(partCol), Seq(keyCol))),
+      replaced = migrate.map(_._1).toSet, alsoChanged = touchedSet,
+      stats = CarryUnchanged, tok = tok,
+      newUv = stagedNames => touched.map { p =>
         // a partition whose base just migrated has new file names — its
         // scope (computed from the pre-migration base) is stale, so the
         // line falls back to the whole-partition form
@@ -1671,22 +1680,7 @@ object MergeOps {
             }
           case _ => s"$p\t$uvRel\t$keyCol"
         }
-      }
-    Versioned.writeUvLines(s, corpusDir, nv, tok, uvLines.sorted)
-    val dvLines = Versioned.readDvLines(s, corpusDir, v)
-      .filterNot(l => migrateNames(Versioned.statsLinePart(l)))
-    if (dvLines.nonEmpty)
-      Versioned.writeDvLines(s, corpusDir, nv, tok, dvLines)
-    val stats = Versioned.readStatsLines(s, corpusDir, v)
-      .filterNot { l =>
-        val n = Versioned.statsLinePart(l)
-        touchedSet(n) || migrateNames(n)
-      }
-    if (stats.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, stats)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok,
-      (touchedSet ++ migrateNames ++ stagedNames).toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+      })
   }
 
   /** MERGE-ON-READ row-level DELETE (Delta/Iceberg deletion vectors, at
@@ -1735,22 +1729,13 @@ object MergeOps {
     val man = Versioned.manifest(s, corpusDir, v)
     val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
         Some(partCol))
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
     val tok = Versioned.newToken()
-    val dvRel = s"dvdata/${nv}_$tok"
-    stageable(corpus.join(keys.select(keyCol).distinct(), Seq(keyCol),
-        "left_semi"), partCol)
-      .select(col(keyCol), col(partCol)).distinct()
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$dvRel")
-    val touched = Versioned.listStagedPartDirs(s, corpusDir, dvRel, partCol)
-      .map(_._1)
-    if (touched.isEmpty) {
-      new org.apache.hadoop.fs.Path(s"$corpusDir/$dvRel")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(s"$corpusDir/$dvRel"), true)
-      return
-    }
+    val dvRel = s"dvdata/${v + 1}_$tok"
+    val touched = writeMorStage(s, corpusDir,
+      stageable(corpus.join(keys.select(keyCol).distinct(), Seq(keyCol),
+          "left_semi"), partCol)
+        .select(col(keyCol), col(partCol)).distinct(), partCol, dvRel)
+    if (touched.isEmpty) return
     // FILE SCOPE + HOLDER-ENTRY KEYING (round 14). One more bounded
     // pass over the candidate entries' BASE dirs, reading each row's
     // file identity, finds which manifest entries — and which data
@@ -1821,19 +1806,12 @@ object MergeOps {
         }
       case Some(_) => touched.map(p => s"$p\t$dvRel")
     }
-    val lines = Versioned.readDvLines(s, corpusDir, v) ++ newLines
-    Versioned.writeDvLines(s, corpusDir, nv, tok, lines.sorted)
-    // update-vector refs carry VERBATIM: nothing restages here, and the
-    // read order (substitute, then anti-join) makes a tombstone shadow
-    // any earlier image of the same key
-    val uvLines = Versioned.readUvLines(s, corpusDir, v)
-    if (uvLines.nonEmpty)
-      Versioned.writeUvLines(s, corpusDir, nv, tok, uvLines)
-    val stats = Versioned.readStatsLines(s, corpusDir, v)
-    if (stats.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, stats)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, touched)
-    Versioned.publish(s, corpusDir, nv, tok, man)
+    // nothing restages: stats (row removal keeps bounds valid
+    // supersets) and update-vector refs carry verbatim — the read order
+    // (substitute, then anti-join) makes a tombstone shadow any earlier
+    // image of the same key
+    commit(s, corpusDir, Some(v), man, alsoChanged = touched.toSet,
+      stats = CarryAll, newDv = newLines, tok = tok)
   }
 
   /** Materialize every outstanding deletion vector (Delta's
@@ -1863,33 +1841,13 @@ object MergeOps {
     // the current spec in this restage — fold in collision entries
     val bearing = expandForMigration(s, corpusDir, man,
       man.filter(e => refs.contains(e._1)), partCol)
-    val bearingNames = bearing.map(_._1).toSet
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    val live = stageable(Versioned.readEntriesLive(s, corpusDir, v,
-        bearing, Some(partCol)), partCol)
-      .repartition(col(partCol))
-    sortCol.fold(live)(c => live.sortWithinPartitions(col(partCol), col(c)))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val newMan = man.filterNot(e => bearingNames.contains(e._1)) ++ staged
-    require(newMan.nonEmpty,
-      s"materializing the deletion vectors of $corpusDir would leave no " +
-        "partition — a logically empty table cannot be materialized; " +
-        "delete the table instead")
-    val stats = Versioned.readStatsLines(s, corpusDir, v)
-      .filter { l =>
-        val n = Versioned.statsLinePart(l)
-        !bearingNames(n) || stagedNames(n)
-      }
-    if (stats.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, stats)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, bearingNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, bearing,
+        Some(partCol)), Some(partCol), sortCol.toSeq, cluster = true)),
+      replaced = bearing.map(_._1).toSet, stats = CarrySuperset,
+      emptyGuard = Some(s"materializing the deletion vectors of " +
+        s"$corpusDir would leave no partition — a logically empty table " +
+        "cannot be materialized; delete the table instead"))
   }
 
   /** Apply ONE changelog batch ATOMICALLY — the full MERGE INTO form:
@@ -1976,21 +1934,11 @@ object MergeOps {
       // the applied id, so an empty feed (source advanced by maintenance
       // only) still advances the mirror's high-water mark instead of
       // being re-diffed on every future sync.
-      ledgerId.foreach { id =>
-        val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-        val tok = Versioned.newToken()
-        val stats = Versioned.readStatsLines(s, corpusDir, v)
-        if (stats.nonEmpty)
-          Versioned.writeStatsLines(s, corpusDir, nv, tok, stats)
-        carryMorSidecars(s, corpusDir, v, nv, tok, _ => false)
-        Versioned.writeLedgerIds(s, corpusDir, nv, tok,
-          Versioned.ledgerAdd(
-            Versioned.appliedLedgerIds(s, corpusDir, v), id))
-        // an EMPTY touch declaration: content untouched — a racing
-        // upsert can rebase straight across a ledger tick
-        Versioned.writeTouchLines(s, corpusDir, nv, tok, Nil)
-        Versioned.publish(s, corpusDir, nv, tok, man)
-      }
+      // The EMPTY touch declaration says content untouched — a racing
+      // upsert can rebase straight across a ledger tick.
+      if (ledgerId.nonEmpty)
+        commit(s, corpusDir, Some(v), man, stats = CarryAll,
+          ledgerId = ledgerId)
       return
     }
     val oldEntries = man.filter(e => touchedNames.contains(e._1))
@@ -2013,35 +1961,12 @@ object MergeOps {
           .selectExpr(cols: _*)
           .unionByName(upserts)
       }
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    merged.sortWithinPartitions(col(partCol), col(keyCol))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    validateStaged(s, corpusDir, stageRel, persisted)
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val newMan = man.filterNot(e => touchedNames.contains(e._1)) ++ staged
-    require(newMan.nonEmpty,
-      s"changelog would remove every row of $corpusDir — an empty " +
-        "table cannot be read back; delete the table instead")
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filterNot(l => touchedNames(Versioned.statsLinePart(l)))
-    val fresh =
-      if (statsKeys.isEmpty) Seq.empty
-      else freshStatsLinesStaged(s, corpusDir, stageRel, partCol,
-                                 statsKeys)
-    if ((carried ++ fresh).nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok,
-                                (carried ++ fresh).sorted)
-    carryMorSidecars(s, corpusDir, v, nv, tok, touchedNames)
-    ledgerId.foreach(id => Versioned.writeLedgerIds(s, corpusDir, nv, tok,
-      Versioned.ledgerAdd(
-        Versioned.appliedLedgerIds(s, corpusDir, v), id)))
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, touchedNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(merged, Some(partCol), Seq(keyCol))),
+      replaced = touchedNames, stats = CarryUnchanged, statsKeys = statsKeys,
+      constraints = persisted, ledgerId = ledgerId,
+      emptyGuard = Some(s"changelog would remove every row of $corpusDir " +
+        "— an empty table cannot be read back; delete the table instead"))
   }
 
   /** CHANGE FEED between two committed versions — the READ side of CDC
@@ -2462,44 +2387,21 @@ object MergeOps {
     // mixed layouts: a foreign-layout fragmented entry migrates to the
     // current spec in this restage — fold in collision entries
     val frag = expandForMigration(s, corpusDir, man, frag0, partCol)
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
     // LIVE read: compaction is the natural materialization point for any
     // deletion vectors on the fragmented partitions (Delta's OPTIMIZE
-    // does the same) — their tombstones fold into the rewrite and their
-    // dv lines drop below.
-    val clustered = stageable(Versioned.readEntriesLive(s, corpusDir, v,
-        frag, Some(partCol)), partCol)
-      .repartition(col(partCol))
-    sortCol.fold(clustered)(c =>
-        clustered.sortWithinPartitions(col(partCol), col(c)))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel, partCol)
-    val stagedNames = staged.map(_._1).toSet
-    val fragNames = frag.map(_._1).toSet
-    // Compaction preserves each partition's multiset, so the previous
-    // version's zone-map bounds stay exact — carry the lines forward
-    // VERBATIM (format-preserving: single-key and multi-column sidecars
-    // alike) instead of silently dropping pruning after every
-    // maintenance pass (at 100 TB the whole point of compacting is to
-    // make the NEXT scans cheaper; un-prunable next scans would defeat
-    // it).
-    val old = Versioned.readStatsLines(s, corpusDir, v)
-    if (old.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, old)
-    // A restaged partition's DVs just materialized — drop its lines (a
+    // does the same) — their tombstones fold into the rewrite, and a
     // fragmented partition whose every live row was tombstoned restages
-    // to nothing and leaves the manifest too); others carry verbatim.
-    carryMorSidecars(s, corpusDir, v, nv, tok, fragNames)
-    val newMan = man.filterNot(e => fragNames.contains(e._1)) ++ staged
-    require(newMan.nonEmpty,
-      s"compacting $corpusDir would leave no partition (every live row " +
-        "was tombstoned) — a logically empty table cannot be " +
-        "materialized; delete the table instead")
-    Versioned.writeTouchLines(s, corpusDir, nv, tok, fragNames.toSeq)
-    Versioned.publish(s, corpusDir, nv, tok, newMan)
+    // to nothing and leaves the manifest. Compaction preserves each
+    // partition's multiset, so every zone-map line carries VERBATIM
+    // (at 100 TB the whole point of compacting is to make the NEXT
+    // scans cheaper; un-prunable next scans would defeat it).
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, frag,
+        Some(partCol)), Some(partCol), sortCol.toSeq, cluster = true)),
+      replaced = frag.map(_._1).toSet, stats = CarryAll,
+      emptyGuard = Some(s"compacting $corpusDir would leave no partition " +
+        "(every live row was tombstoned) — a logically empty table cannot " +
+        "be materialized; delete the table instead"))
   }
 
   /** OPTIMIZE ZORDER for the versioned store: restage every partition
@@ -2540,42 +2442,21 @@ object MergeOps {
     // partition-clustered rewrite (the sinkZOrder degenerate rule)
     val clustered = live.repartition(col(partCol))
     val sorted =
-      if (mm.isNullAt(0) || mm.isNullAt(2))
-        clustered.sortWithinPartitions(col(partCol))
+      if (mm.isNullAt(0) || mm.isNullAt(2)) clustered
       else clustered
         .withColumn("__z", graft.engine.Pipeline.mortonKey(col(ca), col(cb),
           mm.getDouble(0), mm.getDouble(1), mm.getDouble(2),
           mm.getDouble(3)))
         .sortWithinPartitions(col(partCol), col("__z"))
         .drop("__z")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    sorted.write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    require(staged.nonEmpty,
-      s"z-ordering $corpusDir would leave no partition (every live row " +
-        "was tombstoned) — a logically empty table cannot be " +
-        "materialized; delete the table instead")
-    val wantStats = statsKeys.nonEmpty ||
-      dictKeys.nonEmpty || bloomKeys.nonEmpty
-    val fresh =
-      if (wantStats)
-        freshStatsLinesStaged(s, corpusDir, stageRel, partCol,
-                              statsKeys, dictKeys, bloomKeys)
-      else Seq.empty
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filterNot(statsLineReplaced(statsKeys, dictKeys, bloomKeys))
-    if ((carried ++ fresh).nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok,
-        (carried ++ fresh).sorted)
-    // no dv lines: the full live restage materialized every tombstone
-    // (a FULL restage: every partition is declared touched)
-    Versioned.writeTouchLines(s, corpusDir, nv, tok,
-      (man.map(_._1) ++ staged.map(_._1)).distinct)
-    Versioned.publish(s, corpusDir, nv, tok, staged)
+    // a FULL restage: every partition is replaced and declared touched,
+    // the live read materialized every tombstone and image
+    commit(s, corpusDir, Some(v), man, Some(Stage(sorted, Some(partCol))),
+      replaced = man.map(_._1).toSet, stats = CarryUnrecomputed,
+      statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+      emptyGuard = Some(s"z-ordering $corpusDir would leave no partition " +
+        "(every live row was tombstoned) — a logically empty table cannot " +
+        "be materialized; delete the table instead"))
   }
 
   /** PARTITION EVOLUTION, first tier (Iceberg evolves the spec as
@@ -2647,18 +2528,13 @@ object MergeOps {
       s"INSERT OVERWRITE batch carries duplicate or null '$keyCol' " +
         s"keys (${shape.getLong(0)} rows, ${shape.getLong(1)} distinct " +
         "keys) — the store is key-unique")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    stageable(batch, partCol)
-      .sortWithinPartitions(col(partCol), col(keyCol))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$corpusDir/$stageRel")
-    validateStaged(s, corpusDir, stageRel, persistedConstraintCols(
-      tableConstraints(s, corpusDir, v), batch.columns.toSeq))
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              partCol)
-    Versioned.publish(s, corpusDir, nv, tok, staged)
+    val man = Versioned.manifest(s, corpusDir, v)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(batch, Some(partCol), Seq(keyCol))),
+      replaced = man.map(_._1).toSet, stats = CarryNone,
+      constraints = persistedConstraintCols(
+        tableConstraints(s, corpusDir, v), batch.columns.toSeq),
+      declareTouch = false)
   }
 
   def repartitionTable(s: SparkSession, corpusDir: String,
@@ -2677,31 +2553,16 @@ object MergeOps {
     require(live.columns.contains(newPartCol),
       s"new partition column '$newPartCol' is not a column of the " +
         s"table under $corpusDir: ${live.columns.mkString(", ")}")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    val stageRel = Versioned.newStageRel(nv, tok)
-    live.repartition(col(newPartCol))
-      .sortWithinPartitions(col(newPartCol))
-      .write.mode("overwrite").partitionBy(newPartCol)
-      .parquet(s"$corpusDir/$stageRel")
-    validateStaged(s, corpusDir, stageRel, persistedConstraintCols(
-      tableConstraints(s, corpusDir, v), live.columns.toSeq))
-    val staged = Versioned.listStagedPartDirs(s, corpusDir, stageRel,
-                                              newPartCol)
-    require(staged.nonEmpty,
-      s"repartitioning $corpusDir would leave no partition (every live " +
-        "row was tombstoned) — a logically empty table cannot be " +
-        "materialized; delete the table instead")
-    val wantStats = statsKeys.nonEmpty ||
-      dictKeys.nonEmpty || bloomKeys.nonEmpty
-    val fresh =
-      if (wantStats)
-        freshStatsLinesStaged(s, corpusDir, stageRel, newPartCol,
-                              statsKeys, dictKeys, bloomKeys)
-      else Seq.empty
-    if (fresh.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, fresh.sorted)
-    Versioned.publish(s, corpusDir, nv, tok, staged)
+    commit(s, corpusDir, Some(v), man,
+      Some(Stage(live, Some(newPartCol), cluster = true)),
+      replaced = man.map(_._1).toSet, stats = CarryNone,
+      statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+      constraints = persistedConstraintCols(
+        tableConstraints(s, corpusDir, v), live.columns.toSeq),
+      emptyGuard = Some(s"repartitioning $corpusDir would leave no " +
+        "partition (every live row was tombstoned) — a logically empty " +
+        "table cannot be materialized; delete the table instead"),
+      declareTouch = false)
   }
 
   private def fold(c: Column): Column =
@@ -2801,15 +2662,11 @@ object MergeOps {
         "key per batch, or the one-open-row invariant breaks")
     Versioned.currentVersion(s, historyDir) match {
       case None =>
-        val nv = 1L  // OCC: snapshot+1, see mergeUpsert
-        val stageRel = Versioned.newStageRel(nv)
-        changes.withColumn("valid_from", lit(version))
-          .withColumn("valid_to", lit(null).cast("long"))
-          .selectExpr(outCols: _*)
-          .write.mode("overwrite")
-          .parquet(s"$historyDir/$stageRel")
-        Versioned.publish(s, historyDir, nv,
-          Versioned.wholeTableEntryAt(stageRel))
+        commit(s, historyDir, None, Nil, Some(Stage(
+          changes.withColumn("valid_from", lit(version))
+            .withColumn("valid_to", lit(null).cast("long"))
+            .selectExpr(outCols: _*), None)),
+          stats = CarryNone, declareTouch = false)
       case Some(v) =>
         // pinned to v (not re-read): the version this rewrite derives
         // from must be the version its claim contends at
@@ -2831,19 +2688,16 @@ object MergeOps {
           if (diff.isEmpty) return  // nothing changed: the no-op that
                                     // makes re-applying a batch idempotent
           val diffKeys = diff.select(keyCol)
-          val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-          val stageRel = Versioned.newStageRel(nv)
-          hist.where(col("valid_to").isNotNull)                        // closed: keep
+          val next = hist.where(col("valid_to").isNotNull)             // closed: keep
             .unionByName(open.join(diffKeys, Seq(keyCol), "left_anti"))// open, unchanged
             .unionByName(open.join(diffKeys, Seq(keyCol), "left_semi") // open, changed:
                            .withColumn("valid_to", lit(version)))      //   close
             .unionByName(diff.withColumn("valid_from", lit(version))   // new version:
                            .withColumn("valid_to", lit(null).cast("long")))// open
             .selectExpr(outCols: _*)
-            .write.mode("overwrite")
-            .parquet(s"$historyDir/$stageRel")
-          Versioned.publish(s, historyDir, nv,
-            Versioned.wholeTableEntryAt(stageRel))
+          commit(s, historyDir, Some(v), Versioned.manifest(s, historyDir, v),
+            Some(Stage(next, None)), stats = CarryUnchanged,
+            declareTouch = false)
         } finally diff.unpersist(false)
     }
   }
@@ -2985,31 +2839,19 @@ object MergeOps {
                      keep: String => Boolean): Unit = {
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val kept = man.filter { case (name, _) => keep(name) }
-    if (kept.size == man.size) return
-    // an empty manifest has no entry to recover a schema from, so the
-    // committed read would fail — expiring EVERYTHING is table deletion,
-    // not retention; fail fast instead of publishing an unreadable state
-    require(kept.nonEmpty,
-      s"retention would drop every partition of $corpusDir — an empty " +
-        "table cannot be read back; delete the table instead")
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    // Bounds of surviving partitions are untouched by a manifest-only
-    // drop — carry their lines VERBATIM (filtered to the kept names,
-    // format-preserving) so retention does not cost the corpus its
-    // zone-map pruning.
-    val old = Versioned.readStatsLines(s, corpusDir, v)
-    val keptNames = kept.map(_._1).toSet
-    val keptStats = old.filter(l => keptNames(Versioned.statsLinePart(l)))
-    if (keptStats.nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok, keptStats)
-    // MOR refs (tombstones AND update images) of kept partitions carry
-    // (correctness, not pruning); dropped partitions take theirs with
-    // them. The uv half is the deep-fuzz seed-304 catch: retention
-    // after a MOR update silently reverted the updated rows.
-    carryMorSidecars(s, corpusDir, v, nv, tok, n => !keptNames(n))
-    Versioned.publish(s, corpusDir, nv, tok, kept)
+    val dropped = man.map(_._1).filterNot(keep).toSet
+    if (dropped.isEmpty) return
+    // Kept partitions' stats lines and MOR refs (tombstones AND update
+    // images — the uv half is the deep-fuzz seed-304 catch: retention
+    // after a MOR update silently reverted the updated rows) carry
+    // verbatim; dropped partitions take theirs with them. An empty
+    // manifest has no entry to recover a schema from, so expiring
+    // EVERYTHING is table deletion, not retention: fail fast.
+    commit(s, corpusDir, Some(v), man, replaced = dropped,
+      stats = CarrySuperset, declareTouch = false,
+      emptyGuard = Some(s"retention would drop every partition of " +
+        s"$corpusDir — an empty table cannot be read back; delete the " +
+        "table instead"))
   }
 
   /** ANALYZE TABLE for the versioned store: recompute the stats sidecar
@@ -3041,15 +2883,9 @@ object MergeOps {
     // lines, in their form); everything else carries verbatim — an
     // ANALYZE of the dictionary must not cost the table its range
     // bounds (the same no-silent-stripping rule the upsert carry has).
-    val carried = Versioned.readStatsLines(s, corpusDir, v)
-      .filterNot(statsLineReplaced(statsKeys, dictKeys, bloomKeys))
-    val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-    val tok = Versioned.newToken()
-    if ((carried ++ lines).nonEmpty)
-      Versioned.writeStatsLines(s, corpusDir, nv, tok,
-        (carried ++ lines).sorted)
-    carryMorSidecars(s, corpusDir, v, nv, tok, _ => false)
-    Versioned.publish(s, corpusDir, nv, tok, man)
+    commit(s, corpusDir, Some(v), man, stats = CarryUnrecomputed,
+      statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
+      freshLines = lines, declareTouch = false)
   }
 
   /** Declared merge_schema_evolve query: a batch carrying a column the
@@ -4079,15 +3915,11 @@ object MergeOps {
     val batch = changes.withColumn(BCol, keyBucket(keyCol, buckets))
     Versioned.currentVersion(s, historyDir) match {
       case None =>
-        val nv = 1L  // OCC: snapshot+1, see mergeUpsert
-        val stageRel = Versioned.newStageRel(nv)
-        batch.withColumn("valid_from", lit(version))
-          .withColumn("valid_to", lit(null).cast("long"))
-          .selectExpr(outCols: _*)
-          .write.mode("overwrite").partitionBy(BCol)
-          .parquet(s"$historyDir/$stageRel")
-        Versioned.publish(s, historyDir, nv,
-          Versioned.listStagedPartDirs(s, historyDir, stageRel, BCol))
+        commit(s, historyDir, None, Nil, Some(Stage(
+          batch.withColumn("valid_from", lit(version))
+            .withColumn("valid_to", lit(null).cast("long"))
+            .selectExpr(outCols: _*), Some(BCol))),
+          stats = CarryNone, declareTouch = false)
       case Some(v) =>
         // Bounded driver-side list: ≤ `buckets` values, the manifest-
         // pruning predicate for both the diff read and the restage.
@@ -4125,15 +3957,10 @@ object MergeOps {
                              .withColumn("valid_to", lit(null).cast("long")))
               .selectExpr(outCols: _*)
           }
-        val nv = v + 1  // OCC: snapshot+1, see mergeUpsert
-        val stageRel = Versioned.newStageRel(nv)
-        slice.write.mode("overwrite").partitionBy(BCol)
-          .parquet(s"$historyDir/$stageRel")
-        val staged = Versioned.listStagedPartDirs(s, historyDir, stageRel,
-                                                  BCol)
-        val stagedNames = staged.map(_._1).toSet
-        Versioned.publish(s, historyDir, nv,
-          man.filterNot(e => stagedNames.contains(e._1)) ++ staged)
+        // restaged buckets gained rows with a new valid_from and closed
+        // valid_to: their lines drop, untouched buckets' carry
+        commit(s, historyDir, Some(v), man, Some(Stage(slice, Some(BCol))),
+          stats = CarryUnchanged, declareTouch = false)
     }
   }
 
