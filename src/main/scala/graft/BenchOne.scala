@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Time a NAMED subset of [[SparkEntry.queries]] under the same session
   * config as [[Bench]] — the iteration loop for performance work on one
@@ -10,15 +9,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass one or more query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",    // Bench parity
-        graft.engine.Scale.shufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.DevSession.bench(sfDir)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
       "/root/testdata/sf0.01")
     val picked = args.toSeq.map { n =>

@@ -5,9 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables._
 
-/** Similarity + dedup operators (SURVEY.md §2.I): exact dedup, brute-force
-  * cosine top-k over `embeddings`. MinHash/LSH near-dup and kNN build on the
-  * same kernels (later waves).
+/** Similarity + dedup operators (SURVEY.md §2.I): exact dedup, MinHash /
+  * SimHash / n-gram near-dup, and cosine similarity over `embeddings`.
+  *
+  * Every vector-similarity query splits into a candidate generator and
+  * three shared kernels: [[bucketJoin]] (the LSH (tbl, key) join, in
+  * memory or against a persisted signature store), [[rerank]] (attach
+  * both sides' vectors, score by exact rounded cosine) and the consumers
+  * [[top1]] / [[knnVote]]. The generators differ where the index really
+  * differs: all pairs, hyperplane LSH, IVF cells, PQ ADC shortlist.
   *
   * Scale path (SURVEY §7.5): the brute-force O(n²) self-join is the
   * correctness baseline; at 100 TB similarity switches to an LSH-banded
@@ -38,23 +44,82 @@ object SimOps {
   private[graft] def cosinePairs(s: SparkSession, d: String): DataFrame = {
     val v = normed(s, d)
     val ids = v.select(col("vec_id"))
-    val pairs = ids.select(col("vec_id").as("id_a"))
-      .join(ids.select(col("vec_id").as("id_b")), col("id_a") < col("id_b"))
-    val a = v.select(col("vec_id").as("id_a"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("id_b"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    pairs.join(broadcast(a), "id_a").join(broadcast(b), "id_b")
-      .select(col("id_a"), col("id_b"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
+    val pairs = ids.select(col("vec_id").as("qid"))
+      .join(ids.select(col("vec_id").as("nid")), col("qid") < col("nid"))
+    asPairs(rerank(pairs, broadcast(v), broadcast(v)))
   }
 
   /** Brute-force top-10 most-similar pairs by cosine. */
   def simCosineTopk(s: SparkSession, d: String): DataFrame =
-    cosinePairs(s, d)
-      .orderBy(col("cos_r").desc, col("id_a").asc, col("id_b").asc)
+    top10(cosinePairs(s, d))
+
+  /** Global top-10 of scored pairs (id_a, id_b, cos_r): a TakeOrdered. */
+  private def top10(pairs: DataFrame): DataFrame =
+    pairs.orderBy(col("cos_r").desc, col("id_a").asc, col("id_b").asc)
       .limit(10)
+
+  /** Rounded cosine of the attached vectors (va, na) and (vb, nb) — the one
+    * scoring expression every exact kernel uses. */
+  private def cosR: Column =
+    round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4).as("cos_r")
+
+  /** Exact rerank: attach the query-side and neighbour-side (vec_id, vd,
+    * nrm) vectors to candidate (qid, nid) pairs and score each pair with
+    * [[cosR]] → (qid, nid, [n<carry>...], cos_r). Neighbour-side columns
+    * named in `carry` ride along with an `n` prefix. Vectors are attached
+    * after candidate generation, so the candidate join never copies
+    * arrays; a caller that wants the attach broadcast passes
+    * `broadcast(v)`. */
+  private def rerank(cand: DataFrame, qv: DataFrame, nv: DataFrame,
+                     carry: String*): DataFrame = {
+    val a = qv.select(col("vec_id").as("qid"), col("vd").as("va"),
+                      col("nrm").as("na"))
+    val b = nv.select((col("vec_id").as("nid") +:
+      carry.map(c => col(c).as(s"n$c"))) ++
+      Seq(col("vd").as("vb"), col("nrm").as("nb")): _*)
+    cand.join(a, "qid").join(b, "nid")
+      .select((Seq(col("qid"), col("nid")) ++
+        carry.map(c => col(s"n$c")) :+ cosR): _*)
+  }
+
+  /** Reranked pairs in the unordered-pair schema (id_a, id_b, cos_r). */
+  private def asPairs(scored: DataFrame): DataFrame =
+    scored.select(col("qid").as("id_a"), col("nid").as("id_b"),
+                  col("cos_r"))
+
+  /** Argmax consumer: each query's best neighbour by graft_top1 — a
+    * deterministic (cos DESC, nid ASC) pick in one aggregation instead of
+    * a window sort over the candidate stream — as (vec_id, `nidAs`,
+    * cos_r) ordered by vec_id. Duplicate candidates are harmless: the
+    * argmax is idempotent. */
+  private def top1(s: SparkSession, scored: DataFrame,
+                   nidAs: String): DataFrame = {
+    graft.functions.KnnVote.register(s)
+    graft.functions.KnnVote.raiseHashAggFallback(s)
+    scored.groupBy("qid")
+      .agg(expr("graft_top1(cos_r, nid)").as("t"))
+      .select(col("qid").as("vec_id"), col("t.nid").as(nidAs),
+              col("t.cos").as("cos_r"))
+      .orderBy("vec_id")
+  }
+
+  /** kNN (k=5) majority-vote consumer over directed scored neighbours
+    * (qid, nid, nlabel, cos_r). Fused native aggregate
+    * (TypedImperativeAggregate): bounded top-5 heap + majority vote in ONE
+    * aggregation — update() reads InternalRow fields directly (no encoder
+    * round-trip over the pair stream), and the shuffle carries <= 5
+    * neighbours per vector. The heap skips duplicate neighbour ids, so a
+    * candidate stream with repeats still casts one vote per pair. */
+  private def knnVote(s: SparkSession, directed: DataFrame): DataFrame = {
+    graft.functions.KnnVote.register(s)
+    graft.functions.KnnVote.raiseHashAggFallback(s)
+    directed
+      .groupBy("qid")
+      .agg(expr("graft_knn_vote(cos_r, nid, nlabel)").as("vote"))
+      .select(col("qid").as("vec_id"), col("vote.pred_label").as("pred_label"),
+              col("vote.votes").as("votes"))
+      .orderBy("vec_id")
+  }
 
   /** kNN (k=5) majority label vote per vector. The cosine kernel runs once
     * per unordered pair and is mirrored into both directions — half the
@@ -65,26 +130,15 @@ object SimOps {
                      col("vd").as("va"), col("nrm").as("na"))
     val b = v.select(col("vec_id").as("id_b"), col("label").as("label_b"),
                      col("vd").as("vb"), col("nrm").as("nb"))
+    // Unlike [[rerank]], the vectors ride through the pair join itself;
+    // attaching them after it would change this query's plan.
     val up = a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("label_a"), col("id_b"), col("label_b"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
+      .select(col("id_a"), col("label_a"), col("id_b"), col("label_b"), cosR)
     val directed = up.select(col("id_a").as("qid"), col("id_b").as("nid"),
                              col("label_b").as("nlabel"), col("cos_r"))
       .unionAll(up.select(col("id_b").as("qid"), col("id_a").as("nid"),
                           col("label_a").as("nlabel"), col("cos_r")))
-    // Fused native aggregate (TypedImperativeAggregate): bounded top-5
-    // heap + majority vote in ONE aggregation — update() reads InternalRow
-    // fields directly (no encoder round-trip over the ~n² pair stream),
-    // and the shuffle carries <= 5 neighbors per vector.
-    graft.functions.KnnVote.register(s)
-    graft.functions.KnnVote.raiseHashAggFallback(s)
-    directed
-      .groupBy("qid")
-      .agg(expr("graft_knn_vote(cos_r, nid, nlabel)").as("vote"))
-      .select(col("qid").as("vec_id"), col("vote.pred_label").as("pred_label"),
-              col("vote.votes").as("votes"))
-      .orderBy("vec_id")
+    knnVote(s, directed)
   }
 
   // ---- MinHash + LSH near-duplicate detection (no SQL oracle —
@@ -289,8 +343,6 @@ object SimOps {
     * jobs were pure waste (r9 verdict). */
   private val corpusSizeMemo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  /** Test hook: forget the per-JVM memo. */
-  private[graft] def resetCorpusSizeMemo(): Unit = corpusSizeMemo.clear()
   private def corpusSize(s: SparkSession, d: String): Long =
     // keyed by (session, dir) — round-10 advice: a dir-only key would
     // pin the dispatch decision across session restarts, where "the
@@ -360,38 +412,42 @@ object SimOps {
       .select(col("vec_id"), col("b.tbl").as("tbl"), col("b.key").as("key"))
   }
 
-  /** Directed candidate pairs (qid, nid) from a multi-table bucket join
-    * with optional Hamming-≤1 multi-probe on the query side. The join key
-    * is (tbl, key) — at 100 TB that is the shuffle key, so each bucket's
-    * pairs co-locate (ClusterJoin shape) and cost per query is
-    * O(tables · probes · bucket), logarithmic-ish in n via `bits`. */
-  private def annCandidates(v: DataFrame, tables: Int, bits: Int,
-                            probe: Boolean, seed: Long): DataFrame = {
-    val pl = planes(tables, bits, 64, seed)
-    val sig = sigRows(v, pl)
-    val probes =
-      if (!probe) sig.withColumn("pkey", col("key"))
-      else probeRows(sig, bits)
-    // NOT distinct'ed: a pair colliding in several tables/probes appears
-    // several times. Deduplicating here would shuffle the full candidate
-    // stream; both consumers tolerate duplicates instead — argmax rerank is
-    // idempotent, threshold rerank dedupes after the τ filter (tiny).
-    probes.select(col("tbl"), col("pkey"), col("vec_id").as("qid"))
-      .join(sig.select(col("tbl").as("tbl_i"), col("key").as("key_i"),
-                       col("vec_id").as("nid")),
-            col("tbl") === col("tbl_i") && col("pkey") === col("key_i") &&
-            col("qid") =!= col("nid"))
+  /** The LSH bucket join: directed candidate pairs (qid, nid) whose
+    * signature rows (vec_id, tbl, key) share a bucket, with Hamming-≤1
+    * multi-probe on the query side — each query row becomes bits+1 probe
+    * keys, so recall comes from probing, not from data motion. The join
+    * key is (tbl, key) — at 100 TB that is the shuffle key, so each
+    * bucket's pairs co-locate (ClusterJoin shape) and cost per query is
+    * O(tables · probes · bucket), logarithmic-ish in n via `bits`. The
+    * index side is the query side itself ([[annCandidates]]) or a
+    * persisted store ([[incrementalAnnProbe]]).
+    *
+    * NOT distinct'ed: a pair colliding in several tables/probes appears
+    * several times. Deduplicating here would shuffle the full candidate
+    * stream; the consumers tolerate duplicates instead — the argmax and
+    * the vote are idempotent, threshold rerank dedupes after the τ filter
+    * (tiny), and the top-k dedupes bare id pairs before the rerank. */
+  private def bucketJoin(query: DataFrame, index: DataFrame,
+                         bits: Int): DataFrame =
+    query.select(col("vec_id"), col("tbl"),
+        explode(array((col("key") +:
+          (0 until bits).map(j => col("key").bitwiseXOR(lit(1 << j)))
+        ).toIndexedSeq: _*)).as("pkey"))
+      .select(col("tbl"), col("pkey"), col("vec_id").as("qid"))
+      .join(index.select(col("tbl").as("tbl_i"), col("key").as("key_i"),
+                         col("vec_id").as("nid")),
+            col("tbl") === col("tbl_i") && col("pkey") === col("key_i"))
       .select("qid", "nid")
-  }
 
-  /** Hamming-≤1 multi-probe expansion of signature rows: each (vec_id,
-    * tbl, key) row becomes bits+1 probe keys — recall comes from probing,
-    * not from data motion. */
-  private def probeRows(sig: DataFrame, bits: Int): DataFrame =
-    sig.select(col("vec_id"), col("tbl"),
-      explode(array((col("key") +:
-        (0 until bits).map(j => col("key").bitwiseXOR(lit(1 << j)))
-      ).toIndexedSeq: _*)).as("pkey"))
+  /** In-memory LSH self-join over `v`: `tables` seeded hyperplane tables
+    * with `bits` sized for n vectors at `targetBucket` occupancy, every
+    * vector a query, self-pairs dropped. */
+  private def annCandidates(v: DataFrame, n: Long, tables: Int,
+                            targetBucket: Int, seed: Long): DataFrame = {
+    val bits = bitsFor(n, targetBucket)
+    val sig = sigRows(v, planes(tables, bits, 64, seed))
+    bucketJoin(sig, sig, bits).where(col("qid") =!= col("nid"))
+  }
 
   /** bits so the expected bucket occupancy stays ≈ targetBucket as n grows
     * — candidates per query then scale with log n, not n. */
@@ -409,9 +465,8 @@ object SimOps {
     * membership is probabilistic in the hash draw (sanctioned no-oracle
     * tier, like dedup_minhash). */
   def dedupEmbeddingAnnOn(v: DataFrame, tau: Double, tables: Int,
-                          targetBucket: Int, n: Long,
-                          seed: Long = 42L): DataFrame =
-    annPairsOn(v, tau, tables, targetBucket, n, seed)
+                          targetBucket: Int, n: Long): DataFrame =
+    annPairsOn(v, tau, tables, targetBucket, n)
       .distinct() // multi-table collisions; post-filter, so rows are few
       .orderBy("id_a", "id_b")
 
@@ -419,21 +474,11 @@ object SimOps {
     * distinct + total sort: duplicate-tolerant consumers (the union-find
     * clustering — any spanning multiset of a clique's edges yields the
     * same components) read this form and skip two exchanges. */
-  private[graft] def annPairsOn(v: DataFrame, tau: Double, tables: Int,
-                                targetBucket: Int, n: Long,
-                                seed: Long = 42L): DataFrame = {
-    val cand = annCandidates(v, tables, bitsFor(n, targetBucket),
-                             probe = true, seed)
+  private def annPairsOn(v: DataFrame, tau: Double, tables: Int,
+                         targetBucket: Int, n: Long): DataFrame = {
+    val cand = annCandidates(v, n, tables, targetBucket, seed = 42L)
       .where(col("qid") < col("nid"))
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid").as("id_a"), col("nid").as("id_b"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .where(col("cos_r") >= tau)
+    asPairs(rerank(cand, v, v)).where(col("cos_r") >= tau)
   }
 
   /** IVF-style ANN — the data-adaptive alternative to hyperplane LSH
@@ -453,33 +498,16 @@ object SimOps {
     // centroid draw, both sides of the rerank join) — cache it so the
     // cast+norm scan runs once, not per reference.
     val v = normed(s, d).cache()
-    simAnnIvfP(s, v, n = v.count(), nprobe = 16)
+    top1(s, rerank(ivfCandidates(s, v, v.count()), v, v), "ann_id")
   }
 
-  def simAnnIvfP(s: SparkSession, v: DataFrame, n: Long,
-                 nprobe: Int): DataFrame = {
-    val cand = ivfCandidates(s, v, n, nprobe)
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid"), col("nid"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .groupBy("qid")
-      .agg(expr("graft_top1(cos_r, nid)").as("t"))
-      .select(col("qid").as("vec_id"), col("t.nid").as("ann_id"),
-              col("t.cos").as("cos_r"))
-      .orderBy("vec_id")
-  }
-
-  /** IVF coarse-quantizer candidate generation, factored out so the
-    * exact-rerank path ([[simAnnIvfP]]) and the PQ-scored path
-    * ([[simAnnPqP]]) share one cell machinery: k ≈ √n deterministic
-    * centroids, nearest-cell assignment, nprobe-cell probe set. */
-  private[graft] def ivfCandidates(s: SparkSession, v: DataFrame, n: Long,
-                                   nprobe: Int): DataFrame = {
+  /** IVF coarse-quantizer candidate generation, shared by the
+    * exact-rerank path ([[simAnnIvf]]) and the PQ-scored path
+    * ([[simAnnPq]]): k ≈ √n deterministic centroids, nearest-cell
+    * assignment, and each query probes its 16 nearest cells. */
+  private def ivfCandidates(s: SparkSession, v: DataFrame,
+                            n: Long): DataFrame = {
+    val nprobe = 16
     graft.functions.KnnVote.register(s)
     graft.functions.KnnVote.raiseHashAggFallback(s)
     val k = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -570,25 +598,23 @@ object SimOps {
     * QUERY precomputes its m×k table of subspace dot products once,
     * and each candidate pair is scored by m array LOOKUPS (codegen'd
     * `transform`+`aggregate`, no UDF, no float vector touched) instead
-    * of a 64-mult dot product; (5) exact rerank of the top `rerank`
+    * of a 64-mult dot product; (5) exact rerank of the top 16
     * ADC survivors with the full-precision kernel, so PQ distortion
     * costs recall only when the true neighbor falls outside the ADC
     * top-C, not output precision. No oracle (approximate): recall,
     * determinism, and the 4-bit code domain are property-tested. */
   def simAnnPq(s: SparkSession, d: String): DataFrame = {
     val v = normed(s, d).cache() // multi-referenced (count, encode, rerank)
+    val n = v.count()
     // m=16 4-dim subspaces: the testdata embeddings are isotropic —
     // PQ's hardest regime (no cluster structure for codebooks to
     // exploit) — so resolution is bought with more, smaller subspaces
     // (8 bytes of payload at rest; still 64x smaller probe state).
-    simAnnPqP(s, v, n = v.count(), m = 16, ksub = 16, nprobe = 16,
-              rerank = 16)
-  }
-
-  def simAnnPqP(s: SparkSession, v: DataFrame, n: Long, m: Int, ksub: Int,
-                nprobe: Int, rerank: Int): DataFrame = {
-    graft.functions.VectorExprs.register(s)
-    graft.functions.KnnVote.register(s)
+    // k=16 centroids per subspace (4-bit codes); the exact rerank sees
+    // each query's top 16 ADC scores.
+    val m = 16
+    val ksub = 16
+    val shortlistSize = 16
     // Unit vectors: cosine(q, c) = dot(uq, uc), so PQ approximates the
     // cosine directly and the ADC sum needs no norm correction.
     val u = v.select(col("vec_id"), col("nrm"),
@@ -651,27 +677,15 @@ object SimOps {
     // exchange — a row_number window would shuffle-sort every pair)
     graft.functions.PqExprs.register(s)
     graft.functions.KnnVote.raiseHashAggFallback(s)
-    val cand = ivfCandidates(s, v, n, nprobe)
-    val shortlist = cand.join(queries, "qid").join(coded, "nid")
+    val shortlist = ivfCandidates(s, v, n)
+      .join(queries, "qid").join(coded, "nid")
       .select(col("qid"), col("nid"),
               expr("graft_pq_adc(codes, adc)").as("adc_score"))
       .groupBy("qid")
-      .agg(expr(s"graft_topc(adc_score, nid, $rerank)").as("nids"))
+      .agg(expr(s"graft_topc(adc_score, nid, $shortlistSize)").as("nids"))
       .select(col("qid"), explode(col("nids")).as("nid"))
     // -- (5) exact rerank of the ADC shortlist
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    shortlist.join(a, "qid").join(b, "nid")
-      .select(col("qid"), col("nid"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .groupBy("qid")
-      .agg(expr("graft_top1(cos_r, nid)").as("t"))
-      .select(col("qid").as("vec_id"), col("t.nid").as("ann_id"),
-              col("t.cos").as("cos_r"))
-      .orderBy("vec_id")
+    top1(s, rerank(shortlist, v, v), "ann_id")
   }
 
   /** Per-subspace Lloyd k-means on the driver sample (bounded; see
@@ -734,29 +748,9 @@ object SimOps {
     * SQL oracle: candidate membership is probabilistic in the hash draw. */
   def simKnnLabelAnn(s: SparkSession, d: String): DataFrame = {
     val v = normed(s, d).cache() // see simAnnIvf: multi-referenced
-    simKnnLabelAnnP(s, v, tables = 8, targetBucket = 32, n = v.count())
-  }
-
-  def simKnnLabelAnnP(s: SparkSession, v: DataFrame, tables: Int,
-                      targetBucket: Int, n: Long,
-                      seed: Long = 7L): DataFrame = {
-    graft.functions.KnnVote.register(s)
-    graft.functions.KnnVote.raiseHashAggFallback(s)
-    val cand = annCandidates(v, tables, bitsFor(n, targetBucket),
-                             probe = true, seed)
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("label").as("nlabel"),
-                     col("vd").as("vb"), col("nrm").as("nb"))
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid"), col("nid"), col("nlabel"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .groupBy("qid")
-      .agg(expr("graft_knn_vote(cos_r, nid, nlabel)").as("vote"))
-      .select(col("qid").as("vec_id"), col("vote.pred_label").as("pred_label"),
-              col("vote.votes").as("votes"))
-      .orderBy("vec_id")
+    val cand = annCandidates(v, v.count(), tables = 8, targetBucket = 32,
+                             seed = 7L)
+    knnVote(s, rerank(cand, v, v, "label"))
   }
 
   /** Global top-10 most-similar pairs via LSH candidates + exact rerank —
@@ -770,43 +764,28 @@ object SimOps {
     * (probabilistic in the hash draw), same tier as dedup_minhash. */
   def simCosineTopkAnn(s: SparkSession, d: String): DataFrame = {
     val v = normed(s, d).cache() // see simAnnIvf: multi-referenced
-    // (tables=4, targetBucket=64) tuned on the testdata grid (TopkProbe):
-    // recovers the exact top-10 at sf0.001/0.01/0.1 and is the cheapest
-    // such config — 4×(bits+1) probes/query vs 8×(bits+1) for the old
-    // (8, 32), halving the candidate stream the pair-distinct must shuffle.
+    // (tables=4, targetBucket=64, multi-probe on) was picked on a
+    // (tables, targetBucket, probe) grid over the testdata: it recovers
+    // the exact top-10 at sf0.001/0.01/0.1 and is the cheapest such
+    // config — 4×(bits+1) probes/query vs 8×(bits+1) for the old (8, 32),
+    // halving the candidate stream the pair-distinct must shuffle.
     // Measured crossover vs the exact all-pairs twin: ANN wins from
     // n ≈ 5 000 (sf0.1: 1.0 s vs 1.4 s exact, warm local[32]) and ties at
     // n ≈ 500; below that brute force is free anyway. Recall margin:
     // per-table catch at the top-pair regime (cos ≈ 0.6, bits=7 multiprobe)
     // ≈ 0.5, so a top pair escapes all 4 tables with p ≈ 0.06 — but the
     // top-10 set is re-checked by the Wave7 exact-match test at every sf.
-    simCosineTopkAnnP(s, v, tables = 4, targetBucket = 64, n = v.count())
-  }
-
-  def simCosineTopkAnnP(s: SparkSession, v: DataFrame, tables: Int,
-                        targetBucket: Int, n: Long,
-                        seed: Long = 11L,
-                        probe: Boolean = true): DataFrame = {
     // Dedup the candidate stream BEFORE attaching vectors: a pair that
     // collides in several tables/probes would otherwise pay graft_dot per
     // duplicate (up to tables×(bits+1) times). The distinct shuffles only
     // bare (long, long) ids with map-side combine — measurably cheaper
-    // than the duplicated rerank it avoids. (Contrast simAnnBucketP: its
+    // than the duplicated rerank it avoids. (Contrast simAnnBucket: its
     // argmax rerank is per-QUERY, so duplicates there cost one extra
     // agg row, not a recomputed kernel — deduping earlier lost.)
-    val cand = annCandidates(v, tables, bitsFor(n, targetBucket),
-                             probe, seed)
+    val cand = annCandidates(v, v.count(), tables = 4, targetBucket = 64,
+                             seed = 11L)
       .where(col("qid") < col("nid")).distinct()
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid").as("id_a"), col("nid").as("id_b"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .orderBy(col("cos_r").desc, col("id_a").asc, col("id_b").asc)
-      .limit(10)
+    top10(asPairs(rerank(cand, v, v)))
   }
 
   // ---- incremental (snapshot) dedup: new batch vs persisted signatures ----
@@ -837,19 +816,26 @@ object SimOps {
     * last). */
   private[graft] def ensureSignatureStore(s: SparkSession, d: String): String =
     sigStoreBuilt.getOrElseUpdate(d, sigStoreLock.synchronized {
-      val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val path = s"$wh/graft_sigstore_$key"
-      val hconf = s.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf)
-      val ok = fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+      val (path, ok) = storeAt(s, d, "sigstore")
       if (!ok)
         minhashSignaturesOf(
             documents(s, d).where(foldBucket < NewBatchFold))
           .write.mode("overwrite").parquet(path)
       path
     })
+
+  /** Warehouse path `<warehouse>/graft_<name>_<dir key>` of a persisted
+    * store derived from dataset dir `d`, and whether a completed write is
+    * there: overwrite mode commits `_SUCCESS` last, so a half-finished
+    * write from a crashed run never reads as a valid store. */
+  private def storeAt(s: SparkSession, d: String,
+                      name: String): (String, Boolean) = {
+    val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
+    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_${name}_$key"
+    val p = new org.apache.hadoop.fs.Path(path)
+    (path, p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+  }
 
   /** Incremental dedup — the operator a training pipeline runs per crawl:
     * dedup the NEW batch (fold >= 90, ~10% of docs) against the persisted
@@ -971,29 +957,17 @@ object SimOps {
   private[graft] def ensureEmbSignatureStore(
       s: SparkSession, d: String): (String, String) =
     embStoreBuilt.getOrElseUpdate(d, embStoreLock.synchronized {
-      val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val vecPath = s"$wh/graft_embstore_vec_$key"
-      val sigPath = s"$wh/graft_embstore_sig_$key"
-      val hconf = s.sparkContext.hadoopConfiguration
-      def ok(path: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(hconf)
-          .exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-      }
+      val (vecPath, vecOk) = storeAt(s, d, "embstore_vec")
+      val (sigPath, sigOk) = storeAt(s, d, "embstore_sig")
       def formatCurrent: Boolean = scala.util.Try(
         s.read.parquet(vecPath).schema.fieldNames.contains("vf"))
         .getOrElse(false)
-      if (!(ok(vecPath) && ok(sigPath) && formatCurrent)) {
+      if (!(vecOk && sigOk && formatCurrent)) {
         val old = normed(s, d).where(foldOf(col("vec_id")) < NewBatchFold)
           .cache()
-        old.select(col("vec_id"),
-                   transform(col("vd"), _.cast("float")).as("vf"),
-                   col("nrm"))
-          .write.mode("overwrite").parquet(vecPath)
+        embStoreVecRows(old).write.mode("overwrite").parquet(vecPath)
         val bits = bitsFor(old.count(), EmbStoreBucket)
-        sigRows(old, planes(EmbStoreTables, bits, 64, EmbStoreSeed))
-          .write.mode("overwrite").parquet(sigPath)
+        embStoreSigRows(old, bits).write.mode("overwrite").parquet(sigPath)
         old.unpersist()
       }
       (vecPath, sigPath)
@@ -1041,29 +1015,8 @@ object SimOps {
   private[graft] def incrementalAnnProbe(s: SparkSession, newV: DataFrame,
                                          oldVec: DataFrame, oldSig: DataFrame,
                                          bits: Int): DataFrame = {
-    graft.functions.KnnVote.register(s)
-    graft.functions.KnnVote.raiseHashAggFallback(s)
-    val pl = planes(EmbStoreTables, bits, 64, EmbStoreSeed)
-    val cand = probeRows(sigRows(newV, pl), bits)
-      .join(oldSig.select(col("tbl").as("tbl_i"), col("key").as("key_i"),
-                          col("vec_id").as("nid")),
-            col("tbl") === col("tbl_i") && col("pkey") === col("key_i"))
-      .select(col("vec_id").as("qid"), col("nid"))
-    val a = newV.select(col("vec_id").as("qid"), col("vd").as("va"),
-                        col("nrm").as("na"))
-    val b = oldVec.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                          col("nrm").as("nb"))
-    // Duplicate candidates (multi-table/probe collisions) are NOT
-    // distinct'ed — the per-query argmax is idempotent (see annCandidates).
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid"), col("nid"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      .groupBy("qid")
-      .agg(expr("graft_top1(cos_r, nid)").as("t"))
-      .select(col("qid").as("vec_id"), col("t.nid").as("nn_id"),
-              col("t.cos").as("cos_r"))
-      .orderBy("vec_id")
+    val cand = bucketJoin(embStoreSigRows(newV, bits), oldSig, bits)
+    top1(s, rerank(cand, newV, oldVec), "nn_id")
   }
 
   /** Normalized-vector form of an embeddings-shaped frame (vec_id, label,
@@ -1078,7 +1031,8 @@ object SimOps {
   }
 
   /** Signature rows under the fixed EmbStore geometry at the given
-    * `bits` — what a stream maintainer writes per batch. */
+    * `bits` — what the batch-built store and a stream maintainer write,
+    * and what [[incrementalAnnProbe]] probes with. */
   private[graft] def embStoreSigRows(v: DataFrame, bits: Int): DataFrame =
     sigRows(v, planes(EmbStoreTables, bits, 64, EmbStoreSeed))
 
@@ -1092,7 +1046,7 @@ object SimOps {
   /** Approximate nearest neighbor via multi-table random-hyperplane LSH
     * with Hamming-≤1 multi-probe, then exact top-1 cosine rerank (no
     * oracle — approximate; recall is property-tested against brute force).
-    * Parametric where it matters at scale: `bits` grows as
+    * Sized for scale: `bits` grows as
     * log2(n/targetBucket) so bucket occupancy — and with it candidates per
     * query, ≈ tables·(bits+1)·targetBucket — stays flat as n grows;
     * recall tunes with `tables` × probing, never with data motion. At
@@ -1100,34 +1054,9 @@ object SimOps {
     * (ClusterJoin shape). */
   def simAnnBucket(s: SparkSession, d: String): DataFrame = {
     val v = normed(s, d).cache() // see simAnnIvf: multi-referenced
-    simAnnBucketP(s, v, tables = 6, targetBucket = 32, n = v.count())
-  }
-
-  /** Parametric core of [[simAnnBucket]]: per-vector best neighbor among
-    * the LSH candidates (exact cosine, deterministic tie-break). */
-  def simAnnBucketP(s: SparkSession, v: DataFrame, tables: Int,
-                    targetBucket: Int, n: Long,
-                    seed: Long = 7L): DataFrame = {
-    val cand = annCandidates(v, tables, bitsFor(n, targetBucket),
-                             probe = true, seed)
-    val a = v.select(col("vec_id").as("qid"), col("vd").as("va"),
-                     col("nrm").as("na"))
-    val b = v.select(col("vec_id").as("nid"), col("vd").as("vb"),
-                     col("nrm").as("nb"))
-    graft.functions.KnnVote.register(s)
-    graft.functions.KnnVote.raiseHashAggFallback(s)
-    cand.join(a, "qid").join(b, "nid")
-      .select(col("qid"), col("nid"),
-              round(expr("graft_dot(va, vb)") / (col("na") * col("nb")), 4)
-                .as("cos_r"))
-      // native argmax (graft_top1): deterministic (cos DESC, id ASC) best
-      // neighbor per group — one aggregation instead of a full window sort
-      // over the candidate stream.
-      .groupBy("qid")
-      .agg(expr("graft_top1(cos_r, nid)").as("t"))
-      .select(col("qid").as("vec_id"), col("t.nid").as("ann_id"),
-              col("t.cos").as("cos_r"))
-      .orderBy("vec_id")
+    val cand = annCandidates(v, v.count(), tables = 6, targetBucket = 32,
+                             seed = 7L)
+    top1(s, rerank(cand, v, v), "ann_id")
   }
 
   /** Connected-component cluster assignment over the embedding near-dup
@@ -1168,14 +1097,17 @@ object SimOps {
     * the production path at scale (no n² stage anywhere); callers who
     * don't want to choose use [[dedupClustersAuto]], which routes on the
     * same measured n≈5000 crossover as the other similarity dispatches. */
-  def dedupClusters(s: SparkSession, d: String): DataFrame = {
-    val pairs = cosinePairs(s, d).where(col("cos_r") >= 0.40)
-      .select(col("id_a").as("u"), col("id_b").as("v"))
-    ccLabels(s, pairs, perTask = 4000000L)
+  def dedupClusters(s: SparkSession, d: String): DataFrame =
+    clustersOf(s, cosinePairs(s, d).where(col("cos_r") >= 0.40))
+
+  /** (vec_id, cluster_rep, keep) per vector of the near-dup pair graph
+    * (id_a, id_b, …), ordered by vec_id. */
+  private def clustersOf(s: SparkSession, pairs: DataFrame): DataFrame =
+    ccLabels(s, pairs.select(col("id_a").as("u"), col("id_b").as("v")),
+             perTask = 4000000L)
       .select(col("node").as("vec_id"), col("rep").as("cluster_rep"),
               (col("node") === col("rep")).as("keep"))
       .orderBy("vec_id")
-  }
 
   /** Per-label embedding centroids + the pairwise centroid-cosine matrix
     * — class prototypes and inter-class geometry, the standard
@@ -1236,12 +1168,7 @@ object SimOps {
     // tolerant, so the pair query's distinct + total sort (two exchanges
     // over the full edge list) buy nothing here — at scale the edge list
     // is this operator's biggest intermediate.
-    val pairs = annPairsOn(v, tau, tables = 4, targetBucket = 64, n)
-      .select(col("id_a").as("u"), col("id_b").as("v"))
-    ccLabels(s, pairs, perTask = 4000000L)
-      .select(col("node").as("vec_id"), col("rep").as("cluster_rep"),
-              (col("node") === col("rep")).as("keep"))
-      .orderBy("vec_id")
+    clustersOf(s, annPairsOn(v, tau, tables = 4, targetBucket = 64, n))
   }
 
   /** Connected-component labels (node, rep=component min) for an edge

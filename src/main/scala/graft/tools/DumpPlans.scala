@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: regenerate PLANS.md — executed-plan evidence for the headline
   * queries (shuffle counts, join strategies, pushdown). */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // UTC pin (r7 advice): match Verify/Bench/tests so dumped plans of
-      // events-derived queries show the oracle's wall-clock semantics.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(cpus = 8, shufflePartitions = 8)
     val d = "/root/testdata/sf0.01"
     val names = Seq(
       "scan_pruned", "agg_pricing_summary", "join_broadcast", "sub_scalar",

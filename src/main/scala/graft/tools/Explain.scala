@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: print the formatted physical plan for one or more declared
@@ -8,13 +7,7 @@ import graft.SparkEntry
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(cpus = 4, shufflePartitions = 4)
     args.tail.foreach { q =>
       println(s"===== $q =====")
       SparkEntry.queries(q)(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline BPE fit — produces the merge-ranks literal embedded in
   * [[graft.ops.BpeOps]].
   *
@@ -65,12 +63,7 @@ object FitBpe {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val n = if (args.length > 1) args(1).toInt else 48
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession(cpus = 4, shufflePartitions = 4)
     // Driver-side collect is the POINT here, but it must stay bounded:
     // this offline fitting tool needs only a representative sample to
     // learn ~48 merge rules, so cap the corpus pulled to the driver at

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization guide §1.1, the empirical loop without a UI):
   * run ONE declared query under the bench session config with a
@@ -27,15 +26,7 @@ object ProfileOne {
     val name = args(0)
     val warm = args.contains("warm")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",    // Bench parity
-        graft.engine.Scale.shufflePartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession.bench(sfDir)
     val fn = SparkEntryRef.queries.getOrElse(name,
       throw new IllegalArgumentException(s"unknown query: $name"))
     if (warm) {

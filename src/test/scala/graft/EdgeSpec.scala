@@ -123,7 +123,17 @@ class EdgeSpec extends SparkTestBase {
                                   // build) + filter + sort
       "win_transitions" -> 4,     // ONE user lead-window shuffle + pair
                                   // agg + cur-row window + sort
-      "join_star_schema" -> 2     // all five dims broadcast: agg + sort
+      "join_star_schema" -> 2,    // all five dims broadcast: agg + sort
+      // vector queries (bucket join + exact rerank + argmax/vote/top-k)
+      "sim_ann_bucket" -> 2,
+      "sim_ann_ivf" -> 6,
+      "sim_ann_pq" -> 6,
+      "sim_knn_label_ann" -> 2,
+      "sim_cosine_topk_ann" -> 1,
+      "sim_incremental_ann" -> 2,
+      "dedup_clusters_ann" -> 1,
+      "sim_cosine_topk" -> 0,     // id-pair BNLJ, broadcast vector attach
+      "sim_knn_label" -> 2
     )
     budgets.foreach { case (name, budget) =>
       val plan = SparkEntry.queries(name)(spark, sf)

@@ -134,4 +134,26 @@ class Wave7Spec extends SparkTestBase {
       .collect().sortBy(_.getLong(0)).toSeq
     assert(once == twice, "duplicated rows changed the kNN vote")
   }
+
+  test("no-oracle vector queries keep their (rows, checksum) at sf0.001") {
+    // The recall and determinism tests tolerate a changed neighbour set;
+    // this pins exactly which neighbours (and cosines) come out.
+    import spark.implicits._
+    val want = Map(
+      "sim_ann_bucket" -> (500L, 1074248380600L),
+      "sim_ann_ivf" -> (500L, 1075121285876L),
+      "sim_ann_pq" -> (500L, 1046530204119L),
+      "sim_knn_label_ann" -> (500L, 1079428247308L),
+      "sim_cosine_topk_ann" -> (10L, 17884926504L),
+      "sim_incremental_ann" -> (61L, 123004778857L),
+      "dedup_embedding_ann" -> (7L, 13290001342L),
+      "dedup_clusters_ann" -> (111L, 235454374345L))
+    val got = want.keys.map { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      q -> df.agg(count(lit(1)), coalesce(sum(pmod(
+          xxhash64(df.columns.toSeq.map(df.col): _*), lit(1L << 32))), lit(0L)))
+        .as[(Long, Long)].head()
+    }.toMap
+    assert(got == want)
+  }
 }
