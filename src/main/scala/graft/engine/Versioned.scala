@@ -28,7 +28,8 @@ class ConcurrentCommitException(msg: String, cause: Throwable = null)
   *                                 one per ATTEMPT (winner bound by the
   *                                 binding; legacy: manifest/<v>.txt
   *                                 with no binding)
-  *   dir/stats|ledger/<v>_<token>.txt  sidecars, same attempt binding
+  *   dir/<kind>/<v>_<token>.txt   sidecars, same attempt binding
+  *                                 ([[SidecarKinds]])
   *   dir/data/<v>_<token>/...      data staged by ONE writer's attempt
   * }}}
   *
@@ -349,7 +350,7 @@ object Versioned {
             "mid-read — re-derive from the current commit log")
       val m = readSmallFile(fs, markerP)
       if (m.nonEmpty) Some(Some(m))
-      else if (fs.exists(new Path(dir, s"manifest/$v.txt"))) Some(None)
+      else if (fs.exists(sidecarPathFor(dir, v, None, Manifest))) Some(None)
       else None
     }
     var attempt = 0
@@ -414,7 +415,8 @@ object Versioned {
       true
     }
     if (readSmallFile(fs, marker).nonEmpty) return false   // v3.0 interim
-    if (fs.exists(new Path(dir, s"manifest/$v.txt"))) return false // legacy
+    // a legacy commit (version-named manifest, no binding)
+    if (fs.exists(sidecarPathFor(dir, v, None, Manifest))) return false
     // store-clock age: create a probe and compare the two mtimes, so
     // client/store clock skew cannot defeat the grace either way
     val probe = new Path(dir, s"commits/.repair_probe_${newToken()}")
@@ -442,30 +444,16 @@ object Versioned {
         if (emptyWinner) false
         else { fs.delete(marker, false); true }
       case Some(pv) =>
-        val entries = manifest(s, dir, pv)
         val tok = newToken()
-        writeManifestFile(fs,
-          sidecarPathFor(dir, v, Some(tok), "manifest"), entries)
-        // DV refs are CORRECTNESS state bound to the manifest being
-        // duplicated: a repaired no-op version without the previous
-        // version's dv sidecar would RESURRECT every MOR-deleted row
-        // the moment it becomes current (the protocol fuzz found
-        // exactly this: MOR delete → torn claim → repair → ghosts).
-        // Stats stay dropped (pruning is optional, never correctness);
-        // the ledger reader walks back past ledgerless versions.
-        Seq("dv", "uv").foreach { side =>
-          committedSidecar(s, dir, pv, side).foreach { from =>
-            val in = fs.open(from)
-            val bytes = try {
-              val bos = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-              bos.toByteArray
-            } finally in.close()
-            val out = createExclusive(
-              fs, sidecarPathFor(dir, v, Some(tok), side), side)
-            try out.write(bytes) finally out.close()
-          }
-        }
+        // the no-op version duplicates pv's manifest, so pv's partition
+        // lines describe it exactly. DV refs are CORRECTNESS state: a
+        // repaired version without pv's dv sidecar would RESURRECT every
+        // MOR-deleted row the moment it becomes current (the protocol
+        // fuzz found exactly this: MOR delete → torn claim → repair →
+        // ghosts). The cumulative kinds' readers walk back past it.
+        writeSidecar(s, dir, v, tok, Manifest,
+          manifestLines(manifest(s, dir, pv)))
+        copyPartitionSidecars(s, dir, pv, dir, v, tok)
         if (emptyWinner) {
           // overwrite (see the scaladoc): last-write-wins between this
           // repair token and a resuming writer's leaves a valid binding
@@ -477,6 +465,82 @@ object Versioned {
         } else claimWinner(fs, dir, v, tok) // false → writer finished first
     }
   }
+
+  /** The VERSIONED SIDECAR kinds: `<kind>/<v>_<token>.txt` files beside
+    * the commit log, written once under the publishing attempt's token
+    * BEFORE [[publish]] binds it, so a committed version and its
+    * sidecars commit atomically and a losing or crashed attempt's files
+    * are never read (legacy commits use `<kind>/<v>.txt`). Each kind's
+    * directory name is defined here and nowhere else: a new kind joins
+    * one of the lists below and thereby gets its rollback, branch,
+    * repair and vacuum rules. */
+  private[graft] val Manifest = "manifest"
+  /** The partitions whose live content a commit may have changed —
+    * what a rebase's disjointness check trusts. An absent sidecar
+    * declares nothing (= touches everything); an empty one is a real
+    * "content untouched" declaration (ledger ticks). Never carried. */
+  private[graft] val Touch = "touch"
+  /** Per-partition zone maps (Iceberg's manifest stats): range bounds
+    * ([[readStatsMulti]]), dictionaries, blooms and per-file row counts,
+    * one line per partition × column. Stats make range pruning
+    * LAYOUT-AGNOSTIC — the reader needs only the bounds, not how the
+    * writer clustered the data — and are an optimization, never a
+    * correctness gate: a missing line merely reads the partition. */
+  private[graft] val Stats = "stats"
+  /** Merge-on-read DELETION VECTORS (Delta's DV idea, at this store's
+    * partition granularity): each line maps a partition dir name to a
+    * tombstone-key parquet dir (under `dvdata/`) that must be
+    * ANTI-JOINED out of that partition's rows on read (format:
+    * [[dvLineFields]]). A MOR delete publishes only this sidecar plus
+    * one small tombstone dir — the manifest and data dirs carry
+    * verbatim, so delete cost is ∝ deleted keys, never partition bytes.
+    * Unlike stats, DV refs are CORRECTNESS state: every publisher that
+    * restages a partition must first read it LIVE ([[readEntriesLive]],
+    * which applies the refs) and then DROP that partition's lines. */
+  private[graft] val Dv = "dv"
+  /** Merge-on-read UPDATE VECTORS — the DV idea for updates
+    * ([[graft.ops.MergeOps.mergeUpdateMor]]): each line names a dir of
+    * FULL replacement row images (under `uvdata/`, partitioned by the
+    * table's partCol) that SUBSTITUTE for the base rows with the same
+    * key on read (format: [[uvLineFields]]) — applied BEFORE the DV
+    * anti-join (an update of a live key precedes any later tombstone of
+    * it; a tombstoned key is not live, so no image is ever written for
+    * one). Multiple generations on one partition stack: the image from
+    * the HIGHEST staged version wins per key (the dir name carries the
+    * version). Same correctness-state carry contract as dv. */
+  private[graft] val Uv = "uv"
+  /** The applied-id ledger ([[appliedLedgerIds]]). */
+  private[graft] val Ledger = "ledger"
+  /** PERSISTED table-level CHECK constraints, `name \t sql-expr` lines:
+    * TABLE METADATA riding the commit log (Delta's `ADD CONSTRAINT`
+    * model), so every writer deriving from `v` sees exactly the set
+    * committed at or before its snapshot, a torn add is invisible, and
+    * a racing add loses the version claim like any writer. An EMPTY
+    * sidecar is how dropping the last constraint releases the table
+    * ([[graft.ops.MergeOps.dropConstraint]]). A rollback restores
+    * CONTENT, not the table's contract — the Delta RESTORE rule. */
+  private[graft] val Constraints = "constraints"
+  /** Table properties (`key \t value`, [[tableProps]]). */
+  private[graft] val Props = "props"
+
+  /** Kinds whose lines are keyed by partition dir name and describe
+    * exactly ONE manifest: a writer carries the lines of the partitions
+    * it keeps and drops those it restages; rollback, torn-claim repair
+    * and a branch fork copy the source version's lines whole
+    * ([[copyPartitionSidecars]]). */
+  private[graft] val PartitionKeyed = Seq(Stats, Dv, Uv)
+
+  /** CUMULATIVE kinds: the newest committed sidecar at or below `v`
+    * is in force at `v` ([[newestSidecar]]), so writers that do not
+    * change them write none, and an empty one masks older ones.
+    * [[vacuum]] keeps each kind's newest version below its floor whole.
+    * Only the ledger rolls back with the data ([[rollback]]);
+    * constraints and properties are the table's contract and stay. */
+  private[graft] val Cumulative = Seq(Ledger, Constraints, Props)
+
+  /** Every versioned sidecar kind — what [[vacuum]] sweeps. */
+  private[graft] val SidecarKinds =
+    Seq(Manifest, Touch) ++ PartitionKeyed ++ Cumulative
 
   /** The on-disk path of a version's `side` sidecar under attempt
     * resolution: `side/<v>_<token>.txt` for tokenized commits,
@@ -505,28 +569,93 @@ object Versioned {
     finally in.close()
   }
 
+  /** The committed version `v`'s `side` lines (blank lines dropped);
+    * None when the winning attempt wrote no such sidecar. A sidecar
+    * that VANISHES between the token resolve and the read is a
+    * commit-state change (a repair rebound the version and a vacuum
+    * ghost-swept the old attempt's files), not corruption: it surfaces
+    * as the retryable race signal so withCommitRetry re-derives. */
+  private[graft] def committedLines(s: SparkSession, dir: String, v: Long,
+                                    side: String): Option[List[String]] =
+    committedSidecar(s, dir, v, side).map { p =>
+      try readLines(fsOf(s, dir), p)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new ConcurrentCommitException(
+            s"$side $p of committed version $v under $dir vanished " +
+              "mid-read — the version's winner was rebound " +
+              "concurrently; re-derive from the current commit log", e)
+      }
+    }
+
+  /** [[committedLines]], empty when the version wrote none — the carry
+    * surface of the partition-keyed kinds: a carry filters lines by
+    * partition name ([[statsLinePart]]) without parsing them, so every
+    * line form survives a carry verbatim. */
+  private[graft] def sidecarLines(s: SparkSession, dir: String, v: Long,
+                                  side: String): List[String] =
+    committedLines(s, dir, v, side).getOrElse(Nil)
+
+  /** The newest committed `side` sidecar at or below `v`, with its
+    * version — the cumulative kinds' walk-back, bounded by the version
+    * count; a table that never wrote the kind pays one existence probe.
+    * Each step resolves through the marker token, so a crashed
+    * writer's orphan and a losing racer's ghost are both invisible. */
+  private[graft] def newestSidecar(s: SparkSession, dir: String, v: Long,
+                                   side: String)
+      : Option[(Long, List[String])] =
+    if (!fsOf(s, dir).exists(new Path(dir, side))) None
+    else committedVersions(s, dir).filter(_ <= v).reverseIterator
+      .flatMap(w => committedLines(s, dir, w, side).map(w -> _))
+      .nextOption()
+
+  /** Lines of the cumulative `side` in force at `v` (empty if none). */
+  private[graft] def cumulativeLines(s: SparkSession, dir: String, v: Long,
+                                     side: String): List[String] =
+    newestSidecar(s, dir, v, side).fold(List.empty[String])(_._2)
+
+  /** Write version `v`'s `side` sidecar for attempt `token`: one
+    * write-once file of newline-terminated lines, in the caller's
+    * order. The one writer of every versioned sidecar; an existing file
+    * is the commit-race signal ([[createExclusive]]). */
+  private[graft] def writeSidecar(s: SparkSession, dir: String, v: Long,
+                                  token: String, side: String,
+                                  lines: Seq[String]): Unit = {
+    val out = createExclusive(fsOf(s, dir),
+      sidecarPathFor(dir, v, Some(token), side), side)
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Copy `from`'s partition-keyed sidecars of version `fromV` to
+    * attempt `token` of version `toV` under `to`, keeping the lines of
+    * the partitions `keep` admits; a kind left with no line is not
+    * written. */
+  private[graft] def copyPartitionSidecars(s: SparkSession, from: String,
+      fromV: Long, to: String, toV: Long, token: String,
+      keep: String => Boolean = _ => true): Unit =
+    PartitionKeyed.foreach { side =>
+      val lines = sidecarLines(s, from, fromV, side)
+        .filter(l => keep(statsLinePart(l)))
+      if (lines.nonEmpty) writeSidecar(s, to, toV, token, side, lines)
+    }
+
+  private def manifestLines(entries: Seq[(String, String)]): Seq[String] =
+    entries.map { case (k, rel) => s"$k\t$rel" }
+
   /** The committed manifest of version `v`: (partition dir name, relative
     * data dir) pairs; dir name `__ALL__` marks an unpartitioned table.
     * Resolved through the marker token (see [[committedToken]]). */
-  def manifest(s: SparkSession, dir: String, v: Long): Seq[(String, String)] = {
-    val fs = fsOf(s, dir)
-    val p = sidecarPathFor(dir, v, committedToken(s, dir, v), "manifest")
-    // A winner-named manifest that VANISHED between the token resolve
-    // and this read is a commit-state change (a repair rebound the
-    // version and a vacuum ghost-swept the old attempt's files), not
-    // corruption — surface the retryable race signal so withCommitRetry
-    // re-derives, instead of a raw FileNotFoundException.
-    try readLines(fs, p).map { line =>
-      val i = line.indexOf('\t')
-      (line.substring(0, i), line.substring(i + 1))
-    } catch {
-      case e: java.io.FileNotFoundException =>
-        throw new ConcurrentCommitException(
-          s"manifest $p of committed version $v under $dir vanished " +
-            "mid-read — the version's winner was rebound concurrently; " +
-            "re-derive from the current commit log", e)
-    }
-  }
+  def manifest(s: SparkSession, dir: String, v: Long): Seq[(String, String)] =
+    committedLines(s, dir, v, Manifest).getOrElse(
+      throw new ConcurrentCommitException(
+        s"manifest of committed version $v under $dir vanished — the " +
+          "version's winner was rebound concurrently; re-derive from the " +
+          "current commit log"))
+      .map { line =>
+        val i = line.indexOf('\t')
+        (line.substring(0, i), line.substring(i + 1))
+      }
 
   /** Stage-dir partition listing → manifest entries: every `col=value`
     * child of the staged dir (the dirs Spark's partitionBy writer
@@ -551,7 +680,7 @@ object Versioned {
   /** Create a file write-once, translating "already exists" into the
     * commit-race signal. The existence pre-check is only for a friendlier
     * message; `overwrite=false` is the atomic claim. */
-  private[graft] def createExclusive(fs: FileSystem, p: Path, what: String)
+  private def createExclusive(fs: FileSystem, p: Path, what: String)
       : org.apache.hadoop.fs.FSDataOutputStream =
     try fs.create(p, false)
     catch {
@@ -569,16 +698,6 @@ object Versioned {
     * EXCLUSIVELY, written once, never overwritten. */
   private def winnerPath(dir: String, v: Long): Path =
     new Path(dir, s"commits/$v.winner")
-
-  /** Serialize manifest entries to a write-once file — the ONE format
-    * both [[publish]] and [[repairTornCommit]] emit. */
-  private def writeManifestFile(fs: FileSystem, p: Path,
-                                entries: Seq[(String, String)]): Unit = {
-    val out = createExclusive(fs, p, "manifest")
-    try out.write(entries.map { case (k, rel) => s"$k\t$rel" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Publish version `v` as attempt `token`, in four steps whose every
     * torn intermediate state is either invisible or mechanically
@@ -609,15 +728,14 @@ object Versioned {
     * one snapshot contends on the SAME claim; a stale writer's number
     * is committed by whoever advanced current, so it loses at step 2.
     *
-    * Sidecar contract: [[writeStats]] / ledger writes that belong to
-    * this version must use the SAME token and land BEFORE publish, so a
+    * Sidecar contract: every [[writeSidecar]] that belongs to this
+    * version must use the SAME token and land BEFORE publish, so a
     * committed version and its sidecars are bound atomically by the one
     * winner file. */
   def publish(s: SparkSession, dir: String, v: Long, token: String,
               entries: Seq[(String, String)]): Unit = {
+    writeSidecar(s, dir, v, token, Manifest, manifestLines(entries))
     val fs = fsOf(s, dir)
-    writeManifestFile(fs, sidecarPathFor(dir, v, Some(token), "manifest"),
-                      entries)
     fs.mkdirs(new Path(dir, "commits"))
     val marker = new Path(dir, s"commits/$v")
     if (!atomicCreateNewFile(fs, marker))
@@ -756,92 +874,9 @@ object Versioned {
               entries: Seq[(String, String)]): Unit =
     publish(s, dir, v, newToken(), entries)
 
-  /** Per-partition zone-map sidecar (Iceberg's manifest-stats idea):
-    * `stats/<v>.txt` maps each partition dir name to the min/max of a
-    * designated LONG column, written BEFORE publish so stats and data
-    * commit together (a torn stats write precedes the marker — the
-    * version is simply not visible yet). WRITE-ONCE for the same reason
-    * the manifest is: a racing loser must not replace the bounds a
-    * committed version's readers prune by. Stats make range pruning
-    * LAYOUT-AGNOSTIC: the reader needs no knowledge of how the writer
-    * clustered the data, only the per-partition bounds. */
-  def writeStats(s: SparkSession, dir: String, v: Long, token: String,
-                 stats: Seq[(String, (Long, Long))]): Unit =
-    writeStatsLines(s, dir, v, token,
-      stats.map { case (k, (lo, hi)) => s"$k\t$lo\t$hi" })
-
-  /** MULTI-COLUMN zone maps (the Iceberg/Delta per-column bounds idea,
-    * at this store's partition granularity): `stats/<v>_<token>.txt`
-    * lines of `partition-dir-name \t column \t lo \t hi`, one per
-    * partition × stats column — the 3-field legacy form (no column
-    * field) remains readable as the table's single unnamed key. Same
-    * write-once / commit-with-the-manifest contract as [[writeStats]].
-    * Multi-column bounds are what let a reader prune on the
-    * INTERSECTION of several predicates without knowing which column
-    * the writer clustered by — at 100 TB, the second predicate often
-    * prunes what the first cannot. */
-  def writeStatsMulti(s: SparkSession, dir: String, v: Long, token: String,
-                      stats: Seq[(String, Seq[(String, (Long, Long))])])
-      : Unit =
-    writeStatsLines(s, dir, v, token,
-      stats.flatMap { case (part, cols) =>
-        cols.map { case (c, (lo, hi)) => s"$part\t$c\t$lo\t$hi" } })
-
-  /** Raw committed stats lines of version `v` (empty if none) — the
-    * FORMAT-PRESERVING carry surface maintenance writers use: a carry
-    * filters lines by partition name (the first tab field) without
-    * parsing bounds, so single-key (3-field) and multi-column (4-field)
-    * sidecars survive compaction/retention/merge identically, and a
-    * carry can never silently downgrade a multi-column table to its
-    * first column. */
-  private[graft] def readStatsLines(s: SparkSession, dir: String,
-                                    v: Long): Seq[String] = {
-    val fs = fsOf(s, dir)
-    committedSidecar(s, dir, v, "stats") match {
-      case None => Seq.empty
-      case Some(p) => readLines(fs, p)
-    }
-  }
-
-  /** Serialize stats lines write-once (see [[readStatsLines]]). */
-  private[graft] def writeStatsLines(s: SparkSession, dir: String, v: Long,
-                                     token: String,
-                                     lines: Seq[String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "stats"), "stats")
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** The partition-name prefix of a stats line — the carry filter key. */
   private[graft] def statsLinePart(line: String): String =
     line.takeWhile(_ != '\t')
-
-  /** Merge-on-read DELETION VECTORS (Delta's DV idea, at this store's
-    * partition granularity): the `dv/<v>_<token>.txt` sidecar maps each
-    * partition dir name to the relative paths of tombstone-key parquet
-    * dirs (under `dvdata/`) that must be ANTI-JOINED out of that
-    * partition's rows on read. A MOR delete publishes only this sidecar
-    * plus one small tombstone dir — the manifest and data dirs carry
-    * verbatim, so delete cost is ∝ deleted keys, never partition bytes
-    * (the write-amplification escape hatch a 100 TB GDPR sweep needs).
-    * Unlike stats, DV refs are CORRECTNESS state: every publisher that
-    * restages a partition must first read it LIVE ([[readEntriesLive]],
-    * which applies the refs) and then DROP that partition's lines; a
-    * manifest-only publisher carries lines for kept partitions; rollback
-    * byte-copies the target version's sidecar (refs describe exactly one
-    * manifest, the stats rule). Same write-once / commit-with-the-
-    * manifest token contract as every sidecar. */
-  private[graft] def writeDvLines(s: SparkSession, dir: String, v: Long,
-                                  token: String,
-                                  lines: Seq[String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "dv"), "dv")
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Parse one DV sidecar line: `partition-dir-name \t dvdata-relpath
     * [\t file1,file2,…] [\t file1:p1.p2,file2:p7,…]`. The OPTIONAL
@@ -875,53 +910,6 @@ object Versioned {
     (fs(0), fs(1), scope, pos)
   }
 
-  /** Raw committed DV lines of version `v` (see [[dvLineFields]] for
-    * the format, empty if none) — the carry surface, filtered by
-    * partition name exactly as stats lines are. */
-  private[graft] def readDvLines(s: SparkSession, dir: String,
-                                 v: Long): Seq[String] = {
-    val fs = fsOf(s, dir)
-    committedSidecar(s, dir, v, "dv") match {
-      case None => Seq.empty
-      case Some(p) => readLines(fs, p)
-    }
-  }
-
-  /** Merge-on-read UPDATE VECTORS — the DV idea for updates
-    * ([[graft.ops.MergeOps.mergeUpdateMor]]): the `uv/<v>_<token>.txt`
-    * sidecar lines are `partition-dir-name \t uvdata-relpath \t keyCol
-    * [\t file-scope]` (see [[uvLineFields]]),
-    * each naming a dir of FULL replacement row images (under `uvdata/`,
-    * partitioned by the table's partCol) that SUBSTITUTE for the base
-    * rows with the same key on read — applied BEFORE the DV anti-join
-    * (an update of a live key precedes any later tombstone of it; a
-    * tombstoned key is not live, so no image is ever written for one —
-    * the write side guarantees substitution-then-delete is always the
-    * right order). Multiple generations on one partition stack: the
-    * image from the HIGHEST staged version wins per key (the dir name
-    * carries the version). Same CORRECTNESS-state carry contract as dv:
-    * restaging writers materialize and drop their partitions' lines,
-    * manifest-carry writers keep them verbatim, rollback and torn-claim
-    * repair byte-copy the sidecar. */
-  private[graft] def readUvLines(s: SparkSession, dir: String,
-                                 v: Long): Seq[String] = {
-    val fs = fsOf(s, dir)
-    committedSidecar(s, dir, v, "uv") match {
-      case None => Seq.empty
-      case Some(p) => readLines(fs, p)
-    }
-  }
-
-  private[graft] def writeUvLines(s: SparkSession, dir: String, v: Long,
-                                  token: String,
-                                  lines: Seq[String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "uv"), "uv")
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Parse one UV sidecar line: `partition-dir-name \t uvdata-relpath
     * \t keyCol [\t file1,file2,…]`. The OPTIONAL fourth field (round
     * 14) is the FILE SCOPE, the exact analogue of [[dvLineFields]]'
@@ -953,7 +941,7 @@ object Versioned {
     * path. */
   def readUvRefs(s: SparkSession, dir: String,
                  v: Long): Map[String, Seq[(String, String)]] =
-    readUvLines(s, dir, v).map(uvLineFields)
+    sidecarLines(s, dir, v, Uv).map(uvLineFields)
       .groupBy(_._1)
       .map { case (p, rs) => p -> rs.map(r => (r._2, r._3)).sortBy(_._1) }
 
@@ -962,7 +950,7 @@ object Versioned {
   def readUvRefsScoped(s: SparkSession, dir: String, v: Long)
       : Map[String, Seq[(String, String, Option[Set[String]],
                          Map[String, Seq[Long]])]] =
-    readUvLines(s, dir, v).map(uvLineFields)
+    sidecarLines(s, dir, v, Uv).map(uvLineFields)
       .groupBy(_._1)
       .map { case (p, rs) =>
         p -> rs.map(r => (r._2, r._3, r._4, r._5)).sortBy(_._1)
@@ -974,7 +962,7 @@ object Versioned {
     * with no MOR deletes — the fast path every non-DV read takes. */
   def readDvRefs(s: SparkSession, dir: String,
                  v: Long): Map[String, Seq[String]] =
-    readDvLines(s, dir, v).map(dvLineFields)
+    sidecarLines(s, dir, v, Dv).map(dvLineFields)
       .groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2).sorted }
 
   /** [[readDvRefs]] WITH each ref's optional file scope and row
@@ -984,39 +972,26 @@ object Versioned {
   def readDvRefsScoped(s: SparkSession, dir: String, v: Long)
       : Map[String, Seq[(String, Option[Set[String]],
                          Map[String, Seq[Long]])]] =
-    readDvLines(s, dir, v).map(dvLineFields)
+    sidecarLines(s, dir, v, Dv).map(dvLineFields)
       .groupBy(_._1)
       .map { case (p, rs) =>
         p -> rs.map(r => (r._2, r._3, r._4)).sortBy(_._1)
       }
 
   /** The cumulative APPLIED-ID ledger as of version `v` — the newest
-    * COMMITTED `ledger/` sidecar at or below `v` (walk-back bounded by
-    * version count, two existence probes per step), resolved through
-    * each version's marker token so a crashed writer's orphan and a
-    * losing racer's ghost are both invisible (trusting either would
-    * mark a never-committed write as applied — silent loss on retry).
-    * Shared exactly-once surface: incremental rollup folds record batch
-    * ids here ([[graft.ops.IncrementalOps]]), mirror syncs record
-    * applied source versions as `src:<v>`
-    * ([[graft.ops.MergeOps.syncMirror]]) — one id set per store,
-    * committed atomically with the data it covers. Rollback copies the
-    * newest ledger at or below the target forward (see [[rollback]]),
-    * so the set rolls back with the data. */
+    * committed `ledger/` sidecar at or below `v` ([[newestSidecar]]),
+    * so a crashed writer's orphan and a losing racer's ghost are both
+    * invisible (trusting either would mark a never-committed write as
+    * applied — silent loss on retry). Shared exactly-once surface:
+    * incremental rollup folds record batch ids here
+    * ([[graft.ops.IncrementalOps]]), mirror syncs record applied source
+    * versions as `src:<v>` ([[graft.ops.MergeOps.syncMirror]]) — one id
+    * set per store, committed atomically with the data it covers.
+    * Rollback restores the newest ledger at or below the target (see
+    * [[rollback]]), so the set rolls back with the data. */
   private[graft] def appliedLedgerIds(s: SparkSession, dir: String,
-                                      v: Long): Set[String] = {
-    val fs = fsOf(s, dir)
-    committedVersions(s, dir).filter(_ <= v).sorted.reverse
-      .iterator
-      .map(w => committedSidecar(s, dir, w, "ledger"))
-      .collectFirst { case Some(p) =>
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toSet
-        finally in.close()
-      }
-      .getOrElse(Set.empty)
-  }
+                                      v: Long): Set[String] =
+    cumulativeLines(s, dir, v, Ledger).toSet
 
   /** Parse a HIGH-WATER ledger id: `<source>:<n>` (last colon, n ≥ 0).
     * Such ids come from a SINGLE SEQUENTIAL emitter — a mirror's source
@@ -1085,43 +1060,6 @@ object Versioned {
         ids.filterNot(r => hwOf(r).exists(_._1 == src)) +
           s"$src:${(marks + n).max}"
     }
-
-  /** WRITE-ONCE ledger sidecar at the attempt's own tokenized name,
-    * like the manifest: concurrent attempts never collide on the file
-    * (each has its own token); the single-winner fight happens at the
-    * commit marker inside [[publish]]. [[createExclusive]] translates
-    * only a REAL already-exists into the commit-race signal. The write
-    * must land BEFORE publish so ledger and data commit together. */
-  private[graft] def writeLedgerIds(s: SparkSession, dir: String, v: Long,
-                                    token: String,
-                                    ids: Set[String]): Unit = {
-    val p = new Path(dir, s"ledger/${v}_$token.txt")
-    val fs = fsOf(s, dir)
-    val out = createExclusive(fs, p, "ledger")
-    try out.write(ids.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** TOUCHED-PARTITION sidecar of a commit — the summary optimistic
-    * conflict detection reads (Delta/Iceberg's logical conflict check,
-    * at this store's partition granularity): `touch/<v>_<token>.txt`
-    * lists the partition dir names whose LIVE CONTENT the commit may
-    * have changed (restaged, row-deleted, tombstoned). A commit WITHOUT
-    * a touch sidecar declares nothing and is treated as touching
-    * everything (rollback, retention drops, constraint DDL — the
-    * conservative default that keeps rebase decisions sound as new
-    * writer kinds appear). An EMPTY sidecar is a real declaration:
-    * "content untouched" (ledger ticks). Same write-once tokenized
-    * contract as every sidecar. */
-  private[graft] def writeTouchLines(s: SparkSession, dir: String, v: Long,
-                                     token: String,
-                                     parts: Seq[String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "touch"), "touch")
-    try out.write(parts.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** PIN a live writer's staged dirs against [[vacuum]] for the whole
     * stage→publish(→rebase) window: `intents/<token>.txt` lists the
@@ -1202,53 +1140,6 @@ object Versioned {
     new AutoCloseable { def close(): Unit = { fut.cancel(false); () } }
   }
 
-  /** The committed touch declaration of version `v`: Some(set) if the
-    * winning attempt declared one (possibly empty), None for undeclared
-    * (= touches everything) commits. */
-  private[graft] def readTouched(s: SparkSession, dir: String,
-                                 v: Long): Option[Set[String]] = {
-    val fs = fsOf(s, dir)
-    committedSidecar(s, dir, v, "touch").map(p => readLines(fs, p).toSet)
-  }
-
-  /** PERSISTED table-level CHECK constraints as of version `v` — the
-    * newest committed `constraints/` sidecar at or below `v`, the
-    * applied-id-ledger walk-back rule: constraints are TABLE METADATA
-    * riding the commit log (Delta's `ADD CONSTRAINT` model), so every
-    * writer deriving from `v` sees exactly the constraint set committed
-    * at or before its snapshot, a torn add is invisible, and a racing
-    * add loses the version claim like any writer. Lines are
-    * `name \t sql-expr`; an EMPTY sidecar masks older ones (that is how
-    * dropping the last constraint releases the table —
-    * [[graft.ops.MergeOps.dropConstraint]]). Unlike the ledger these do
-    * NOT roll back with data ([[rollback]] copies no constraints
-    * sidecar; the walk-back finds the newest one regardless): a
-    * rollback restores CONTENT, not the table's contract — the Delta
-    * RESTORE rule. */
-  private[graft] def readConstraintLines(s: SparkSession, dir: String,
-                                         v: Long): Seq[String] = {
-    val fs = fsOf(s, dir)
-    if (!fs.exists(new Path(dir, "constraints"))) return Seq.empty
-    committedVersions(s, dir).filter(_ <= v).sorted.reverse
-      .iterator
-      .map(w => committedSidecar(s, dir, w, "constraints"))
-      .collectFirst { case Some(p) => readLines(fs, p) }
-      .getOrElse(Seq.empty)
-  }
-
-  /** Write-once constraints sidecar at the attempt's tokenized name —
-    * the ledger contract: lands BEFORE publish so the constraint set
-    * and the version commit atomically. */
-  private[graft] def writeConstraintLines(s: SparkSession, dir: String,
-                                          v: Long, token: String,
-                                          lines: Seq[String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "constraints"), "constraints")
-    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** PERSISTED table PROPERTIES as of version `v` (Delta's
     * TBLPROPERTIES): free-form `key \t value` pairs under the exact
     * sidecar rules of the constraints set — newest committed `props/`
@@ -1260,35 +1151,12 @@ object Versioned {
     * re-stating what the table already knows. Everything else is
     * caller-owned annotation. */
   def tableProps(s: SparkSession, dir: String,
-                 v: Long): Map[String, String] = {
-    val fs = fsOf(s, dir)
-    if (!fs.exists(new Path(dir, "props"))) return Map.empty
-    committedVersions(s, dir).filter(_ <= v).sorted.reverse
-      .iterator
-      .map(w => committedSidecar(s, dir, w, "props"))
-      .collectFirst { case Some(p) => readLines(fs, p) }
-      .getOrElse(Seq.empty)
-      .map { l =>
-        val i = l.indexOf('\t')
-        require(i > 0, s"malformed props sidecar line '$l' under $dir")
-        l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-  }
-
-  /** Write-once props sidecar at the attempt's tokenized name — lands
-    * BEFORE publish so the property set and the version commit
-    * atomically ([[tableProps]]). */
-  private[graft] def writePropsLines(s: SparkSession, dir: String,
-                                     v: Long, token: String,
-                                     props: Map[String, String]): Unit = {
-    val fs = fsOf(s, dir)
-    val out = createExclusive(
-      fs, sidecarPathFor(dir, v, Some(token), "props"), "props")
-    try out.write(props.toSeq.sortBy(_._1)
-      .map { case (k, vv) => s"$k\t$vv" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+                 v: Long): Map[String, String] =
+    cumulativeLines(s, dir, v, Props).map { l =>
+      val i = l.indexOf('\t')
+      require(i > 0, s"malformed props sidecar line '$l' under $dir")
+      l.substring(0, i) -> l.substring(i + 1)
+    }.toMap
 
   /** Per-partition, per-column committed bounds of version `v` —
     * partition dir name → column → (lo, hi) of the committed stats
@@ -1301,7 +1169,7 @@ object Versioned {
     * (stats are an optimization, never a correctness gate). */
   def readStatsMulti(s: SparkSession, dir: String,
                      v: Long): Map[String, Map[String, (Long, Long)]] =
-    readStatsLines(s, dir, v).flatMap { line =>
+    sidecarLines(s, dir, v, Stats).flatMap { line =>
       val parts = line.split('\t')
       // a range line's third field is the numeric lo bound — tagged
       // forms (dict, bloom, future kinds) are other readers' lines
@@ -1341,7 +1209,7 @@ object Versioned {
     * riding the stats sidecar under its carry rules. */
   def readStatsRows(s: SparkSession, dir: String,
                     v: Long): Map[String, Map[String, Long]] =
-    readStatsLines(s, dir, v).flatMap { line =>
+    sidecarLines(s, dir, v, Stats).flatMap { line =>
       val parts = line.split('\t')
       if (parts.length == 4 && parts(1) == "__rows__" &&
           parts(2) == "rows")
@@ -1354,7 +1222,7 @@ object Versioned {
 
   def readStatsDict(s: SparkSession, dir: String,
                     v: Long): Map[String, Map[String, Set[String]]] =
-    readStatsLines(s, dir, v).flatMap { line =>
+    sidecarLines(s, dir, v, Stats).flatMap { line =>
       val parts = line.split('\t')
       if (parts.length == 4 && parts(2) == "dict")
         Some((parts(0), parts(1), parts(3).split(',').iterator
@@ -1395,7 +1263,7 @@ object Versioned {
   def readStatsBloom(s: SparkSession, dir: String, v: Long,
                      cols: Option[Set[String]] = None)
       : Map[String, Map[String, LazyBloom]] =
-    readStatsLines(s, dir, v).flatMap { line =>
+    sidecarLines(s, dir, v, Stats).flatMap { line =>
       val parts = line.split('\t')
       if (parts.length == 4 && parts(2) == "bloom" &&
           cols.forall(_.contains(parts(1))))
@@ -1532,7 +1400,7 @@ object Versioned {
                 readParquetCached(s, None, paths.map(_.toString))
             }))
           }.reduceOption(_.unionByName(_, allowMissingColumns = true))
-        // UPDATE substitution first (see [[readUvLines]] for why that
+        // UPDATE substitution first (see [[Uv]] for why that
         // order is always right): latest image per key across the
         // group's uv generations replaces the base row wholesale.
         if (us.nonEmpty) {
@@ -1761,15 +1629,36 @@ object Versioned {
     else s"$partCol=${ExternalCatalogUtils.escapePathName(String.valueOf(value))}"
   }
 
-  /** Number of data files under one manifest entry's dir — the
-    * fragmentation measure [[graft.ops.MergeOps.compactPartitions]] acts
-    * on. Driver-side listing bounded by that partition's file count. */
-  def dataFileCount(s: SparkSession, dir: String, relDir: String): Int = {
-    val fs = fsOf(s, dir)
-    fs.listStatus(new Path(s"$dir/$relDir")).count { st =>
+  /** The data files directly under `dir/relDir`: every file not named
+    * `_*` (writer markers) or `.*` (checksums, temp files). */
+  def dataFiles(s: SparkSession, dir: String,
+                relDir: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    fsOf(s, dir).listStatus(new Path(s"$dir/$relDir")).toSeq.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
+
+  /** Number of data files under one manifest entry's dir — the
+    * fragmentation measure [[graft.ops.MergeOps.compactPartitions]] acts
+    * on. Driver-side listing bounded by that partition's file count. */
+  def dataFileCount(s: SparkSession, dir: String, relDir: String): Int =
+    dataFiles(s, dir, relDir).size
+
+  /** The rows `entries` held at write time, from the manifest-recorded
+    * per-file counts `rec` ([[readStatsRows]]) and one listing per
+    * entry: Some only when every listed data file has a recorded count.
+    * Names are immutable for an entry's life, so a match is exact; a
+    * carried line naming a restaged partition's dead files never
+    * matches. MOR refs are not applied. */
+  def recordedRows(s: SparkSession, dir: String,
+                   entries: Seq[(String, String)],
+                   rec: Map[String, Map[String, Long]]): Option[Long] = {
+    val per = entries.map { case (name, rel) =>
+      val m = rec.getOrElse(name, Map.empty[String, Long])
+      val files = dataFiles(s, dir, rel).map(_.getPath.getName)
+      if (files.forall(m.contains)) Some(files.map(m).sum) else None
+    }
+    if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
   }
 
   /** The retention floor [[vacuum]] recorded, if any: versions below it
@@ -1910,7 +1799,7 @@ object Versioned {
       val root = new Path(dir, "intents")
       if (!fs.exists(root)) 0L else fs.listStatus(root).length.toLong
     }
-    val statsLines = readStatsLines(s, dir, v)
+    val statsLines = sidecarLines(s, dir, v, Stats)
     def formCount(tag: String): Long = statsLines.count { l =>
       val parts = l.split('\t'); parts.length == 4 && parts(2) == tag
     }.toLong
@@ -1919,7 +1808,7 @@ object Versioned {
          uvRefs.size.toLong, uvRefs.values.map(_.size).sum.toLong,
          retentionFloor(s, dir).getOrElse(1L),
          tags(s, dir).size.toLong, branchCount,
-         readConstraintLines(s, dir, v).size.toLong,
+         cumulativeLines(s, dir, v, Constraints).size.toLong,
          statsLines.size.toLong, formCount("dict"), formCount("bloom"),
          appliedLedgerIds(s, dir, v).size.toLong, pinCount))
       .toDF("version", "committed_versions", "partitions", "data_files",
@@ -1969,9 +1858,9 @@ object Versioned {
     * version whose manifest is the old one verbatim, so the rollback is
     * itself atomic, auditable in the commit log, and reversible (nothing
     * is deleted; a bad rollback rolls forward the same way). Sidecar
-    * state rolls back WITH the data: the target version's stats and
-    * applied-batch ledger (if any) are copied forward to the new
-    * version, so zone-map pruning and exactly-once fold replay resume
+    * state rolls back WITH the data: the target version's partition-
+    * keyed sidecars and applied-batch ledger (if any) are copied forward
+    * to the new version, so pruning, MOR refs and exactly-once replay resume
     * from the restored state — without the ledger copy, a re-fold of a
     * rolled-back batch would find the PRE-rollback ledger and silently
     * no-op, losing the batch (the round-8 advice defect). */
@@ -1989,61 +1878,25 @@ object Versioned {
         "tagged versions are exempt)"))
     val nv = v + 1  // OCC: the rollback derives from current = v
     val tok = newToken()
-    def copyTo(from: Path, side: String): Unit = {
-      val in = fs.open(from)
-      val bytes = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-        bos.toByteArray
-      } finally in.close()
-      val out = createExclusive(
-        fs, sidecarPathFor(dir, nv, Some(tok), side), side)
-      try out.write(bytes) finally out.close()
-    }
-    // Stats describe exactly one manifest, so only the target version's
-    // own sidecar may roll forward (a neighbor's bounds could wrongly
-    // prune a partition whose data differs; missing stats merely skip
-    // pruning — safe).
-    committedSidecar(s, dir, toVersion, "stats").foreach(copyTo(_, "stats"))
-    // DV refs are correctness state bound to exactly one manifest (the
-    // stats rule, but load-bearing): the rollback target's own sidecar
-    // rolls forward whole, so deleted rows stay deleted — and a target
-    // that PRE-dates a MOR delete carries no sidecar, resurrecting the
-    // rows exactly as the restored manifest implies.
-    committedSidecar(s, dir, toVersion, "dv").foreach(copyTo(_, "dv"))
-    committedSidecar(s, dir, toVersion, "uv").foreach(copyTo(_, "uv"))
-    // The ledger is cumulative history and its READER
-    // (IncrementalOps.appliedIds) walks back past ledgerless versions —
-    // so the rollback must restore the same ledger that walk would have
-    // found AT the target: the newest committed ledger at or below
-    // toVersion. Copying only the exact-version sidecar (the previous
-    // behavior) broke the fold → compact → fold → rollback-to-compact
-    // composition: nothing copied, the newest ledger stayed the
-    // post-rollback one, and the rolled-back batch re-fold silently
-    // no-opped — the lost-batch defect class again. If NO ledger exists
-    // at or below the target but some exists above, an empty ledger is
-    // written at the rollback version to mask the newer ones.
-    val committed = committedVersions(s, dir)
-    // short-circuit: tables that never wrote a ledger (every plain merge
-    // corpus) must not pay an O(versions) marker-read walk here
-    val hasLedgerDir = fs.exists(new Path(dir, "ledger"))
-    val ledgerAtOrBelow =
-      if (!hasLedgerDir) None
-      else committed.filter(_ <= toVersion).sorted.reverse
-        .iterator.map(w => committedSidecar(s, dir, w, "ledger"))
-        .collectFirst { case Some(p) => p }
-    ledgerAtOrBelow match {
-      case Some(from) => copyTo(from, "ledger")
-      case None =>
-        val anyAbove = hasLedgerDir &&
-          committed.filter(w => w > toVersion && w <= v)
-            .exists(w => committedSidecar(s, dir, w, "ledger").isDefined)
-        if (anyAbove) {
-          val out = createExclusive(
-            fs, sidecarPathFor(dir, nv, Some(tok), "ledger"), "ledger")
-          out.close()
-        }
-    }
+    // The partition-keyed kinds describe exactly one manifest, so only
+    // the target version's own lines may roll forward: a neighbor's
+    // bounds could wrongly prune a partition whose data differs, and
+    // DV refs are correctness state — a target that PRE-dates a MOR
+    // delete carries no dv lines, resurrecting the rows exactly as the
+    // restored manifest implies.
+    copyPartitionSidecars(s, dir, toVersion, dir, nv, tok)
+    // The ledger is cumulative and its reader walks back past ledgerless
+    // versions, so the rollback restores the ledger that walk finds AT
+    // the target: the newest committed one at or below toVersion
+    // (copying only the exact-version sidecar broke fold → compact →
+    // fold → rollback-to-compact: the rolled-back batch's re-fold found
+    // the post-rollback ledger and silently no-opped). With none at or
+    // below the target but some above, an EMPTY ledger masks the newer
+    // ones.
+    val ledgerAt = newestSidecar(s, dir, toVersion, Ledger)
+    if (ledgerAt.isDefined || newestSidecar(s, dir, v, Ledger).isDefined)
+      writeSidecar(s, dir, nv, tok, Ledger,
+        ledgerAt.fold(List.empty[String])(_._2))
     publish(s, dir, nv, tok, manifest(s, dir, toVersion))
   }
 
@@ -2077,11 +1930,11 @@ object Versioned {
     * current that no retained manifest references is deleted. Also
     * sweeps METADATA below the floor (markers, manifests, sidecars,
     * attempt ghosts) so the commit log stays bounded by the retention
-    * window, not the table's lifetime commit count — with the one
-    * exactly-once guard documented inline: the newest committed
-    * applied-batch ledger is never deleted, even below the floor.
-    * Bounded metadata work: one listing each of `data/`, `manifest/`,
-    * `stats/`, `ledger/` plus `keepVersions` manifests.
+    * window, not the table's lifetime commit count — with the one guard
+    * documented inline: the newest committed sidecar of each
+    * [[Cumulative]] kind is never deleted, even below the floor.
+    * Bounded metadata work: one listing of `data/` and of each sidecar
+    * kind's dir, plus `keepVersions` manifests.
     *
     * Concurrency: two racing vacuums may leave `floor.txt` at the
     * SMALLER of their floors (last write wins; no marker claim guards
@@ -2269,10 +2122,10 @@ object Versioned {
     // is reclaimable storage like any unreferenced stage dir. Live
     // branch heads' carried refs pin theirs too.
     val referencedDv = retained
-      .flatMap(rv => readDvLines(s, dir, rv))
+      .flatMap(rv => sidecarLines(s, dir, rv, Dv))
       .map(l => dvLineFields(l)._2).toSet ++
       branchHeads.flatMap { case (bd, bv) =>
-        scala.util.Try(readDvLines(s, bd, bv)).toOption.getOrElse(Nil)
+        scala.util.Try(sidecarLines(s, bd, bv, Dv)).toOption.getOrElse(Nil)
           .map(l => dvLineFields(l)._2)
       }
     dvList.foreach { st =>
@@ -2284,10 +2137,10 @@ object Versioned {
     }
     // update-vector image dirs: same keep rule as tombstone dirs
     val referencedUv = retained
-      .flatMap(rv => readUvLines(s, dir, rv))
+      .flatMap(rv => sidecarLines(s, dir, rv, Uv))
       .map(_.split('\t')(1)).toSet ++
       branchHeads.flatMap { case (bd, bv) =>
-        scala.util.Try(readUvLines(s, bd, bv)).toOption.getOrElse(Nil)
+        scala.util.Try(sidecarLines(s, bd, bv, Uv)).toOption.getOrElse(Nil)
           .map(_.split('\t')(1))
       }
     uvList.foreach { st =>
@@ -2301,38 +2154,23 @@ object Versioned {
     // refuse to time-travel (their data may be gone), so their markers,
     // manifests, and sidecars are pure growth — at a streaming fold
     // cadence the commit log would otherwise accumulate forever. One
-    // guard: the applied-batch ledger is CUMULATIVE state, and if the
-    // newest committed ledger sits below the floor (every later commit
-    // was ledgerless maintenance), deleting it would forget every
-    // applied batch id — exactly-once replay would double-count. That
-    // single version is retained whole (marker + sidecars) until a
-    // later fold writes a newer ledger above the floor. Legacy
-    // version-named sidecars are deleted here; tokenized ones fall to
-    // the ghost sweep below once their marker is gone.
-    val newestLedgerV =
-      if (!fs.exists(new Path(dir, "ledger"))) None   // ledger-less table:
-      else committed.sorted.reverse.find(w =>        // skip the O(versions)
-        scala.util.Try(committedSidecar(s, dir, w, "ledger")).toOption
-          .flatten.isDefined)                        // marker-read walk
-    val ledgerKeep = newestLedgerV.filter(_ < floor)
-    // same cumulative-metadata guard for the constraints sidecar: if the
-    // newest committed constraint set sits below the floor (every later
-    // commit was a plain write), sweeping it would silently UNCONSTRAIN
-    // the table — that version is retained whole until a newer
-    // add/dropConstraint commits above the floor
-    val newestConstraintsV =
-      if (!fs.exists(new Path(dir, "constraints"))) None
-      else committed.sorted.reverse.find(w =>
-        scala.util.Try(committedSidecar(s, dir, w, "constraints")).toOption
-          .flatten.isDefined)
-    val constraintsKeep = newestConstraintsV.filter(_ < floor)
+    // guard: each CUMULATIVE kind is in force from its newest committed
+    // sidecar on, and if that sits below the floor (every later commit
+    // left the kind alone), deleting it would forget the table's
+    // applied batch ids (exactly-once replay would double-count), its
+    // constraints or its properties. That version is retained whole
+    // (marker + sidecars) until a newer sidecar of the kind commits
+    // above the floor. Legacy version-named sidecars are deleted here;
+    // tokenized ones fall to the ghost sweep below once their marker is
+    // gone.
+    val cumulativeKeep = Cumulative
+      .flatMap(side => newestSidecar(s, dir, cur, side).map(_._1))
+      .filter(_ < floor).toSet
     val swept = committed
-      .filter(v => v < floor && !ledgerKeep.contains(v) &&
-        !constraintsKeep.contains(v) && !tagged(v))
+      .filter(v => v < floor && !cumulativeKeep(v) && !tagged(v))
       .toSet
     swept.foreach { v =>
-      Seq("manifest", "stats", "ledger", "dv", "uv", "constraints",
-          "touch")
+      SidecarKinds
         .foreach(side => fs.delete(new Path(dir, s"$side/$v.txt"), false))
       // marker FIRST: a crash between the two deletes then leaves a
       // harmless orphaned winner file (invisible to committedVersions)
@@ -2342,7 +2180,7 @@ object Versioned {
     }
     val survivors = committed.filterNot(swept)
     // Ghost-sidecar sweep: a losing or crashed attempt's tokenized
-    // manifest/stats/ledger files at versions current has passed are
+    // sidecar files at versions current has passed are
     // inert (the marker binds each committed version to its winner's
     // token) — reclaim them so the metadata dirs stay bounded by the
     // commit count, not the attempt count. Conservative by design:
@@ -2352,9 +2190,7 @@ object Versioned {
     // torn marker keeps its version's files in place.
     val tokenOf = survivors.map(cv => cv ->
       scala.util.Try(committedToken(s, dir, cv)).toOption.flatten).toMap
-    Seq("manifest", "stats", "ledger", "dv", "uv", "constraints",
-        "touch")
-      .foreach { side =>
+    SidecarKinds.foreach { side =>
       val root = new Path(dir, side)
       if (fs.exists(root)) fs.listStatus(root).toSeq.foreach { st =>
         val name = st.getPath.getName.stripSuffix(".txt")

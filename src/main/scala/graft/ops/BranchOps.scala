@@ -69,12 +69,7 @@ object BranchOps {
     try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
     val bd = bdir(root, name)
     val tok = Versioned.newToken()
-    val stats = Versioned.readStatsLines(s, root, v)
-    if (stats.nonEmpty) Versioned.writeStatsLines(s, bd, 1L, tok, stats)
-    val dv = Versioned.readDvLines(s, root, v)
-    if (dv.nonEmpty) Versioned.writeDvLines(s, bd, 1L, tok, dv)
-    val uv = Versioned.readUvLines(s, root, v)
-    if (uv.nonEmpty) Versioned.writeUvLines(s, bd, 1L, tok, uv)
+    Versioned.copyPartitionSidecars(s, root, v, bd, 1L, tok)
     Versioned.publish(s, bd, 1L, tok, Versioned.manifest(s, root, v))
   }
 
@@ -153,18 +148,8 @@ object BranchOps {
       .parquet(s"$root/$stageRel")
     val staged = Versioned.listStagedPartDirs(s, root, stageRel, partCol)
     val stagedNames = staged.map(_._1).toSet
-    val carried = Versioned.readStatsLines(s, bd, bv)
-      .filterNot(l => touchedNames(Versioned.statsLinePart(l)))
-    if (carried.nonEmpty)
-      Versioned.writeStatsLines(s, bd, nbv, tok, carried)
-    val dvCarried = Versioned.readDvLines(s, bd, bv)
-      .filterNot(l => touchedNames(Versioned.statsLinePart(l)))
-    if (dvCarried.nonEmpty)
-      Versioned.writeDvLines(s, bd, nbv, tok, dvCarried)
-    val uvCarried = Versioned.readUvLines(s, bd, bv)
-      .filterNot(l => touchedNames(Versioned.statsLinePart(l)))
-    if (uvCarried.nonEmpty)
-      Versioned.writeUvLines(s, bd, nbv, tok, uvCarried)
+    Versioned.copyPartitionSidecars(s, bd, bv, bd, nbv, tok,
+      keep = n => !touchedNames(n))
     Versioned.publish(s, bd, nbv, tok,
       man.filterNot(e =>
         touchedNames.contains(e._1) || stagedNames.contains(e._1)) ++ staged)
@@ -175,7 +160,7 @@ object BranchOps {
     *  - main still at the fork version → FAST-FORWARD: the publish
     *    commit is the branch head verbatim.
     *  - main ADVANCED, but every intervening commit DECLARES a touched
-    *    set ([[Versioned.readTouched]]) disjoint from the branch's own
+    *    set ([[Versioned.Touch]]) disjoint from the branch's own
     *    CHANGE SET (diffed against the FORK state, which branch v1
     *    carries even after main's retention sweeps it) → REBASE: the
     *    publish takes main-current's entries/sidecar-lines for the
@@ -246,9 +231,9 @@ object BranchOps {
         val intervening = Versioned.committedVersions(s, root)
           .filter(w => w > forkV && w <= mainCur)
         val disjoint = intervening.forall { w =>
-          scala.util.Try(Versioned.readTouched(s, root, w))
-            .toOption.flatten
-            .exists(_.intersect(changed).isEmpty)
+          scala.util.Try(Versioned.committedLines(s, root, w,
+            Versioned.Touch)).toOption.flatten
+            .exists(!_.exists(changed))
         }
         require(disjoint,
           s"main advanced past branch '$name''s fork ($forkV -> " +
@@ -262,21 +247,16 @@ object BranchOps {
       // rebase-merge of metadata: main-current for unchanged
       // partitions, branch head for changed ones (for a pure
       // fast-forward mainCur == forkV and this IS the branch head)
-      def mergeLines(mainLines: Seq[String],
-                     headLines: Seq[String]): Seq[String] =
-        mainLines.filterNot(l => changed(Versioned.statsLinePart(l))) ++
-          headLines.filter(l => changed(Versioned.statsLinePart(l)))
-      val stats = mergeLines(Versioned.readStatsLines(s, root, mainCur),
-                             Versioned.readStatsLines(s, bd, bv))
-      if (stats.nonEmpty)
-        Versioned.writeStatsLines(s, root, nv, tok, stats.sorted)
-      val dv = mergeLines(Versioned.readDvLines(s, root, mainCur),
-                          Versioned.readDvLines(s, bd, bv))
-      if (dv.nonEmpty) Versioned.writeDvLines(s, root, nv, tok, dv.sorted)
-      val uv = mergeLines(Versioned.readUvLines(s, root, mainCur),
-                          Versioned.readUvLines(s, bd, bv))
-      if (uv.nonEmpty) Versioned.writeUvLines(s, root, nv, tok, uv.sorted)
-      Versioned.writeTouchLines(s, root, nv, tok, changed.toSeq)
+      Versioned.PartitionKeyed.foreach { side =>
+        val lines = (Versioned.sidecarLines(s, root, mainCur, side)
+          .filterNot(l => changed(Versioned.statsLinePart(l))) ++
+          Versioned.sidecarLines(s, bd, bv, side)
+            .filter(l => changed(Versioned.statsLinePart(l)))).sorted
+        if (lines.nonEmpty)
+          Versioned.writeSidecar(s, root, nv, tok, side, lines)
+      }
+      Versioned.writeSidecar(s, root, nv, tok, Versioned.Touch,
+        changed.toSeq.sorted)
       val newMan = Versioned.manifest(s, root, mainCur)
         .filterNot(e => changed(e._1)) ++ head.filter(e => changed(e._1))
       try {

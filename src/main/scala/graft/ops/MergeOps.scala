@@ -212,15 +212,16 @@ object MergeOps {
 
   /** The PERSISTED constraint set in force at version `v` — (name,
     * sql-expr) pairs from the newest committed `constraints` sidecar at
-    * or below `v` ([[Versioned.readConstraintLines]]). Empty for tables
+    * or below `v` ([[Versioned.Constraints]]). Empty for tables
     * that never ran [[addConstraint]] — the zero-cost fast path every
     * unconstrained write takes (one directory-existence probe). */
   def tableConstraints(s: SparkSession, corpusDir: String,
                        v: Long): Seq[(String, String)] =
-    Versioned.readConstraintLines(s, corpusDir, v).map { line =>
-      val i = line.indexOf('\t')
-      (line.substring(0, i), line.substring(i + 1))
-    }
+    Versioned.cumulativeLines(s, corpusDir, v, Versioned.Constraints)
+      .map { line =>
+        val i = line.indexOf('\t')
+        (line.substring(0, i), line.substring(i + 1))
+      }
 
   /** Parse the persisted set into enforceable columns, first requiring
     * every referenced column to exist in the write's schema — a LOUD
@@ -288,10 +289,8 @@ object MergeOps {
     checkConstraints(
       Versioned.readVersion(s, corpusDir, v, Some(partCol)),
       Seq((name, expr(exprSql))), what = s"ADD CONSTRAINT on existing data")
-    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
-      stats = CarryAll, declareTouch = false,
-      extra = Versioned.writeConstraintLines(s, corpusDir, _, _,
-        (existing :+ (name, exprSql)).map { case (n, e) => s"$n\t$e" }))
+    commitMetadata(s, corpusDir, v, Versioned.Constraints,
+      (existing :+ (name, exprSql)).map { case (n, e) => s"$n\t$e" })
   }
 
   /** SET TBLPROPERTIES: merge `props` into the table's persisted
@@ -317,10 +316,7 @@ object MergeOps {
       throw new IllegalStateException(
         s"no committed version under $corpusDir — create the corpus " +
           "before annotating it"))
-    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
-      stats = CarryAll, declareTouch = false,
-      extra = Versioned.writePropsLines(s, corpusDir, _, _,
-        Versioned.tableProps(s, corpusDir, v) ++ props))
+    commitProps(s, corpusDir, v, Versioned.tableProps(s, corpusDir, v) ++ props)
   }
 
   /** UNSET TBLPROPERTIES: commit the shrunken property set (possibly
@@ -337,10 +333,13 @@ object MergeOps {
     require(missing.isEmpty,
       s"no properties ${missing.mkString(", ")} on $corpusDir — live " +
         s"properties: ${existing.keys.toSeq.sorted.mkString(", ")}")
-    commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
-      stats = CarryAll, declareTouch = false,
-      extra = Versioned.writePropsLines(s, corpusDir, _, _, existing -- keys))
+    commitProps(s, corpusDir, v, existing -- keys)
   }
+
+  private def commitProps(s: SparkSession, corpusDir: String, v: Long,
+                          props: Map[String, String]): Unit =
+    commitMetadata(s, corpusDir, v, Versioned.Props,
+      props.toSeq.sorted.map { case (k, vv) => s"$k\t$vv" })
 
   /** DROP CONSTRAINT: commit the shrunken set (possibly EMPTY — an
     * empty sidecar masks every older one, releasing the table). Same
@@ -354,11 +353,18 @@ object MergeOps {
     require(existing.exists(_._1 == name),
       s"no constraint '$name' on $corpusDir — live constraints: " +
         existing.map(_._1).sorted.mkString(", "))
+    commitMetadata(s, corpusDir, v, Versioned.Constraints,
+      existing.filterNot(_._1 == name).map { case (n, e) => s"$n\t$e" })
+  }
+
+  /** Commit version v's manifest and partition lines unchanged with a
+    * new `side` sidecar — the table-metadata DDL shape: undeclared
+    * touch, OCC claim at v+1. */
+  private def commitMetadata(s: SparkSession, corpusDir: String, v: Long,
+                             side: String, lines: Seq[String]): Unit =
     commit(s, corpusDir, Some(v), Versioned.manifest(s, corpusDir, v),
       stats = CarryAll, declareTouch = false,
-      extra = Versioned.writeConstraintLines(s, corpusDir, _, _,
-        existing.filterNot(_._1 == name).map { case (n, e) => s"$n\t$e" }))
-  }
+      extra = Versioned.writeSidecar(s, corpusDir, _, _, side, lines))
 
   /** Validate the STAGED files (read-back) against the table's
     * persisted constraint set before anything publishes — the airtight
@@ -557,30 +563,27 @@ object MergeOps {
       def attempt(b: Option[Long]): Unit = {
         val t = if (b == base) tok else Versioned.newToken()
         val nv = b.fold(1L)(_ + 1)
-        def kept(read: (SparkSession, String, Long) => Seq[String]) =
-          b.fold(Seq.empty[String])(read(s, dir, _))
-        val statsOut = (kept(Versioned.readStatsLines).filter(carry) ++
-          fresh).sorted
-        if (statsOut.nonEmpty)
-          Versioned.writeStatsLines(s, dir, nv, t, statsOut)
-        def mor(read: (SparkSession, String, Long) => Seq[String],
-                added: Seq[String]): Seq[String] = {
-          val k = kept(read).filterNot(l =>
+        def kept(side: String) =
+          b.fold(List.empty[String])(Versioned.sidecarLines(s, dir, _, side))
+        def write(side: String, lines: Seq[String]): Unit =
+          Versioned.writeSidecar(s, dir, nv, t, side, lines)
+        val statsOut = (kept(Versioned.Stats).filter(carry) ++ fresh).sorted
+        if (statsOut.nonEmpty) write(Versioned.Stats, statsOut)
+        def mor(side: String, added: Seq[String]): Unit = {
+          val k = kept(side).filterNot(l =>
             restaged(Versioned.statsLinePart(l)))
-          if (added.isEmpty) k else (k ++ added).sorted
+          val out = if (added.isEmpty) k else (k ++ added).sorted
+          if (out.nonEmpty) write(side, out)
         }
-        val dv = mor(Versioned.readDvLines, newDv)
-        if (dv.nonEmpty) Versioned.writeDvLines(s, dir, nv, t, dv)
-        val uv = mor(Versioned.readUvLines, newUv(stagedNames))
-        if (uv.nonEmpty) Versioned.writeUvLines(s, dir, nv, t, uv)
+        mor(Versioned.Dv, newDv)
+        mor(Versioned.Uv, newUv(stagedNames))
         // exactly-once id: the ledger lands under the attempt's token
         // BEFORE publish, so id and data commit together
-        ledgerId.foreach(id => Versioned.writeLedgerIds(s, dir, nv, t,
+        ledgerId.foreach(id => write(Versioned.Ledger,
           b.fold(Set(id))(bb => Versioned.ledgerAdd(
-            Versioned.appliedLedgerIds(s, dir, bb), id))))
+            Versioned.appliedLedgerIds(s, dir, bb), id)).toSeq.sorted))
         extra(nv, t)
-        if (declareTouch)
-          Versioned.writeTouchLines(s, dir, nv, t, changed.toSeq)
+        if (declareTouch) write(Versioned.Touch, changed.toSeq.sorted)
         val baseMan =
           if (b == base) man else Versioned.manifest(s, dir, b.get)
         Versioned.publish(s, dir, nv, t,
@@ -827,10 +830,7 @@ object MergeOps {
     val rows = Seq.newBuilder[String]
     val bounds = Seq.newBuilder[(String, Seq[(String, (Long, Long))])]
     for (pd <- parts) {
-      val files = fs.listStatus(pd.getPath).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val files = Versioned.dataFiles(s, stagedDir, pd.getPath.getName)
       val counts = Seq.newBuilder[(String, Long)]
       val lo = scala.collection.mutable.Map.empty[String, Long]
       val hi = scala.collection.mutable.Map.empty[String, Long]
@@ -1127,7 +1127,7 @@ object MergeOps {
     * precondition — its staged output for its touched partitions is a
     * pure function of those partitions' content at `v` plus the batch —
     * so when EVERY intervening commit DECLARES a touched set
-    * ([[Versioned.readTouched]]) disjoint from this write's, those
+    * ([[Versioned.Touch]]) disjoint from this write's, those
     * partitions' live content at the new current equals their content
     * at `v`, and the already-staged immutable dirs can be re-published
     * onto current+1 with freshly re-derived METADATA only (manifest,
@@ -1159,9 +1159,9 @@ object MergeOps {
           val intervening = Versioned.committedVersions(s, corpusDir)
             .filter(w => w > v && w <= cur)
           val disjoint = intervening.forall { w =>
-            scala.util.Try(Versioned.readTouched(s, corpusDir, w))
-              .toOption.flatten
-              .exists(_.intersect(ourTouch).isEmpty)
+            scala.util.Try(Versioned.committedLines(s, corpusDir, w,
+                Versioned.Touch)).toOption.flatten
+              .exists(!_.exists(ourTouch))
           }
           if (!disjoint) throw first
           // an intervening commit may have applied our exactly-once id

@@ -720,14 +720,6 @@ private[sql] object FilterColumns {
 private[graft] object GraftScanObservable {
   @volatile var lastKeptDirs: Seq[String] = Nil
   @volatile var lastAggPushed: Option[String] = None
-  /** Why the most recent readerV2 request fell back to the V1 route
-    * (None = the V2 scan was built). */
-  @volatile var lastV2Decline: Option[String] = None
-  /** Input-partition count the most recent V2 scan planned. */
-  @volatile var lastV2PlannedPartitions: Option[Int] = None
-  /** Entry names surviving the most recent V2 RUNTIME filter
-    * (dynamic partition pruning), when one was applied. */
-  @volatile var lastV2RuntimePruned: Option[Seq[String]] = None
   /** Parquet footers the most recent aggregate answer actually read —
     * 0 when the manifest-recorded row counts (`rows` stats lines)
     * answered COUNT without touching a file. */
@@ -1282,16 +1274,11 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
         .sum
     }.toMap
     val conf = spark.sparkContext.hadoopConfiguration
-    val fsys = new Path(dir).getFileSystem(conf)
     // one footer per surviving data file, read once, shared by every
     // requested function
-    def dataFilesOf(rel: String) =
-      fsys.listStatus(new Path(s"$dir/$rel")).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
     def footersOf(entries: Seq[(String, String)]) =
       entries.flatMap { case (_, rel) =>
-        dataFilesOf(rel).map { st =>
+        Versioned.dataFiles(spark, dir, rel).map { st =>
           GraftScanObservable.lastAggFooterReads += 1
           org.apache.parquet.hadoop.ParquetFileReader.readFooter(
             conf, st,
@@ -1301,20 +1288,10 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
       }
     // the Iceberg manifest-recorded-counts tier (round 16): COUNT
     // prices from ONE dir listing per entry when the stats sidecar
-    // recorded a row count for EVERY file actually present (names are
-    // immutable for an entry's life, so a match is exact; a carried
-    // line naming a restaged partition's dead files never matches) —
-    // the footer-per-file RPCs become the fallback, not the path
+    // recorded a row count for EVERY file actually present
+    // ([[Versioned.recordedRows]]) — the footer-per-file RPCs become
+    // the fallback, not the path
     lazy val statsRows = Versioned.readStatsRows(spark, dir, version)
-    def sidecarCount(entries: Seq[(String, String)]): Option[Long] = {
-      val per = entries.map { case (name, rel) =>
-        val rec = statsRows.getOrElse(name, Map.empty[String, Long])
-        val files = dataFilesOf(rel).map(_.getPath.getName)
-        if (files.forall(rec.contains)) Some(files.map(rec).sum)
-        else None
-      }
-      if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
-    }
     def cast(c: String, v: Long): Any = fullSchema(c).dataType match {
       case LongType => v
       case IntegerType => v.toInt
@@ -1431,7 +1408,8 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
         else dataColBound(footers, c, wantMin)
       specs.map {
         case Cnt =>
-          val base = sidecarCount(entries).getOrElse(footers
+          val base = Versioned.recordedRows(spark, dir, entries, statsRows)
+            .getOrElse(footers
             .map(_.getBlocks.asScala.map(_.getRowCount).sum).sum)
           val n = base -
             entries.map(e => doomedByEntry.getOrElse(e._1, 0L)).sum
@@ -1544,19 +1522,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
     // makes it a slight OVERcount — the safe direction for join
     // planning (too-big costs a shuffle, too-small OOMs a broadcast) —
     // so only the dv case keeps the estimate, absent lines drop it
-    val rows = scala.util.Try {
-      val rec = Versioned.readStatsRows(spark, dir, version)
-      val per = nameKept.map { case (name, rel) =>
-        val m = rec.getOrElse(name, Map.empty[String, Long])
-        val files = fsys.listStatus(new Path(s"$dir/$rel")).toSeq
-          .filter(st => st.isFile &&
-            !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath.getName)
-        if (files.forall(m.contains)) Some(files.map(m).sum) else None
-      }
-      if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
-    }.toOption.flatten
+    val rows = scala.util.Try(Versioned.recordedRows(spark, dir, nameKept,
+      Versioned.readStatsRows(spark, dir, version))).toOption.flatten
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         bytes.fold(java.util.OptionalLong.empty())(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Versioned
-import graft.ops.{IncrementalOps, MergeOps}
+import graft.ops.{BranchOps, IncrementalOps, MergeOps}
 
 /** What each restaging write verb publishes besides its data: the new
   * manifest, the stats lines it carries, keeps as bound supersets, drops
@@ -53,10 +53,10 @@ class SidecarDerivationSpec extends SparkTestBase {
   private def at(dir: String): Commit = {
     val v = Versioned.currentVersion(spark, dir).get
     Commit(v, Versioned.manifest(spark, dir, v).toMap,
-      Versioned.readStatsLines(spark, dir, v),
-      Versioned.readDvLines(spark, dir, v),
-      Versioned.readUvLines(spark, dir, v),
-      Versioned.readTouched(spark, dir, v))
+      Versioned.sidecarLines(spark, dir, v, Versioned.Stats),
+      Versioned.sidecarLines(spark, dir, v, Versioned.Dv),
+      Versioned.sidecarLines(spark, dir, v, Versioned.Uv),
+      Versioned.committedLines(spark, dir, v, Versioned.Touch).map(_.toSet))
   }
 
   private def range(p: String, lo: Int, hi: Int) = s"p=$p\tk\t$lo\t$hi"
@@ -445,6 +445,182 @@ class SidecarDerivationSpec extends SparkTestBase {
     val vs = MergeOps.readCorpus(spark, dir, "p").select("v")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(vs == (1L to 10L), s"staged rows must be the checked rows: $vs")
+  }
+
+  /** Lines of the committed `side` sidecar written AT version `v` (no
+    * walk-back); None when the winning attempt wrote none. */
+  private def linesAt(dir: String, v: Long, side: String)
+      : Option[Seq[String]] =
+    Versioned.committedSidecar(spark, dir, v, side).map { p =>
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).toList
+      finally in.close()
+    }
+
+  private def partOf(line: String): String = Versioned.statsLinePart(line)
+
+  test("branches: the fork copies main's lines verbatim, a branch " +
+       "upsert carries the lines of untouched partitions, a publish " +
+       "fast-forwards or rebases them and declares the changed set") {
+    import spark.implicits._
+    val dir = store("graft_sd_branch")
+    MergeOps.mergeUpsert(spark, dir, rows(Seq(2)), "k", "p",
+      statsKeys = Seq("k"), ledgerId = Some("L1"))
+    MergeOps.mergeDeleteMor(spark, dir, Seq(4L).toDF("k"), "k", "p")
+    MergeOps.mergeUpdateMor(spark, dir, col("k") === 8L,
+      Seq("v" -> lit(-1L)), "k", "p")
+    val m = at(dir)
+    assert(m.dv.map(partOf) == Seq("p=B") && m.uv.map(partOf) == Seq("p=C"))
+    assert(m.stats.map(partOf).toSet == Set("p=A", "p=B"))
+
+    // fork: branch v1 is main's manifest and partition lines verbatim
+    BranchOps.createBranch(spark, dir, "b1")
+    val bd = s"$dir/branches/b1"
+    val f = at(bd)
+    assert(f.v == 1L && f.man == m.man)
+    assert(f.stats == m.stats && f.dv == m.dv && f.uv == m.uv)
+    assert(f.touch.isEmpty && linesAt(bd, 1L, "ledger").isEmpty)
+
+    // branch upsert into B: B's stats and dv lines drop, A's stats and
+    // C's uv line carry in order
+    BranchOps.branchUpsert(spark, dir, "b1", rows(Seq(1, 31), dv = 1L),
+      "k", "p")
+    val h = at(bd)
+    assert(h.v == 2L && h.man - "p=B" == m.man - "p=B")
+    assert(h.man("p=B").startsWith("data/b_b1_2_"))
+    assert(h.stats == m.stats.filterNot(partOf(_) == "p=B"))
+    assert(h.dv.isEmpty && linesAt(bd, 2L, "dv").isEmpty)
+    assert(h.uv == m.uv)
+    assert(h.touch.isEmpty && linesAt(bd, 2L, "ledger").isEmpty)
+
+    // fast-forward: main is still at the fork
+    BranchOps.publishBranch(spark, dir, "b1")
+    val ff = at(dir)
+    assert(ff.v == m.v + 1 && ff.man == h.man)
+    assert(ff.stats == h.stats.sorted && ff.dv.isEmpty && ff.uv == m.uv)
+    assert(ff.touch.contains(Set("p=B")))
+    assert(linesAt(dir, ff.v, "ledger").isEmpty)
+    assert(Versioned.appliedLedgerIds(spark, dir, ff.v) == Set("L1"))
+
+    // disjoint rebase: main tombstones a C key after the fork of b2
+    BranchOps.createBranch(spark, dir, "b2")
+    BranchOps.branchUpsert(spark, dir, "b2", rows(Seq(3, 33), dv = 1L),
+      "k", "p")
+    val h2 = at(s"$dir/branches/b2")
+    MergeOps.mergeDeleteMor(spark, dir, Seq(11L).toDF("k"), "k", "p")
+    val mc = at(dir)
+    assert(mc.touch.contains(Set("p=C")) && mc.dv.map(partOf) == Seq("p=C"))
+    BranchOps.publishBranch(spark, dir, "b2")
+    val rb = at(dir)
+    assert(rb.v == mc.v + 1)
+    assert(rb.man == (mc.man - "p=A") + ("p=A" -> h2.man("p=A")))
+    assert(rb.stats == mc.stats.filterNot(partOf(_) == "p=A").sorted)
+    assert(rb.dv == mc.dv && rb.uv == mc.uv)
+    assert(rb.touch.contains(Set("p=A")))
+    assert(linesAt(dir, rb.v, "ledger").isEmpty)
+    assert(MergeOps.readCorpus(spark, dir, "p").count() == 30L)
+  }
+
+  test("rollback copies the target's stats, dv and uv lines exactly, " +
+       "restores the newest ledger at or below it, and masks newer " +
+       "ledgers with an empty one") {
+    import spark.implicits._
+    val dir = store("graft_sd_rollback")
+    MergeOps.mergeUpsert(spark, dir, rows(Seq(2)), "k", "p",
+      statsKeys = Seq("k"), ledgerId = Some("L1"))                 // v2
+    MergeOps.mergeDeleteMor(spark, dir, Seq(4L).toDF("k"), "k", "p")   // v3
+    MergeOps.mergeUpdateMor(spark, dir, col("k") === 8L,
+      Seq("v" -> lit(-1L)), "k", "p")                               // v4
+    val t = at(dir)
+    assert(t.v == 4L && t.stats.nonEmpty && t.dv.nonEmpty && t.uv.nonEmpty)
+    assert(linesAt(dir, 4L, "ledger").isEmpty)
+    MergeOps.mergeUpsert(spark, dir, rows(Seq(3, 7), dv = 1L), "k", "p",
+      ledgerId = Some("L2"))                                        // v5
+
+    Versioned.rollback(spark, dir, 4L)                              // v6
+    val r = at(dir)
+    assert(r.v == 6L && r.man == t.man)
+    assert(r.stats == t.stats && r.dv == t.dv && r.uv == t.uv)
+    assert(r.touch.isEmpty)
+    assert(linesAt(dir, 6L, "ledger").contains(Seq("L1")))
+    assert(Versioned.appliedLedgerIds(spark, dir, 6L) == Set("L1"))
+
+    // no ledger at or below v1, newer ones above: an empty mask
+    val first = Commit(1L, Versioned.manifest(spark, dir, 1L).toMap,
+      Versioned.sidecarLines(spark, dir, 1L, Versioned.Stats), Nil, Nil, None)
+    Versioned.rollback(spark, dir, 1L)                              // v7
+    val r1 = at(dir)
+    assert(r1.v == 7L && r1.man == first.man && r1.stats == first.stats)
+    assert(r1.dv.isEmpty && r1.uv.isEmpty && r1.touch.isEmpty)
+    assert(linesAt(dir, 7L, "dv").isEmpty && linesAt(dir, 7L, "uv").isEmpty)
+    assert(linesAt(dir, 7L, "ledger").contains(Nil))
+    assert(Versioned.appliedLedgerIds(spark, dir, 7L).isEmpty)
+  }
+
+  test("repair completes a torn claim with the previous version's " +
+       "manifest and its stats, dv and uv lines") {
+    import spark.implicits._
+    val dir = store("graft_sd_repair")
+    MergeOps.mergeDeleteMor(spark, dir, Seq(4L).toDF("k"), "k", "p")
+    MergeOps.mergeUpdateMor(spark, dir, col("k") === 8L,
+      Seq("v" -> lit(-1L)), "k", "p")
+    val pv = at(dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.createNewFile(new org.apache.hadoop.fs.Path(dir,
+      s"commits/${pv.v + 1}"))
+    assert(Versioned.repairTornCommit(spark, dir, pv.v + 1, graceMs = 0L))
+    val r = at(dir)
+    assert(r.v == pv.v + 1 && r.man == pv.man)
+    assert(r.dv == pv.dv && r.uv == pv.uv && r.touch.isEmpty)
+    assert(r.stats == pv.stats)
+    assert(linesAt(dir, r.v, "ledger").isEmpty)
+  }
+
+  test("vacuum keeps the newest props sidecar below the floor whole and " +
+       "sweeps ghost props files") {
+    import spark.implicits._
+    val root = new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath
+    val tbl = "graft_sd_props_vacuum"
+    val dir = new java.io.File(root, tbl).getAbsolutePath
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sql.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.root", root)
+    graft.sql.GraftDml.install(spark)
+    def noted(keys: Seq[Int]) =
+      rows(keys).withColumn("note", concat(lit("n"), col("k")))
+    MergeOps.mergeUpsert(spark, dir, noted(1 to 30), "k", "p")         // v1
+    spark.sql(s"ALTER TABLE graft.$tbl SET TBLPROPERTIES('keyCol'='k')") // v2
+    spark.sql(s"ALTER TABLE graft.$tbl DROP COLUMN note")             // v3
+    MergeOps.addConstraint(spark, dir, "nonneg", "v >= 0", "p")       // v4
+    MergeOps.mergeUpsert(spark, dir, noted(Seq(3)), "k", "p")          // v5
+    MergeOps.mergeUpsert(spark, dir, noted(Seq(6)), "k", "p")          // v6
+    val props = Versioned.tableProps(spark, dir, 6L)
+    assert(props.get("keyCol").contains("k") &&
+      props.get("graft.schema.dropped").contains("note"))
+    assert(!spark.table(s"graft.$tbl").columns.contains("note"))
+    // a losing attempt's props sidecar at a version current has passed
+    val ghost = new org.apache.hadoop.fs.Path(dir, "props/5_deadbeef.txt")
+    val out = fs.create(ghost, false)
+    try out.write("keyCol\tv\n".getBytes("UTF-8")) finally out.close()
+
+    Versioned.vacuum(spark, dir, keepVersions = 1)                    // floor 6
+    assert(Versioned.retentionFloor(spark, dir).contains(6L))
+    assert(Versioned.tableProps(spark, dir, 6L) == props,
+      "a floor-raising vacuum must not forget the table's properties")
+    assert(MergeOps.tableConstraints(spark, dir, 6L) ==
+      Seq("nonneg" -> "v >= 0"))
+    assert(!spark.table(s"graft.$tbl").columns.contains("note"),
+      "the dropped column must stay hidden after the vacuum")
+    assert(!fs.exists(ghost), "the ghost props sidecar must be swept")
+    spark.sql(s"INSERT INTO graft.$tbl VALUES (100, 1000, 'B')")
+    assert(MergeOps.readCorpus(spark, dir, "p").where(col("k") === 100L)
+      .count() == 1L)
   }
 }
 

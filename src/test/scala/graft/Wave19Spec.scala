@@ -234,7 +234,8 @@ class Wave19Spec extends SparkTestBase {
     val statsFile = graft.engine.Versioned
       .committedSidecar(spark, dirL, 1L, "stats").get
     val sfs = fsOf(dirL)
-    val named = graft.engine.Versioned.readStatsLines(spark, dirL, 1L)
+    val named = graft.engine.Versioned.sidecarLines(spark, dirL, 1L,
+      graft.engine.Versioned.Stats)
     sfs.delete(statsFile, false)
     val out = sfs.create(statsFile, false)
     try out.write(named.map(_.split('\t')).collect {
