@@ -20,13 +20,17 @@ object Scale {
     * every bench core count, so per-probe ratios reflect parallelism,
     * not partition-count noise), and a 100 TB input derives
     * bytes/64 MB capped at 4× the cores. AQE coalescing still rides on
-    * top. Production override: `SPARK_GRAFT_SHUFFLE_PARTITIONS`. */
+    * top. Production override: `SPARK_GRAFT_SHUFFLE_PARTITIONS`. The
+    * input is sized through Hadoop's `FileSystem`, so any URI the
+    * readers accept (`file:`, `hdfs:`, object stores) measures the same
+    * way; an unreadable dir counts 0 bytes and lands on the floor. */
   def shufflePartitions(sfDir: String, cpus: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse {
-      def size(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(size).sum).getOrElse(0L)
-      val bytes = scala.util.Try(size(new java.io.File(sfDir))).getOrElse(0L)
+      val bytes = scala.util.Try {
+        val p = new org.apache.hadoop.fs.Path(sfDir)
+        p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+          .getContentSummary(p).getLength
+      }.getOrElse(0L)
       val target = (bytes + (64L << 20) - 1) / (64L << 20)
       math.max(8L, math.min(4L * cpus, target)).toInt
     }

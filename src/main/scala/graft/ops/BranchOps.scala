@@ -354,57 +354,4 @@ object BranchOps {
     fsOf(s, root).delete(
       new org.apache.hadoop.fs.Path(bdir(root, name)), true)
   }
-
-  /** Declared merge_branch_wap query: the full WRITE-AUDIT-PUBLISH
-    * loop — main lands the fold<90 corpus under a persisted positive-
-    * price constraint (v1, v2=ADD CONSTRAINT), a branch forks and
-    * takes a DIRTY batch (fold 90–94 with two poisoned prices); main
-    * must never expose it; the publish AUDIT must reject the branch;
-    * the fix lands on the branch (same keys, clean prices) and the
-    * publish fast-forwards main atomically. The read-back equals the
-    * bucket<95 restatement — exactly the audited content, nothing of
-    * the dirty intermediate. */
-  def mergeBranchWapQuery(s: SparkSession, d: String): DataFrame = {
-    val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_wap_$key").getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val base = orders(s, d)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    def fold(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c.cast("string")), 1, 8), 16, 10)
-        .cast("long").mod(100)
-    val b = fold(col("o_orderkey"))
-    MergeOps.mergeUpsert(s, dir, base.where(b < 90),
-                         "o_orderkey", "o_orderstatus")              // v1
-    MergeOps.addConstraint(s, dir, "positive_price",
-                           "o_totalprice > 0", "o_orderstatus")      // v2
-    BranchOps.createBranch(s, dir, "ingest")
-    val slice = base.where(b >= 90 && b <= 94)
-    val dirty = slice.withColumn("o_totalprice",
-      when(b >= 93, lit(-1.0)).otherwise(col("o_totalprice")))
-    BranchOps.branchUpsert(s, dir, "ingest", dirty,
-                           "o_orderkey", "o_orderstatus")
-    require(Versioned.currentVersion(s, dir).contains(2L),
-      "branch work must not move main")
-    require(MergeOps.readCorpus(s, dir, "o_orderstatus")
-        .where(col("o_totalprice") < 0).isEmpty,
-      "main must never expose the unaudited branch content")
-    val audit = scala.util.Try(BranchOps.publishBranch(s, dir, "ingest"))
-    require(audit.isFailure &&
-      audit.failed.get.getMessage.contains("positive_price"),
-      "the publish audit must reject the dirty branch")
-    require(Versioned.currentVersion(s, dir).contains(2L),
-      "a failed audit must not move main")
-    BranchOps.branchUpsert(s, dir, "ingest", slice,
-                           "o_orderkey", "o_orderstatus")   // the fix
-    BranchOps.publishBranch(s, dir, "ingest")                        // v3
-    BranchOps.dropBranch(s, dir, "ingest")
-    MergeOps.readCorpus(s, dir, "o_orderstatus")
-      .select(col("o_orderkey"), col("o_totalprice"),
-              col("o_orderstatus").cast("string").as("o_orderstatus"))
-      .orderBy("o_orderkey")
-  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
-import graft.engine.Versioned
+import graft.engine.{Artifacts, Versioned}
 
 /** Incremental aggregate maintenance — the materialized-rollup side of a
   * streaming/batch ingest pipeline: a day-level summary table over
@@ -169,12 +169,7 @@ object IncrementalOps {
     * partial ⊕ partial = total for every measure AND that the replayed
     * fold did not double-count. */
   def aggIncremental(s: SparkSession, d: String): DataFrame = {
-    val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_rollup_$key").getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val dir = Artifacts.scratchDir(s, "rollup", d)
     val ev = events(s, d).withColumn("d", to_date(col("ts")))
     val cut = ev.agg(date_sub(max(col("d")), 6).as("c"),
                      date_sub(max(col("d")), 3).as("m")).collect()(0)
@@ -200,12 +195,7 @@ object IncrementalOps {
     * algebraic columns still ride along, so the sketch store subsumes
     * the plain one. */
   def aggIncrementalHll(s: SparkSession, d: String): DataFrame = {
-    val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_rolluph_$key").getAbsolutePath
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    val dir = Artifacts.scratchDir(s, "rolluph", d)
     val ev = events(s, d).withColumn("d", to_date(col("ts")))
     val cut = ev.agg(date_sub(max(col("d")), 6).as("c"),
                      date_sub(max(col("d")), 3).as("m")).collect()(0)

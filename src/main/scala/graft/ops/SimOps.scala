@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Artifacts
 import graft.engine.Tables._
 
 /** Similarity + dedup operators (SURVEY.md §2.I): exact dedup, MinHash /
@@ -336,25 +337,12 @@ object SimOps {
   /** Corpus size for dispatch: a parquet count — Spark answers it from
     * footer row counts (one metadata job, no column data read), the
     * "one count/catalog-stat check" the dispatcher is allowed to spend.
-    * MEMOIZED per dataset dir (the [[ensureSignatureStore]]/
-    * embStoreBuilt pattern): the residual dispatch overhead is one
-    * metadata job per DATASET, not one per `*_auto` call — on a bench
-    * pass that calls four dispatchers per dir, three of the four count
-    * jobs were pure waste (r9 verdict). */
-  private val corpusSizeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+    * Memoized per (session, dataset dir) ([[Artifacts.memo]]): the
+    * residual dispatch overhead is one metadata job per dataset, not one
+    * per `*_auto` call — on a bench pass that calls four dispatchers per
+    * dir, three of the four count jobs were pure waste (r9 verdict). */
   private def corpusSize(s: SparkSession, d: String): Long =
-    // keyed by (session, dir) — round-10 advice: a dir-only key would
-    // pin the dispatch decision across session restarts, where "the
-    // dataset behind the dir was refreshed" is the restart's whole
-    // point; one metadata job per (session, dataset) is still the
-    // amortization the r9 verdict asked for. Stopped sessions' entries
-    // are dropped at the next miss so the memo cannot grow unboundedly.
-    corpusSizeMemo.getOrElseUpdate((s, d), {
-      corpusSizeMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(corpusSizeMemo.remove)
-      embeddings(s, d).count()
-    })
+    Artifacts.memo(s, "corpus_size", d)(embeddings(s, d).count())
 
   /** Size-dispatched cosine top-k: exact all-pairs below the measured
     * crossover, LSH-bucketed ANN above it — the caller no longer needs to
@@ -802,40 +790,18 @@ object SimOps {
   /** Boundary between "existing corpus" (< 90) and "new batch" (>= 90). */
   private val NewBatchFold = 90
 
-  private val sigStoreBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val sigStoreLock = new Object
-
   /** One-time persisted minhash-signature store of the EXISTING corpus
-    * (fold < 90), memoized per (JVM, dataset dir) — the snapshot state an
-    * incremental pipeline maintains between crawls. Signatures of already-
-    * ingested documents are computed once and read back as parquet
-    * forever after; each new batch only pays for its OWN shingling. A
-    * `_SUCCESS` check guards against mistaking a half-finished write from
-    * a crashed run for a valid store (overwrite mode commits _SUCCESS
-    * last). */
+    * (fold < 90), a standing [[Artifacts]] artifact — the snapshot state
+    * an incremental pipeline maintains between crawls. Signatures of
+    * already-ingested documents are computed once and read back as
+    * parquet forever after; each new batch only pays for its OWN
+    * shingling. */
   private[graft] def ensureSignatureStore(s: SparkSession, d: String): String =
-    sigStoreBuilt.getOrElseUpdate(d, sigStoreLock.synchronized {
-      val (path, ok) = storeAt(s, d, "sigstore")
-      if (!ok)
-        minhashSignaturesOf(
-            documents(s, d).where(foldBucket < NewBatchFold))
-          .write.mode("overwrite").parquet(path)
-      path
-    })
-
-  /** Warehouse path `<warehouse>/graft_<name>_<dir key>` of a persisted
-    * store derived from dataset dir `d`, and whether a completed write is
-    * there: overwrite mode commits `_SUCCESS` last, so a half-finished
-    * write from a crashed run never reads as a valid store. */
-  private def storeAt(s: SparkSession, d: String,
-                      name: String): (String, Boolean) = {
-    val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
-    val path = s"${s.conf.get("spark.sql.warehouse.dir")}/graft_${name}_$key"
-    val p = new org.apache.hadoop.fs.Path(path)
-    (path, p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-  }
+    Artifacts.memo(s, "sigstore", d) {
+      Artifacts.standing(s, "sigstore", d)(minhashSignaturesOf(
+          documents(s, d).where(foldBucket < NewBatchFold))
+        .write.mode("overwrite").parquet(_))
+    }
 
   /** Incremental dedup — the operator a training pipeline runs per crawl:
     * dedup the NEW batch (fold >= 90, ~10% of docs) against the persisted
@@ -911,9 +877,6 @@ object SimOps {
 
   // ---- incremental ANN: new vectors vs persisted LSH signatures ----
 
-  private val embStoreBuilt =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private val embStoreLock = new Object
   /** Fixed geometry of the persisted embedding index. `bits` is NOT fixed:
     * it derives from the persisted corpus size (bitsFor), which any JVM
     * can recover from the store's own parquet footers — so geometry needs
@@ -922,9 +885,6 @@ object SimOps {
   private val EmbStoreTables = 4
   private val EmbStoreSeed = 77L
   private val EmbStoreBucket = 64
-
-  /** Test hook: forget the per-JVM memo (NOT the files). */
-  private[graft] def resetEmbStoreMemo(): Unit = embStoreBuilt.clear()
 
   /** One-time persisted LSH index of the EXISTING embedding corpus
     * (fold < 90): hyperplane signature rows (vec_id, tbl, key) and the
@@ -949,29 +909,34 @@ object SimOps {
     * per row; it divides every rerank product, so its error would be
     * systematic, and saving 4 bytes on a 260-byte row is noise).
     *
-    * `_SUCCESS` on both dirs guards torn writes (vectors first, then
-    * signatures — a crash between the two leaves sigs incomplete and the
-    * whole store rebuilds). A store written by an older round (float64
-    * `vd` schema) fails the format probe below and rebuilds in place —
-    * the stale-store dispatch lesson applied to our own artifacts. */
+    * Both dirs are standing artifacts, vectors first, then signatures:
+    * a crash between the two leaves the signatures torn and only they
+    * rebuild. A vector store written by an older round (float64 `vd`
+    * schema) fails the format probe below and rebuilds in place, and the
+    * signatures with it — the stale-store dispatch lesson applied to our
+    * own artifacts. */
   private[graft] def ensureEmbSignatureStore(
       s: SparkSession, d: String): (String, String) =
-    embStoreBuilt.getOrElseUpdate(d, embStoreLock.synchronized {
-      val (vecPath, vecOk) = storeAt(s, d, "embstore_vec")
-      val (sigPath, sigOk) = storeAt(s, d, "embstore_sig")
-      def formatCurrent: Boolean = scala.util.Try(
-        s.read.parquet(vecPath).schema.fieldNames.contains("vf"))
-        .getOrElse(false)
-      if (!(vecOk && sigOk && formatCurrent)) {
-        val old = normed(s, d).where(foldOf(col("vec_id")) < NewBatchFold)
-          .cache()
-        embStoreVecRows(old).write.mode("overwrite").parquet(vecPath)
-        val bits = bitsFor(old.count(), EmbStoreBucket)
-        embStoreSigRows(old, bits).write.mode("overwrite").parquet(sigPath)
-        old.unpersist()
+    Artifacts.memo(s, "embstore", d) {
+      lazy val old = normed(s, d)
+        .where(foldOf(col("vec_id")) < NewBatchFold).cache()
+      var rebuilt = false
+      val vecPath = Artifacts.standing(s, "embstore_vec", d,
+          current = p => scala.util.Try(
+            s.read.parquet(p).schema.fieldNames.contains("vf"))
+            .getOrElse(false)) { p =>
+        rebuilt = true
+        embStoreVecRows(old).write.mode("overwrite").parquet(p)
       }
+      val sigPath = Artifacts.standing(s, "embstore_sig", d,
+          current = _ => !rebuilt) { p =>
+        rebuilt = true
+        embStoreSigRows(old, bitsFor(old.count(), EmbStoreBucket))
+          .write.mode("overwrite").parquet(p)
+      }
+      if (rebuilt) old.unpersist()
       (vecPath, sigPath)
-    })
+    }
 
   /** Read the quantized vector store back in rerank form: float32 →
     * float64 dequantization is one narrow codegen'd map. */

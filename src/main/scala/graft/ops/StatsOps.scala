@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Artifacts
 
 /** Statistics / cost-based-optimization surface (SURVEY §4 follow-up).
   *
@@ -13,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * TPC-H parquet files as external catalog tables (metadata-only — the
   * files are never touched) and runs `ANALYZE TABLE ... COMPUTE
   * STATISTICS [FOR COLUMNS join keys]` over them, memoized per
-  * (JVM, dataset dir) exactly like the bucketed-table ETL. In a real
+  * (session, dataset dir) exactly like the bucketed-table ETL. In a real
   * deployment the stats live in the metastore and are refreshed per
   * ingest; here the in-memory catalog holds them for the process, which
   * is the same contract the planner sees.
@@ -28,22 +29,15 @@ object StatsOps {
     "supplier" -> Seq("s_suppkey", "s_nationkey"),
     "nation"   -> Seq("n_nationkey"))
 
-  private val analyzed =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
-  private object analyzeLock
-
-  /** Test hook: forget the per-JVM memo (NOT the catalog) — lets a spec
-    * exercise the re-entry path. */
-  private[graft] def resetStatsMemo(): Unit = analyzed.clear()
-
   /** Register + ANALYZE the demo tables for `d`; returns logical-name →
     * catalog-table-name. Idempotent and cheap after the first call: the
     * catalog entry is tagged with the dataset dir, so a re-entry (or a
-    * second caller in the same JVM) sees the tag and skips the scan. */
+    * second session over the same catalog) sees the tag and skips the
+    * scan. */
   private[graft] def ensureAnalyzedTables(
       s: SparkSession, d: String): Map[String, String] =
-    analyzed.getOrElseUpdate(d, analyzeLock.synchronized {
-      val key = d.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+", "")
+    Artifacts.memo(s, "analyzed", d) {
+      val key = Artifacts.key(d)
       val tag = "graft.dataset.dir"
       specs.map { case (name, keyCols) =>
         val t = s"graft_st_${name}_$key"
@@ -63,7 +57,7 @@ object StatsOps {
         }
         name -> t
       }.toMap
-    })
+    }
 
   /** Stats-driven join reorder: the query is WRITTEN fact-first with the
     * dims in comma-join order (`lineitem, nation, supplier`) — the

@@ -11,17 +11,6 @@ import graft.ops.MergeOps
   * version IN FULL; after the marker lands, the new version in full. */
 class AtomicCommitSpec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   test("crash between stage and publish reads back fully-old; " +
        "marker flips it to fully-new") {
     val dir = freshDir("graft_atomic")

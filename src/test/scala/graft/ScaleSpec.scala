@@ -42,6 +42,20 @@ class ScaleSpec extends SparkTestBase {
     assert(salted == plain)
   }
 
+  test("shuffle partitions size a file: URI input through Hadoop FS") {
+    assume(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").isEmpty)
+    // a 1 GiB SPARSE file (no real disk) = 16 × 64 MB, under 4 × 4 cpus
+    val dir = java.nio.file.Files.createTempDirectory("graft_scale")
+    val f = new java.io.RandomAccessFile(dir.resolve("big.bin").toFile, "rw")
+    try f.setLength(1L << 30) finally f.close()
+    try {
+      assert(Scale.shufflePartitions(dir.toUri.toString, cpus = 4) == 16)
+      assert(Scale.shufflePartitions(sf, cpus = 4) == 8, "local sf floor")
+    } finally {
+      dir.resolve("big.bin").toFile.delete(); dir.toFile.delete()
+    }
+  }
+
   test("partitioned write enables partition pruning at read") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")

@@ -14,11 +14,6 @@ import graft.ops.{BranchOps, IncrementalOps, MergeOps}
   * one kernel. */
 class SidecarDerivationSpec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** k, v = 10k, p = A/B/C by k mod 3 (0 → A, 1 → B, 2 → C). */
   private def rows(keys: Seq[Int], dv: Long = 0L): DataFrame = {
     import spark.implicits._

@@ -9,6 +9,19 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh, not-yet-existing temp dir path for a store. */
+  def freshDir(name: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    d.delete(); d.getAbsolutePath
+  }
+
+  /** `n` rows of (k, v = k × 10, p = "E"/"O" by parity of k). */
+  def corpus(n: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
+      .toDF("k", "v", "p")
+  }
 }
 
 object SparkTestBase {

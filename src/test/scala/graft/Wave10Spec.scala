@@ -96,8 +96,8 @@ class Wave10Spec extends SparkTestBase {
     val hit = got.count { case (q, n) => best(q) == n }
     assert(hit.toDouble / got.size >= 0.6,
       s"top-1 agreement with brute force only $hit/${got.size}")
-    // Durability: a second entry after forgetting the JVM memo must reuse
-    // the persisted store, not rewrite it.
+    // Durability: a second entry from a new session must reuse the
+    // persisted store, not rewrite it.
     val (vecPath, sigPath) = SimOps.ensureEmbSignatureStore(spark, sf)
     def mtime(p: String): Long = {
       val hp = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
@@ -105,8 +105,7 @@ class Wave10Spec extends SparkTestBase {
         .getFileStatus(hp).getModificationTime
     }
     val (tv, ts) = (mtime(vecPath), mtime(sigPath))
-    SimOps.resetEmbStoreMemo()
-    val again = SimOps.simIncrementalAnn(spark, sf).collect()
+    val again = SimOps.simIncrementalAnn(spark.newSession(), sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(again.toSeq == out.toSeq, "re-entry changed the results")
     assert(mtime(vecPath) == tv && mtime(sigPath) == ts,

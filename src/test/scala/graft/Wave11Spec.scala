@@ -66,7 +66,7 @@ class Wave11Spec extends SparkTestBase {
               round(col("s_acctbal"), 2).as("s_acctbal_r"))
       .orderBy("s_suppkey").collect()
     assert(viaOrc.toSeq == direct.toSeq, "ORC roundtrip changed values")
-    // Reuse: a fresh JVM (simulated by clearing the memo) must read the
+    // Reuse: a fresh process (simulated by a new session) must read the
     // existing export, not rewrite it.
     val loc = Relational.ensureOrcExport(spark, sf)
     def mtime: Long = {
@@ -75,8 +75,7 @@ class Wave11Spec extends SparkTestBase {
         .getFileStatus(p).getModificationTime
     }
     val t0 = mtime
-    Relational.resetOrcMemo()
-    val again = Relational.scanOrc(spark, sf).collect()
+    val again = Relational.scanOrc(spark.newSession(), sf).collect()
     assert(again.toSeq == viaOrc.toSeq)
     assert(mtime == t0, "re-entry rewrote the ORC export")
   }

@@ -407,7 +407,10 @@ class Wave12Spec extends SparkTestBase {
   }
 
   test("pagerank step shuffles only ranks + the dst agg (edges stay put)") {
-    val edgesDeg = GraphOps.pagerankSubstrate(spark, sf)
+    // built on a throwaway session: the memoized substrate is that
+    // session's alone, so unpersisting it leaves no other caller an
+    // uncached plan
+    val edgesDeg = GraphOps.pagerankSubstrate(spark.newSession(), sf)
     try {
       edgesDeg.count() // materialize the cache so its partitioning is live
       val ranks = edgesDeg.select(col("src").as("node"), lit(1.0).as("rank"))
@@ -426,10 +429,6 @@ class Wave12Spec extends SparkTestBase {
         "the static side should come from cache with live partitioning")
       assert("HashAggregate".r.findAllIn(plan).size >= 2,
         "contributions should partially aggregate map-side")
-    } finally GraphOps.resetSubstrateMemo()
-    // reset, NOT a bare unpersist: the substrate is memoized per dataset
-    // (a standing artifact since r10) — unpersisting while leaving the
-    // memo entry would hand every later caller an uncached plan that
-    // recomputes the edges+deg join per iteration
+    } finally edgesDeg.unpersist(false)
   }
 }

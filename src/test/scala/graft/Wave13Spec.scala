@@ -217,9 +217,9 @@ class Wave13Spec extends SparkTestBase {
   }
 
   test("durable exports are reused by a fresh process (memo reset)") {
-    // Prime both exports, capture their _SUCCESS mtimes, forget the
-    // per-JVM memos (= what a restart loses), re-run: the `_SUCCESS`
-    // guard must short-circuit — same files, no rewrite.
+    // Prime both exports, capture their _SUCCESS mtimes, re-run from a
+    // new session (= a restart's empty memo): the `_SUCCESS` guard must
+    // short-circuit — same files, no rewrite.
     ops.Relational.scanPartitioned(spark, sf).count()
     ops.Relational.scanEvolved(spark, sf).count()
     val pDir = ops.Relational.ensurePartitionedExport(spark, sf)
@@ -227,10 +227,9 @@ class Wave13Spec extends SparkTestBase {
     val (p, e) = (new java.io.File(pDir, "_SUCCESS"),
                   new java.io.File(eDir, "_SUCCESS"))
     val (pT, eT) = (p.lastModified(), e.lastModified())
-    ops.Relational.resetPartitionedMemo()
-    ops.Relational.resetEvolvedMemo()
-    ops.Relational.scanPartitioned(spark, sf).count()
-    ops.Relational.scanEvolved(spark, sf).count()
+    val fresh = spark.newSession()
+    ops.Relational.scanPartitioned(fresh, sf).count()
+    ops.Relational.scanEvolved(fresh, sf).count()
     assert(p.lastModified() == pT && e.lastModified() == eT,
       "a fresh JVM must reuse the durable exports, not rebuild them")
   }
@@ -276,7 +275,7 @@ class Wave13Spec extends SparkTestBase {
   }
 
   test("merge_scd2: one open row per key; further applies are no-ops") {
-    val hist = ops.MergeOps.mergeScd2Query(spark, sf).collect()
+    val hist = graft.queries.StoreQueries.mergeScd2Query(spark, sf).collect()
     val byKey = hist.groupBy(_.getLong(0))
     byKey.foreach { case (k, rows) =>
       val open = rows.filter(_.isNullAt(4))

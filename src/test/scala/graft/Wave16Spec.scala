@@ -118,10 +118,9 @@ class Wave16Spec extends SparkTestBase {
     val (z, d) = (new java.io.File(zDir, "_SUCCESS"),
                   new java.io.File(dDir, "_SUCCESS"))
     val (zT, dT) = (z.lastModified(), d.lastModified())
-    Relational.resetZorderMemo()
-    Relational.resetStatusDimMemo()
-    Relational.scanZorder(spark, sf).count()
-    Relational.scanDpp(spark, sf).count()
+    val fresh = spark.newSession()
+    Relational.scanZorder(fresh, sf).count()
+    Relational.scanDpp(fresh, sf).count()
     assert(z.lastModified() == zT && d.lastModified() == dT,
       "a fresh JVM must reuse the durable exports, not rebuild them")
   }

@@ -12,17 +12,6 @@ import graft.ops.{IncrementalOps, MergeOps}
   * schedule IS the race. */
 class Wave17Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   test("two writers racing one version: exactly one commit wins and the " +
        "loser's staged data is never visible") {
     import spark.implicits._

@@ -13,17 +13,6 @@ import graft.ops.{IncrementalOps, MergeOps}
   * version and the retry wrapper must land both writers' updates. */
 class Wave18Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   test("withCommitRetry: retries exactly on commit races, passes other " +
        "failures through, and gives up loudly") {
     var calls = 0

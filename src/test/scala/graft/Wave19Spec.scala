@@ -15,17 +15,6 @@ import graft.ops.MergeOps
   * raw FileNotFoundException. */
 class Wave19Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def fsOf(dir: String) = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -14,17 +14,6 @@ import graft.ops.MergeOps
   * source version in the destination's ledger — exactly-once. */
 class Wave21Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def feedMap(dir: String, from: Long, to: Long) =
     MergeOps.changeFeed(spark, dir, from, to, "k", "p").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(3))).toMap

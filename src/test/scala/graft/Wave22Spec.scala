@@ -12,11 +12,6 @@ import graft.ops.MergeOps
   * superset rule; over-cap columns record nothing and always read. */
 class Wave22Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** Years 1..4, statuses concentrated by year: y1 all A, y2 mixed
     * A/B, y3 all B, y4 mixed B/C — the correlated-categorical shape. */
   private def corpus() = {

@@ -10,11 +10,6 @@ import graft.ops.MergeOps
   * rows alone); UPDATE may not SET the key or partition column. */
 class Wave23Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   private def rows(dir: String): Map[Long, Double] =
     MergeOps.readCorpus(spark, dir, "p").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -10,17 +10,6 @@ import graft.ops.MergeOps
   * rollbacks to it stay legal; deleting the tag releases the pin. */
 class Wave24Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def keysAt(dir: String, v: Long): Set[Long] =
     Versioned.readVersion(spark, dir, v, Some("p")).select("k")
       .collect().map(_.getLong(0)).toSet

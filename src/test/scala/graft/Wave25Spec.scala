@@ -11,17 +11,6 @@ import graft.ops.MergeOps
   * missing-path exception. */
 class Wave25Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   test("changeFeed accepts a fromV below the retention floor when a tag " +
        "pins it — the pinned-mirror replication case; an unpinned fromV " +
        "below the floor still fails fast") {

@@ -11,17 +11,6 @@ import graft.ops.MergeOps
   * plan-level checks leave open. */
 class Wave26Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def row(k: Long, v: java.lang.Double, p: String) = {
     import spark.implicits._
     Seq((k, v, p)).toDF("k", "v", "p")

@@ -36,17 +36,6 @@ object Wave27Gate {
   * signal. */
 class Wave27Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private val gated = udf(Wave27Gate.pass _)
 
   /** A batch whose partition column routes through the gate — the

@@ -11,17 +11,6 @@ import graft.streaming.StreamOps
   * mirror sink. */
 class Wave28Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def readAll(dir: String): Map[Long, (Double, String)] =
     MergeOps.readCorpus(spark, dir, "p").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap

@@ -9,14 +9,9 @@ import graft.ops.MergeOps
   * riding the same stats sidecar so every carry rule holds for free. */
 class Wave33Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** keys spread over 4 partitions by k%4 — high-cardinality in every
     * partition, the shape ranges and dictionaries cannot skip on. */
-  private def corpus(n: Int) = {
+  private def quarterCorpus(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, i * 1.5, (i % 4).toString))
       .toDF("k", "v", "p")
@@ -26,7 +21,7 @@ class Wave33Spec extends SparkTestBase {
        "input files stay inside the kept dirs, and the result equals " +
        "the plain filter") {
     val dir = freshDir("graft_bloom_pin")
-    MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p",
                          bloomKeys = Seq("k"))
     // k=41 lives in partition p=1 only
     val blooms = Versioned.readStatsBloom(spark, dir, 1L)
@@ -58,7 +53,7 @@ class Wave33Spec extends SparkTestBase {
        "read-and-filter") {
     import spark.implicits._
     val dir = freshDir("graft_bloom_miss")
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p",
                          bloomKeys = Seq("k"))
     // restage partition 2 WITHOUT bloomKeys: its line drops (the
     // changelog rule) — that partition must now always read
@@ -84,7 +79,7 @@ class Wave33Spec extends SparkTestBase {
        "each") {
     import spark.implicits._
     val dir = freshDir("graft_bloom_carry")
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p",
                          bloomKeys = Seq("k"))                       // v1
     MergeOps.mergeUpsert(spark, dir,
       Seq((601L, 6.1, "1")).toDF("k", "v", "p"), "k", "p",
@@ -149,7 +144,7 @@ class Wave33Spec extends SparkTestBase {
        "rows — a fresh bloom can shed a deleted hot value") {
     import spark.implicits._
     val dir = freshDir("graft_bloom_refresh")
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p",
       statsKeys = Seq("k"), bloomKeys = Seq("k"))                    // v1
     // the near-miss: a range-only refresh once routed bloom lines into
     // the range branch and dropped them

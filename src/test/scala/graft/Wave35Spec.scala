@@ -11,13 +11,8 @@ import graft.ops.MergeOps
   * writer fails LOUDLY instead of rebasing a stale-layout manifest. */
 class Wave35Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** two layout candidates per row: p (k%3) and q (k%2 as a string) */
-  private def corpus(n: Int) = {
+  private def pqCorpus(n: Int) = {
     import spark.implicits._
     (1 to n).map(i =>
       (i.toLong, i * 10.0, (i % 3).toString, if (i % 2 == 0) "E" else "O"))
@@ -29,7 +24,7 @@ class Wave35Spec extends SparkTestBase {
        "read-back, and a clean one lands") {
     import spark.implicits._
     val dir = freshDir("graft_repart_cons")
-    MergeOps.mergeUpsert(spark, dir, corpus(60), "k", "p")           // v1
+    MergeOps.mergeUpsert(spark, dir, pqCorpus(60), "k", "p")           // v1
     MergeOps.addConstraint(spark, dir, "pos", "v > 0", "p")          // v2
     MergeOps.repartitionTable(spark, dir, "p", "q")                  // v3
     intercept[IllegalArgumentException] {
@@ -48,7 +43,7 @@ class Wave35Spec extends SparkTestBase {
        "every old-layout line and records requested bounds + blooms " +
        "keyed by the new partition names; the pruned reads are exact") {
     val dir = freshDir("graft_repart_stats")
-    MergeOps.mergeUpsert(spark, dir, corpus(120), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, pqCorpus(120), "k", "p",
                          statsKeys = Seq("k"), bloomKeys = Seq("k"))  // v1
     val oldParts = Versioned.readStatsBloom(spark, dir, 1L).keySet
     assert(oldParts.forall(_.startsWith("p=")))
@@ -72,7 +67,7 @@ class Wave35Spec extends SparkTestBase {
        "stays consistent on the new layout") {
     import spark.implicits._
     val dir = freshDir("graft_repart_race")
-    MergeOps.mergeUpsert(spark, dir, corpus(30), "k", "p")           // v1
+    MergeOps.mergeUpsert(spark, dir, pqCorpus(30), "k", "p")           // v1
     val reached = new java.util.concurrent.CountDownLatch(1)
     val resume = new java.util.concurrent.CountDownLatch(1)
     val once = new java.util.concurrent.atomic.AtomicBoolean(false)

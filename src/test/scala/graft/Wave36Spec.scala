@@ -23,13 +23,8 @@ class Wave36Spec extends SparkTestBase {
         f.metadata.getOrElse("PushedFilters", "")
     }.mkString(";")
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** keys spread over 4 partitions by k%4 — the Wave33 corpus shape. */
-  private def corpus(n: Int) = {
+  private def quarterCorpus(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, i * 1.5, (i % 4).toString))
       .toDF("k", "v", "p")
@@ -39,7 +34,7 @@ class Wave36Spec extends SparkTestBase {
        "parquet as an In/EqualTo DataFilter — never the old " +
        "cast(col as string) form that defeats row-group skipping") {
     val dir = freshDir("graft_typed_resid")
-    MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p",
                          bloomKeys = Seq("k"))
     val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
       values = Seq(("k", Seq("2", "23", "41"))))
@@ -84,7 +79,7 @@ class Wave36Spec extends SparkTestBase {
        "— dropped driver-side (TRY semantics), never an ANSI runtime " +
        "throw; all-uncastable collapses to an exact empty") {
     val dir = freshDir("graft_typed_uncastable")
-    MergeOps.mergeUpsert(spark, dir, corpus(100), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(100), "k", "p",
                          bloomKeys = Seq("k"))
     // mixed castable/uncastable: the uncastable value just drops
     val mixed = MergeOps.readCorpusSkipPruned(spark, dir, "p",
@@ -102,7 +97,7 @@ class Wave36Spec extends SparkTestBase {
        "an unprobed handle's bitset is never deserialized") {
     val dir = freshDir("graft_lazy_bloom")
     // blooms on BOTH k and p — probe only k
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p",
                          bloomKeys = Seq("k", "p"))
     // the reader's own path: cols=Some(k) never even keeps p's lines
     val restricted = Versioned.readStatsBloom(spark, dir, 1L,

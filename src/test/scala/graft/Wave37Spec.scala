@@ -12,11 +12,6 @@ import graft.sql.{GraftCatalog, GraftScanObservable}
   * travel and MOR deletes applied. */
 class Wave37Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   private def register(): Unit = {
     spark.conf.set("spark.sql.catalog.gtest",
       classOf[GraftCatalog].getName)
@@ -24,7 +19,7 @@ class Wave37Spec extends SparkTestBase {
       new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath)
   }
 
-  private def corpus(n: Int) = {
+  private def quarterCorpus(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, i * 1.5, (i % 4).toString))
       .toDF("k", "v", "p")
@@ -35,7 +30,7 @@ class Wave37Spec extends SparkTestBase {
        "equals the plain filter — no Scala reader API on the path") {
     val dir = freshDir("graft_sql_bloom")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p",
                          bloomKeys = Seq("k"))
     register()
     GraftScanObservable.lastKeptDirs = Nil
@@ -56,7 +51,7 @@ class Wave37Spec extends SparkTestBase {
        "stats line stays exact (pruning is advisory)") {
     val dir = freshDir("graft_sql_part")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p")  // NO sidecars
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p")  // NO sidecars
     register()
     GraftScanObservable.lastKeptDirs = Nil
     val got = spark.sql(
@@ -77,7 +72,7 @@ class Wave37Spec extends SparkTestBase {
     import spark.implicits._
     val dir = freshDir("graft_sql_tt")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(8), "k", "p")            // v1
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(8), "k", "p")            // v1
     MergeOps.mergeDeleteMor(spark, dir, Seq(Tuple1(5L)).toDF("k"),
       "k", "p")                                               // v2 (MOR)
     register()
@@ -96,7 +91,7 @@ class Wave37Spec extends SparkTestBase {
        "NoSuchTable, and DDL/DML fails loudly read-only") {
     val dir = freshDir("graft_sql_ls")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(8), "k", "p")
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(8), "k", "p")
     register()
     val names = spark.sql("SHOW TABLES IN gtest").collect()
       .map(_.getString(1)).toSet
@@ -126,7 +121,7 @@ class Wave37Spec extends SparkTestBase {
        "the door: a COUNT(*) and a grouped sum match the Scala read") {
     val dir = freshDir("graft_sql_agg")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(300), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(300), "k", "p",
                          statsKeys = Seq("k"))
     register()
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM gtest.`$tbl`")
@@ -192,7 +187,7 @@ class Wave37Spec extends SparkTestBase {
     import spark.implicits._
     val dir = freshDir("graft_sql_tsasof")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(8), "k", "p")           // v1
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(8), "k", "p")           // v1
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def mtime(v: Long) = fs.getFileStatus(

@@ -13,11 +13,6 @@ import graft.sql.{GraftCatalog, GraftScanObservable}
   * keys (the sidecar candidate probe). */
 class Wave38Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** k 1..n with BOTH partition columns carried as data: p = k%4 (the
     * old spec), q = parity (the new spec). */
   private def corpus(r: Range) = {

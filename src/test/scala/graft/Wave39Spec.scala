@@ -11,11 +11,6 @@ import graft.ops.MergeOps
   * a tombstone). */
 class Wave39Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** Multi-file-per-partition corpus: keys 1..n split E/O, repartitioned
     * so each partition dir lands several data files. */
   private def seed(dir: String, n: Int, files: Int): Unit = {

@@ -14,17 +14,6 @@ import graft.streaming.{ChangeFeedSourceProvider, ChangeFeedStream, FeedOffset}
   * TIMESTAMP AS OF / literal-rendering composition checks. */
 class Wave40Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def createStream(meta: String,
                            opts: Map[String, String]): ChangeFeedStream = {
     val provider = new ChangeFeedSourceProvider()

@@ -12,17 +12,6 @@ import graft.sql.GraftCatalog
   * `pinRetention` vacuum pin that keeps a paced backlog readable. */
 class Wave41Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
-    import spark.implicits._
-    (1 to n).map(i => (i.toLong, i * 10.0, if (i % 2 == 0) "E" else "O"))
-      .toDF("k", "v", "p")
-  }
-
   private def register(): Unit = {
     spark.conf.set("spark.sql.catalog.gtest",
       classOf[GraftCatalog].getName)

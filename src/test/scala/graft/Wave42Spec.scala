@@ -11,12 +11,7 @@ import graft.sql.{GraftCatalog, GraftScanObservable}
   * answer-safety guards (MOR vectors, CoW staleness, evolution). */
 class Wave42Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
-  private def corpus(n: Int) = {
+  private def quarterCorpus(n: Int) = {
     import spark.implicits._
     (1 to n).map(i => (i.toLong, i * 1.5, (i % 4).toString))
       .toDF("k", "v", "p")
@@ -34,7 +29,7 @@ class Wave42Spec extends SparkTestBase {
        "consumed partition filter still pushes") {
     val dir = freshDir("graft_agg_push")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p")
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p")
     register()
     GraftScanObservable.lastAggPushed = None
     val df = spark.sql(
@@ -71,7 +66,7 @@ class Wave42Spec extends SparkTestBase {
     import spark.implicits._
     val dir = freshDir("graft_agg_safe")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(100), "k", "p",
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(100), "k", "p",
                          statsKeys = Seq("k"))
     // CoW-delete the global max (k=100) and the global min (k=1):
     // the carried zone-map bounds still say [1,100] (prune-safe
@@ -109,7 +104,7 @@ class Wave42Spec extends SparkTestBase {
        "with a consumed partition IN filter") {
     val dir = freshDir("graft_agg_grp")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(400), "k", "p")
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p")
     register()
     GraftScanObservable.lastAggPushed = None
     val rows = spark.sql(
@@ -145,7 +140,7 @@ class Wave42Spec extends SparkTestBase {
        "on the graft side, and the joined content is exact") {
     val dir = freshDir("graft_stats_bc")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(200), "k", "p")
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p")
     register()
     // the analyzed relation consults the scan's estimateStatistics
     // (DataSourceV2RelationBase.computeStats builds an unpushed scan):
@@ -182,7 +177,7 @@ class Wave42Spec extends SparkTestBase {
     import spark.implicits._
     val dir = freshDir("graft_agg_evo")
     val tbl = new java.io.File(dir).getName
-    MergeOps.mergeUpsert(spark, dir, corpus(8), "k", "p")            // v1
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(8), "k", "p")            // v1
     MergeOps.mergeUpsert(spark, dir,
       Seq((20L, 1.0, "0", 500L), (21L, 1.0, "1", 300L))
         .toDF("k", "v", "p", "w"), "k", "p")                         // v2

@@ -11,11 +11,6 @@ import graft.ops.MergeOps
   * partition) remains the graceful fallback. */
 class Wave43Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   private def seed(dir: String, n: Int, files: Int): Unit = {
     import spark.implicits._
     val df = (1 to n).map(i =>

@@ -14,7 +14,7 @@ class Wave45Spec extends SparkTestBase {
 
   // ONE catalog root for the whole spec (Spark caches the catalog
   // instance at first use — per-test roots would silently cross-talk),
-  // distinct table names per test: the GraftSqlQueries discipline.
+  // distinct table names per test: the SqlQueries discipline.
   private val rootDir =
     new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath
 

@@ -14,11 +14,6 @@ import graft.ops.MergeOps
   * anything not extractable leaves the probe exactly as before. */
 class Wave56Spec extends SparkTestBase {
 
-  private def freshDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(name).toFile
-    d.delete(); d.getAbsolutePath
-  }
-
   /** Sum of task input records across every job `body` runs. */
   private def recordsRead(body: => Unit): Long = {
     val acc = new java.util.concurrent.atomic.AtomicLong(0L)
