@@ -491,7 +491,7 @@ object Versioned {
     * partition granularity): each line maps a partition dir name to a
     * tombstone-key parquet dir (under `dvdata/`) that must be
     * ANTI-JOINED out of that partition's rows on read (format:
-    * [[dvLineFields]]). A MOR delete publishes only this sidecar plus
+    * [[MorRef]]). A MOR delete publishes only this sidecar plus
     * one small tombstone dir — the manifest and data dirs carry
     * verbatim, so delete cost is ∝ deleted keys, never partition bytes.
     * Unlike stats, DV refs are CORRECTNESS state: every publisher that
@@ -502,7 +502,7 @@ object Versioned {
     * ([[graft.ops.MergeOps.mergeUpdateMor]]): each line names a dir of
     * FULL replacement row images (under `uvdata/`, partitioned by the
     * table's partCol) that SUBSTITUTE for the base rows with the same
-    * key on read (format: [[uvLineFields]]) — applied BEFORE the DV
+    * key on read (format: [[MorRef]]) — applied BEFORE the DV
     * anti-join (an update of a live key precedes any later tombstone of
     * it; a tombstoned key is not live, so no image is ever written for
     * one). Multiple generations on one partition stack: the image from
@@ -529,6 +529,10 @@ object Versioned {
     * and a branch fork copy the source version's lines whole
     * ([[copyPartitionSidecars]]). */
   private[graft] val PartitionKeyed = Seq(Stats, Dv, Uv)
+
+  /** The merge-on-read kinds ([[MorRef]]); each stages its row dirs under
+    * `<kind>data/`. */
+  private[graft] val MorKinds = Seq(Dv, Uv)
 
   /** CUMULATIVE kinds: the newest committed sidecar at or below `v`
     * is in force at `v` ([[newestSidecar]]), so writers that do not
@@ -878,105 +882,106 @@ object Versioned {
   private[graft] def statsLinePart(line: String): String =
     line.takeWhile(_ != '\t')
 
-  /** Parse one DV sidecar line: `partition-dir-name \t dvdata-relpath
-    * [\t file1,file2,…] [\t file1:p1.p2,file2:p7,…]`. The OPTIONAL
-    * third field (round 14) is the FILE SCOPE — the leaf names of the
-    * data files within that partition's dir that contained at least
-    * one tombstoned key when the delete ran (data dirs are immutable,
-    * so the set stays valid for as long as the ref itself carries; any
-    * restaging write drops the line). Scoped refs let the read side
-    * anti-join ONLY those files and stream every other file of the
-    * partition verbatim — Delta/Iceberg's per-file deletion-vector
-    * granularity. The OPTIONAL fourth field (round 15) is the ROW
-    * POSITION map — for each scoped file whose doomed-row count fit
-    * the writer's cap, the exact `_metadata.row_index` positions of
-    * the tombstoned rows, recorded when the delete ran (files are
-    * immutable, so positions stay valid like the names do): the read
-    * side then applies a codegen'd positional FILTER to those files
-    * instead of the key anti-join — no join, no shuffle, no tombstone
-    * read — Delta's deletion-vector end state. Files in scope but not
-    * in the map (over-cap, or written by a round-14 writer) keep the
-    * per-file anti-join; a 2-field line means "unknown — anti-join the
-    * whole partition". Every tier is the same content, cheaper. */
-  private[graft] def dvLineFields(line: String)
-      : (String, String, Option[Set[String]], Map[String, Seq[Long]]) = {
-    val fs = line.split('\t')
-    val scope =
-      if (fs.length >= 3 && fs(2).nonEmpty) Some(fs(2).split(',').toSet)
-      else None
-    val pos =
-      if (fs.length >= 4 && fs(3).nonEmpty) parsePosField(fs(3), scope)
-      else Map.empty[String, Seq[Long]]
-    (fs(0), fs(1), scope, pos)
+  /** One merge-on-read ref: one `dv` or `uv` sidecar line. Format:
+    * `partition-dir-name \t dvdata-relpath [\t scope [\t positions]]`
+    * for dv and `partition-dir-name \t uvdata-relpath \t keyCol
+    * [\t scope [\t positions]]` for uv. The optional SCOPE (round 14)
+    * names the data files of the holder entry's dir that held a
+    * tombstoned or imaged key when the write ran (data dirs are
+    * immutable, so the set stays valid for as long as the ref carries;
+    * any restaging write drops the line): the read side anti-joins only
+    * those files and streams every other file verbatim — Delta/
+    * Iceberg's per-file deletion-vector granularity. The optional
+    * POSITIONS (round 15) map each scoped file whose shadowed-row count
+    * fit the writer's cap to the exact `_metadata.row_index` values of
+    * those rows: the read side filters them out positionally — no join,
+    * no shuffle, no key read. Files in scope but not in the map keep the
+    * per-file anti-join; a line without a scope means "unknown —
+    * anti-join the whole partition". Every tier is the same content,
+    * cheaper. */
+  final case class MorRef(part: String, rel: String, keyCol: Option[String],
+                          scope: Option[Set[String]],
+                          pos: Map[String, Seq[Long]]) {
+    /** The ref's dir identity — what change detection and vacuum
+      * compare; scopes and positions never enter it. */
+    def id: (String, Option[String]) = (rel, keyCol)
+
+    /** This ref with bare (pre-round-16) scope and position names
+      * qualified by its holder entry's relpath: a line keyed to an entry
+      * names files within that entry's own dir, so the qualified form is
+      * exact. Qualification is what lets entries merge into one read
+      * group without ambiguity — one staged write names every
+      * partition's file with the SAME leaf (`part-00000-<job-uuid>`). */
+    def qualified(entryRel: String): MorRef = {
+      def q(n: String) = if (n.contains('/')) n else s"$entryRel/$n"
+      copy(scope = scope.map(_.map(q)),
+           pos = pos.map { case (f, ps) => q(f) -> ps })
+    }
   }
 
-  /** Parse one UV sidecar line: `partition-dir-name \t uvdata-relpath
-    * \t keyCol [\t file1,file2,…]`. The OPTIONAL fourth field (round
-    * 14) is the FILE SCOPE, the exact analogue of [[dvLineFields]]'
-    * third: the base data files that held an imaged key when the
-    * update ran — the read side anti-joins only those files' rows
-    * before unioning the images in, and every other file streams
-    * verbatim. A 3-field line means "unknown — anti-join the whole
-    * partition". */
-  private[graft] def uvLineFields(line: String)
-      : (String, String, String, Option[Set[String]],
-         Map[String, Seq[Long]]) = {
+  /** Parse one `kind` ([[Dv]] or [[Uv]]) sidecar line (see [[MorRef]]). */
+  private[graft] def morRef(kind: String, line: String): MorRef = {
     val fs = line.split('\t')
+    val keyCol = if (kind == Uv) Some(fs(2)) else None
+    val at = 2 + keyCol.size
     val scope =
-      if (fs.length >= 4 && fs(3).nonEmpty) Some(fs(3).split(',').toSet)
+      if (fs.length > at && fs(at).nonEmpty) Some(fs(at).split(',').toSet)
       else None
-    // OPTIONAL fifth field (round 15, the dv analogue): per-file row
-    // positions of the imaged base rows — the substitution anti-join
-    // becomes a positional filter for mapped files
     val pos =
-      if (fs.length >= 5 && fs(4).nonEmpty) parsePosField(fs(4), scope)
+      if (fs.length > at + 1 && fs(at + 1).nonEmpty)
+        parsePosField(fs(at + 1), scope)
       else Map.empty[String, Seq[Long]]
-    (fs(0), fs(1), fs(2), scope, pos)
+    MorRef(fs(0), fs(1), keyCol, scope, pos)
   }
 
-  /** Committed UV refs of version `v`: partition dir name →
-    * ((uvdata relpath, keyCol)) list, highest-version dirs last (file
-    * scopes stripped — the dir identity is the change-detection and
-    * vacuum surface). Empty for tables with no MOR updates — the fast
-    * path. */
-  def readUvRefs(s: SparkSession, dir: String,
-                 v: Long): Map[String, Seq[(String, String)]] =
-    sidecarLines(s, dir, v, Uv).map(uvLineFields)
-      .groupBy(_._1)
-      .map { case (p, rs) => p -> rs.map(r => (r._2, r._3)).sortBy(_._1) }
+  /** Format one `kind` sidecar line: `files` are the holder's scoped
+    * files with their positions (empty positions: scope tier only); no
+    * files writes the unscoped line. The one writer of both formats. */
+  private[graft] def morLine(kind: String, part: String, rel: String,
+                             keyCol: Option[String],
+                             files: Seq[(String, Seq[Long])]): String = {
+    require(keyCol.isDefined == (kind == Uv),
+      s"a $kind line carries a key column exactly when it is a uv line")
+    val posed = files.filter(_._2.nonEmpty)
+    val scoped =
+      if (files.isEmpty) Nil
+      else files.map(_._1).mkString(",") +: (
+        if (posed.isEmpty) Nil
+        else Seq(posed.map { case (f, ps) => s"$f:${encodePositions(ps)}" }
+          .mkString(",")))
+    (Seq(part, rel) ++ keyCol ++ scoped).mkString("\t")
+  }
 
-  /** [[readUvRefs]] WITH each ref's optional file scope and row
-    * positions (see [[uvLineFields]]) — the read-path surface. */
-  def readUvRefsScoped(s: SparkSession, dir: String, v: Long)
-      : Map[String, Seq[(String, String, Option[Set[String]],
-                         Map[String, Seq[Long]])]] =
-    sidecarLines(s, dir, v, Uv).map(uvLineFields)
-      .groupBy(_._1)
-      .map { case (p, rs) =>
-        p -> rs.map(r => (r._2, r._3, r._4, r._5)).sortBy(_._1)
-      }
+  /** Committed `kind` refs of version `v`: partition dir name → its
+    * refs, sorted by relpath (higher-version dirs last). Empty for a
+    * table with no such MOR writes — the fast path. */
+  def morRefs(s: SparkSession, dir: String, v: Long,
+              kind: String): Map[String, Seq[MorRef]] =
+    sidecarLines(s, dir, v, kind).map(morRef(kind, _))
+      .groupBy(_.part).map { case (p, rs) => p -> rs.sortBy(_.rel) }
 
-  /** Committed DV refs of version `v`: partition dir name → tombstone
-    * dirs to anti-join out (file scopes stripped — the dir identity is
-    * the change-detection and vacuum surface). Empty map for tables
-    * with no MOR deletes — the fast path every non-DV read takes. */
-  def readDvRefs(s: SparkSession, dir: String,
-                 v: Long): Map[String, Seq[String]] =
-    sidecarLines(s, dir, v, Dv).map(dvLineFields)
-      .groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2).sorted }
-
-  /** [[readDvRefs]] WITH each ref's optional file scope and row
-    * positions (see [[dvLineFields]]) — the read-path surface:
-    * [[readEntriesLive]] anti-joins only a scoped ref's named files,
-    * and position-mapped files take a positional filter instead. */
-  def readDvRefsScoped(s: SparkSession, dir: String, v: Long)
-      : Map[String, Seq[(String, Option[Set[String]],
-                         Map[String, Seq[Long]])]] =
-    sidecarLines(s, dir, v, Dv).map(dvLineFields)
-      .groupBy(_._1)
-      .map { case (p, rs) =>
-        p -> rs.map(r => (r._2, r._3, r._4)).sortBy(_._1)
-      }
+  /** THE changed-partition rule, `from` → `to`: both manifests (`from`
+    * None = nothing, the bootstrap) and the partitions whose manifest
+    * entry or dv/uv ref identities differ. Same staged dir + same ref
+    * dirs ⇒ the partition's LIVE content is identical, so a diff, a
+    * branch publish or a feed price reads only the rest. */
+  def changedParts(s: SparkSession, dir: String, from: Option[Long],
+                   to: Long)
+      : (Seq[(String, String)], Seq[(String, String)], Set[String]) = {
+    val fromMan = from.fold(Seq.empty[(String, String)])(manifest(s, dir, _))
+    val toMan = manifest(s, dir, to)
+    def ids(v: Option[Long], kind: String) = v.fold(
+      Map.empty[String, Seq[(String, Option[String])]])(w =>
+      morRefs(s, dir, w, kind).map { case (n, rs) => n -> rs.map(_.id) })
+    val refIds = MorKinds.map(k => (ids(from, k), ids(Some(to), k)))
+    val fm = fromMan.toMap
+    val tm = toMan.toMap
+    val changed = (fm.keySet ++ tm.keySet).filter { n =>
+      fm.get(n) != tm.get(n) ||
+        refIds.exists { case (f, t) => f.get(n) != t.get(n) }
+    }
+    (fromMan, toMan, changed)
+  }
 
   /** The cumulative APPLIED-ID ledger as of version `v` — the newest
     * committed `ledger/` sidecar at or below `v` ([[newestSidecar]]),
@@ -1294,14 +1299,15 @@ object Versioned {
     readEntriesLive(s, dir, v, kept, partCol)
   }
 
-  /** [[readEntries]] with version `v`'s deletion vectors APPLIED — the
-    * read every consumer of committed state must use on a table that may
-    * carry MOR deletes (readCurrent/readVersion route through here, as
-    * do the restage readers in [[graft.ops.MergeOps]]). Entries are
-    * grouped by their DV-ref set: a no-ref group reads exactly as
-    * [[readEntries]] (tables with no DV sidecar pay one metadata probe
-    * and nothing else), a ref-bearing group anti-joins the union of its
-    * tombstone dirs on the tombstone key column. Applying a ref only to
+  /** [[readEntries]] with version `v`'s merge-on-read refs APPLIED
+    * ([[MorRef]]: update images substituted, then deletion vectors) —
+    * the read every consumer of committed state must use on a table
+    * that may carry MOR writes (readCurrent/readVersion route through
+    * here, as do the restage readers in [[graft.ops.MergeOps]]). Entries
+    * are grouped by their ref dirs: tables with no dv or uv sidecar pay
+    * two metadata probes and read exactly as [[readEntries]]; a
+    * ref-bearing group shadows the union of its refs' keys on the key
+    * column, per file where scopes allow. Applying a ref only to
     * the partitions that carry it is what keeps re-inserts correct: a
     * restage drops its partition's lines, so a key later upserted back
     * is never shadowed by a stale tombstone. Under the store's stable
@@ -1317,29 +1323,14 @@ object Versioned {
     // BRANCHES, whose metadata tree lives under the table root while the
     // staged data (and tombstone dirs) stay in the root's own data dirs
     val dd = dataDir.getOrElse(dir)
-    val refs = readDvRefsScoped(s, dir, v)
-    val uvRefs = readUvRefsScoped(s, dir, v)
-    if (refs.isEmpty && uvRefs.isEmpty)
+    val dvRefs = morRefs(s, dir, v, Dv)
+    val uvRefs = morRefs(s, dir, v, Uv)
+    if (dvRefs.isEmpty && uvRefs.isEmpty)
       return readEntries(s, dd, entries, partCol)
-    // Qualify bare (pre-round-16) scope/position names by their HOLDER
-    // entry's relpath: a line keyed to entry n names files within n's
-    // own dir, so the qualified form is exact. Qualification is what
-    // lets entries MERGE into one group below without ambiguity — one
-    // staged write names every partition's file with the SAME leaf
-    // (`part-00000-<job-uuid>`), so bare leaf names collide across the
-    // partition dirs of a group ROUTINELY, not rarely.
-    def qualName(rel: String, n: String): String =
-      if (n.contains('/')) n else s"$rel/$n"
-    def dvRefsOf(e: (String, String)) =
-      refs.getOrElse(e._1, Nil).map { case (rel, scope, pos) =>
-        (rel, scope.map(_.map(n => qualName(e._2, n))),
-         pos.map { case (f, ps) => qualName(e._2, f) -> ps })
-      }
-    def uvRefsOf(e: (String, String)) =
-      uvRefs.getOrElse(e._1, Nil).map { case (rel, kc, scope, pos) =>
-        (rel, kc, scope.map(_.map(n => qualName(e._2, n))),
-         pos.map { case (f, ps) => qualName(e._2, f) -> ps })
-      }
+    // names qualified by the HOLDER entry (MorRef.qualified): entries
+    // then merge into one group below without ambiguity
+    def refsOf(refs: Map[String, Seq[MorRef]], e: (String, String)) =
+      refs.getOrElse(e._1, Nil).map(_.qualified(e._2))
     // Group by REF-DIR IDENTITY (tombstone/image dirs + uv key), never
     // by scope/position content: one MOR delete writes a line naming
     // the SAME tombstone dir on every touched partition, and grouping
@@ -1350,39 +1341,27 @@ object Versioned {
     // mechanism. Entries sharing the same ref dirs process as ONE
     // union read with per-file splits inside it.
     entries.groupBy(e =>
-        (dvRefsOf(e).map(_._1), uvRefsOf(e).map(r => (r._1, r._2))))
+        (refsOf(dvRefs, e).map(_.id), refsOf(uvRefs, e).map(_.id)))
       .toSeq.sortBy(_._2.head._1)
       .map { case (_, es) =>
-        val rs = es.flatMap(dvRefsOf).distinct
-        val us = es.flatMap(uvRefsOf).distinct
-        var base = readEntries(s, dd, es, partCol)
-        // FILE-SCOPED MOR shared kernel (round 14): list the group's
-        // data files once and read a keep-subset at the right basePath
-        // — both sidecar kinds use it to anti-join ONLY the files their
-        // scopes name while every other file streams verbatim.
-        val fsys = fsOf(s, dd)
-        lazy val byVer = es.groupBy(_._2.split("/").take(2).mkString("/"))
-          .toSeq.sortBy(_._1)
-        // `keep` sees the entry-QUALIFIED relative name (the scope/pos
-        // vocabulary after qualName). `xform` applies PER-SCAN, before
-        // any union: metadata columns (`_metadata.file_path` /
-        // `row_index` — the positional-filter inputs) resolve only
-        // against a file-source scan, never a union's output
+        val rs = es.flatMap(refsOf(dvRefs, _)).distinct
+        val us = es.flatMap(refsOf(uvRefs, _)).distinct
+        val base = readEntries(s, dd, es, partCol)
+        lazy val byVer = es.groupBy(e => verDirOf(e._2)).toSeq.sortBy(_._1)
+        // Read the group's data files that `keep` admits (it sees the
+        // entry-QUALIFIED relative name, the scope/pos vocabulary) at
+        // the right basePath. `xform` applies PER-SCAN, before any
+        // union: metadata columns (`_metadata.file_path` / `row_index` —
+        // the positional-filter inputs) resolve only against a
+        // file-source scan, never a union's output.
         def readSplit(keep: String => Boolean,
                       xform: DataFrame => DataFrame = identity)
             : Option[DataFrame] =
           byVer.flatMap { case (verDir, ves) =>
             val paths =
-              try ves.flatMap(e =>
-                    fsys.listStatus(new Path(dd, e._2)).toSeq
-                      .map(st => (e._2, st)))
-                  .filter(_._2.isFile)
-                  .map { case (rel, st) => (rel, st.getPath) }
-                  .filter { case (rel, p) =>
-                    !p.getName.startsWith("_") &&
-                      !p.getName.startsWith(".") &&
-                      keep(s"$rel/${p.getName}") }
-                  .map(_._2)
+              try ves.flatMap(e => dataFiles(s, dd, e._2)
+                    .filter(st => keep(s"${e._2}/${st.getPath.getName}"))
+                    .map(_.getPath.toString))
               catch {
                 case e: java.io.FileNotFoundException =>
                   throw new ConcurrentCommitException(
@@ -1392,96 +1371,88 @@ object Versioned {
                       "re-derive from the current commit log", e)
               }
             if (paths.isEmpty) None
-            else Some(xform(partCol match {
-              case Some(_) =>
-                readParquetCached(s, Some(s"$dd/$verDir"),
-                  paths.map(_.toString))
-              case None =>
-                readParquetCached(s, None, paths.map(_.toString))
-            }))
+            else Some(xform(readParquetCached(s,
+              partCol.map(_ => s"$dd/$verDir"), paths)))
           }.reduceOption(_.unionByName(_, allowMissingColumns = true))
-        // UPDATE substitution first (see [[Uv]] for why that
-        // order is always right): latest image per key across the
-        // group's uv generations replaces the base row wholesale.
-        if (us.nonEmpty) {
-          val kcs = us.map(_._2).distinct
-          require(kcs.length == 1,
-            s"update-vector dirs ${us.map(_._1).mkString(", ")} disagree " +
-              s"on the key column (${kcs.mkString(", ")}) — one table " +
-              "has one key")
-          val kc = kcs.head
-          // read ONLY this group's partition subdirs of each image dir:
-          // an image dir spans every partition its update touched, and a
-          // whole-dir read would leak other partitions' images into this
-          // group (the refs are per-partition lines for exactly this
-          // reason). Unpartitioned tables read the dir whole. Distinct
-          // rels: the merged group carries one line per (entry,
-          // generation) — the same image dir must be read once.
-          val imgs = us.map(_._1).distinct.map { rel =>
-            val ver = stageDirVersion(rel.split("/")(1)).getOrElse(0L)
-            val df = partCol match {
-              case Some(_) =>
-                readParquetCached(s, Some(s"$dd/$rel"),
-                  es.map(e => s"$dd/$rel/${e._1}"))
-              case None => readParquetCached(s, None, Seq(s"$dd/$rel"))
-            }
-            df.withColumn("__uv_v", lit(ver))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-          import org.apache.spark.sql.expressions.Window
-          val latest = imgs
-            .withColumn("__uv_rn", row_number().over(
-              Window.partitionBy(col(kc)).orderBy(col("__uv_v").desc)))
-            .where(col("__uv_rn") === 1)
-            .drop("__uv_v", "__uv_rn")
-          val latestKeys = latest.select(kc).distinct()
-          // FILE-SCOPED image refs (round 14, see [[uvLineFields]]):
-          // every imaged key's base row lives in some scope-named file
-          // (scopes are computed from the base files at write time and
-          // carry for the ref's life), so when EVERY generation carries
-          // a scope the substitution anti-join runs over only those
-          // files' rows and the rest of the partition streams verbatim.
-          // Any unscoped (legacy) line falls back to the whole-group
-          // anti-join.
-          base =
-            if (!us.forall(_._3.isDefined))
-              base.join(latestKeys, Seq(kc), "left_anti")
-                .unionByName(latest, allowMissingColumns = true)
-            else {
-              // all names are entry-qualified (qualName above), so set
-              // membership and the endsWith predicates agree exactly
-              val uvTainted = us.flatMap(_._3.get).toSet
-              // POSITIONAL tier (round 15, the dv analogue): a tainted
-              // file every scoping generation position-mapped drops
-              // its imaged base rows through a codegen'd filter — the
-              // substitution costs no join for that file; any
-              // scope-only mention demotes it to the anti-join
-              val uvScopeOnly = us.flatMap(u =>
-                u._3.get.filterNot(u._4.contains)).toSet
-              val uvPosByName: Map[String, Seq[Long]] =
-                us.flatMap(_._4.toSeq)
-                  .groupBy(_._1)
-                  .map { case (f, ps) =>
-                    f -> ps.flatMap(_._2).distinct.sorted }
-                  .filterNot { case (f, _) => uvScopeOnly(f) }
-              val joinTainted = uvTainted -- uvPosByName.keySet
-              val clean = readSplit(n => !uvTainted(n))
-              val shadowJoin = readSplit(joinTainted)
-                .map(_.join(latestKeys, Seq(kc), "left_anti"))
-              val shadowPos = readSplit(uvPosByName.keySet, df => {
-                val hit = uvPosByName.map { case (f, ps) =>
+        // THE SHADOW KERNEL, shared by both kinds: the rows of the
+        // group that `refs` do not shadow, as union parts. Unscoped (any ref
+        // without a scope): one whole-group anti-join on the key.
+        // Scoped: the files no scope names stream verbatim; a tainted
+        // file every scoping ref also position-maps drops its shadowed
+        // rows through a codegen'd positional FILTER (positions union
+        // across stacked generations) — no join, no shuffle, no key
+        // read; any scope-only mention (dense/over-cap, or a round-14
+        // writer) demotes the file to the per-file anti-join, which is
+        // always correct. All names are entry-qualified, so set
+        // membership and the endsWith predicates agree exactly.
+        def shadow(rows: DataFrame, refs: Seq[MorRef], kc: String,
+                   keys: DataFrame, scoped: Boolean): Seq[DataFrame] =
+          if (!scoped) Seq(rows.join(keys, Seq(kc), "left_anti"))
+          else {
+            val tainted = refs.flatMap(_.scope.get).toSet
+            val scopeOnly = refs.flatMap(r =>
+              r.scope.get.filterNot(r.pos.contains)).toSet
+            val posByName: Map[String, Seq[Long]] = refs.flatMap(_.pos.toSeq)
+              .groupBy(_._1)
+              .map { case (f, ps) => f -> ps.flatMap(_._2).distinct.sorted }
+              .filterNot { case (f, _) => scopeOnly(f) }
+            val joinTainted = tainted -- posByName.keySet
+            readSplit(n => !tainted(n)).toSeq ++
+              readSplit(joinTainted)
+                .map(_.join(keys, Seq(kc), "left_anti")).toSeq ++
+              readSplit(posByName.keySet, df => {
+                val hit = posByName.map { case (f, ps) =>
                   col("_metadata.file_path").endsWith("/" + f) &&
                     col("_metadata.row_index").isInCollection(ps)
                 }.reduce(_ || _)
                 df.where(!hit)
-              })
-              (clean.toSeq ++ shadowJoin.toSeq ++ shadowPos.toSeq
-                :+ latest)
-                .reduce(_.unionByName(_, allowMissingColumns = true))
-            }
-        }
-        if (rs.isEmpty) base
+              }).toSeq
+          }
+        // UPDATE substitution first (see [[Uv]] for why that order is
+        // always right): the latest image per key across the group's uv
+        // generations replaces the base row wholesale. Every imaged
+        // key's base row lives in some scope-named file (scopes are
+        // computed from the base files at write time), so when EVERY
+        // generation carries a scope only those files are shadowed.
+        val substituted =
+          if (us.isEmpty) base
+          else {
+            val kcs = us.flatMap(_.keyCol).distinct
+            require(kcs.length == 1,
+              s"update-vector dirs ${us.map(_.rel).mkString(", ")} " +
+                s"disagree on the key column (${kcs.mkString(", ")}) — " +
+                "one table has one key")
+            val kc = kcs.head
+            // read ONLY this group's partition subdirs of each image dir:
+            // an image dir spans every partition its update touched, and
+            // a whole-dir read would leak other partitions' images into
+            // this group (the refs are per-partition lines for exactly
+            // this reason). Unpartitioned tables read the dir whole.
+            // Distinct rels: the merged group carries one line per
+            // (entry, generation) — the same image dir must be read once.
+            val imgs = us.map(_.rel).distinct.map { rel =>
+              val ver = stageDirVersion(rel.split("/")(1)).getOrElse(0L)
+              val df = partCol match {
+                case Some(_) =>
+                  readParquetCached(s, Some(s"$dd/$rel"),
+                    es.map(e => s"$dd/$rel/${e._1}"))
+                case None => readParquetCached(s, None, Seq(s"$dd/$rel"))
+              }
+              df.withColumn("__uv_v", lit(ver))
+            }.reduce(_.unionByName(_, allowMissingColumns = true))
+            import org.apache.spark.sql.expressions.Window
+            val latest = imgs
+              .withColumn("__uv_rn", row_number().over(
+                Window.partitionBy(col(kc)).orderBy(col("__uv_v").desc)))
+              .where(col("__uv_rn") === 1)
+              .drop("__uv_v", "__uv_rn")
+            (shadow(base, us, kc, latest.select(kc).distinct(),
+                us.forall(_.scope.isDefined)) :+ latest)
+              .reduce(_.unionByName(_, allowMissingColumns = true))
+          }
+        if (rs.isEmpty) substituted
         else {
-          val rdirs = rs.map(_._1).distinct
+          val rdirs = rs.map(_.rel).distinct
           val dv = rdirs.map(r => readParquetCached(s, None, Seq(s"$dd/$r")))
             .reduce(_.unionByName(_))
           // tombstone dirs are partitioned by the partition column of
@@ -1516,53 +1487,16 @@ object Versioned {
                   s"[${dv.columns.mkString(", ")}]")
               dv.columns.head
           }
-          val dvKeys = dv.select(kc).distinct()
-          // FILE-SCOPED refs (round 14, see [[dvLineFields]]): when no
-          // uv substitution ran (substituted rows have no base-file
-          // identity) and EVERY ref carries a scope, split each
-          // partition dir's files into tainted (named by some scope —
-          // they held a doomed key when their delete ran) and clean,
-          // anti-join only the tainted files' rows, and stream the
-          // clean files verbatim: one deleted key taxes one file's
-          // rows, not the partition. Any unscoped (legacy) ref
-          // disables the split for its group — always-correct
-          // whole-partition fallback.
-          val canScope = us.isEmpty && rs.forall(_._2.isDefined)
-          if (!canScope) base.join(dvKeys, Seq(kc), "left_anti")
-          else {
-            // all names entry-qualified (qualName) — see the uv block
-            val tainted = rs.flatMap(_._2.get).toSet
-            // POSITIONAL tier (round 15): a tainted file whose every
-            // scoping ref also carries its row positions takes a
-            // codegen'd positional FILTER — no join, no shuffle, no
-            // tombstone read. Positions union across stacked delete
-            // generations; one scope-only mention (dense/over-cap, or
-            // a round-14 writer) demotes the file to the per-file
-            // anti-join, which is always correct.
-            val scopeOnly = rs.flatMap(r =>
-              r._2.get.filterNot(r._3.contains)).toSet
-            val posByName: Map[String, Seq[Long]] = rs.flatMap(_._3.toSeq)
-              .groupBy(_._1)
-              .map { case (f, ps) =>
-                f -> ps.flatMap(_._2).distinct.sorted }
-              .filterNot { case (f, _) => scopeOnly(f) }
-            val joinTainted = tainted -- posByName.keySet
-            val clean = readSplit(n => !tainted(n))
-            val doomedJoin = readSplit(joinTainted)
-              .map(_.join(dvKeys, Seq(kc), "left_anti"))
-            val doomedPos = readSplit(posByName.keySet, df => {
-              val hit = posByName.map { case (f, ps) =>
-                col("_metadata.file_path").endsWith("/" + f) &&
-                  col("_metadata.row_index").isInCollection(ps)
-              }.reduce(_ || _)
-              df.where(!hit)
-            })
-            (clean.toSeq ++ doomedJoin.toSeq ++ doomedPos.toSeq)
-              .reduceOption(_.unionByName(_, allowMissingColumns = true))
-              // every file scoped out of existence (a restage raced
-              // the listing) — an empty frame at the group's schema
-              .getOrElse(base.limit(0))
-          }
+          // file scoping only when no uv substitution ran (substituted
+          // rows have no base-file identity) and EVERY ref carries a
+          // scope: one deleted key taxes one file's rows, not the
+          // partition; any unscoped (legacy) ref disables the split
+          shadow(substituted, rs, kc, dv.select(kc).distinct(),
+              us.isEmpty && rs.forall(_.scope.isDefined))
+            .reduceOption(_.unionByName(_, allowMissingColumns = true))
+            // every file scoped out of existence (a restage raced the
+            // listing) — an empty frame at the group's schema
+            .getOrElse(substituted.limit(0))
         }
       }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -1603,14 +1537,17 @@ object Versioned {
         // after a schema-evolving merge (a later version's partitions
         // carry columns older ones predate) — missing columns null-fill,
         // the same union semantics scan_evolved pins for file sources.
-        entries.groupBy(_._2.split("/").take(2).mkString("/"))
-          .toSeq.sortBy(_._1)
+        entries.groupBy(e => verDirOf(e._2)).toSeq.sortBy(_._1)
           .map { case (verDir, es) =>
             translate(readParquetCached(s, Some(s"$dir/$verDir"),
               es.map(e => s"$dir/${e._2}")))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
   }
+
+  /** The version dir (`data/<v>_<token>`) a manifest relpath lives in —
+    * the `basePath` of a partitioned read and vacuum's keep key. */
+  def verDirOf(rel: String): String = rel.split("/").take(2).mkString("/")
 
   /** Manifest entry for an unpartitioned table staged at `stageRel`. */
   def wholeTableEntryAt(stageRel: String): Seq[(String, String)] =
@@ -1780,12 +1717,9 @@ object Versioned {
       throw new IllegalStateException(s"no committed version under $dir"))
     val man = manifest(s, dir, v)
     val fs = fsOf(s, dir)
-    val files = man.map { case (_, rel) =>
-      val st = fs.listStatus(new Path(dir, rel))
-      st.count(f => f.getPath.getName.endsWith(".parquet"))
-    }.sum
-    val dvRefs = readDvRefs(s, dir, v)
-    val uvRefs = readUvRefs(s, dir, v)
+    val files = man.map { case (_, rel) => dataFiles(s, dir, rel).size }.sum
+    val dvRefs = morRefs(s, dir, v, Dv)
+    val uvRefs = morRefs(s, dir, v, Uv)
     val committed = committedVersions(s, dir)
     val branchCount = {
       val root = new Path(dir, "branches")
@@ -1984,7 +1918,7 @@ object Versioned {
     val retained = (kept ++ tagged).distinct.sorted
     val floor = math.max(kept.min, retentionFloor(s, dir).getOrElse(1L))
     val referenced = retained.flatMap(rv => manifest(s, dir, rv))
-      .map(_._2.split("/").take(2).mkString("/")).toSet
+      .map(e => verDirOf(e._2)).toSet
     // Record the floor BEFORE anything is deleted: a crash mid-sweep
     // then leaves a floor that is merely conservative (reads fail fast
     // on versions whose data still exists), never the reverse — the
@@ -2049,7 +1983,7 @@ object Versioned {
     }
     val branchReferenced = branchHeads.flatMap { case (bd, bv) =>
       scala.util.Try(manifest(s, bd, bv)).toOption.getOrElse(Nil)
-        .map(_._2.split("/").take(2).mkString("/"))
+        .map(e => verDirOf(e._2))
     }.toSet
     val liveBranchNames = liveBranches.toSet
     def branchOwner(name: String): Option[String] =
@@ -2063,10 +1997,11 @@ object Versioned {
     val dataRoot = new Path(dir, "data")
     val dataList =
       if (fs.exists(dataRoot)) fs.listStatus(dataRoot).toSeq else Nil
-    val dvRoot = new Path(dir, "dvdata")
-    val dvList = if (fs.exists(dvRoot)) fs.listStatus(dvRoot).toSeq else Nil
-    val uvRoot = new Path(dir, "uvdata")
-    val uvList = if (fs.exists(uvRoot)) fs.listStatus(uvRoot).toSeq else Nil
+    // the MOR data roots: `dvdata/` (tombstones), `uvdata/` (images)
+    val morLists = MorKinds.map { kind =>
+      val root = new Path(dir, s"${kind}data")
+      kind -> (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+    }
     VacuumHooks.afterDataListing()
     // Live writers' pinned rel dirs (stage→publish→rebase windows).
     // Pins older than `pinGraceMs` are crash leaks: their writer is
@@ -2116,39 +2051,24 @@ object Versioned {
       }
       if (!keep) { fs.delete(st.getPath, true); dataDeleted += 1 }
     }
-    // Tombstone-dir sweep, same keep rule keyed on the RETAINED versions'
-    // DV sidecars: a dvdata dir some retained version still anti-joins by
-    // must survive; one a compaction materialized away (no retained ref)
-    // is reclaimable storage like any unreferenced stage dir. Live
-    // branch heads' carried refs pin theirs too.
-    val referencedDv = retained
-      .flatMap(rv => sidecarLines(s, dir, rv, Dv))
-      .map(l => dvLineFields(l)._2).toSet ++
-      branchHeads.flatMap { case (bd, bv) =>
-        scala.util.Try(sidecarLines(s, bd, bv, Dv)).toOption.getOrElse(Nil)
-          .map(l => dvLineFields(l)._2)
+    // MOR-dir sweep (tombstone and image dirs), same keep rule keyed on
+    // the RETAINED versions' dv/uv sidecars: a dir some retained version
+    // still reads must survive; one a compaction materialized away (no
+    // retained ref) is reclaimable storage like any unreferenced stage
+    // dir. Live branch heads' carried refs pin theirs too.
+    morLists.foreach { case (kind, list) =>
+      def rels(d: String, w: Long) = morRefs(s, d, w, kind).values.flatten
+        .map(_.rel)
+      val referencedMor = retained.flatMap(rels(dir, _)).toSet ++
+        branchHeads.flatMap { case (bd, bv) =>
+          scala.util.Try(rels(bd, bv)).toOption.getOrElse(Nil)
+        }
+      list.foreach { st =>
+        val rel = s"${kind}data/${st.getPath.getName}"
+        val keep = stageDirVersion(st.getPath.getName).forall(n =>
+          n > cur || referencedMor.contains(rel) || pinned.contains(rel))
+        if (!keep) { fs.delete(st.getPath, true); dataDeleted += 1 }
       }
-    dvList.foreach { st =>
-      val name = st.getPath.getName
-      val keep = stageDirVersion(name).forall(n =>
-        n > cur || referencedDv.contains(s"dvdata/$name") ||
-          pinned.contains(s"dvdata/$name"))
-      if (!keep) { fs.delete(st.getPath, true); dataDeleted += 1 }
-    }
-    // update-vector image dirs: same keep rule as tombstone dirs
-    val referencedUv = retained
-      .flatMap(rv => sidecarLines(s, dir, rv, Uv))
-      .map(_.split('\t')(1)).toSet ++
-      branchHeads.flatMap { case (bd, bv) =>
-        scala.util.Try(sidecarLines(s, bd, bv, Uv)).toOption.getOrElse(Nil)
-          .map(_.split('\t')(1))
-      }
-    uvList.foreach { st =>
-      val name = st.getPath.getName
-      val keep = stageDirVersion(name).forall(n =>
-        n > cur || referencedUv.contains(s"uvdata/$name") ||
-          pinned.contains(s"uvdata/$name"))
-      if (!keep) { fs.delete(st.getPath, true); dataDeleted += 1 }
     }
     // Metadata sweep below the floor: versions under the floor already
     // refuse to time-travel (their data may be gone), so their markers,

@@ -182,21 +182,10 @@ object BranchOps {
     val bv = Versioned.currentVersion(s, bd).getOrElse(
       throw new IllegalStateException(s"no branch '$name' under $root"))
     val forkV = forkVersion(s, root, name)
-    val head = Versioned.manifest(s, bd, bv)
-    val headMap = head.toMap
     // the branch's OWN change set, diffed against the FORK state —
     // branch v1 is the fork's manifest/sidecar copy, so this needs no
     // main metadata below the floor
-    val forkMan = Versioned.manifest(s, bd, 1L).toMap
-    val forkDv = Versioned.readDvRefs(s, bd, 1L)
-    val forkUv = Versioned.readUvRefs(s, bd, 1L)
-    val headDv = Versioned.readDvRefs(s, bd, bv)
-    val headUv = Versioned.readUvRefs(s, bd, bv)
-    val changed = (forkMan.keySet ++ headMap.keySet).filter { n =>
-      forkMan.get(n) != headMap.get(n) ||
-        headDv.getOrElse(n, Nil) != forkDv.getOrElse(n, Nil) ||
-        headUv.getOrElse(n, Nil) != forkUv.getOrElse(n, Nil)
-    }
+    val (_, head, changed) = Versioned.changedParts(s, bd, Some(1L), bv)
     // a branch that never diverged has nothing to land: publishing an
     // identical-content version would be churn, not work
     if (changed.isEmpty) return
@@ -300,25 +289,15 @@ object BranchOps {
     val bd = bdir(root, name)
     val bv = Versioned.currentVersion(s, bd).getOrElse(
       throw new IllegalStateException(s"no branch '$name' under $root"))
-    val headMan = Versioned.manifest(s, bd, bv)
-    val forkMan = Versioned.manifest(s, bd, 1L).toMap
-    val headMap = headMan.toMap
-    val headDv = Versioned.readDvRefs(s, bd, bv)
-    val forkDv = Versioned.readDvRefs(s, bd, 1L)
-    val headUv = Versioned.readUvRefs(s, bd, bv)
-    val forkUv = Versioned.readUvRefs(s, bd, 1L)
-    val changed = (forkMan.keySet ++ headMap.keySet).filter { n =>
-      forkMan.get(n) != headMap.get(n) ||
-        headDv.getOrElse(n, Nil) != forkDv.getOrElse(n, Nil) ||
-        headUv.getOrElse(n, Nil) != forkUv.getOrElse(n, Nil)
-    }
+    val (forkMan, headMan, changed) =
+      Versioned.changedParts(s, bd, Some(1L), bv)
     require(changed.nonEmpty,
       s"branch '$name' under $root never diverged — nothing to rebase; " +
         "drop it and re-fork")
     val headRows = Versioned.readEntriesLive(s, bd, bv,
       headMan.filter(e => changed(e._1)), Some(partCol),
       dataDir = Some(root))
-    val forkEntries = forkMan.toSeq.filter(e => changed(e._1))
+    val forkEntries = forkMan.toMap.toSeq.filter(e => changed(e._1))
     val cols = headRows.columns.toSeq
     val forkAligned =
       if (forkEntries.isEmpty) headRows.limit(0)

@@ -119,7 +119,7 @@ object MergeOps {
                   col("_metadata.row_index").as("__mor_i"))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     val entryPaths: Map[String, Seq[String]] = bearing
-      .groupBy(_._2.split("/").take(2).mkString("/"))
+      .groupBy(e => Versioned.verDirOf(e._2))
       .map { case (verDir, es) =>
         verDir -> es.map(e => s"$corpusDir/${e._2}") }
     val k = keys.select(col(keyCol)).distinct()
@@ -155,25 +155,46 @@ object MergeOps {
     }
   }
 
-  /** Map [[scanHitScopes]]' hit-file paths onto their holder manifest
-    * entries, recording each file under its verDir-QUALIFIED relative
-    * path (`<entry relpath>/<leaf>`, round 16): the read side's
-    * positional filter matches the full path suffix, so a same-named
-    * file in ANOTHER version dir of the partition group can never take
-    * this file's positions (with bare leaf names that collision —
-    * improbable under Spark's UUID part names, but possible — would
-    * silently drop wrong rows). */
-  private def hitsByHolderEntry(bearing: Seq[(String, String)],
-                                hits: Seq[(String, Seq[Long])])
-      : Map[String, Seq[(String, Seq[Long])]] =
-    hits.flatMap { case (path, ps) =>
-      bearing.find(e => path.contains(s"/${e._2}/")).map { e =>
-        val leaf = path.substring(path.lastIndexOf('/') + 1)
-        e._1 -> (s"${e._2}/$leaf", ps)
-      }
+  /** The HOLDER entries of a MOR write ([[mergeDeleteMor]],
+    * [[mergeUpdateMor]]) whose rows `keys` shadow, each with the files
+    * it holds them in and their positions ([[scanHitScopes]]; a file
+    * with no positions stays at the scope tier). Candidates ("bearing"):
+    * the `touched` same-layout entries plus every FOREIGN-layout entry
+    * (value pruning cannot see into an older spec's dirs — unevolved
+    * tables have none, so the common case scans exactly the touched
+    * partitions). Files are recorded under their verDir-QUALIFIED
+    * relative path (`<entry relpath>/<leaf>`, round 16): the read
+    * side's positional filter matches the full path suffix, so a
+    * same-named file in ANOTHER version dir of the partition group can
+    * never take this file's positions. When the scan cannot answer (a
+    * foreign verDir whose files PREDATE keyCol — column evolution, the
+    * same fallback as [[foreignLayoutTouch]]), every touched partition
+    * and every foreign entry is a holder with no files: unscoped lines,
+    * always correct (a whole-partition shadow of a non-holder is a
+    * no-op). */
+  private def morHolders(s: SparkSession, corpusDir: String,
+                         man: Seq[(String, String)], partCol: String,
+                         touched: Seq[String], keyCol: String,
+                         keys: DataFrame)
+      : Map[String, Seq[(String, Seq[Long])]] = {
+    val layoutPrefix = s"$partCol="
+    val bearing = man.filter(e =>
+      !e._1.startsWith(layoutPrefix) || touched.contains(e._1))
+    scanHitScopes(s, corpusDir, bearing, keyCol, keys) match {
+      case None =>
+        (touched ++ bearing.map(_._1).filterNot(_.startsWith(layoutPrefix)))
+          .map(_ -> Seq.empty[(String, Seq[Long])]).toMap
+      case Some(hits) =>
+        hits.flatMap { case (path, ps) =>
+          bearing.find(e => path.contains(s"/${e._2}/")).map { e =>
+            val leaf = path.substring(path.lastIndexOf('/') + 1)
+            e._1 -> (s"${e._2}/$leaf", ps)
+          }
+        }
+        .groupBy(_._1)
+        .map { case (n, fs) => n -> fs.map(_._2).sortBy(_._1) }
     }
-    .groupBy(_._1)
-    .map { case (n, fs) => n -> fs.map(_._2).sortBy(_._1) }
+  }
 
   /** Write-side CHECK constraints (Delta's `ADD CONSTRAINT` at merge
     * time): ONE aggregate pass over the batch counts violations of
@@ -1211,7 +1232,7 @@ object MergeOps {
     val layoutPrefix = s"$partCol="
     val foreign = man.filterNot(_._1.startsWith(layoutPrefix))
     if (foreign.isEmpty) return (Nil, Set.empty)
-    val base = foreign.groupBy(_._2.split("/").take(2).mkString("/")).toSeq
+    val base = foreign.groupBy(e => Versioned.verDirOf(e._2)).toSeq
       .map { case (verDir, es) =>
         s.read.option("basePath", s"$corpusDir/$verDir")
           .parquet(es.map(e => s"$corpusDir/${e._2}"): _*)
@@ -1611,44 +1632,25 @@ object MergeOps {
     if (touched.isEmpty) return
     validateStaged(s, corpusDir, uvRel, persistedConstraintCols(
       tableConstraints(s, corpusDir, v), corpus.columns.toSeq))
-    val touchedSet = touched.toSet
     // FILE SCOPE (round 14, the dv analogue — see mergeDeleteMor): one
     // bounded pass over the candidate entries' BASE dirs finds which
-    // data files hold an imaged key, so the read-side substitution
-    // anti-join runs over only those files' rows. The same pass is the
-    // metadata-tier evolution detector: an imaged key living under an
-    // older spec's layout cannot be substituted in place — the
-    // per-partition image subdir lookup is keyed by the CURRENT spec's
-    // names, so a foreign-layout base row would silently keep its
-    // stale value beside the new image. Those HOLDER entries migrate
-    // in this same commit (a pure live restage under the current spec,
-    // plus collision entries — the foreignLayoutTouch rule), after
-    // which the images substitute against the migrated base like any
-    // other partition's.
-    val layoutPrefix = s"$partCol="
-    val uvBearing = man.filter(e =>
-      if (e._1.startsWith(layoutPrefix)) touchedSet(e._1) else true)
-    val imageKeys = images.select(col(keyCol)).distinct()
-    // Same column-evolution fallback as mergeDeleteMor's scope scan: a
-    // foreign verDir whose files predate keyCol cannot answer the
-    // select — scoping is lost (whole-partition lines) and EVERY
-    // foreign entry is treated as a holder (all migrate; a needless
+    // data files hold an imaged key ([[morHolders]]), so the read-side
+    // substitution shadows only those files' rows — by row position
+    // where the density guard says the positional tier can pay. The
+    // same pass is the metadata-tier evolution detector: an imaged key
+    // living under an older spec's layout cannot be substituted in
+    // place — the per-partition image subdir lookup is keyed by the
+    // CURRENT spec's names, so a foreign-layout base row would silently
+    // keep its stale value beside the new image. Those HOLDER entries
+    // migrate in this same commit (a pure live restage under the
+    // current spec, plus collision entries — the foreignLayoutTouch
+    // rule), after which the images substitute against the migrated
+    // base like any other partition's. Under the column-evolution
+    // fallback EVERY foreign entry is a holder (all migrate; a needless
     // migration is a content-preserving restage, never wrong).
-    // Like mergeDeleteMor's scan, this also collects each hit file's
-    // imaged-row POSITIONS where the density guard says the tier can
-    // pay ([[scanHitScopes]] — two bounded passes, round 16) so the
-    // read-side substitution drops them with a positional filter
-    // instead of the anti-join.
-    val uvHitAgg: Option[Seq[(String, Seq[Long])]] =
-      scanHitScopes(s, corpusDir, uvBearing, keyCol, imageKeys)
-    val uvScopeByEntry: Map[String, Seq[(String, Seq[Long])]] =
-      hitsByHolderEntry(uvBearing, uvHitAgg.getOrElse(Seq.empty))
-    val foreignHolders = uvHitAgg match {
-      case None => uvBearing.map(_._1)
-        .filterNot(_.startsWith(layoutPrefix)).toSet
-      case Some(_) =>
-        uvScopeByEntry.keys.filterNot(_.startsWith(layoutPrefix)).toSet
-    }
+    val holders = morHolders(s, corpusDir, man, partCol, touched, keyCol,
+      images.select(col(keyCol)).distinct())
+    val foreignHolders = holders.keySet.filterNot(_.startsWith(s"$partCol="))
     val migrate =
       if (foreignHolders.isEmpty) Nil
       else expandForMigration(s, corpusDir, man,
@@ -1662,25 +1664,14 @@ object MergeOps {
       if (migrate.isEmpty) None
       else Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, migrate,
         Some(partCol)), Some(partCol), Seq(keyCol))),
-      replaced = migrate.map(_._1).toSet, alsoChanged = touchedSet,
+      replaced = migrate.map(_._1).toSet, alsoChanged = touched.toSet,
       stats = CarryUnchanged, tok = tok,
-      newUv = stagedNames => touched.map { p =>
-        // a partition whose base just migrated has new file names — its
-        // scope (computed from the pre-migration base) is stale, so the
-        // line falls back to the whole-partition form
-        uvScopeByEntry.get(p) match {
-          case Some(fs) if !stagedNames(p) =>
-            val scope = fs.map(_._1).mkString(",")
-            val posed = fs.filter(_._2.nonEmpty)
-            if (posed.isEmpty) s"$p\t$uvRel\t$keyCol\t$scope"
-            else {
-              val posField = posed.map { case (f, ps) =>
-                s"$f:${Versioned.encodePositions(ps)}" }.mkString(",")
-              s"$p\t$uvRel\t$keyCol\t$scope\t$posField"
-            }
-          case _ => s"$p\t$uvRel\t$keyCol"
-        }
-      })
+      // a partition whose base just migrated has new file names — its
+      // scope (computed from the pre-migration base) is stale, so the
+      // line falls back to the whole-partition form
+      newUv = stagedNames => touched.map(p =>
+        Versioned.morLine(Versioned.Uv, p, uvRel, Some(keyCol),
+          if (stagedNames(p)) Nil else holders.getOrElse(p, Nil))))
   }
 
   /** MERGE-ON-READ row-level DELETE (Delta/Iceberg deletion vectors, at
@@ -1690,7 +1681,7 @@ object MergeOps {
     * manifest entry — the manifest, data dirs, and zone-map stats all
     * carry VERBATIM (bounds stay valid supersets after row removal).
     * Each line names the data FILES that held a doomed key (see
-    * [[graft.engine.Versioned.dvLineFields]]), so the read-side tax is
+    * [[graft.engine.Versioned.MorRef]]), so the read-side tax is
     * one anti-join over ONLY those files' rows
     * ([[graft.engine.Versioned.readEntriesLive]]) — every other file
     * of a touched partition streams verbatim, and one deleted key in a
@@ -1736,76 +1727,39 @@ object MergeOps {
           "left_semi"), partCol)
         .select(col(keyCol), col(partCol)).distinct(), partCol, dvRel)
     if (touched.isEmpty) return
-    // FILE SCOPE + HOLDER-ENTRY KEYING (round 14). One more bounded
-    // pass over the candidate entries' BASE dirs, reading each row's
-    // file identity, finds which manifest entries — and which data
-    // FILES within them — contain a doomed key. Two things fall out:
+    // FILE SCOPE + HOLDER-ENTRY KEYING (round 14, [[morHolders]]). One
+    // more bounded pass over the candidate entries' BASE dirs, reading
+    // each row's file identity, finds which manifest entries — and which
+    // data FILES within them — contain a doomed key. Two things fall out:
     //  - Per-file deletion-vector granularity (Delta/Iceberg's): the
     //    read side anti-joins ONLY the named files' rows and streams
     //    every other file of the partition verbatim
-    //    ([[graft.engine.Versioned.readEntriesLive]]).
+    //    ([[graft.engine.Versioned.readEntriesLive]]); where the density
+    //    guard says the positional tier can pay, a file's doomed ROW
+    //    POSITIONS replace even that anti-join with a codegen'd filter.
     //  - METADATA-TIER EVOLUTION correctness: lines key by the HOLDER
     //    entry's own manifest name, not partDirName(partCol, value) —
     //    a doomed key living under an older spec's layout gets its ref
     //    attached to the entry that actually holds it (the old keying
     //    could never match a foreign-layout entry's name, so its
     //    tombstones silently never applied).
-    // Candidates: same-layout entries named by the live batch's
-    // partition values, plus every FOREIGN-layout entry (value pruning
-    // cannot see into an older spec's dirs — unevolved tables have
-    // none, so the common case scans exactly the touched partitions).
     // Scopes come from the BASE files, ignoring earlier tombstones: a
     // superset is always correct, and any base file holding a doomed
     // key must be covered. Data dirs are immutable and any restage
-    // drops the line, so file names stay valid for the ref's life.
-    val touchedSet = touched.toSet
-    val layoutPrefix = s"$partCol="
-    val bearing = man.filter(e =>
-      if (e._1.startsWith(layoutPrefix)) touchedSet(e._1) else true)
-    // The scope scan selects keyCol over raw base files: a foreign-
-    // layout verDir whose files PREDATE keyCol (column evolution)
-    // cannot answer it — same fallback as [[foreignLayoutTouch]]:
-    // unscoped whole-dir lines for the touched same-layout partitions
-    // plus EVERY foreign entry (any of them may hold a doomed key; the
-    // read-side anti-join on a non-holder is a no-op, so conservative
-    // is exactly correct).
-    // The same pass that names the hit FILES also collects each file's
-    // doomed ROW POSITIONS where the density guard says the positional
-    // tier can pay ([[scanHitScopes]] — two bounded passes, round 16):
-    // a position-mapped file is read back through a codegen'd
-    // positional filter — no anti-join, no shuffle, no tombstone read —
-    // while dense or over-cap files keep the per-file anti-join.
-    // Positions stay valid exactly as long as the file names do
-    // (immutable dirs; any restage drops the line).
-    val hitAgg: Option[Seq[(String, Seq[Long])]] =
-      scanHitScopes(s, corpusDir, bearing, keyCol, keys)
-    val hitsByEntry: Map[String, Seq[(String, Seq[Long])]] =
-      hitsByHolderEntry(bearing, hitAgg.getOrElse(Seq.empty))
+    // drops the line, so file names and positions stay valid for the
+    // ref's life.
+    val holders = morHolders(s, corpusDir, man, partCol, touched, keyCol,
+      keys)
     // Defensive floor: a LIVE doomed key always has a base row (uv
     // images substitute for existing keys only), so a non-empty
     // tombstone write implies base hits. If that invariant ever broke,
     // fall back to the legacy whole-partition lines rather than lose
     // the delete.
-    val newLines = hitAgg match {
-      case None =>
-        (touched ++ bearing.map(_._1)
-          .filterNot(_.startsWith(layoutPrefix)))
-          .distinct.sorted.map(p => s"$p\t$dvRel")
-      case Some(_) if hitsByEntry.nonEmpty =>
-        hitsByEntry.toSeq.sortBy(_._1).map { case (n, fs) =>
-          val scope = fs.map(_._1).mkString(",")
-          // emptiness encodes the write-side density guard: a dense or
-          // over-cap file carries no positions — scope anti-join
-          val posed = fs.filter(_._2.nonEmpty)
-          if (posed.isEmpty) s"$n\t$dvRel\t$scope"
-          else {
-            val posField = posed.map { case (f, ps) =>
-              s"$f:${Versioned.encodePositions(ps)}" }.mkString(",")
-            s"$n\t$dvRel\t$scope\t$posField"
-          }
-        }
-      case Some(_) => touched.map(p => s"$p\t$dvRel")
-    }
+    val newLines =
+      (if (holders.isEmpty) touched.map(_ -> Nil)
+       else holders.toSeq.sortBy(_._1))
+        .map { case (n, fs) => Versioned.morLine(Versioned.Dv, n, dvRel,
+          None, fs) }
     // nothing restages: stats (row removal keeps bounds valid
     // supersets) and update-vector refs carry verbatim — the read order
     // (substitute, then anti-join) makes a tombstone shadow any earlier
@@ -1832,9 +1786,8 @@ object MergeOps {
     // generalized to BOTH merge-on-read sidecars (round 12): a
     // partition bearing deletion vectors OR update vectors restages
     // through the live read, which folds tombstones out and images in
-    val dvRefs = Versioned.readDvRefs(s, corpusDir, v)
-    val uvRefs = Versioned.readUvRefs(s, corpusDir, v)
-    val refs = dvRefs.keySet ++ uvRefs.keySet
+    val refs = Versioned.MorKinds
+      .flatMap(Versioned.morRefs(s, corpusDir, v, _).keySet).toSet
     if (refs.isEmpty) return
     val man = Versioned.manifest(s, corpusDir, v)
     // mixed layouts: a foreign-layout bearing entry's rows migrate to
@@ -2008,22 +1961,9 @@ object MergeOps {
         "— its data dirs may have been vacuumed (tagged versions are " +
         "exempt); sync mirrors or tag their high-water version before " +
         "vacuuming past it"))
-    val manFrom = Versioned.manifest(s, corpusDir, fromV)
-    val manTo = Versioned.manifest(s, corpusDir, toV)
-    val dvFrom = Versioned.readDvRefs(s, corpusDir, fromV)
-    val dvTo = Versioned.readDvRefs(s, corpusDir, toV)
-    val uvFrom = Versioned.readUvRefs(s, corpusDir, fromV)
-    val uvTo = Versioned.readUvRefs(s, corpusDir, toV)
-    val fm = manFrom.toMap
-    val tm = manTo.toMap
-    // The pruning heart: same staged dir + same tombstone refs + same
-    // image refs ⇒ the partition's LIVE content is byte-identical; only
-    // the rest is read.
-    val changed = (fm.keySet ++ tm.keySet).filter { n =>
-      fm.get(n) != tm.get(n) ||
-        dvFrom.getOrElse(n, Nil) != dvTo.getOrElse(n, Nil) ||
-        uvFrom.getOrElse(n, Nil) != uvTo.getOrElse(n, Nil)
-    }
+    // The pruning heart: only the changed partitions are read
+    val (manFrom, manTo, changed) =
+      Versioned.changedParts(s, corpusDir, Some(fromV), toV)
     def side(v: Long, man: Seq[(String, String)]): DataFrame = {
       val es = man.filter(e => changed(e._1))
       if (es.nonEmpty)

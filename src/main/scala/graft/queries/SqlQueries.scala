@@ -228,7 +228,7 @@ object SqlQueries {
       "zorder_by => 'doc_id,n_chars')").collect().head             // v3
     require(row.getAs[Long]("version") == 3L,
       "optimize must commit exactly one version")
-    require(Versioned.readDvRefs(s, dir, 3L).isEmpty,
+    require(Versioned.morRefs(s, dir, 3L, Versioned.Dv).isEmpty,
       "the z-order restage must materialize every deletion vector")
     GraftScanObservable.lastKeptDirs = Nil
     val res = s.sql(

@@ -448,11 +448,11 @@ object StoreQueries {
       "o_orderkey", "o_orderstatus")                                // v2
     require(Versioned.manifest(s, dir, 2L) == Versioned.manifest(s, dir, 1L),
       "a MOR update must not restage any data partition")
-    require(Versioned.readUvRefs(s, dir, 2L).nonEmpty,
+    require(Versioned.morRefs(s, dir, 2L, Versioned.Uv).nonEmpty,
       "the update must land as uv sidecar refs")
     compactDeletes(s, dir, "o_orderstatus",
                    sortCol = Some("o_orderkey"))                    // v3
-    require(Versioned.readUvRefs(s, dir, 3L).isEmpty,
+    require(Versioned.morRefs(s, dir, 3L, Versioned.Uv).isEmpty,
       "materialization must clear the uv refs")
     Versioned.vacuum(s, dir, keepVersions = 1)
     readCorpus(s, dir, "o_orderstatus")
@@ -568,7 +568,7 @@ object StoreQueries {
     require(vAfter == 2L,
       s"idempotent MOR re-delete must publish nothing, at v$vAfter")
     compactDeletes(s, dir, "o_orderstatus", sortCol = Some("o_orderkey"))
-    require(Versioned.readDvRefs(s, dir, 3L).isEmpty,
+    require(Versioned.morRefs(s, dir, 3L, Versioned.Dv).isEmpty,
       "compactDeletes must clear every dv ref")
     Versioned.vacuum(s, dir)
     readCorpus(s, dir, "o_orderstatus")
@@ -809,7 +809,7 @@ object StoreQueries {
                      statsKeys = Seq("doc_id"))
     require(Versioned.currentVersion(s, dir).contains(3L),
       "the repartition must land as one atomic version")
-    require(Versioned.readDvRefs(s, dir, 3L).isEmpty,
+    require(Versioned.morRefs(s, dir, 3L, Versioned.Dv).isEmpty,
       "the rewrite must materialize every outstanding tombstone")
     // the feed across the move is queried with the OLD partCol: the
     // from-side is the one still carrying old-layout tombstones (the
@@ -847,7 +847,7 @@ object StoreQueries {
       "o_orderkey", "cb")
     compactZOrder(s, dir, "cb", ("o_custkey", "o_orderkey"),        // v3
       statsKeys = Seq("o_custkey", "o_orderkey"))
-    require(Versioned.readDvRefs(s, dir, 3L).isEmpty,
+    require(Versioned.morRefs(s, dir, 3L, Versioned.Dv).isEmpty,
       "the z-order restage must materialize every deletion vector")
     readCorpusSkipPruned(s, dir, "cb",
         ranges = Seq(("o_custkey", 40L, 139L), ("o_orderkey", 0L, 1200L)))

@@ -1242,8 +1242,8 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     // exactly, so count = footer rows − |distinct positions|; any
     // scope-only or whole-partition dv line declines (doomed count
     // unknown without a key read).
-    val dvRefs = Versioned.readDvRefsScoped(spark, dir, version)
-    val uvRefs = Versioned.readUvRefsScoped(spark, dir, version)
+    val dvRefs = Versioned.morRefs(spark, dir, version, Versioned.Dv)
+    val uvRefs = Versioned.morRefs(spark, dir, version, Versioned.Uv)
     if ((dvRefs.nonEmpty || uvRefs.nonEmpty) && minMaxCols.nonEmpty)
       return None
     def singleLayout: Boolean =
@@ -1258,17 +1258,15 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
       Map.empty, Map.empty, Map.empty)
     // exact doomed-row count per kept entry, from the dv sidecars
     // alone: every line fully position-mapped, positions unioned per
-    // file across stacked generations (bare legacy names qualified by
-    // the holder entry's relpath so generations merge exactly)
+    // file across stacked generations (MorRef.qualified: bare legacy
+    // names take the holder entry's relpath so generations merge exactly)
     if (!kept.forall { case (name, _) =>
           dvRefs.getOrElse(name, Nil).forall(r =>
-            r._2.isDefined && r._3.keySet == r._2.get) })
+            r.scope.isDefined && r.pos.keySet == r.scope.get) })
       return None
     val doomedByEntry: Map[String, Long] = kept.map { case (name, rel) =>
       name -> dvRefs.getOrElse(name, Nil)
-        .flatMap(_._3.toSeq)
-        .map { case (f, ps) =>
-          (if (f.contains('/')) f else s"$rel/$f") -> ps }
+        .flatMap(_.qualified(rel).pos.toSeq)
         .groupBy(_._1)
         .map { case (_, ps) => ps.flatMap(_._2).distinct.size.toLong }
         .sum
@@ -1600,6 +1598,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
       extends BaseRelation with TableScan {
     override def sqlContext: SQLContext = context
     override def schema: StructType = required
+    // what a formatted plan's scan node prints: the store and version
+    override def toString: String = s"GraftRelation($dir@v$version)"
 
     override def buildScan(): RDD[Row] = {
       // the shared pruned reader: sidecars load only for the probed

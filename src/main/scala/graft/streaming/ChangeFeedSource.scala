@@ -354,8 +354,8 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
   /** Upper bound on the bytes the feed slice grows by when its end
     * extends across the single version step `prev -> v`: the on-disk
     * size of every data dir (both sides) of a partition whose manifest
-    * entry, dv refs, or uv refs changed across the step — the SAME
-    * changed-partition rule [[graft.ops.MergeOps.changeFeed]] prunes
+    * entry, dv refs, or uv refs changed across the step — the one
+    * changed-partition rule ([[Versioned.changedParts]]) the feed prunes
     * with, priced via one `getContentSummary` per changed dir instead
     * of a read. An upper bound, not exact: a partition rewritten in
     * several steps of one slice is priced per step but read once, and
@@ -373,20 +373,10 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
 
   private def deltaBytes(prev: Option[Long], v: Long): Long =
     deltaBytesCache.getOrElseUpdate((prev, v), {
-    val tm = Versioned.manifest(spark, dir, v).toMap
-    val fm = prev.map(p => Versioned.manifest(spark, dir, p).toMap)
-      .getOrElse(Map.empty[String, String])
-    val dvF = prev.map(p => Versioned.readDvRefs(spark, dir, p))
-      .getOrElse(Map.empty[String, Seq[String]])
-    val uvF = prev.map(p => Versioned.readUvRefs(spark, dir, p))
-      .getOrElse(Map.empty[String, Seq[(String, String)]])
-    val dvT = Versioned.readDvRefs(spark, dir, v)
-    val uvT = Versioned.readUvRefs(spark, dir, v)
-    val changed = (fm.keySet ++ tm.keySet).filter { n =>
-      fm.get(n) != tm.get(n) ||
-        dvF.getOrElse(n, Nil) != dvT.getOrElse(n, Nil) ||
-        uvF.getOrElse(n, Nil) != uvT.getOrElse(n, Nil)
-    }
+    val (fromMan, toMan, changed) =
+      Versioned.changedParts(spark, dir, prev, v)
+    val fm = fromMan.toMap
+    val tm = toMan.toMap
     changed.flatMap(n => fm.get(n).toSeq ++ tm.get(n).toSeq)
       .toSeq.distinct.map { rel =>
         scala.util.Try(storeFs.getContentSummary(

@@ -242,6 +242,65 @@ class SidecarDerivationSpec extends SparkTestBase {
     assert(MergeOps.readCorpus(spark, dir, "p").count() == 28L)
   }
 
+  test("merge-on-read sidecars are pinned byte for byte: a sparse and a " +
+       "dense delete, a positioned update and a column-evolved fallback") {
+    import spark.implicits._
+    val dir = freshDir("graft_sd_mor_bytes")
+    // 100 rows per partition in one key-sorted file each
+    MergeOps.mergeUpsert(spark, dir,
+      rows(1 to 300).withColumn("id", col("k")).repartition(1), "k", "p")
+    // sparse: key 4 is B's row 1 -> scope and position
+    MergeOps.mergeDeleteMor(spark, dir, Seq(4L).toDF("k"), "k", "p")  // v2
+    // dense: 70 of C's 100 rows exceed the positional floor -> scope only
+    MergeOps.mergeDeleteMor(spark, dir,
+      (2 to 209 by 3).map(_.toLong).toDF("k"), "k", "p")              // v3
+    // key 7 is B's row 2 -> scope and position
+    MergeOps.mergeUpdateMor(spark, dir, col("k") === 7L,
+      Seq("v" -> lit(-1L)), "k", "p")                                 // v4
+    // v5 adds a g-layout entry whose file predates k, as an older
+    // writer left it: staged and published by hand, the lines carried
+    val tok = Versioned.newToken()
+    Seq((1001L, 7L)).toDF("id", "v").write
+      .parquet(s"$dir/data/5_$tok/g=x")
+    Versioned.copyPartitionSidecars(spark, dir, 4L, dir, 5L, tok)
+    Versioned.publish(spark, dir, 5L, tok,
+      Versioned.manifest(spark, dir, 4L) :+ ("g=x" -> s"data/5_$tok/g=x"))
+    // the scope scan cannot select k over g=x: unscoped lines for the
+    // touched partition and every foreign entry (A carries no other
+    // ref, so g=x reads in A's group, which holds k)
+    MergeOps.mergeDeleteMor(spark, dir, Seq(6L).toDF("k"), "k", "p")  // v6
+
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def bytes(v: Long, side: String): String =
+      Versioned.committedSidecar(spark, dir, v, side).fold("") { p =>
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }.replaceAll("(\\d+)_[0-9a-f]{8}", "$1_T")
+        .replaceAll("part-[^\\t\\n,:]*", "part-F")
+    val bPos = "p=B\tdvdata/2_T\tdata/1_T/p=B/part-F" +
+      "\tdata/1_T/p=B/part-F:~AQ\n"
+    val cScope = "p=C\tdvdata/3_T\tdata/1_T/p=C/part-F\n"
+    val bImage = "p=B\tuvdata/4_T\tk\tdata/1_T/p=B/part-F" +
+      "\tdata/1_T/p=B/part-F:~Ag\n"
+    val fallback = "g=x\tdvdata/6_T\np=A\tdvdata/6_T\n"
+    assert((2L to 6L).map(v => (bytes(v, "dv"), bytes(v, "uv"))) == Seq(
+      (bPos, ""),
+      (bPos + cScope, ""),
+      (bPos + cScope, bImage),
+      (bPos + cScope, bImage),
+      (fallback + bPos + cScope, bImage)))
+
+    val live = Versioned.readCurrent(spark, dir, Some("p"))
+      .select("k", "v", "id").collect()
+      .map(r => (Option(r.get(0)).map(_ => r.getLong(0)), r.getLong(1),
+        r.getLong(2))).toSet
+    val gone = Set(4, 6) ++ (2 to 209 by 3)
+    val expected = (1 to 300).filterNot(gone).map { k =>
+      (Option(k.toLong), if (k == 7) -1L else k * 10L, k.toLong) }.toSet
+    assert(live == expected + ((None, 7L, 1001L)))
+  }
+
   test("compaction carries every stats line verbatim and drops the MOR " +
        "lines of the partitions it restages") {
     val dir = store("graft_sd_compact")

@@ -77,7 +77,7 @@ class Wave20Spec extends SparkTestBase {
       "the restage must materialize partition E's other tombstone")
     assert(!rows.contains(5L),
       "partition O's carried ref must still apply")
-    val refs = Versioned.readDvRefs(spark, dir, 3L)
+    val refs = Versioned.morRefs(spark, dir, 3L, Versioned.Dv)
     assert(refs.keySet == Set("p=O"),
       s"restaged E drops its lines, O carries: $refs")
   }
@@ -96,7 +96,7 @@ class Wave20Spec extends SparkTestBase {
     MergeOps.compactDeletes(spark, dir, "p", sortCol = Some("k"))   // v3
     assert(keysOf(dir) == want && want == Set(2L, 4L, 6L, 8L, 10L),
       "materialization must be content-invisible")
-    assert(Versioned.readDvRefs(spark, dir, 3L).isEmpty)
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty)
     assert(Versioned.manifest(spark, dir, 3L).map(_._1) == Seq("p=E"),
       "the fully-tombstoned partition must leave the manifest")
     // no refs left → a second pass is a no-op
@@ -148,7 +148,7 @@ class Wave20Spec extends SparkTestBase {
     assert(Versioned.currentVersion(spark, dir).contains(3L))
     assert(keysOf(dir) == (1L to 10L).toSet -- Set(2L, 5L),
       "the repaired no-op version must keep the tombstones applied")
-    assert(Versioned.readDvRefs(spark, dir, 3L).nonEmpty,
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).nonEmpty,
       "the repair must byte-copy the dv sidecar it duplicates")
   }
 
@@ -170,7 +170,8 @@ class Wave20Spec extends SparkTestBase {
     assert(e.getMessage.contains("logically empty"))
     // retention: drop partition O; E keeps its ref and stays empty
     MergeOps.applyRetention(spark, dir, _ != "p=O")                 // v3
-    assert(Versioned.readDvRefs(spark, dir, 3L).keySet == Set("p=E"))
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).keySet ==
+      Set("p=E"))
     assert(MergeOps.readCorpus(spark, dir, "p").count() == 0L)
   }
 
@@ -191,7 +192,8 @@ class Wave20Spec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(rows(4L) == 444.0 && rows(12L) == 120.0)
     assert(!rows.contains(6L) && !rows.contains(2L) && !rows.contains(5L))
-    assert(Versioned.readDvRefs(spark, dir, 3L).keySet == Set("p=O"),
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).keySet ==
+      Set("p=O"),
       "the restaged E partition must shed its ref; O carries")
   }
 }

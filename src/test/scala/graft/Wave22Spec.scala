@@ -143,7 +143,7 @@ class Wave22Spec extends SparkTestBase {
     assert(d4("y=4")("status") == Set("B"),
       "the live scan must tighten the post-delete superset")
     // dv refs carried: tombstoned rows stay hidden after the refresh
-    assert(Versioned.readDvRefs(spark, dir, 4L).nonEmpty)
+    assert(Versioned.morRefs(spark, dir, 4L, Versioned.Dv).nonEmpty)
     assert(prunedKeys(dir, Seq("C")).isEmpty)
     // a dict-only refresh must NOT strip the surviving range bounds
     // (y=2's were shed by the restage; the others carry)
@@ -187,7 +187,7 @@ class Wave22Spec extends SparkTestBase {
       .map(_.getLong(0)).toSet == want)
     assert(MergeOps.changeFeed(spark, dir, 2L, 3L, "k", "p").count() == 0L,
       "a z-order compaction must be invisible in the change feed")
-    assert(Versioned.readDvRefs(spark, dir, 3L).isEmpty)
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty)
     val m = Versioned.readStatsMulti(spark, dir, 3L)("p=P")
     assert(m("k") == (0L, 1023L) && m("j")._1 == 0L,
       s"refreshed two-column bounds must land: $m")

@@ -139,7 +139,7 @@ class Wave23Spec extends SparkTestBase {
     MergeOps.mergeDeleteWhere(spark, dir, col("v") > 35.0, "p")     // v3
     assert(rows(dir).keySet == Set(1L, 3L),
       s"got ${rows(dir)}")
-    assert(Versioned.readDvRefs(spark, dir, 3L).isEmpty,
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty,
       "the predicate delete's restage must materialize the tombstones")
     // the feed across the DML: deletes for every removed live key, and
     // NO row for the already-tombstoned key 2

@@ -45,8 +45,8 @@ class Wave25Spec extends SparkTestBase {
       Seq(Tuple1(2L)).toDF("k"), "k", "p")                           // v2
     // corrupt the contract: rewrite the committed tombstone dir with an
     // extra column (as a future writer drifting the schema would)
-    val refs = Versioned.readDvRefs(spark, dir, 2L)
-    val rel = refs.values.flatten.head
+    val refs = Versioned.morRefs(spark, dir, 2L, Versioned.Dv)
+    val rel = refs.values.flatten.head.rel
     spark.createDataFrame(Seq((2L, "x", "E"))).toDF("k", "extra", "p")
       .write.mode("overwrite").partitionBy("p").parquet(s"$dir/$rel")
     val e = intercept[IllegalArgumentException] {

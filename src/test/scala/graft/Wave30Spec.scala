@@ -41,8 +41,8 @@ class Wave30Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir,
       Seq((1L, 11.0, "O")).toDF("k", "v", "p"), "k", "p")            // v5
     val oName = Versioned.partDirName("p", "O")
-    assert(!Versioned.readUvRefs(spark, dir, 5L).contains(oName) &&
-           !Versioned.readDvRefs(spark, dir, 5L).contains(oName))
+    assert(!Versioned.morRefs(spark, dir, 5L, Versioned.Uv).contains(oName) &&
+           !Versioned.morRefs(spark, dir, 5L, Versioned.Dv).contains(oName))
     val got5 = readAll(dir)
     assert(got5(1L) === (11.0, "O") && got5(2L) === (40.0, "E"),
       "E's image must survive O's restage")
@@ -64,8 +64,8 @@ class Wave30Spec extends SparkTestBase {
     MergeOps.mergeDeleteMor(spark, dir, Seq(Tuple1(4L)).toDF("k"),
                             "k", "p")                                // v3
     MergeOps.compactDeletes(spark, dir, "p", sortCol = Some("k"))    // v4
-    assert(Versioned.readUvRefs(spark, dir, 4L).isEmpty &&
-           Versioned.readDvRefs(spark, dir, 4L).isEmpty)
+    assert(Versioned.morRefs(spark, dir, 4L, Versioned.Uv).isEmpty &&
+           Versioned.morRefs(spark, dir, 4L, Versioned.Dv).isEmpty)
     val got = readAll(dir)
     assert(got(3L) === (-3.0, "O") && !got.contains(4L))
     Versioned.vacuum(spark, dir, keepVersions = 1)
@@ -136,7 +136,7 @@ class Wave30Spec extends SparkTestBase {
       Seq((2L, 20.0, "E")).toDF("k", "v", "p"), "k", "p")            // v5
     MergeOps.applyRetention(spark, dir,
       name => name != Versioned.partDirName("p", "O"))               // v6
-    assert(Versioned.readUvRefs(spark, dir, 6L).isEmpty)
+    assert(Versioned.morRefs(spark, dir, 6L, Versioned.Uv).isEmpty)
     assert(readAll(dir) === Map(2L -> (20.0, "E")))
   }
 

@@ -46,6 +46,20 @@ class Wave37Spec extends SparkTestBase {
       s"the group holding 41 and 45 must survive: $kept")
   }
 
+  test("a formatted plan over a store table names the store and the " +
+       "version it reads, never an identity hash") {
+    val dir = freshDir("graft_sql_plan_name")
+    val tbl = new java.io.File(dir).getName
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(20), "k", "p")     // v1
+    MergeOps.mergeUpsert(spark, dir, quarterCorpus(4), "k", "p")      // v2
+    register()
+    val plan = spark.sql(s"SELECT k, v FROM gtest.`$tbl` WHERE k > 3")
+      .queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!plan.contains("GraftRelation@"), plan)
+    assert(plan.contains(s"GraftRelation($dir@v2)"), plan)
+  }
+
   test("partition-key equality prunes on the manifest NAMES themselves " +
        "— the zeroth tier, no sidecar required — and a column with no " +
        "stats line stays exact (pruning is advisory)") {

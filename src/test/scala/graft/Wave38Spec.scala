@@ -268,8 +268,8 @@ class Wave38Spec extends SparkTestBase {
     val model = (1 to 200).map(i => i.toLong -> i * 1.5).toMap - 9L
     assert(contents(dir, "q") === model)
     MergeOps.compactDeletes(spark, dir, "q", sortCol = Some("k"))
-    assert(Versioned.readDvRefs(spark, dir,
-      Versioned.currentVersion(spark, dir).get).isEmpty,
+    assert(Versioned.morRefs(spark, dir,
+      Versioned.currentVersion(spark, dir).get, Versioned.Dv).isEmpty,
       "materialization must clear the refs")
     assert(contents(dir, "q") === model,
       "the migration must keep every row exactly once")

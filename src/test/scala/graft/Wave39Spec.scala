@@ -68,16 +68,16 @@ class Wave39Spec extends SparkTestBase {
         f.substring(f.indexOf(dir) + dir.length + 1)
       }
       .toSet
-    val scoped = Versioned.readDvRefsScoped(spark, dir, 2L)
+    val scoped = Versioned.morRefs(spark, dir, 2L, Versioned.Dv)
     assert(scoped.nonEmpty, "the delete must commit dv refs")
-    val allScoped = scoped.values.flatten.flatMap(_._2).flatten.toSet
+    val allScoped = scoped.values.flatten.flatMap(_.scope).flatten.toSet
     assert(allScoped === expected,
       s"dv file scopes $allScoped must equal the verDir-qualified " +
         s"relative paths of the files holding the doomed keys $expected")
     assert(allScoped.forall(_.contains("/")),
       "round-16 scopes are verDir-qualified — a bare leaf name could " +
         "collide across version dirs")
-    scoped.values.flatten.foreach { case (_, scope, _) =>
+    scoped.values.flatten.foreach { case Versioned.MorRef(_, _, _, scope, _) =>
       assert(scope.isDefined, "every round-14 dv line must carry a scope")
     }
     // lines key by the holder manifest entry name
@@ -102,7 +102,8 @@ class Wave39Spec extends SparkTestBase {
     val fsys = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     rewriteDv(dir, 2L, lines => lines.map { l =>
-      val (part, rel, scope, _) = Versioned.dvLineFields(l)
+      val Versioned.MorRef(part, rel, _, scope, _) =
+        Versioned.morRef(Versioned.Dv, l)
       // scope names are verDir-qualified (round 16) — compare by leaf
       val scopeLeaves = scope.get.map(s =>
         s.substring(s.lastIndexOf('/') + 1))
@@ -128,7 +129,8 @@ class Wave39Spec extends SparkTestBase {
     MergeOps.mergeDeleteMor(spark, dir, Seq(6L).toDF("k"), "k", "p") // v2
     // strip the scope field: the old format, unknown files
     rewriteDv(dir, 2L, lines => lines.map { l =>
-      val (part, rel, _, _) = Versioned.dvLineFields(l)
+      val Versioned.MorRef(part, rel, _, _, _) =
+        Versioned.morRef(Versioned.Dv, l)
       s"$part\t$rel"
     })
     assert(!liveKeys(dir).contains(6L),
@@ -184,7 +186,7 @@ class Wave39Spec extends SparkTestBase {
         "holder entry, not the new spec's partition name")
     assert(live.size === 99)
     // and the ref is attached to a g-layout entry name
-    val refs = Versioned.readDvRefsScoped(spark, dir, 3L)
+    val refs = Versioned.morRefs(spark, dir, 3L, Versioned.Dv)
     assert(refs.keySet.exists(_.startsWith("g=")),
       s"the dv line must key by the old-layout holder entry; got " +
         s"${refs.keySet}")
@@ -235,8 +237,8 @@ class Wave39Spec extends SparkTestBase {
         f.substring(f.indexOf(dir) + dir.length + 1)
       }
       .toSet
-    val scoped = Versioned.readUvRefsScoped(spark, dir, 2L)
-    val allScoped = scoped.values.flatten.flatMap(_._3).flatten.toSet
+    val scoped = Versioned.morRefs(spark, dir, 2L, Versioned.Uv)
+    val allScoped = scoped.values.flatten.flatMap(_.scope).flatten.toSet
     assert(allScoped === expected,
       s"uv file scopes $allScoped must equal the verDir-qualified " +
         s"relative paths of the files holding the imaged key $expected")
@@ -245,7 +247,8 @@ class Wave39Spec extends SparkTestBase {
     val fsys = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     rewriteUv(dir, 2L, lines => lines.map { l =>
-      val (part, rel, kc, scope, _) = Versioned.uvLineFields(l)
+      val Versioned.MorRef(part, rel, Some(kc), scope, _) =
+        Versioned.morRef(Versioned.Uv, l)
       val scopeLeaves = scope.get.map(s =>
         s.substring(s.lastIndexOf('/') + 1))
       val others = fsys.listStatus(
@@ -272,7 +275,8 @@ class Wave39Spec extends SparkTestBase {
     MergeOps.mergeUpdateMor(spark, dir, col("k") === 6L,
       Seq("v" -> lit(666.0)), "k", "p")                              // v2
     rewriteUv(dir, 2L, lines => lines.map { l =>
-      val (part, rel, kc, _, _) = Versioned.uvLineFields(l)
+      val Versioned.MorRef(part, rel, Some(kc), _, _) =
+        Versioned.morRef(Versioned.Uv, l)
       s"$part\t$rel\t$kc"
     })
     val vals = MergeOps.readCorpus(spark, dir, "p").collect()

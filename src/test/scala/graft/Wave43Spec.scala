@@ -56,9 +56,9 @@ class Wave43Spec extends SparkTestBase {
       Seq(4L, 9L, 16L).toDF("k"), "k", "p")                          // v2
     // every dv line carries the positional field, and every scoped
     // file is position-mapped (tiny delete, far under the cap)
-    val refs = Versioned.readDvRefsScoped(spark, dir, 2L)
+    val refs = Versioned.morRefs(spark, dir, 2L, Versioned.Dv)
     assert(refs.nonEmpty)
-    refs.values.flatten.foreach { case (_, scope, pos) =>
+    refs.values.flatten.foreach { case Versioned.MorRef(_, _, _, scope, pos) =>
       assert(scope.isDefined && pos.keySet == scope.get,
         s"every scoped file must be position-mapped: $scope vs " +
           s"${pos.keySet}")
@@ -133,8 +133,8 @@ class Wave43Spec extends SparkTestBase {
     seed(dir, 24, 3)                                                 // v1
     MergeOps.mergeUpdateMor(spark, dir, col("k") === 4L,
       Seq("v" -> lit(-1.0)), "k", "p")                               // v2
-    val refs = Versioned.readUvRefsScoped(spark, dir, 2L)
-    refs.values.flatten.foreach { case (_, _, scope, pos) =>
+    val refs = Versioned.morRefs(spark, dir, 2L, Versioned.Uv)
+    refs.values.flatten.foreach { case Versioned.MorRef(_, _, _, scope, pos) =>
       assert(scope.isDefined && pos.keySet == scope.get,
         s"every scoped uv file must be position-mapped: $scope vs " +
           s"${pos.keySet}")

@@ -82,16 +82,16 @@ class Wave44Spec extends SparkTestBase {
     import spark.implicits._
     MergeOps.mergeDeleteMor(spark, dir,
       Seq(17L, 1017L, 3017L).toDF("k"), "k", "p")                    // v2
-    val refs = Versioned.readDvRefsScoped(spark, dir, 2L)
+    val refs = Versioned.morRefs(spark, dir, 2L, Versioned.Dv)
     assert(refs.nonEmpty)
-    refs.values.flatten.foreach { case (_, scope, pos) =>
+    refs.values.flatten.foreach { case Versioned.MorRef(_, _, _, scope, pos) =>
       assert(scope.isDefined && pos.keySet == scope.get,
         s"a sparse delete position-maps every scoped file: $scope vs " +
           s"${pos.keySet}")
     }
     // recorded names are verDir-QUALIFIED: a same-named file in another
     // version dir can never take these positions
-    refs.values.flatten.foreach { case (_, scope, _) =>
+    refs.values.flatten.foreach { case Versioned.MorRef(_, _, _, scope, _) =>
       assert(scope.get.forall(_.contains("/")),
         s"scope names must be verDir-qualified, got ${scope.get}")
     }
@@ -151,7 +151,7 @@ class Wave44Spec extends SparkTestBase {
         e.substring(e.lastIndexOf(':') + 1).startsWith("~")),
         s"round-16 writers serialize positions compact: $l")
     }
-    val compact = Versioned.readDvRefsScoped(spark, dir, 2L)
+    val compact = Versioned.morRefs(spark, dir, 2L, Versioned.Dv)
     // rewrite every position field to the LEGACY dot-decimal form
     rewriteDv(dir, 2L, lines => lines.map { l =>
       val fs = l.split('\t')
@@ -162,7 +162,7 @@ class Wave44Spec extends SparkTestBase {
       }.mkString(",")
       (fs.take(3) :+ legacy).mkString("\t")
     })
-    assert(Versioned.readDvRefsScoped(spark, dir, 2L) === compact,
+    assert(Versioned.morRefs(spark, dir, 2L, Versioned.Dv) === compact,
       "both encodings must parse to identical positions")
     assert(liveKeys(dir) === expected,
       "content must be identical through both encodings")

@@ -47,7 +47,7 @@ class Wave46Spec extends SparkTestBase {
     assert(row.getAs[String]("table") === tbl)
     assert(row.getAs[Long]("version") === 3L,
       "optimize must commit exactly one version")
-    assert(Versioned.readDvRefs(spark, dir, 3L).isEmpty,
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty,
       "the restage must materialize every deletion vector")
     val stats = Versioned.readStatsMulti(spark, dir, 3L)
     assert(stats.nonEmpty &&
@@ -65,9 +65,9 @@ class Wave46Spec extends SparkTestBase {
     import spark.implicits._
     MergeOps.mergeDeleteMor(spark, dir, Seq(2L, 4L).toDF("k"),
                             "k", "p")                                // v2
-    assert(Versioned.readDvRefs(spark, dir, 2L).nonEmpty)
+    assert(Versioned.morRefs(spark, dir, 2L, Versioned.Dv).nonEmpty)
     spark.sql(s"CALL graft.system.compact_deletes('$tbl')")          // v3
-    assert(Versioned.readDvRefs(spark, dir, 3L).isEmpty,
+    assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty,
       "compact_deletes must drop every dv line")
     val rep = spark.sql(
       s"CALL graft.system.vacuum('$tbl', keep_versions => 1)")
