@@ -14,10 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on a directory plus partition pruning keeps the same call shape.
   */
 object Tables {
-  /** Schema-memoized read ([[Versioned.readParquetCached]]): the test
-    * tables are read-only for the process's life, and every schemaless
-    * `read.parquet` costs a footer-inference Spark job — one per table
-    * read, hundreds across a bench run, all inferring the same schemas. */
+  /** Read through the store-read kernel ([[Versioned.readParquetCached]]):
+    * the test tables are read-only for the process's life, so the
+    * memoized schema skips the footer-inference Spark job every
+    * schemaless `read.parquet` costs (one per table read, hundreds across
+    * a bench run), and the kernel's own file index leaves no listing in
+    * Spark's shared `FileStatusCache`. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Versioned.readParquetCached(spark, None, Seq(s"$sfDir/$name.parquet"))
 

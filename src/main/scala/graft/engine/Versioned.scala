@@ -1,7 +1,10 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  InMemoryFileIndex}
+import org.apache.spark.sql.graftbridge.ClassicBridge
 import org.apache.spark.sql.functions.{col, lit, row_number}
 
 /** Thrown when a writer loses a commit race: another writer claimed the
@@ -205,10 +208,10 @@ object Versioned {
     * 25-40 ms inside one sql_merge lifecycle). Staged data dirs are
     * write-once by protocol (every attempt's dir is tokenized, vacuum
     * only ever deletes), and the bench's source tables are read-only,
-    * so an identical (basePath, path list) always carries the identical
-    * schema: memoize it and hand it back via `read.schema(...)`, which
+    * so an identical (basePath, root list) always carries the identical
+    * schema: memoize it and hand it to the read's file index, which
     * skips the inference job entirely. METADATA only — never rows, never
-    * results; the exact path list is the key, so a different file subset
+    * results; the exact root list is the key, so a different file subset
     * (whose partition-value inference could differ) never shares an
     * entry. Bounded; eviction is whole-map (entries are a few hundred
     * bytes and keys die with their temp dirs). */
@@ -216,19 +219,89 @@ object Versioned {
     new java.util.concurrent.ConcurrentHashMap[
       String, org.apache.spark.sql.types.StructType]()
 
+  /** One read's leaf listing as a read-only `FileStatusCache`: the
+    * read's file index finds every root's files here, so Spark never
+    * lists, never starts a "Listing leaf files" job and files nothing
+    * in its process-wide cache. Held by that index alone — it lives
+    * exactly as long as the read's plan. */
+  private final class Listed(leaves: Map[Path, Array[FileStatus]])
+      extends FileStatusCache {
+    override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+      leaves.get(p)
+    override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
+  }
+
+  /** THE store-read kernel: a parquet DataFrame over `paths` (dirs or
+    * files), each listed once on the driver ([[listLeaves]]) and handed
+    * to Spark as a ready file index — no path check, no leaf-listing
+    * job, nothing left in Spark's shared `FileStatusCache`. The memoized
+    * schema rides along, so a repeat read also skips footer inference.
+    * `basePath` roots partition discovery as `read.parquet`'s option of
+    * that name does. */
   private[graft] def readParquetCached(s: SparkSession,
-      basePath: Option[String], paths: Seq[String]): DataFrame = {
+      basePath: Option[String], paths: Seq[String]): DataFrame =
+    readListed(s, basePath, listLeaves(s, paths))
+
+  /** [[readParquetCached]] over data files the caller already listed
+    * (through [[listLeaves]]): each file is its own root. */
+  private[graft] def readFiles(s: SparkSession, basePath: Option[String],
+                               files: Seq[FileStatus]): DataFrame =
+    readListed(s, basePath, files.map(f => f.getPath -> Seq(f)))
+
+  /** [[readParquetCached]] over roots already listed ([[listLeaves]]). */
+  private[graft] def readListed(s: SparkSession, basePath: Option[String],
+      roots: Seq[(Path, Seq[FileStatus])]): DataFrame = {
+    val names = roots.map(_._1.toString)
     val key = basePath.getOrElse("") + "\u0000" +
-      (if (paths.length == 1) paths.head
-       else paths.sorted.mkString("\u0001"))
-    val rd = basePath.fold(s.read)(bp => s.read.option("basePath", bp))
-    schemaMemo.get(key) match {
-      case null =>
-        val df = rd.parquet(paths: _*)
-        if (schemaMemo.size >= 8192) schemaMemo.clear()
-        schemaMemo.put(key, df.schema)
-        df
-      case st => rd.schema(st).parquet(paths: _*)
+      (if (names.length == 1) names.head
+       else names.sorted.mkString("\u0001"))
+    val options = basePath.map("basePath" -> _).toMap
+    val memo = Option(schemaMemo.get(key))
+    val index = new InMemoryFileIndex(s, roots.map(_._1), options, memo,
+      new Listed(roots.map { case (p, files) => p -> files.toArray }.toMap))
+    val df = ClassicBridge.parquet(s, index, memo, options)
+    if (memo.isEmpty) {
+      if (schemaMemo.size >= 8192) schemaMemo.clear()
+      schemaMemo.put(key, df.schema)
+    }
+    df
+  }
+
+  /** The kernel's driver listing: each of `paths`, qualified, with the
+    * data files under it ([[dataFiles]]' rule, descending into
+    * partition dirs; a file is its own leaf). A path that VANISHED
+    * between the manifest resolve and this listing (a racing vacuum
+    * swept the version below its floor) is a commit-state change, not
+    * corruption: it surfaces as the retryable race signal — the same
+    * translation the manifest read does — so a reader racing a vacuum
+    * fails loudly with the protocol's own error instead of a raw
+    * missing-path exception. (The window AFTER frame creation — a scan
+    * task opening a file a vacuum deleted mid-job — remains the
+    * documented reader-vs-vacuum contract every table format has:
+    * schedule retention from one maintainer, or retry the read.) */
+  private[graft] def listLeaves(s: SparkSession, paths: Seq[String])
+      : Seq[(Path, Seq[FileStatus])] = {
+    require(paths.nonEmpty, "a parquet read needs at least one path")
+    val fs = fsOf(s, paths.head)
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        if (st.isFile) Seq(st).filter(isDataFile)
+        else if (n.startsWith(".") || (n.startsWith("_") && !n.contains('=')))
+          Nil
+        else leaves(st.getPath)
+      }
+    paths.map { p =>
+      val q = fs.makeQualified(new Path(p))
+      try q -> leaves(q)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new ConcurrentCommitException(
+            s"data path $q vanished mid-read — a concurrent vacuum " +
+              "swept this version below its retention floor; " +
+              "re-derive from the current commit log", e)
+      }
     }
   }
 
@@ -1346,8 +1419,12 @@ object Versioned {
       .map { case (_, es) =>
         val rs = es.flatMap(refsOf(dvRefs, _)).distinct
         val us = es.flatMap(refsOf(uvRefs, _)).distinct
-        val base = readEntries(s, dd, es, partCol)
-        lazy val byVer = es.groupBy(e => verDirOf(e._2)).toSeq.sortBy(_._1)
+        // one driver listing per entry dir, shared by the base read
+        // and every split below
+        val listed = listEntries(s, dd, es)
+        val base = readListedEntries(s, dd, listed, partCol)
+        lazy val byVer = listed.groupBy(l => verDirOf(l._1._2)).toSeq
+          .sortBy(_._1)
         // Read the group's data files that `keep` admits (it sees the
         // entry-QUALIFIED relative name, the scope/pos vocabulary) at
         // the right basePath. `xform` applies PER-SCAN, before any
@@ -1357,22 +1434,12 @@ object Versioned {
         def readSplit(keep: String => Boolean,
                       xform: DataFrame => DataFrame = identity)
             : Option[DataFrame] =
-          byVer.flatMap { case (verDir, ves) =>
-            val paths =
-              try ves.flatMap(e => dataFiles(s, dd, e._2)
-                    .filter(st => keep(s"${e._2}/${st.getPath.getName}"))
-                    .map(_.getPath.toString))
-              catch {
-                case e: java.io.FileNotFoundException =>
-                  throw new ConcurrentCommitException(
-                    s"a manifest-referenced data dir under $dd " +
-                      "vanished mid-read — a concurrent vacuum swept " +
-                      "this version below its retention floor; " +
-                      "re-derive from the current commit log", e)
-              }
-            if (paths.isEmpty) None
-            else Some(xform(readParquetCached(s,
-              partCol.map(_ => s"$dd/$verDir"), paths)))
+          byVer.flatMap { case (verDir, ls) =>
+            val files = ls.flatMap { case ((_, rel), (_, sts)) =>
+              sts.filter(st => keep(s"$rel/${st.getPath.getName}")) }
+            if (files.isEmpty) None
+            else Some(xform(readFiles(s,
+              partCol.map(_ => s"$dd/$verDir"), files)))
           }.reduceOption(_.unionByName(_, allowMissingColumns = true))
         // THE SHADOW KERNEL, shared by both kinds: the rows of the
         // group that `refs` do not shadow, as union parts. Unscoped (any ref
@@ -1503,47 +1570,38 @@ object Versioned {
 
   /** Union-read a set of manifest entries (see [[readCurrent]]). An empty
     * entry set is the caller's "partition absent" case — callers handle it
-    * before calling (we cannot conjure a schema from nothing).
-    *
-    * A referenced data dir that VANISHED between the manifest resolve and
-    * this read (a racing vacuum swept the version below its floor) is a
-    * commit-state change, not corruption: it surfaces as the retryable
-    * race signal — the same translation the manifest read does — so a
-    * reader racing a vacuum fails loudly with the protocol's own error
-    * instead of a raw missing-path exception. (The window AFTER frame
-    * creation — a scan task opening a file a vacuum deleted mid-job —
-    * remains the documented reader-vs-vacuum contract every table format
-    * has: schedule retention from one maintainer, or retry the read.) */
+    * before calling (we cannot conjure a schema from nothing). A
+    * referenced data dir that vanished since the manifest resolve raises
+    * [[ConcurrentCommitException]] ([[listLeaves]]). */
   def readEntries(s: SparkSession, dir: String,
                   entries: Seq[(String, String)],
                   partCol: Option[String]): DataFrame = {
     require(entries.nonEmpty, "readEntries needs at least one entry")
-    def translate[T](body: => T): T =
-      try body catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          throw new ConcurrentCommitException(
-            s"a manifest-referenced data dir under $dir vanished " +
-              "mid-read — a concurrent vacuum swept this version below " +
-              "its retention floor; re-derive from the current commit log",
-            e)
-      }
+    readListedEntries(s, dir, listEntries(s, dir, entries), partCol)
+  }
+
+  /** Each entry with its dir listed by the kernel ([[listLeaves]]). */
+  private def listEntries(s: SparkSession, dir: String,
+                          entries: Seq[(String, String)])
+      : Seq[((String, String), (Path, Seq[FileStatus]))] =
+    entries.zip(listLeaves(s, entries.map(e => s"$dir/${e._2}")))
+
+  /** [[readEntries]] over entries already listed. */
+  private def readListedEntries(s: SparkSession, dir: String,
+      listed: Seq[((String, String), (Path, Seq[FileStatus]))],
+      partCol: Option[String]): DataFrame =
     partCol match {
-      case None =>
-        translate(readParquetCached(s, None,
-          entries.map(e => s"$dir/${e._2}")))
+      case None => readListed(s, None, listed.map(_._2))
       case Some(_) =>
         // allowMissingColumns: version groups may disagree on schema
         // after a schema-evolving merge (a later version's partitions
         // carry columns older ones predate) — missing columns null-fill,
         // the same union semantics scan_evolved pins for file sources.
-        entries.groupBy(e => verDirOf(e._2)).toSeq.sortBy(_._1)
-          .map { case (verDir, es) =>
-            translate(readParquetCached(s, Some(s"$dir/$verDir"),
-              es.map(e => s"$dir/${e._2}")))
+        listed.groupBy(l => verDirOf(l._1._2)).toSeq.sortBy(_._1)
+          .map { case (verDir, ls) =>
+            readListed(s, Some(s"$dir/$verDir"), ls.map(_._2))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
-  }
 
   /** The version dir (`data/<v>_<token>`) a manifest relpath lives in —
     * the `basePath` of a partitioned read and vacuum's keep key. */
@@ -1566,14 +1624,18 @@ object Versioned {
     else s"$partCol=${ExternalCatalogUtils.escapePathName(String.valueOf(value))}"
   }
 
-  /** The data files directly under `dir/relDir`: every file not named
-    * `_*` (writer markers) or `.*` (checksums, temp files). */
+  /** The data files directly under `dir/relDir` ([[isDataFile]]). */
   def dataFiles(s: SparkSession, dir: String,
-                relDir: String): Seq[org.apache.hadoop.fs.FileStatus] =
-    fsOf(s, dir).listStatus(new Path(s"$dir/$relDir")).toSeq.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+                relDir: String): Seq[FileStatus] =
+    fsOf(s, dir).listStatus(new Path(s"$dir/$relDir")).toSeq
+      .filter(isDataFile)
+
+  /** A data file: every file not named `_*` (writer markers) or `.*`
+    * (checksums, temp files). */
+  private def isDataFile(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    st.isFile && !n.startsWith("_") && !n.startsWith(".")
+  }
 
   /** Number of data files under one manifest entry's dir — the
     * fragmentation measure [[graft.ops.MergeOps.compactPartitions]] acts

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables._
@@ -111,20 +112,21 @@ object MergeOps {
                             keyCol: String, keys: DataFrame)
       : Option[Seq[(String, Seq[Long])]] = {
     if (bearing.isEmpty) return Some(Seq.empty)
-    def baseRead(byVer: Map[String, Seq[String]]) =
-      byVer.toSeq.sortBy(_._1).map { case (verDir, paths) =>
-        Versioned.readParquetCached(s, Some(s"$corpusDir/$verDir"), paths)
-          .select(col(keyCol),
-                  col("_metadata.file_path").as("__mor_f"),
-                  col("_metadata.row_index").as("__mor_i"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val entryPaths: Map[String, Seq[String]] = bearing
-      .groupBy(e => Versioned.verDirOf(e._2))
-      .map { case (verDir, es) =>
-        verDir -> es.map(e => s"$corpusDir/${e._2}") }
+    def baseRead(reads: Seq[DataFrame]) = reads.map(
+        _.select(col(keyCol),
+                 col("_metadata.file_path").as("__mor_f"),
+                 col("_metadata.row_index").as("__mor_i")))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    // one driver listing per bearing entry, by basePath; pass 2 reads a
+    // subset of the same files
+    val listed: Seq[(String, Seq[(Path, Seq[FileStatus])])] = bearing
+      .zip(Versioned.listLeaves(s, bearing.map(e => s"$corpusDir/${e._2}")))
+      .groupBy(l => Versioned.verDirOf(l._1._2)).toSeq.sortBy(_._1)
+      .map { case (verDir, ls) => s"$corpusDir/$verDir" -> ls.map(_._2) }
     val k = keys.select(col(keyCol)).distinct()
     try {
-      val counts = baseRead(entryPaths)
+      val counts = baseRead(listed.map { case (bp, roots) =>
+          Versioned.readListed(s, Some(bp), roots) })
         .join(k.withColumn("__mor_hit", lit(1)), Seq(keyCol), "left")
         .groupBy(col("__mor_f"))
         .agg(count(lit(1)).as("__rows"),
@@ -136,13 +138,16 @@ object MergeOps {
         hits <= DvPosCap &&
           hits <= math.max(DvPosFloor, (DvPosDensity * rows).toLong)
       }.map(_._1).toSet
-      val sparseByVer: Map[String, Seq[String]] = sparse.toSeq.sorted
-        .flatMap(p => entryPaths.keys.find(vd => p.contains(s"/$vd/"))
-          .map(_ -> p))
-        .groupBy(_._1).map { case (vd, ps) => vd -> ps.map(_._2) }
+      // `_metadata.file_path` is the file's URI string
+      val sparsePaths = sparse.map(p => new Path(new java.net.URI(p)))
+      val sparseByVer = listed
+        .map { case (bp, roots) =>
+          bp -> roots.flatMap(_._2).filter(f => sparsePaths(f.getPath)) }
+        .filter(_._2.nonEmpty)
       val posByFile: Map[String, Seq[Long]] =
         if (sparseByVer.isEmpty) Map.empty
-        else baseRead(sparseByVer)
+        else baseRead(sparseByVer.map { case (bp, files) =>
+            Versioned.readFiles(s, Some(bp), files) })
           .join(k, Seq(keyCol), "left_semi")
           .groupBy(col("__mor_f"))
           .agg(sort_array(collect_list(col("__mor_i"))).as("__ps"))
@@ -1234,8 +1239,8 @@ object MergeOps {
     if (foreign.isEmpty) return (Nil, Set.empty)
     val base = foreign.groupBy(e => Versioned.verDirOf(e._2)).toSeq
       .map { case (verDir, es) =>
-        s.read.option("basePath", s"$corpusDir/$verDir")
-          .parquet(es.map(e => s"$corpusDir/${e._2}"): _*)
+        Versioned.readParquetCached(s, Some(s"$corpusDir/$verDir"),
+            es.map(e => s"$corpusDir/${e._2}"))
           .withColumn("__ml_f", col("_metadata.file_path"))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
     // A predicate referencing a column the old layout's files predate
