@@ -1520,7 +1520,8 @@ object Versioned {
         if (rs.isEmpty) substituted
         else {
           val rdirs = rs.map(_.rel).distinct
-          val dv = rdirs.map(r => readParquetCached(s, None, Seq(s"$dd/$r")))
+          val dvListed = listLeaves(s, rdirs.map(r => s"$dd/$r"))
+          val dv = dvListed.map(l => readListed(s, None, Seq(l)))
             .reduce(_.unionByName(_))
           // tombstone dirs are partitioned by the partition column of
           // the SPEC THAT WROTE THEM — under metadata-tier partition
@@ -1532,11 +1533,12 @@ object Versioned {
           // would silently anti-join on an arbitrary pick otherwise
           val kc = partCol match {
             case Some(_) =>
-              val fs = fsOf(s, dd)
-              val dvParts = rdirs.flatMap { r =>
-                fs.listStatus(new Path(dd, r)).toSeq
-                  .map(_.getPath.getName).filter(_.contains('='))
-                  .map(_.takeWhile(_ != '='))
+              // each dv dir's `col=value` names, from the listing the
+              // read above already holds: the parent dirs of its files
+              val dvParts = dvListed.flatMap { case (root, files) =>
+                files.flatMap(f => Iterator.iterate(f.getPath.getParent)(
+                    _.getParent).takeWhile(p => p != null && p != root)
+                  .flatMap(p => layoutOf(p.getName)))
               }.toSet
               val dataCols = dv.columns.filterNot(dvParts)
               require(dataCols.length == 1,
@@ -1624,6 +1626,21 @@ object Versioned {
     else s"$partCol=${ExternalCatalogUtils.escapePathName(String.valueOf(value))}"
   }
 
+  /** The partition column a dir name `col=value` carries (None for the
+    * whole-table entry). */
+  private def layoutOf(name: String): Option[String] =
+    if (name.contains('=')) Some(name.takeWhile(_ != '=')) else None
+
+  /** THE partition-column rule: the column of the manifest's `col=value`
+    * entry names, None for a whole-table store. On a MIXED-layout
+    * manifest (mid metadata-tier spec evolution) any `col=` entry will
+    * do: readers only use Some-ness to choose the per-version-group
+    * `basePath` read, which re-derives each group's own dir column — so
+    * the whole manifest is scanned for one rather than trusting the
+    * first entry's sort luck. */
+  def partColOf(man: Seq[(String, String)]): Option[String] =
+    man.iterator.flatMap(e => layoutOf(e._1)).nextOption()
+
   /** The data files directly under `dir/relDir` ([[isDataFile]]). */
   def dataFiles(s: SparkSession, dir: String,
                 relDir: String): Seq[FileStatus] =
@@ -1683,14 +1700,21 @@ object Versioned {
     val fs = fsOf(s, dir)
     require(fs.exists(new Path(dir, s"commits/$v")),
       s"version $v was never committed under $dir")
+    requireAboveFloor(s, dir, v)
+    readEntriesLive(s, dir, v, manifest(s, dir, v), partCol)
+  }
+
+  /** Time travel's loud below-floor guard: a version below the retention
+    * floor may have had its data vacuumed, and reading a partial
+    * snapshot silently is the one thing time travel must never do —
+    * tagged versions are exempt (their dirs survive the sweep). */
+  def requireAboveFloor(s: SparkSession, dir: String, v: Long): Unit =
     retentionFloor(s, dir).foreach(f => require(
       v >= f || tags(s, dir).values.exists(_ == v),
       s"version $v is below the retention floor $f under $dir — " +
         "its data dirs may have been vacuumed; raise keepVersions " +
         "before vacuuming (or tag the version) if you need deeper " +
         "time travel"))
-    readEntriesLive(s, dir, v, manifest(s, dir, v), partCol)
-  }
 
   /** Named version TAGS (Iceberg's tags / a pinned snapshot): bind a
     * committed version to a stable name — the PROVENANCE handle a

@@ -197,14 +197,8 @@ object BranchOps {
     if (cs.nonEmpty && changed.nonEmpty) {
       val changedEntries = head.filter(e => changed(e._1))
       if (changedEntries.nonEmpty) {
-        // the partition column name is re-derivable from the entry dir
-        // name (`col=value`); `__ALL__` marks an unpartitioned table
-        val first = changedEntries.head._1
-        val partCol =
-          if (first.contains('=')) Some(first.takeWhile(_ != '='))
-          else None
         val live = Versioned.readEntriesLive(s, bd, bv, changedEntries,
-          partCol, dataDir = Some(root))
+          Versioned.partColOf(changedEntries), dataDir = Some(root))
         MergeOps.checkConstraints(live,
           cs.map { case (n, e) => (n, expr(e)) },
           what = s"publish of branch '$name' (audit)")

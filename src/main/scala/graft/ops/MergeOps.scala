@@ -1954,6 +1954,27 @@ object MergeOps {
     * intermediate versions are never materialized. */
   def changeFeed(s: SparkSession, corpusDir: String, fromV: Long,
                  toV: Long, keyCol: String, partCol: String): DataFrame = {
+    val (cols, diff) = keyDiff(s, corpusDir, fromV, toV, keyCol, partCol,
+      identity)
+    val img = when(col("__cf_new").isNull, col("__cf_old"))
+      .otherwise(col("__cf_new"))
+    diff.select(cols.map(c => img.getField(c).as(c)) :+
+      col("change_type"): _*)
+  }
+
+  /** The key diff behind [[changeFeed]] and [[changelog]]: the changed
+    * partitions of both versions ([[Versioned.changedParts]], read
+    * live), aligned to the union of their columns, narrowed to
+    * `pick(columns)`, and full-outer joined on the key as `__cf_k` with
+    * the old and new images as structs `__cf_old` / `__cf_new` (null
+    * exactly when the key is absent from that version). One row per
+    * changed key, classified in `change_type`: `insert` (absent before),
+    * `delete` (absent after) or `update` (present in both, images not
+    * null-safe equal). Returns the picked columns and the diff. */
+  private def keyDiff(s: SparkSession, corpusDir: String, fromV: Long,
+                      toV: Long, keyCol: String, partCol: String,
+                      pick: Seq[String] => Seq[String])
+      : (Seq[String], DataFrame) = {
     require(fromV < toV,
       s"changeFeed needs fromV < toV, got $fromV -> $toV under $corpusDir")
     // tagged versions are exempt, as in readVersion/rollback: a mirror
@@ -1989,30 +2010,22 @@ object MergeOps {
     }
     val o = side(fromV, manFrom)
     val n = side(toV, manTo)
-    val cols = (o.columns ++ n.columns).distinct.toSeq
-    def alignTo(df: DataFrame, other: DataFrame) = cols.map { c =>
-      if (df.columns.contains(c)) col(c)
-      else lit(null).cast(other.schema(c).dataType).as(c)
-    }
-    val os = o.select(alignTo(o, n): _*)
-      .select(col(keyCol).as("__cf_k"),
-              struct(cols.map(col): _*).as("__cf_old"))
-    val ns = n.select(alignTo(n, o): _*)
-      .select(col(keyCol).as("__cf_k"),
-              struct(cols.map(col): _*).as("__cf_new"))
+    val cols = pick((o.columns ++ n.columns).distinct.toSeq)
+    def image(df: DataFrame, other: DataFrame, as: String) =
+      df.select(col(keyCol).as("__cf_k"), struct(cols.map { c =>
+        if (df.columns.contains(c)) col(c)
+        else lit(null).cast(other.schema(c).dataType).as(c)
+      }: _*).as(as))
     // full-outer on the key: a side's struct is null exactly when the
     // key is absent from that version; <=> (null-safe struct equality)
     // kills the unchanged survivors a restage rewrote verbatim
     val ct = when(col("__cf_old").isNull, lit("insert"))
       .when(col("__cf_new").isNull, lit("delete"))
       .when(!(col("__cf_old") <=> col("__cf_new")), lit("update"))
-    val img = when(col("__cf_new").isNull, col("__cf_old"))
-      .otherwise(col("__cf_new"))
-    os.join(ns, Seq("__cf_k"), "full_outer")
-      .select(img.as("__cf_img"), ct.as("change_type"))
-      .where(col("change_type").isNotNull)
-      .select(cols.map(c => col("__cf_img").getField(c).as(c)) :+
-        col("change_type"): _*)
+    (cols, image(o, n, "__cf_old").join(image(n, o, "__cf_new"),
+        Seq("__cf_k"), "full_outer")
+      .withColumn("change_type", ct)
+      .where(col("change_type").isNotNull))
   }
 
   /** Incremental REPLICATION of one versioned store into another — the
@@ -2593,37 +2606,20 @@ object MergeOps {
     * Downstream consumers (cache invalidation, index maintenance, the
     * ANN-store folds) subscribe to THIS instead of re-diffing snapshots.
     *
-    * Manifest-pruned: a partition whose manifest entry is IDENTICAL in
-    * both versions points at the same immutable dir — it cannot contain
-    * a change and is never read. The diff cost is ∝ bytes of partitions
-    * touched between the versions (at 100 TB: the day's merges), not
-    * corpus size; the immutable-dir + manifest design gives CDC away for
-    * free, which is exactly why lakehouse table formats do it this way.
-    * Within touched partitions the diff is one full-outer hash join on
-    * the key. */
+    * A projection of [[changeFeed]]'s key diff onto `valueCol`: the
+    * same changed-partition pruning (manifest entries AND MOR refs, so a
+    * merge-on-read delete shows), the same live reads, and the same
+    * classification — by key presence, with `update` meaning the
+    * `valueCol` images are not null-safe equal. */
   def changelog(s: SparkSession, corpusDir: String, fromV: Long, toV: Long,
                 keyCol: String, partCol: String,
-                valueCol: String): DataFrame = {
-    val manA = Versioned.manifest(s, corpusDir, fromV).toMap
-    val manB = Versioned.manifest(s, corpusDir, toV).toMap
-    val changedParts =
-      (manA.keySet ++ manB.keySet).filter(p => manA.get(p) != manB.get(p))
-    val aEntries = manA.filter { case (p, _) => changedParts(p) }.toSeq
-    val bEntries = manB.filter { case (p, _) => changedParts(p) }.toSeq
-    def side(entries: Seq[(String, String)], tag: String): DataFrame =
-      (if (entries.isEmpty)
-         Versioned.readVersion(s, corpusDir, fromV, Some(partCol)).limit(0)
-       else Versioned.readEntries(s, corpusDir, entries, Some(partCol)))
-        .select(col(keyCol), col(valueCol).as(tag))
-    side(aEntries, "old_value").join(side(bEntries, "new_value"),
-        Seq(keyCol), "full_outer")
-      .withColumn("change",
-        when(col("old_value").isNull, "insert")
-          .when(col("new_value").isNull, "delete")
-          .otherwise("update"))
-      .where(col("change") =!= "update" ||
-             col("old_value") =!= col("new_value"))
-  }
+                valueCol: String): DataFrame =
+    keyDiff(s, corpusDir, fromV, toV, keyCol, partCol,
+        _ => Seq(valueCol))._2
+      .select(col("__cf_k").as(keyCol),
+        col("__cf_old").getField(valueCol).as("old_value"),
+        col("__cf_new").getField(valueCol).as("new_value"),
+        col("change_type").as("change"))
 
   /** Retention enforcement as a MANIFEST-ONLY commit: partitions whose
     * encoded dir name fails `keep` are dropped from the next version's

@@ -3,7 +3,7 @@ package graft.sql
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead,
@@ -11,7 +11,8 @@ import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead,
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder,
-  SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+  SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -64,7 +65,17 @@ class GraftCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
 
   private var catalogName: String = _
-  private var root: String = _
+
+  /** The root, read from the active session's conf on every call: a
+    * later `spark.conf.set` of `spark.sql.catalog.<name>.root` takes
+    * effect at once (the catalog instance outlives conf changes). */
+  private def root: String =
+    SparkSession.active.conf.getOption(s"spark.sql.catalog.$catalogName.root")
+      .getOrElse(throw missingRoot(catalogName))
+
+  private def missingRoot(name: String) = new IllegalArgumentException(
+    s"catalog '$name' needs spark.sql.catalog.$name.root — the " +
+      "directory whose versioned-store children become tables")
 
   /** `CALL graft.system.<proc>(…)` — the maintenance verbs
     * ([[GraftProcedures]]: optimize/zorder, compact_deletes, vacuum,
@@ -93,10 +104,7 @@ class GraftCatalog extends TableCatalog
   override def initialize(name: String,
                           options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    root = Option(options.get("root")).getOrElse(
-      throw new IllegalArgumentException(
-        s"catalog '$name' needs spark.sql.catalog.$name.root — the " +
-          "directory whose versioned-store children become tables"))
+    if (options.get("root") == null) throw missingRoot(name)
   }
 
   override def name(): String = catalogName
@@ -143,21 +151,13 @@ class GraftCatalog extends TableCatalog
       val dir = new Path(root, ident.name).toString
       val v = Versioned.currentVersion(spark, dir).getOrElse(
         throw new NoSuchTableException(ident))
-      val pc = Versioned.manifest(spark, dir, v)
-        .map(_._1).find(_.contains('=')).map(_.takeWhile(_ != '='))
-      val base = Versioned.readCurrent(spark, dir, pc).schema
-      require(!base.fieldNames.contains("change_type"),
-        s"the table under $dir already has a change_type column — the " +
-          "feed cannot add its classification column")
-      val feedSchema = base.add("change_type",
-        org.apache.spark.sql.types.StringType, nullable = false)
+      val pc = Versioned.partColOf(Versioned.manifest(spark, dir, v))
       // the persisted keyCol table property seeds the feed's required
       // reader option (scan-time .option("keyCol", …) still overrides)
-      return new graft.streaming.ChangeFeedTable(feedSchema,
+      return new graft.streaming.ChangeFeedTable(
+        graft.streaming.ChangeFeedSourceProvider.feedSchema(spark, dir, pc),
         Map("dir" -> dir) ++ pc.map("partcol" -> _) ++
-          Versioned.tableProps(spark, dir, v)
-            .collectFirst { case (k, kv)
-                if k.equalsIgnoreCase("keyCol") => "keycol" -> kv })
+          TableDoor.keyCol(spark, dir, Map.empty).map("keycol" -> _))
     }
     val dir = dirOf(ident)
     val v = Versioned.currentVersion(spark, dir).getOrElse {
@@ -176,20 +176,6 @@ class GraftCatalog extends TableCatalog
       (ident.namespace :+ ident.name).mkString("."), v)
   }
 
-  /** [[graft.engine.Versioned.readVersion]]'s loud below-floor guard,
-    * shared by both time-travel doors: a version below the retention
-    * floor may have had its data vacuumed, and reading a partial
-    * snapshot silently is the one thing time travel must never do —
-    * tagged versions are exempt (their dirs survive the sweep). */
-  private def requireAboveFloor(spark: SparkSession, dir: String,
-                                v: Long): Unit =
-    Versioned.retentionFloor(spark, dir).foreach(f => require(
-      v >= f || Versioned.tags(spark, dir).values.exists(_ == v),
-      s"version $v is below the retention floor $f under $dir — " +
-        "its data dirs may have been vacuumed; raise keepVersions " +
-        "before vacuuming (or tag the version) if you need deeper " +
-        "time travel"))
-
   /** SQL time travel: `VERSION AS OF n` loads the store at committed
     * version `n` — [[graft.engine.Versioned.readVersion]]'s semantics
     * (that version's manifest, its deletion vectors applied). */
@@ -200,7 +186,7 @@ class GraftCatalog extends TableCatalog
       throw new NoSuchTableException(ident))
     if (!Versioned.committedVersions(spark, dir).contains(v))
       throw new NoSuchTableException(ident)
-    requireAboveFloor(spark, dir, v)
+    Versioned.requireAboveFloor(spark, dir, v)
     new GraftTable(spark, dir,
       (ident.namespace :+ ident.name).mkString(".") + s"@v$v", v)
   }
@@ -218,7 +204,7 @@ class GraftCatalog extends TableCatalog
     val v = Versioned.versionAsOf(spark, dir,
         Math.floorDiv(timestamp, 1000L)).getOrElse(
       throw new NoSuchTableException(ident))
-    requireAboveFloor(spark, dir, v)
+    Versioned.requireAboveFloor(spark, dir, v)
     new GraftTable(spark, dir,
       (ident.namespace :+ ident.name).mkString(".") + s"@v$v", v)
   }
@@ -330,13 +316,12 @@ class GraftCatalog extends TableCatalog
       case c: TableChange.DropConstraint => c }
     val colDrops = changes.collect {
       case c: TableChange.DeleteColumn => c }
-    val others = changes.filterNot(c =>
-      c.isInstanceOf[TableChange.SetProperty] ||
-        c.isInstanceOf[TableChange.RemoveProperty] ||
-        c.isInstanceOf[TableChange.AddColumn] ||
-        c.isInstanceOf[TableChange.AddConstraint] ||
-        c.isInstanceOf[TableChange.DropConstraint] ||
-        c.isInstanceOf[TableChange.DeleteColumn])
+    val others = changes.filterNot {
+      case _: TableChange.SetProperty | _: TableChange.RemoveProperty |
+           _: TableChange.AddColumn | _: TableChange.AddConstraint |
+           _: TableChange.DropConstraint | _: TableChange.DeleteColumn => true
+      case _ => false
+    }
     if (others.nonEmpty)
       readOnly(s"ALTER TABLE ${others.map(_.getClass.getSimpleName)
         .mkString(", ")}")
@@ -394,11 +379,7 @@ class GraftCatalog extends TableCatalog
         s"ALTER TABLE ${ident.name} DROP COLUMN: only top-level " +
           s"columns (got ${c.fieldNames.mkString(".")})")
       val name = c.fieldNames.head
-      val t = loadTable(ident) match {
-        case g: GraftTable => g
-        case _ => throw new UnsupportedOperationException(
-          s"DROP COLUMN on ${ident.name}: not a committed store")
-      }
+      val t = committed(ident, "DROP COLUMN")
       val exists = t.schema.fieldNames.exists(_.equalsIgnoreCase(name))
       if (!exists) {
         if (c.ifExists == java.lang.Boolean.TRUE) ()
@@ -408,11 +389,8 @@ class GraftCatalog extends TableCatalog
         require(!t.partCol.exists(_.equalsIgnoreCase(name)),
           s"DROP COLUMN ${ident.name}.$name: the partition column is " +
             "a row's location — not droppable")
-        val keyProp = Versioned.currentVersion(spark, dir)
-          .flatMap(v => Versioned.tableProps(spark, dir, v)
-            .collectFirst { case (k, kv)
-                if k.equalsIgnoreCase("keyCol") => kv })
-        require(!keyProp.exists(_.equalsIgnoreCase(name)),
+        require(!TableDoor.keyCol(spark, dir, Map.empty)
+            .exists(_.equalsIgnoreCase(name)),
           s"DROP COLUMN ${ident.name}.$name: the merge key is a row's " +
             "identity — not droppable")
         val v = Versioned.currentVersion(spark, dir).get
@@ -449,14 +427,9 @@ class GraftCatalog extends TableCatalog
       c.constraint match {
         case chk: org.apache.spark.sql.connector.catalog
             .constraints.Check =>
-          val pc = loadTable(ident) match {
-            case g: GraftTable => g.partCol.getOrElse(
-              throw new UnsupportedOperationException(
-                s"ADD CONSTRAINT on ${ident.name}: the store is " +
-                  "unpartitioned — use the merge API"))
-            case _ => throw new UnsupportedOperationException(
-              s"ADD CONSTRAINT on ${ident.name}: not a committed store")
-          }
+          val pc = TableDoor.requirePartCol(
+            committed(ident, "ADD CONSTRAINT").partCol, "ADD CONSTRAINT",
+            ident.name, dir)
           MergeOps.addConstraint(spark, dir, chk.name,
             chk.predicateSql, pc)
         case other => readOnly(
@@ -482,6 +455,15 @@ class GraftCatalog extends TableCatalog
       MergeOps.unsetTableProperties(spark, dir, unsets)
     loadTable(ident)
   }
+
+  /** The committed store `ident` names, or a loud decline of `verb`
+    * (a pending table has nothing to alter yet). */
+  private def committed(ident: Identifier, verb: String): GraftTable =
+    loadTable(ident) match {
+      case g: GraftTable => g
+      case _ => throw new UnsupportedOperationException(
+        s"$verb on ${ident.name}: not a committed store")
+    }
 
   /** `DROP TABLE graft.t` → [[graft.engine.Versioned.dropTable]]: the
     * whole store (data, commit log, sidecars — or just the pending
@@ -516,9 +498,7 @@ private[sql] object ExtraCols {
   val Key = "graft.schema.extra"
 
   def read(spark: SparkSession, dir: String): StructType =
-    Versioned.currentVersion(spark, dir)
-      .flatMap(v => Versioned.tableProps(spark, dir, v)
-        .collectFirst { case (k, j) if k == Key => j })
+    TableDoor.currentProps(spark, dir).get(Key)
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[StructType])
       .getOrElse(new StructType())
@@ -535,9 +515,7 @@ private[sql] object ExtraCols {
   val DroppedKey = "graft.schema.dropped"
 
   def dropped(spark: SparkSession, dir: String): Seq[String] =
-    Versioned.currentVersion(spark, dir)
-      .flatMap(v => Versioned.tableProps(spark, dir, v)
-        .collectFirst { case (k, j) if k == DroppedKey => j })
+    TableDoor.currentProps(spark, dir).get(DroppedKey)
       .map(_.split('\u0001').toSeq.filter(_.nonEmpty))
       .getOrElse(Nil)
 
@@ -621,11 +599,7 @@ private[sql] class GraftPendingTable(spark: SparkSession, dir: String,
   override val schema: StructType = declared
   override def partitioning(): Array[Transform] =
     Array(Expressions.identity(partCol))
-  override def properties(): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    props.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
+  override def properties(): java.util.Map[String, String] = props.asJava
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
@@ -634,49 +608,27 @@ private[sql] class GraftPendingTable(spark: SparkSession, dir: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = new ScanBuilder {
-    override def build(): Scan = new Scan with V1Scan {
+    override def build(): Scan = new GraftV1Scan {
       override def readSchema(): StructType = declared
       override def description(): String =
         s"GraftPendingScan[$ident, empty]"
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = declared
-          override def buildScan(): RDD[Row] =
-            spark.sparkContext.emptyRDD[Row]
-        }.asInstanceOf[T]
+      override protected def rows(): RDD[Row] =
+        spark.sparkContext.emptyRDD[Row]
     }
   }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val opts = info.options().asScala.toMap.map { case (k, v) =>
-      k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            new InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                                  overwrite: Boolean): Unit = {
-                val key = opts.get("keycol")
-                  .orElse(props.collectFirst { case (k, v)
-                      if k.equalsIgnoreCase("keyCol") => v })
-                  .getOrElse(throw new IllegalArgumentException(
-                    s"the first write into $ident needs the merge " +
-                      "key: declare TBLPROPERTIES('keyCol'='…') at " +
-                      "CREATE TABLE or pass .option(\"keyCol\", …)"))
-                require(!overwrite,
-                  s"INSERT OVERWRITE into $ident is not supported")
-                MergeOps.mergeUpsert(spark, dir, data, key, partCol)
-                if (props.nonEmpty)
-                  MergeOps.setTableProperties(spark, dir, props)
-              }
-            }
-        }
-    }
+    val opts = TableDoor.options(info.options())
+    new GraftWriteBuilder((data, replace) => {
+      val key = TableDoor.requireKeyCol(spark, dir, opts,
+        "the first write into", ident, Some(props))
+      require(!replace, s"INSERT OVERWRITE into $ident is not supported")
+      MergeOps.mergeUpsert(spark, dir, data, key, partCol)
+      if (props.nonEmpty)
+        MergeOps.setTableProperties(spark, dir, props)
+    })
   }
 }
 
@@ -762,17 +714,8 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
     * checks ([[ExtraCols.unmaterialized]]). */
   private[sql] def manifestEntries: Seq[(String, String)] = man
 
-  /** The partition column, recovered from the manifest's own
-    * `col=value` entry names (absent for whole-table stores). On a
-    * MIXED-layout manifest (mid metadata-tier spec evolution) any
-    * `col=` entry will do: the readers only use Some-ness to choose
-    * the per-version-group `basePath` read, which re-derives each
-    * group's own dir column — so scan the whole manifest for one
-    * rather than trusting the first entry's sort luck (a whole-table
-    * entry sorting first must not blind the read to dir columns). */
-  private[sql] val partCol: Option[String] =
-    man.map(_._1).find(_.contains('='))
-      .map(_.takeWhile(_ != '='))
+  /** The partition column ([[graft.engine.Versioned.partColOf]]). */
+  private[sql] val partCol: Option[String] = Versioned.partColOf(man)
 
   override def name(): String = ident
 
@@ -813,8 +756,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
     * layouts (a one-column answer would silently drop the foreign
     * ones). */
   private def layoutEntries(verb: String): Seq[(String, String)] = {
-    val pc = partCol.getOrElse(throw new UnsupportedOperationException(
-      s"$verb $ident: the store is unpartitioned"))
+    val pc = TableDoor.requirePartCol(partCol, verb, ident, dir)
     val (mine, foreign) = man.partition(_._1.startsWith(s"$pc="))
     if (foreign.nonEmpty)
       throw new UnsupportedOperationException(
@@ -908,12 +850,8 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
   }
 
   /** Persisted TBLPROPERTIES (surfaces in `SHOW TBLPROPERTIES`). */
-  override def properties(): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    Versioned.tableProps(spark, dir, version).foreach { case (k, v) =>
-      m.put(k, v) }
-    m
-  }
+  override def properties(): java.util.Map[String, String] =
+    Versioned.tableProps(spark, dir, version).asJava
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
@@ -923,22 +861,12 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
                          TableCapability.STREAMING_WRITE,
                          TableCapability.TRUNCATE)
 
-  /** The merge key every write verb needs: the writer option wins,
-    * else the persisted `keyCol` table property at the CURRENT
-    * version (a stale handle must not resurrect a renamed key);
-    * absent both, fail loudly before staging a byte. */
-  private def resolvedKeyCol(opts: Map[String, String],
-                             verb: String): String =
-    opts.get("keycol").orElse(
-      Versioned.tableProps(spark, dir,
-          Versioned.currentVersion(spark, dir).getOrElse(version))
-        .collectFirst { case (k, v)
-            if k.equalsIgnoreCase("keyCol") => v })
-      .getOrElse(throw new IllegalArgumentException(
-        s"$verb $ident needs the table's merge key: " +
-          "persist it once with ALTER TABLE … SET " +
-          "TBLPROPERTIES('keyCol'='…') or pass " +
-          ".option(\"keyCol\", …) on the writer"))
+  /** The merge key and partition column every write verb needs
+    * ([[TableDoor.requireKeyCol]], [[TableDoor.requirePartCol]]). */
+  private[sql] def keyAndPart(opts: Map[String, String],
+                              verb: String): (String, String) =
+    (TableDoor.requireKeyCol(spark, dir, opts, verb, ident),
+     TableDoor.requirePartCol(partCol, verb, ident, dir))
 
   /** SQL DELETE: translatable WHERE + a partitioned store → the
     * predicate delete. Declining (`false`) surfaces Spark's loud
@@ -948,10 +876,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
       FilterColumns.toColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val pc = partCol.getOrElse(throw new UnsupportedOperationException(
-      s"DELETE FROM $ident: the store under $dir is unpartitioned — " +
-        "predicate deletes need the partition-dir layout; use the " +
-        "merge API"))
+    val pc = TableDoor.requirePartCol(partCol, "DELETE FROM", ident, dir)
     val cols = filters.toSeq.map(f => FilterColumns.toColumn(f).getOrElse(
       throw new UnsupportedOperationException(
         s"DELETE FROM $ident: cannot translate filter $f")))
@@ -971,66 +896,71 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val opts = info.options().asScala.toMap.map { case (k, v) =>
-      k.toLowerCase(java.util.Locale.ROOT) -> v }
-    new org.apache.spark.sql.connector.write.WriteBuilder
-        with org.apache.spark.sql.connector.write.SupportsTruncate
-        with org.apache.spark.sql.internal.connector
-          .SupportsStreamingUpdateAsAppend {
-      private var replaceAll = false
-      override def truncate()
-          : org.apache.spark.sql.connector.write.WriteBuilder = {
-        replaceAll = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            new InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                                  overwrite: Boolean): Unit = {
-                val key = resolvedKeyCol(opts, "INSERT INTO")
-                val pc = partCol.getOrElse(
-                  throw new UnsupportedOperationException(
-                    s"INSERT INTO $ident: the store under $dir is " +
-                      "unpartitioned — use the merge API"))
-                if (replaceAll || overwrite)
-                  MergeOps.replaceTable(spark, dir, data, key, pc)
-                else
-                  MergeOps.mergeUpsert(spark, dir, data, key, pc)
-              }
-            }
-
-          /** `df.writeStream.toTable("graft.t")`: one store version per
-            * micro-batch, exactly-once by the applied-batch ledger —
-            * see [[GraftStreamingWrite]]. Append and update modes only
-            * (update = upsert by the merge key, exactly this sink's
-            * semantics); complete mode's per-trigger replace has no
-            * ledger slot, so it declines loudly rather than replay a
-            * non-idempotent epoch. */
-          override def toStreaming: org.apache.spark.sql.connector
-              .write.streaming.StreamingWrite = {
-            if (replaceAll) throw new UnsupportedOperationException(
-              s"writeStream to $ident: complete mode (per-trigger " +
-                "full-table replace) is not exactly-once under " +
-                "epoch replay — use foreachBatch with " +
-                "MergeOps.replaceTable, or update/append mode")
-            val key = resolvedKeyCol(opts, "writeStream to")
-            val pc = partCol.getOrElse(
-              throw new UnsupportedOperationException(
-                s"writeStream to $ident: the store under $dir is " +
-                  "unpartitioned — use foreachBatch with the merge API"))
-            new GraftStreamingWrite(spark, dir, ident,
-              info.queryId(), info.schema(), key, pc)
-          }
-        }
-    }
+    val opts = TableDoor.options(info.options())
+    new GraftWriteBuilder(
+      (data, replace) => {
+        val (key, pc) = keyAndPart(opts, "INSERT INTO")
+        if (replace) MergeOps.replaceTable(spark, dir, data, key, pc)
+        else MergeOps.mergeUpsert(spark, dir, data, key, pc)
+      },
+      /* `df.writeStream.toTable("graft.t")`: one store version per
+       * micro-batch, exactly-once by the applied-batch ledger — see
+       * [[GraftStreamingWrite]]. Append and update modes only (update =
+       * upsert by the merge key, exactly this sink's semantics);
+       * complete mode's per-trigger replace has no ledger slot, so it
+       * declines loudly rather than replay a non-idempotent epoch. */
+      replace => {
+        if (replace) throw new UnsupportedOperationException(
+          s"writeStream to $ident: complete mode (per-trigger " +
+            "full-table replace) is not exactly-once under " +
+            "epoch replay — use foreachBatch with " +
+            "MergeOps.replaceTable, or update/append mode")
+        val key = TableDoor.requireKeyCol(spark, dir, opts,
+          "writeStream to", ident)
+        val pc = TableDoor.requirePartCol(partCol, "writeStream to", ident,
+          dir, "use foreachBatch with the merge API")
+        new GraftStreamingWrite(spark, dir, ident,
+          info.queryId(), info.schema(), key, pc)
+      })
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
     new GraftScanBuilder(spark, dir, version, man, partCol, schema,
-      options.asScala.toMap.map { case (k, v) =>
-        k.toLowerCase(java.util.Locale.ROOT) -> v })
+      openStream(TableDoor.options(options), _))
+
+  /** `spark.readStream.table("graft.corpus")`: the plain-table stream —
+    * a bootstrap snapshot then ROW IMAGES of every later insert/update
+    * at the table schema (Delta's readStream-on-a-table shape).
+    * Deletes fail loudly unless `ignoreDeletes`; the CDC stream with
+    * change_type rows is the catalog's `changes` namespace. Reader
+    * options are the feed's ([[graft.streaming.ChangeFeedStream.open]]),
+    * with `startVersion` defaulting to 0 = bootstrap; the merge key
+    * follows [[TableDoor.keyCol]], and an unpartitioned store takes the
+    * `partCol` option. Batch pushdown state (pruned columns, pushed
+    * filters) never reaches this path: streaming scans are built
+    * without the pushdown rules, so the stream emits the full table
+    * schema — exactly the relation's analysis output. */
+  private def openStream(opts: Map[String, String],
+                         checkpoint: String): MicroBatchStream = {
+    // declared-but-unmaterialized columns (ExtraCols) would make the
+    // staged row images narrower than the relation schema — decline
+    // loudly; one write carrying the column clears this
+    val declaredOnly = ExtraCols.unmaterialized(spark, dir, man, partCol)
+    require(declaredOnly.isEmpty,
+      s"streaming graft table at $dir: declared column(s) " +
+        s"${declaredOnly.mkString(", ")} are not materialized in any " +
+        "file yet (ALTER TABLE ADD COLUMNS without a carrying write) — " +
+        "row-image batches would be narrower than the table schema; " +
+        "run one write that carries the column first")
+    // default 0 = BOOTSTRAP: "the table, as a stream" means the full
+    // snapshot first, then the changes — Delta's readStream semantics
+    graft.streaming.ChangeFeedStream.open(spark, opts, dir,
+      TableDoor.requireKeyCol(spark, dir, opts, "readStream of", ident),
+      TableDoor.requirePartCol(partCol.orElse(opts.get("partcol")),
+        "readStream of", ident, dir, "pass .option(\"partCol\", …)"),
+      checkpoint, schema, rowImage = true, defaultStart = Some(0L))
+  }
 }
 
 /** Routes Spark's pushed filters into prune specs through the shared
@@ -1044,7 +974,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
 class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
                        man: Seq[(String, String)],
                        partCol: Option[String], fullSchema: StructType,
-                       options: Map[String, String] = Map.empty)
+                       stream: String => MicroBatchStream)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
@@ -1439,7 +1369,7 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
       new GraftAggAnswerScan(spark, dir, version, schema, row)
     case None =>
       new GraftScan(spark, dir, version, scanMan, partCol, required,
-                    ranges, values, fullSchema, options)
+                    ranges, values, stream)
   }
 
 }
@@ -1449,23 +1379,17 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
   * footers and manifest names on the driver. */
 class GraftAggAnswerScan(spark: SparkSession, dir: String, version: Long,
                          answerSchema: StructType, answer: Seq[Row])
-    extends Scan with V1Scan {
+    extends GraftV1Scan {
 
   override def readSchema(): StructType = answerSchema
 
   override def description(): String =
     s"GraftAggAnswerScan[$dir@v$version, metadata-only]"
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = answerSchema
-      override def buildScan(): RDD[Row] = {
-        GraftScanObservable.lastAggPushed = Some(description())
-        spark.sparkContext.parallelize(answer, 1)
-      }
-    }.asInstanceOf[T]
+  override protected def rows(): RDD[Row] = {
+    GraftScanObservable.lastAggPushed = Some(description())
+    spark.sparkContext.parallelize(answer, 1)
+  }
 }
 
 /** The pruned read, delivered through `V1Scan` (the JDBC-connector
@@ -1479,9 +1403,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
                 required: StructType,
                 ranges: Seq[(String, Long, Long)],
                 values: Seq[(String, Seq[String])],
-                fullSchema: StructType = new StructType(),
-                options: Map[String, String] = Map.empty)
-    extends Scan with V1Scan
+                stream: String => MicroBatchStream)
+    extends GraftV1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -1536,97 +1459,40 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
     s"GraftScan[$dir@v$version, ranges=${ranges.size}, " +
       s"values=${values.size}]"
 
-  /** `spark.readStream.table("graft.corpus")`: the plain-table stream —
-    * a bootstrap snapshot then ROW IMAGES of every later insert/update
-    * at the table schema (Delta's readStream-on-a-table shape).
-    * Deletes fail loudly unless `ignoreDeletes`; the CDC stream with
-    * change_type rows is the catalog's `changes` namespace. Reader
-    * options: `keyCol` (required — the store does not record its merge
-    * key), optional `partCol` (unpartitioned stores), `startVersion`
-    * (default 0 = bootstrap), `maxVersionsPerTrigger` /
-    * `maxBytesPerTrigger` pacing, `pinRetention` (tag the unread floor
-    * against vacuum), `ignoreDeletes`. Batch pushdown state (pruned
-    * columns, pushed filters) never reaches this path: streaming scans
-    * are built without the pushdown rules, so the stream emits the
-    * full table schema — exactly the relation's analysis output. */
+  /** `spark.readStream.table("graft.corpus")`: the owning table's
+    * plain-table stream ([[GraftTable]]'s `openStream`). */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val keyCol = options.get("keycol")
-      .orElse(Versioned.tableProps(spark, dir, version)
-        .collectFirst { case (k, v)
-            if k.equalsIgnoreCase("keyCol") => v })
-      .getOrElse(throw new IllegalArgumentException(
-        "streaming a graft table needs .option(\"keyCol\", ...) or a " +
-          "persisted keyCol table property (ALTER TABLE … SET " +
-          "TBLPROPERTIES('keyCol'='…'))"))
-    val pc = partCol.orElse(options.get("partcol")).getOrElse(
-      throw new IllegalArgumentException(
-        "streaming a graft table needs a partition column: the store " +
-          "is unpartitioned, pass .option(\"partCol\", ...)"))
-    val maxV = options.get("maxversionspertrigger").map(_.trim.toLong)
-    val maxB = options.get("maxbytespertrigger").map(_.trim.toLong)
-    // default 0 = BOOTSTRAP: "the table, as a stream" means the full
-    // snapshot first, then the changes — Delta's readStream semantics
-    val startV = options.get("startversion").map(_.trim.toLong)
-      .orElse(Some(0L))
-    // declared-but-unmaterialized columns (ExtraCols) would make the
-    // staged row images narrower than the relation schema — decline
-    // loudly; one write carrying the column clears this
-    val declaredOnly = ExtraCols.unmaterialized(spark, dir, man, partCol)
-    require(declaredOnly.isEmpty,
-      s"streaming graft table at $dir: declared column(s) " +
-        s"${declaredOnly.mkString(", ")} are not materialized in any " +
-        "file yet (ALTER TABLE ADD COLUMNS without a carrying write) — " +
-        "row-image batches would be narrower than the table schema; " +
-        "run one write that carries the column first")
-    new graft.streaming.ChangeFeedStream(spark, dir, keyCol, pc,
-      graft.streaming.ChangeFeedStream.resolveBase(
-        spark, checkpointLocation, dir, startV),
-      maxV, maxB, checkpointLocation, fullSchema,
-      rowImage = true,
-      ignoreDeletes =
-        options.get("ignoredeletes").exists(_.trim.toBoolean),
-      pinRetention =
-        options.get("pinretention").exists(_.trim.toBoolean))
-  }
+      : MicroBatchStream = stream(checkpointLocation)
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftRelation(context).asInstanceOf[T]
+  // what a formatted plan's scan node prints: the store and version
+  override protected def relationName: String =
+    s"GraftRelation($dir@v$version)"
 
-  private class GraftRelation(context: SQLContext)
-      extends BaseRelation with TableScan {
-    override def sqlContext: SQLContext = context
-    override def schema: StructType = required
-    // what a formatted plan's scan node prints: the store and version
-    override def toString: String = s"GraftRelation($dir@v$version)"
-
-    override def buildScan(): RDD[Row] = {
-      // the shared pruned reader: sidecars load only for the probed
-      // tiers and columns, partition-key values also prune on the
-      // manifest names, and the typed residuals run INSIDE the inner
-      // plan so parquet row-group stats skip within survivors; Spark
-      // re-applies the original filters post-scan
-      val (kept, filtered) = MergeOps.skipPrunedRead(spark, dir, version,
-        man, partCol, ranges, values)
-      GraftScanObservable.lastKeptDirs = kept.map(_._1)
-      // declared-but-unmaterialized columns (ALTER TABLE ADD COLUMNS,
-      // see ExtraCols) null-fill here: no kept file carries them yet
-      val withDeclared = required.fields.toSeq.foldLeft(filtered) {
-        (df, f) =>
-          if (df.columns.exists(_.equalsIgnoreCase(f.name))) df
-          else df.withColumn(f.name,
-            org.apache.spark.sql.functions.lit(null).cast(f.dataType))
-      }
-      // cast-align to the DECLARED read schema: over a mixed-layout
-      // manifest a partition column is dir-derived in one version
-      // group and file-stored in another, and the union's coerced type
-      // can disagree with the table schema (inference types `p=2` as
-      // int, the files store string) — the no-op casts fold away when
-      // types already match
-      withDeclared.select(required.fields.toSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*).rdd
+  override protected def rows(): RDD[Row] = {
+    // the shared pruned reader: sidecars load only for the probed
+    // tiers and columns, partition-key values also prune on the
+    // manifest names, and the typed residuals run INSIDE the inner
+    // plan so parquet row-group stats skip within survivors; Spark
+    // re-applies the original filters post-scan
+    val (kept, filtered) = MergeOps.skipPrunedRead(spark, dir, version,
+      man, partCol, ranges, values)
+    GraftScanObservable.lastKeptDirs = kept.map(_._1)
+    // declared-but-unmaterialized columns (ALTER TABLE ADD COLUMNS,
+    // see ExtraCols) null-fill here: no kept file carries them yet
+    val withDeclared = required.fields.toSeq.foldLeft(filtered) {
+      (df, f) =>
+        if (df.columns.exists(_.equalsIgnoreCase(f.name))) df
+        else df.withColumn(f.name,
+          org.apache.spark.sql.functions.lit(null).cast(f.dataType))
     }
+    // cast-align to the DECLARED read schema: over a mixed-layout
+    // manifest a partition column is dir-derived in one version
+    // group and file-stored in another, and the union's coerced type
+    // can disagree with the table schema (inference types `p=2` as
+    // int, the files store string) — the no-op casts fold away when
+    // types already match
+    withDeclared.select(required.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*).rdd
   }
 }
 
@@ -1634,8 +1500,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
   * reads deliver [[graft.ops.BranchOps.readBranch]] (branch manifest +
   * dv refs, data resolved against the root — fork-inherited and
   * branch-staged dirs both); INSERT maps onto
-  * [[graft.ops.BranchOps.branchUpsert]] with the merge key from the
-  * ROOT table's persisted `keyCol` property. This is the AUDIT
+  * [[graft.ops.BranchOps.branchUpsert]] with the merge key resolved
+  * against the ROOT table ([[TableDoor.keyCol]]). This is the AUDIT
   * surface — no sidecar pruning (a branch head is read whole before
   * publish), no OVERWRITE (a branch replace has no WAP meaning). */
 class GraftBranchTable(spark: SparkSession, dir: String, branch: String,
@@ -1649,11 +1515,9 @@ class GraftBranchTable(spark: SparkSession, dir: String, branch: String,
     throw new IllegalStateException(
       s"branch '$branch' under $dir has no committed version — a " +
         "crashed create; drop and re-create it"))
-  private val pc: String = Versioned.manifest(spark, bdir, bv)
-    .map(_._1).find(_.contains('=')).map(_.takeWhile(_ != '='))
-    .getOrElse(throw new UnsupportedOperationException(
-      s"branch '$branch' under $dir is unpartitioned — use the " +
-        "branch API"))
+  private val pc: String = TableDoor.requirePartCol(
+    Versioned.partColOf(Versioned.manifest(spark, bdir, bv)), "branch",
+    ident, dir, "use the branch API")
 
   override def name(): String = ident
   override val schema: StructType =
@@ -1669,47 +1533,27 @@ class GraftBranchTable(spark: SparkSession, dir: String, branch: String,
     private var required: StructType = schema
     override def pruneColumns(req: StructType): Unit =
       if (req.nonEmpty) required = req
-    override def build(): Scan = new Scan with V1Scan {
+    override def build(): Scan = new GraftV1Scan {
       override def readSchema(): StructType = required
       override def description(): String =
         s"GraftBranchScan[$dir@$branch]"
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = required
-          override def buildScan(): RDD[Row] =
-            BranchOps.readBranch(spark, dir, branch, pc)
-              .select(required.fieldNames.toSeq.map(col): _*).rdd
-        }.asInstanceOf[T]
+      override protected def rows(): RDD[Row] =
+        BranchOps.readBranch(spark, dir, branch, pc)
+          .select(required.fieldNames.toSeq.map(col): _*).rdd
     }
   }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            new InsertableRelation {
-              override def insert(data: org.apache.spark.sql.DataFrame,
-                                  overwrite: Boolean): Unit = {
-                require(!overwrite,
-                  s"INSERT OVERWRITE on $ident: a branch replace has " +
-                    "no write-audit-publish meaning — drop and " +
-                    "re-create the branch instead")
-                val key = Versioned.tableProps(spark, dir,
-                    Versioned.currentVersion(spark, dir).get)
-                  .collectFirst { case (k, v)
-                      if k.equalsIgnoreCase("keyCol") => v }
-                  .getOrElse(throw new IllegalArgumentException(
-                    s"INSERT INTO $ident needs the ROOT table's merge " +
-                      "key: ALTER TABLE … SET TBLPROPERTIES" +
-                      "('keyCol'='…') on the main table first"))
-                BranchOps.branchUpsert(spark, dir, branch, data, key, pc)
-              }
-            }
-        }
-    }
+      : org.apache.spark.sql.connector.write.WriteBuilder = {
+    val opts = TableDoor.options(info.options())
+    new GraftWriteBuilder((data, replace) => {
+      require(!replace,
+        s"INSERT OVERWRITE on $ident: a branch replace has " +
+          "no write-audit-publish meaning — drop and " +
+          "re-create the branch instead")
+      BranchOps.branchUpsert(spark, dir, branch, data,
+        TableDoor.requireKeyCol(spark, dir, opts, "INSERT INTO", ident), pc)
+    })
+  }
 }

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
 
 import org.apache.spark.sql.graftbridge.ClassicBridge
 
-import graft.engine.Versioned
 import graft.ops.MergeOps
 
 /** SQL `UPDATE` and `MERGE INTO` for the versioned store — the two
@@ -62,26 +61,6 @@ object GraftDml {
     if (!exp.extraStrategies.exists(_.isInstanceOf[GraftDmlStrategy]))
       exp.extraStrategies = new GraftDmlStrategy +: exp.extraStrategies
   }
-
-  /** The table's merge key: the persisted `keyCol` table property —
-    * the same contract SQL INSERT uses ([[GraftTable.newWriteBuilder]]).
-    * A row-level write without a key has no row identity to write to. */
-  private[sql] def keyColOf(s: SparkSession, g: GraftTable,
-                            verb: String): String =
-    Versioned.tableProps(s, g.storeDir,
-        Versioned.currentVersion(s, g.storeDir).getOrElse(
-          throw new IllegalStateException(
-            s"$verb ${g.name}: no committed version under ${g.storeDir}")))
-      .collectFirst { case (k, v) if k.equalsIgnoreCase("keyCol") => v }
-      .getOrElse(throw new UnsupportedOperationException(
-        s"$verb ${g.name} needs the table's merge key: persist it once " +
-          "with ALTER TABLE … SET TBLPROPERTIES('keyCol'='…')"))
-
-  private[sql] def partColOf(g: GraftTable, verb: String): String =
-    g.partCol.getOrElse(throw new UnsupportedOperationException(
-      s"$verb ${g.name}: the store under ${g.storeDir} is " +
-        "unpartitioned — row-level SQL writes need the partition-dir " +
-        "layout; use the merge API"))
 
   /** Resolved attribute refs → name refs, so an expression lifted from
     * the analyzed command re-resolves against the DataFrames the merge
@@ -148,8 +127,8 @@ case class GraftUpdateCommand(table: GraftTable,
     extends LeafRunnableCommand {
   override def run(s: SparkSession): Seq[Row] = {
     import GraftDml._
-    val key = keyColOf(s, table, "UPDATE")
-    val pc = partColOf(table, "UPDATE")
+    // a row-level write without a key has no row identity to write to
+    val (key, pc) = table.keyAndPart(Map.empty, "UPDATE")
     // declared-but-unmaterialized columns (ALTER TABLE ADD COLUMNS
     // with no carrying write yet) exist only in metadata: the CoW
     // update reads raw files, so touching one would either fail
@@ -211,8 +190,7 @@ case class GraftMergeCommand(table: GraftTable, target: LogicalPlan,
 
   override def run(s: SparkSession): Seq[Row] = {
     val ident = table.name
-    val key = keyColOf(s, table, "MERGE INTO")
-    val pc = partColOf(table, "MERGE INTO")
+    val (key, pc) = table.keyAndPart(Map.empty, "MERGE INTO")
     noSubquery(mergeCond, s"MERGE INTO $ident ON")
     (matched ++ notMatched ++ notMatchedBySource).foreach { a =>
       a.condition.foreach(noSubquery(_, s"MERGE INTO $ident WHEN"))

@@ -208,11 +208,10 @@ private[sql] object GraftProcedures {
     val v = Versioned.currentVersion(s, dir).getOrElse(
       throw new IllegalArgumentException(
         s"no committed version under $dir — not a graft store"))
-    Versioned.manifest(s, dir, v).map(_._1).find(_.contains('='))
-      .map(_.takeWhile(_ != '='))
-      .getOrElse(throw new UnsupportedOperationException(
-        s"the store under $dir is unpartitioned — maintenance " +
-          "procedures need the partition-dir layout"))
+    TableDoor.requirePartCol(
+      Versioned.partColOf(Versioned.manifest(s, dir, v)),
+      "maintenance procedure on", new Path(dir).getName, dir,
+      "maintenance procedures need the partition-dir layout")
   }
 }
 

@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{BytesWritable, NullWritable, SequenceFile}
@@ -22,6 +20,7 @@ import org.apache.spark.util.SerializableConfiguration
 
 import graft.engine.Versioned
 import graft.ops.MergeOps
+import graft.sql.TableDoor
 
 /** A Structured Streaming SOURCE over a versioned store's change feed —
   * the read-side completion of the CDC story (Delta's
@@ -104,56 +103,42 @@ import graft.ops.MergeOps
   * mirror's high-water version to pin it); each latestOffset is one
   * bounded `commits/` listing. */
 class ChangeFeedSourceProvider extends TableProvider with DataSourceRegister {
+  import ChangeFeedSourceProvider._
 
   override def shortName(): String = "graft-change-feed"
 
-  private def lower(m: Map[String, String]): Map[String, String] =
-    m.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-
-  private def required(p: Map[String, String], k: String): String =
-    p.getOrElse(k, throw new IllegalArgumentException(
-      s"graft-change-feed needs option '$k' (have: ${p.keys.toSeq.sorted
-        .mkString(", ")})"))
-
-  private[streaming] def feedSchema(spark: SparkSession, dir: String,
-                                    partCol: String): StructType = {
-    val base = Versioned.readCurrent(spark, dir, Some(partCol)).schema
-    require(!base.fieldNames.contains("change_type"),
-      s"the table under $dir already has a change_type column — the " +
-        "feed cannot add its classification column")
-    base.add("change_type", StringType, nullable = false)
-  }
-
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val p = lower(options.asScala.toMap)
+    val p = TableDoor.options(options)
     feedSchema(SparkSession.active, required(p, "dir"),
-      required(p, "partcol"))
+      Some(required(p, "partcol")))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new ChangeFeedTable(schema, lower(properties.asScala.toMap))
+    new ChangeFeedTable(schema, TableDoor.options(properties))
+}
 
-  private[streaming] def parse(p: Map[String, String])
-      : (String, String, String, Option[Long], Option[Long], Option[Long],
-         Option[String]) = {
-    val maxPerTrigger = p.get("maxversionspertrigger").map(_.trim.toLong)
-    maxPerTrigger.foreach(m => require(m >= 1,
-      s"maxVersionsPerTrigger must be >= 1, got $m"))
-    val maxBytes = p.get("maxbytespertrigger").map(_.trim.toLong)
-    maxBytes.foreach(b => require(b >= 1,
-      s"maxBytesPerTrigger must be >= 1, got $b"))
-    require(!(p.contains("startversion") && p.contains("starttag")),
-      "pass startVersion or startTag, not both")
-    (required(p, "dir"), required(p, "keycol"), required(p, "partcol"),
-      p.get("startversion").map(_.trim.toLong), maxPerTrigger, maxBytes,
-      p.get("starttag").map(_.trim))
+object ChangeFeedSourceProvider {
+  private[streaming] def required(p: Map[String, String], k: String): String =
+    p.getOrElse(k, throw new IllegalArgumentException(
+      s"graft-change-feed needs option '$k' (have: ${p.keys.toSeq.sorted
+        .mkString(", ")})"))
+
+  /** The feed's schema: the store's current schema plus `change_type`. */
+  private[graft] def feedSchema(spark: SparkSession, dir: String,
+                                partCol: Option[String]): StructType = {
+    val base = Versioned.readCurrent(spark, dir, partCol).schema
+    require(!base.fieldNames.contains("change_type"),
+      s"the table under $dir already has a change_type column — the " +
+        "feed cannot add its classification column")
+    base.add("change_type", StringType, nullable = false)
   }
 }
 
 private[graft] class ChangeFeedTable(schema: StructType,
                                      props: Map[String, String])
     extends Table with SupportsRead {
+  import ChangeFeedSourceProvider.required
 
   override def name(): String =
     s"graft-change-feed(${props.getOrElse("dir", "?")})"
@@ -167,38 +152,20 @@ private[graft] class ChangeFeedTable(schema: StructType,
       // scan-time options override table properties: on the V1-format
       // path both maps are the same stream options (merge is a no-op);
       // on the CATALOG path props carry what the table derived (dir,
-      // partcol) and the reader's .option(...) calls land here
-      private val merged: Map[String, String] = props ++
-        options.asScala.toMap.map { case (k, v) =>
-          k.toLowerCase(java.util.Locale.ROOT) -> v }
+      // partcol, the persisted keycol) and the reader's .option(...)
+      // calls land here
+      private val merged = props ++ TableDoor.options(options)
       override def build(): Scan = this
       override def readSchema(): StructType = schema
+      // rowImage stays false here: this table IS the CDC stream (its
+      // schema carries change_type); the row-image shape is the
+      // plain-table door, [[graft.sql.GraftTable]]'s
       override def toMicroBatchStream(checkpointLocation: String)
-          : MicroBatchStream = {
-        val spark = SparkSession.active
-        val (dir, keyCol, partCol, startV0, maxV, maxB, startTag) =
-          new ChangeFeedSourceProvider().parse(merged)
-        // `startTag`: resolved once at first creation; the persisted
-        // base (below) makes a later re-tag invisible to this stream
-        val startV = startV0.orElse(startTag.map { t =>
-          Versioned.tags(spark, dir).getOrElse(t,
-            throw new IllegalArgumentException(
-              s"no tag '$t' under $dir — live tags: " +
-                Versioned.tags(spark, dir).keys.toSeq.sorted
-                  .mkString(", ")))
-        })
-        new ChangeFeedStream(spark, dir, keyCol, partCol,
-          ChangeFeedStream.resolveBase(spark, checkpointLocation, dir,
-            startV),
-          maxV, maxB, checkpointLocation, schema,
-          // rowImage stays false here: this table IS the CDC stream
-          // (its schema carries change_type); the row-image shape is
-          // the plain-table door, [[graft.sql.GraftTable]]'s
-          ignoreDeletes =
-            merged.get("ignoredeletes").exists(_.trim.toBoolean),
-          pinRetention =
-            merged.get("pinretention").exists(_.trim.toBoolean))
-      }
+          : MicroBatchStream =
+        ChangeFeedStream.open(SparkSession.active, merged,
+          required(merged, "dir"), required(merged, "keycol"),
+          required(merged, "partcol"), checkpointLocation, schema,
+          rowImage = false, defaultStart = None)
     }
 }
 
@@ -209,6 +176,41 @@ case class FeedOffset(v: Long) extends Offset {
 }
 
 object ChangeFeedStream {
+  /** THE stream-option parser, shared by both doors — the CDC stream
+    * (`format("graft-change-feed")`, the catalog's `changes` namespace)
+    * and the plain-table row-image stream (`readStream.table("graft.t")`):
+    * checks `opts` (keys lower-cased; see [[ChangeFeedSourceProvider]]
+    * for their meaning) and opens the stream over `dir`, starting at
+    * `startVersion` or `startTag`, else `defaultStart` (None: changes
+    * committed after stream start). */
+  private[graft] def open(spark: SparkSession, opts: Map[String, String],
+                          dir: String, keyCol: => String, partCol: => String,
+                          checkpointLocation: String, schema: StructType,
+                          rowImage: Boolean,
+                          defaultStart: Option[Long]): ChangeFeedStream = {
+    def atLeastOne(k: String, name: String): Option[Long] =
+      opts.get(k).map(_.trim.toLong).map { m =>
+        require(m >= 1, s"$name must be >= 1, got $m"); m }
+    val maxV = atLeastOne("maxversionspertrigger", "maxVersionsPerTrigger")
+    val maxB = atLeastOne("maxbytespertrigger", "maxBytesPerTrigger")
+    require(!(opts.contains("startversion") && opts.contains("starttag")),
+      "pass startVersion or startTag, not both")
+    // `startTag`: resolved once at first creation; the persisted base
+    // (resolveBase) makes a later re-tag invisible to this stream
+    val startV = opts.get("startversion").map(_.trim.toLong).orElse(
+      opts.get("starttag").map(_.trim).map { t =>
+        Versioned.tags(spark, dir).getOrElse(t,
+          throw new IllegalArgumentException(
+            s"no tag '$t' under $dir — live tags: " +
+              Versioned.tags(spark, dir).keys.toSeq.sorted.mkString(", ")))
+      }).orElse(defaultStart)
+    new ChangeFeedStream(spark, dir, keyCol, partCol,
+      resolveBase(spark, checkpointLocation, dir, startV), maxV, maxB,
+      checkpointLocation, schema, rowImage,
+      ignoreDeletes = opts.get("ignoredeletes").exists(_.trim.toBoolean),
+      pinRetention = opts.get("pinretention").exists(_.trim.toBoolean))
+  }
+
   /** Resolve-and-persist the stream's initial base version: first
     * creation computes it (explicit `startVersion`, else current) and
     * records it write-once under the stream's own checkpoint dir;

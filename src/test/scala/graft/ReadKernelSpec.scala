@@ -24,8 +24,7 @@ class ReadKernelSpec extends SparkTestBase {
   private def rows = (1 to N).map(i => (i.toLong, i * 3L, i % Parts))
     .toDF("k", "v", "p")
 
-  // the catalog's root is fixed when the shared session first loads
-  // it, so every suite that reads through it uses the temp dir
+  // the catalog suites share the temp dir as the catalog root
   private val root =
     new java.io.File(sys.props("java.io.tmpdir")).getAbsolutePath
   private val table = "graft_rk40"
