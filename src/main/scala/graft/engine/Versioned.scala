@@ -553,9 +553,9 @@ object Versioned {
     * declares nothing (= touches everything); an empty one is a real
     * "content untouched" declaration (ledger ticks). Never carried. */
   private[graft] val Touch = "touch"
-  /** Per-partition zone maps (Iceberg's manifest stats): range bounds
-    * ([[readStatsMulti]]), dictionaries, blooms and per-file row counts,
-    * one line per partition × column. Stats make range pruning
+  /** Per-partition zone maps (Iceberg's manifest stats): range bounds,
+    * dictionaries, blooms and per-file row counts ([[StatsLine]]), one
+    * line per entry × column. Stats make range pruning
     * LAYOUT-AGNOSTIC — the reader needs only the bounds, not how the
     * writer clustered the data — and are an optimization, never a
     * correctness gate: a missing line merely reads the partition. */
@@ -1236,120 +1236,270 @@ object Versioned {
       l.substring(0, i) -> l.substring(i + 1)
     }.toMap
 
-  /** Per-partition, per-column committed bounds of version `v` —
-    * partition dir name → column → (lo, hi) of the committed stats
-    * sidecar (resolved through the marker token; empty if the winning
-    * attempt wrote none). Unnamed legacy 3-field lines, which writers
-    * no longer produce, surface under the column name `__key__` — no
-    * pruning hint names that column, so they never prune. Dictionary
-    * lines (see [[readStatsDict]]) ride the same sidecar and are
-    * skipped here — each reader takes the line forms it understands
-    * (stats are an optimization, never a correctness gate). */
-  def readStatsMulti(s: SparkSession, dir: String,
-                     v: Long): Map[String, Map[String, (Long, Long)]] =
-    sidecarLines(s, dir, v, Stats).flatMap { line =>
-      val parts = line.split('\t')
-      // a range line's third field is the numeric lo bound — tagged
-      // forms (dict, bloom, future kinds) are other readers' lines
-      if (parts.length == 4 && parts(2).nonEmpty &&
-          parts(2).forall(c => c.isDigit || c == '-'))
-        Some((parts(0), parts(1), (parts(2).toLong, parts(3).toLong)))
-      else if (parts.length == 3)
-        Some((parts(0), "__key__", (parts(1).toLong, parts(2).toLong)))
-      else None
-    }.groupBy(_._1).map { case (part, rows) =>
-      part -> rows.map(r => r._2 -> r._3).toMap
-    }
+  /** One line of the zone-map [[Stats]] sidecar, keyed by the name of
+    * the manifest entry it describes. [[statsLine]] is the one parser and
+    * [[statsText]] the one formatter; carried lines stay verbatim (a
+    * carry decides on the parsed form and keeps the original text).
+    *  - range `part \t col \t lo \t hi`: integral bounds; an unnamed
+    *    legacy `part \t lo \t hi` line (no longer written) parses as
+    *    column [[LegacyCol]], which no hint names;
+    *  - dict `part \t col \t dict \t v1,v2,…`: the entry's complete
+    *    distinct set (URL-encoded values), recorded only under the
+    *    producer's cap — the low-cardinality tier for equality/IN;
+    *  - bloom `part \t col \t bloom \t <base64 filter>` over
+    *    `xxhash64(cast(col AS string))` — the high-cardinality tier;
+    *  - rows `part \t __rows__ \t rows \t leaf:N,…`: exact rows per
+    *    data file at write time (Iceberg's manifest-recorded counts);
+    *    names are immutable for an entry's life, so a consumer uses a
+    *    count only for a file it listed ([[recordedRows]]);
+    *  - any other form is [[OtherStats]]: no reader uses it, and no
+    *    form-based carry rule drops it.
+    * Every form rides the same carry rules: maintenance carries lines
+    * verbatim, deletes keep them as valid supersets, restaging writers
+    * drop the touched entries' lines — stats are an optimization, never
+    * a correctness gate (a missing line merely reads the entry). */
+  sealed trait StatsLine
+  final case class RangeStats(part: String, col: String, lo: Long, hi: Long)
+      extends StatsLine
+  final case class DictStats(part: String, col: String, values: Seq[String])
+      extends StatsLine
+  final case class BloomStats(part: String, col: String, b64: String)
+      extends StatsLine
+  final case class RowsStats(part: String, files: Seq[(String, Long)])
+      extends StatsLine
+  final case class OtherStats(text: String) extends StatsLine
 
-  /** Per-partition categorical DICTIONARIES of version `v` — partition
-    * dir name → column → the partition's complete distinct value set,
-    * recorded only when it fit the writer's cap (a high-cardinality
-    * column simply has no line and always reads). Lines are
-    * `part \t col \t dict \t v1,v2,...` with URL-encoded values, riding
-    * the SAME stats sidecar as the range bounds — so every carry rule
-    * holds for free: maintenance carries verbatim, deletes keep a
-    * recorded set a valid SUPERSET (equality pruning stays exact), and
-    * restaging writers drop the touched partitions' lines. This is the
-    * low-cardinality complement to range zone maps: min/max on a
-    * categorical column is meaningless, but "which of the 5 statuses
-    * appear in this partition" prunes an equality/IN predicate on a
-    * column CORRELATED with the clustering (status vs ingest year) even
-    * though it is not the partition key — tiny metadata (≤ cap values
-    * per partition per column), real skipping at 100 TB. */
-  /** Per-partition, per-FILE committed row counts of version `v`
-    * (round 16 — Iceberg's manifest-recorded counts): partition dir
-    * name → data-file leaf name → exact rows at write time. Files are
-    * immutable for an entry's life, so a recorded count stays exact
-    * while the name matches; consumers must use a count ONLY for files
-    * they actually listed (a carried line naming a restaged
-    * partition's dead files never matches — the safe fallback is the
-    * parquet footer). Lines are `part \t __rows__ \t rows \t leaf:N,…`
-    * riding the stats sidecar under its carry rules. */
-  def readStatsRows(s: SparkSession, dir: String,
-                    v: Long): Map[String, Map[String, Long]] =
-    sidecarLines(s, dir, v, Stats).flatMap { line =>
-      val parts = line.split('\t')
-      if (parts.length == 4 && parts(1) == "__rows__" &&
-          parts(2) == "rows")
-        Some(parts(0) -> parts(3).split(',').iterator.map { e =>
+  /** The column an unnamed legacy range line bounds. */
+  private[graft] val LegacyCol = "__key__"
+
+  /** Parse one stats line (see [[StatsLine]]). */
+  private[graft] def statsLine(text: String): StatsLine = {
+    val f = text.split('\t')
+    def longs(lo: String, hi: String) =
+      lo.toLongOption.zip(hi.toLongOption)
+    def other = OtherStats(text)
+    if (f.length == 3)
+      longs(f(1), f(2)).fold[StatsLine](other) { case (lo, hi) =>
+        RangeStats(f(0), LegacyCol, lo, hi) }
+    else if (f.length != 4) other
+    else f(2) match {
+      case "dict" => DictStats(f(0), f(1), f(3).split(',').toSeq
+        .map(java.net.URLDecoder.decode(_, "UTF-8")))
+      case "bloom" => BloomStats(f(0), f(1), f(3))
+      case "rows" if f(1) == "__rows__" =>
+        RowsStats(f(0), f(3).split(',').toSeq.map { e =>
           val i = e.lastIndexOf(':')
           e.substring(0, i) -> e.substring(i + 1).toLong
-        }.toMap)
-      else None
-    }.toMap
-
-  def readStatsDict(s: SparkSession, dir: String,
-                    v: Long): Map[String, Map[String, Set[String]]] =
-    sidecarLines(s, dir, v, Stats).flatMap { line =>
-      val parts = line.split('\t')
-      if (parts.length == 4 && parts(2) == "dict")
-        Some((parts(0), parts(1), parts(3).split(',').iterator
-          .map(java.net.URLDecoder.decode(_, "UTF-8")).toSet))
-      else None
-    }.groupBy(_._1).map { case (part, rows) =>
-      part -> rows.map(r => r._2 -> r._3).toMap
+        })
+      case lo if lo.nonEmpty && lo.forall(c => c.isDigit || c == '-') =>
+        longs(lo, f(3)).fold[StatsLine](other) { case (l, h) =>
+          RangeStats(f(0), f(1), l, h) }
+      case _ => other
     }
+  }
 
-  /** Per-partition BLOOM FILTERS of version `v` — partition dir name →
-    * column → the deserialized sketch over `xxhash64(cast(col AS
-    * string))` of the partition's rows. Lines are
-    * `part \t col \t bloom \t <base64(serialized filter)>`, riding the
-    * SAME stats sidecar as range bounds and dictionaries — so every
-    * carry rule holds for free (maintenance carries verbatim, deletes
-    * keep a recorded filter a valid SUPERSET since a bloom only
-    * over-approximates, restaging writers drop the touched partitions'
-    * lines). This is the THIRD skipping tier (Delta's bloom index /
-    * Iceberg's Puffin shape): a point lookup on a HIGH-CARDINALITY
-    * column — where range bounds span everything and dictionaries blow
-    * their cap — skips every partition whose filter answers "definitely
-    * absent"; a false positive merely reads a partition the residual
-    * filter then empties, so correctness never rides on the fpp.
-    *
-    * LAZY by design: values are [[LazyBloom]] handles that keep the
-    * base64 payload and deserialize the sketch only on the first
-    * probe, and `cols` restricts the map to the probed columns' lines
-    * up front — so decoded driver heap is O(probed partitions ×
-    * probed columns), NOT O(all partitions × all bloom'd columns).
-    * At 10⁵ partitions × ≤240 KB filters the eager form is ~24 GB of
-    * driver bitsets to answer one point lookup; the lazy form decodes
-    * exactly the filters a pruning pass consults (a partition another
-    * tier already pruned never decodes — the composed reader
-    * short-circuits). The un-decoded lines cost only their share of
-    * the stats sidecar the read already loads; if THAT line volume
-    * ever becomes the bound, the next subdivision is a per-column
-    * sidecar file — same carry rules, loaded on demand. */
-  def readStatsBloom(s: SparkSession, dir: String, v: Long,
-                     cols: Option[Set[String]] = None)
-      : Map[String, Map[String, LazyBloom]] =
-    sidecarLines(s, dir, v, Stats).flatMap { line =>
-      val parts = line.split('\t')
-      if (parts.length == 4 && parts(2) == "bloom" &&
-          cols.forall(_.contains(parts(1))))
-        Some((parts(0), parts(1), new LazyBloom(parts(3))))
-      else None
-    }.groupBy(_._1).map { case (part, rows) =>
-      part -> rows.map(r => r._2 -> r._3).toMap
+  /** Format one stats line (see [[StatsLine]]). */
+  private[graft] def statsText(l: StatsLine): String = l match {
+    case RangeStats(p, c, lo, hi) => s"$p\t$c\t$lo\t$hi"
+    case DictStats(p, c, vs) => s"$p\t$c\tdict\t" +
+      vs.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
+    case BloomStats(p, c, b64) => s"$p\t$c\tbloom\t$b64"
+    case RowsStats(p, fs) => s"$p\t__rows__\trows\t" +
+      fs.map { case (f, n) => s"$f:$n" }.sorted.mkString(",")
+    case OtherStats(text) => text
+  }
+
+  /** A version's zone maps, entry name → column → its tier's answer:
+    * range bounds, dictionaries, blooms and per-file row counts. */
+  final case class ZoneMaps(
+      ranges: Map[String, Map[String, (Long, Long)]],
+      dicts: Map[String, Map[String, Set[String]]],
+      blooms: Map[String, Map[String, LazyBloom]],
+      rows: Map[String, Map[String, Long]])
+
+  val NoZoneMaps: ZoneMaps = ZoneMaps(Map.empty, Map.empty, Map.empty, Map.empty)
+
+  /** THE stats reader: version `v`'s zone maps from ONE read of its
+    * committed stats sidecar (empty if the winning attempt wrote none).
+    * Nothing is memoized. Blooms are [[LazyBloom]] handles restricted to
+    * `bloomCols` (None: every column) up front, so decoded driver heap
+    * is O(probed entries × probed columns): at 10⁵ entries × ≤240 KB
+    * filters the eager form would be ~24 GB of bitsets for one point
+    * lookup, while a pruning pass decodes exactly the filters it
+    * consults. */
+  def zoneMaps(s: SparkSession, dir: String, v: Long,
+               bloomCols: Option[Set[String]] = None): ZoneMaps = {
+    val ls = sidecarLines(s, dir, v, Stats).map(statsLine)
+    def byPart[A](rs: Seq[(String, String, A)]) =
+      rs.groupBy(_._1).map { case (p, cs) =>
+        p -> cs.map(r => r._2 -> r._3).toMap }
+    ZoneMaps(
+      byPart(ls.collect { case RangeStats(p, c, lo, hi) => (p, c, (lo, hi)) }),
+      byPart(ls.collect { case DictStats(p, c, vs) => (p, c, vs.toSet) }),
+      byPart(ls.collect { case BloomStats(p, c, b)
+          if bloomCols.forall(_.contains(c)) => (p, c, new LazyBloom(b)) }),
+      ls.collect { case RowsStats(p, fs) => p -> fs.toMap }.toMap)
+  }
+
+  /** Version `v`'s range bounds alone ([[zoneMaps]]' `ranges`). */
+  def readStatsMulti(s: SparkSession, dir: String,
+                     v: Long): Map[String, Map[String, (Long, Long)]] =
+    zoneMaps(s, dir, v, Some(Set.empty)).ranges
+
+  /** Cap on a recorded dictionary: a column whose distinct set in some
+    * entry exceeds it gets NO line there (unprunable, always read) — the
+    * cap keeps the sidecar metadata-sized at any scale. 32 covers the
+    * categorical columns dictionaries exist for (status, lang, source,
+    * tier). */
+  private val DictCap = 32
+
+  /** Bloom knobs: an entry above the row cap gets NO bloom line (always
+    * reads — the DictCap rule at bloom scale), and the fpp target sets
+    * the bits per row. At the cap the worst line is ~7.3 bits/row ×
+    * 200k rows ≈ 183 KB raw (~240 KB base64) — bounded sidecar growth;
+    * a corpus whose entries routinely exceed the cap would move blooms
+    * to per-entry binary sidecar files (the Iceberg Puffin shape) rather
+    * than raise it. */
+  private val BloomRowCap = 200000L
+  private val BloomFpp = 0.03
+
+  /** Cap on the files of one rows line: an entry with more data files
+    * gets no line (the DictCap rule; COUNT then prices from footers). */
+  private val RowsLineFileCap = 512
+
+  /** What [[freshStats]] describes. */
+  private[graft] sealed trait StatsOf
+  /** Entries just staged from rows of `schema`: fresh immutable files,
+    * so their footers answer row counts and exact integral ranges. */
+  private[graft] final case class StagedRows(
+      schema: org.apache.spark.sql.types.StructType) extends StatsOf
+  /** The LIVE content of committed version `v`'s entries (MOR refs
+    * applied): the data pass answers every form, and no rows line is
+    * written, since a live count is not a file's count. */
+  private[graft] final case class LiveRows(v: Long) extends StatsOf
+
+  /** The column the zone-map data pass groups by: the URL-encoded name
+    * of the dir holding each row's data file, i.e. its entry's name. */
+  private val EntryCol = "__stats_entry"
+
+  private def withEntry(df: DataFrame): DataFrame =
+    df.withColumn(EntryCol, org.apache.spark.sql.functions.regexp_extract(
+      col("_metadata.file_path"), "([^/]+)/[^/]+$", 1))
+
+  /** THE zone-map producer: fresh stats lines of `entries` for the
+    * requested keys, every line named by the manifest entry it
+    * describes.
+    *  1. A stats key must exist and be integral, checked on its Spark
+    *     type: a loud error before anything publishes.
+    *  2. Footer pass ([[Footers]], one read per data file, staged rows
+    *     and blooms only): the rows lines, every stats key the footers
+    *     bound exactly in every entry (the partition column is not in
+    *     the files), and each entry's row total, which sizes the bloom.
+    *  3. Data pass, only for dictionaries, blooms and the ranges the
+    *     footers declined: ONE aggregate grouped by the dir of each
+    *     row's data file, decoded to the entry name on the driver after
+    *     the bounded (#entries) collect. The value Spark re-infers from
+    *     a dir name is no key: it reads `p=007` back as `p=7`.
+    * An all-NULL column has no bound and an empty or over-cap set no
+    * dictionary: no line, so that entry always reads. */
+  private[graft] def freshStats(s: SparkSession, dir: String,
+      entries: Seq[(String, String)], partCol: String, of: StatsOf,
+      statsKeys: Seq[String], dictKeys: Seq[String],
+      bloomKeys: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.functions._
+    if (entries.isEmpty) return Nil
+    def requireIntegral(schema: org.apache.spark.sql.types.StructType)
+                       (k: String): Unit = {
+      val dt = schema(k).dataType
+      // no DATE: Spark disallows DateType→LongType casts, and a day
+      // count is no bound a long hint compares with (r9 advice)
+      require(Seq("long", "integer", "short", "byte").contains(dt.typeName),
+        s"statsKeys column '$k' must be integral for zone-map bounds, " +
+          s"got ${dt.typeName}")
     }
+    lazy val data = of match {
+      case LiveRows(v) =>
+        readEntriesLive(s, dir, v, entries, Some(partCol), perScan = withEntry)
+      case StagedRows(_) => withEntry(readParquetCached(s, None,
+        entries.map(e => s"$dir/${verDirOf(e._2)}").distinct))
+    }
+    val footerCols = of match {
+      case StagedRows(schema) =>
+        val ks = statsKeys.filterNot(_ == partCol)
+        ks.foreach(requireIntegral(schema))
+        ks.map(k => k -> schema(k).dataType)
+      case LiveRows(_) => Nil
+    }
+    val conf = s.sparkContext.hadoopConfiguration
+    val footers: Seq[(String, Seq[(String, Footers.Footer)])] =
+      if (footerCols.isEmpty && bloomKeys.isEmpty &&
+          of.isInstanceOf[LiveRows]) Nil
+      else listEntries(s, dir, entries).map { case ((name, _), (_, fs)) =>
+        name -> fs.map(f => f.getPath.getName -> Footers.read(conf, f,
+          footerCols)) }
+    val rowsLines = of match {
+      case StagedRows(_) => footers.collect {
+        case (name, fs) if fs.nonEmpty && fs.length <= RowsLineFileCap =>
+          RowsStats(name, fs.map { case (f, ft) => f -> ft.rows }) }
+      case LiveRows(_) => Nil
+    }
+    val bounds = footerCols.map { case (k, _) => k -> footers.map {
+      case (name, fs) => name -> Footers.merge(fs.map(_._2.bounds(k))) } }
+      .toMap
+    val (footerRanged, dataRanged) = statsKeys.partition(k =>
+      bounds.get(k).exists(_.forall(_._2 != Footers.Decline)))
+    val footerLines = footerRanged.flatMap(k => bounds(k).collect {
+      case (name, Footers.Exact(lo, hi)) => RangeStats(name, k, lo, hi) })
+    // one constant bit width across groups: sized for the largest
+    // under-cap entry (rows bound distinct values, so the fpp only
+    // tightens); over-cap entries get no line
+    val underCap = footers.map { case (n, fs) => n -> fs.map(_._2.rows).sum }
+      .filter(_._2 <= BloomRowCap).toMap
+    val blooms = if (underCap.isEmpty) Nil else bloomKeys
+    val dataLines: Seq[StatsLine] =
+      if (dataRanged.isEmpty && dictKeys.isEmpty && blooms.isEmpty) Nil
+      else {
+        dataRanged.foreach(requireIntegral(data.schema))
+        val nSize = math.max(1L, underCap.values.maxOption.getOrElse(0L))
+        val numBits = org.apache.spark.util.sketch.BloomFilter
+          .optimalNumOfBits(nSize, BloomFpp)
+        if (blooms.nonEmpty)
+          graft.functions.GraftExtensions.register(s, "graft_bloom_agg")
+        // collect_set drops NULLs — right for equality/IN pruning, which
+        // NULL never satisfies; the slice to cap+1 spots an over-cap set
+        // without shipping it whole
+        val aggs = dataRanged.flatMap(k =>
+            Seq(min(col(k).cast("long")), max(col(k).cast("long")))) ++
+          dictKeys.map(k => slice(sort_array(collect_set(
+            col(k).cast("string"))), 1, DictCap + 1)) ++
+          blooms.map(k => call_function("graft_bloom_agg",
+            xxhash64(col(k).cast("string")), lit(nSize), lit(numBits)))
+        val names = entries.map(_._1).toSet
+        val (d0, b0) = (1 + 2 * dataRanged.length,
+                        1 + 2 * dataRanged.length + dictKeys.length)
+        data.groupBy(col(EntryCol)).agg(aggs.head, aggs.tail: _*)
+          .collect().toSeq.flatMap { r =>
+            val name =
+              new java.net.URI("file:/" + r.getString(0)).getPath.drop(1)
+            if (!names(name)) Nil
+            else dataRanged.zipWithIndex.flatMap { case (k, i) =>
+              if (r.isNullAt(1 + 2 * i)) None
+              else Some(RangeStats(name, k,
+                r.getAs[Number](1 + 2 * i).longValue,
+                r.getAs[Number](2 + 2 * i).longValue))
+            } ++ dictKeys.zipWithIndex.flatMap { case (k, i) =>
+              val vs = r.getSeq[String](d0 + i)
+              if (vs.isEmpty || vs.length > DictCap) None
+              else Some(DictStats(name, k, vs))
+            } ++ blooms.zipWithIndex.flatMap { case (k, i) =>
+              Option(r.get(b0 + i)).filter(_ => underCap.contains(name))
+                .map(b => BloomStats(name, k, java.util.Base64.getEncoder
+                  .encodeToString(b.asInstanceOf[Array[Byte]])))
+            }
+          }
+      }
+    (footerLines ++ dataLines ++ rowsLines).map(statsText)
+  }
 
   /** Read the current committed state. `partCol` present: entries are
     * `col=value` dirs possibly spread across versions — they are grouped
@@ -1386,11 +1536,14 @@ object Versioned {
     * is never shadowed by a stale tombstone. Under the store's stable
     * key→partition precondition a tombstone can never match a row in a
     * partition that merely shares a ref, so the per-group union is
-    * exact. */
+    * exact. `perScan` applies to every file scan before any union or
+    * join, so a metadata column it reads (`_metadata.*`) resolves. */
   def readEntriesLive(s: SparkSession, dir: String, v: Long,
                       entries: Seq[(String, String)],
                       partCol: Option[String],
-                      dataDir: Option[String] = None): DataFrame = {
+                      dataDir: Option[String] = None,
+                      perScan: DataFrame => DataFrame = identity)
+      : DataFrame = {
     require(entries.nonEmpty, "readEntries needs at least one entry")
     // dataDir: where the rel paths resolve — differs from `dir` only for
     // BRANCHES, whose metadata tree lives under the table root while the
@@ -1399,7 +1552,8 @@ object Versioned {
     val dvRefs = morRefs(s, dir, v, Dv)
     val uvRefs = morRefs(s, dir, v, Uv)
     if (dvRefs.isEmpty && uvRefs.isEmpty)
-      return readEntries(s, dd, entries, partCol)
+      return readListedEntries(s, dd, listEntries(s, dd, entries), partCol,
+        perScan)
     // names qualified by the HOLDER entry (MorRef.qualified): entries
     // then merge into one group below without ambiguity
     def refsOf(refs: Map[String, Seq[MorRef]], e: (String, String)) =
@@ -1422,7 +1576,7 @@ object Versioned {
         // one driver listing per entry dir, shared by the base read
         // and every split below
         val listed = listEntries(s, dd, es)
-        val base = readListedEntries(s, dd, listed, partCol)
+        val base = readListedEntries(s, dd, listed, partCol, perScan)
         lazy val byVer = listed.groupBy(l => verDirOf(l._1._2)).toSeq
           .sortBy(_._1)
         // Read the group's data files that `keep` admits (it sees the
@@ -1438,8 +1592,8 @@ object Versioned {
             val files = ls.flatMap { case ((_, rel), (_, sts)) =>
               sts.filter(st => keep(s"$rel/${st.getPath.getName}")) }
             if (files.isEmpty) None
-            else Some(xform(readFiles(s,
-              partCol.map(_ => s"$dd/$verDir"), files)))
+            else Some(perScan(xform(readFiles(s,
+              partCol.map(_ => s"$dd/$verDir"), files))))
           }.reduceOption(_.unionByName(_, allowMissingColumns = true))
         // THE SHADOW KERNEL, shared by both kinds: the rows of the
         // group that `refs` do not shadow, as union parts. Unscoped (any ref
@@ -1505,7 +1659,7 @@ object Versioned {
                     es.map(e => s"$dd/$rel/${e._1}"))
                 case None => readParquetCached(s, None, Seq(s"$dd/$rel"))
               }
-              df.withColumn("__uv_v", lit(ver))
+              perScan(df).withColumn("__uv_v", lit(ver))
             }.reduce(_.unionByName(_, allowMissingColumns = true))
             import org.apache.spark.sql.expressions.Window
             val latest = imgs
@@ -1591,9 +1745,10 @@ object Versioned {
   /** [[readEntries]] over entries already listed. */
   private def readListedEntries(s: SparkSession, dir: String,
       listed: Seq[((String, String), (Path, Seq[FileStatus]))],
-      partCol: Option[String]): DataFrame =
+      partCol: Option[String],
+      perScan: DataFrame => DataFrame = identity): DataFrame =
     partCol match {
-      case None => readListed(s, None, listed.map(_._2))
+      case None => perScan(readListed(s, None, listed.map(_._2)))
       case Some(_) =>
         // allowMissingColumns: version groups may disagree on schema
         // after a schema-evolving merge (a later version's partitions
@@ -1601,7 +1756,7 @@ object Versioned {
         // the same union semantics scan_evolved pins for file sources.
         listed.groupBy(l => verDirOf(l._1._2)).toSeq.sortBy(_._1)
           .map { case (verDir, ls) =>
-            readListed(s, Some(s"$dir/$verDir"), ls.map(_._2))
+            perScan(readListed(s, Some(s"$dir/$verDir"), ls.map(_._2)))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
     }
 
@@ -1661,7 +1816,7 @@ object Versioned {
     dataFiles(s, dir, relDir).size
 
   /** The rows `entries` held at write time, from the manifest-recorded
-    * per-file counts `rec` ([[readStatsRows]]) and one listing per
+    * per-file counts `rec` ([[zoneMaps]]' `rows`) and one listing per
     * entry: Some only when every listed data file has a recorded count.
     * Names are immutable for an entry's life, so a match is exact; a
     * carried line naming a restaged partition's dead files never
@@ -1819,17 +1974,16 @@ object Versioned {
       val root = new Path(dir, "intents")
       if (!fs.exists(root)) 0L else fs.listStatus(root).length.toLong
     }
-    val statsLines = sidecarLines(s, dir, v, Stats)
-    def formCount(tag: String): Long = statsLines.count { l =>
-      val parts = l.split('\t'); parts.length == 4 && parts(2) == tag
-    }.toLong
+    val statsLines = sidecarLines(s, dir, v, Stats).map(statsLine)
     Seq((v, committed.size.toLong, man.size.toLong, files.toLong,
          dvRefs.size.toLong, dvRefs.values.map(_.size).sum.toLong,
          uvRefs.size.toLong, uvRefs.values.map(_.size).sum.toLong,
          retentionFloor(s, dir).getOrElse(1L),
          tags(s, dir).size.toLong, branchCount,
          cumulativeLines(s, dir, v, Constraints).size.toLong,
-         statsLines.size.toLong, formCount("dict"), formCount("bloom"),
+         statsLines.size.toLong,
+         statsLines.count(_.isInstanceOf[DictStats]).toLong,
+         statsLines.count(_.isInstanceOf[BloomStats]).toLong,
          appliedLedgerIds(s, dir, v).size.toLong, pinCount))
       .toDF("version", "committed_versions", "partitions", "data_files",
             "dv_partitions", "dv_refs", "uv_partitions", "uv_refs",
@@ -2220,7 +2374,7 @@ object Versioned {
   * holds the line's base64 payload and decodes the
   * `org.apache.spark.util.sketch.BloomFilter` bitset only when
   * [[mightContainLong]] is first called (memoized, thread-safe via
-  * lazy-val init). This is what keeps [[Versioned.readStatsBloom]]'s
+  * lazy-val init). This is what keeps [[Versioned.zoneMaps]]'s
   * driver footprint proportional to the filters a pruning pass actually
   * CONSULTS rather than every filter the table recorded — a partition
   * that another skipping tier already pruned, or a column the query

@@ -40,33 +40,6 @@ object MergeOps {
     * batch falls back to the key-RANGE tier alone. */
   private[graft] val MixedLayoutProbeCap = 10000
 
-  /** Per-partition zone-map stats of a staged write: one partition-
-    * pruned aggregate over what was just written (ALL stats columns in
-    * the single job), collected as a bounded (#partitions) driver
-    * list — the same metadata class as the manifest itself. Stats
-    * columns must be integral: validated up front with a clear error
-    * rather than a ClassCastException at collect time (r8 advice), and
-    * read back through Number so parquet re-inference to a narrower
-    * integral type (int day keys and the like) still lands in the Long
-    * bounds. `statsKeys` emits one named 4-field line per column
-    * (`part \t col \t lo \t hi`). Shared by every stats-writing stage
-    * ([[mergeUpsert]], [[mergeApplyChangelog]]). */
-  /** Cap on a recorded per-partition dictionary: a column whose
-    * distinct set inside some partition exceeds this gets NO line there
-    * (unprunable, always read) — the cap is what keeps the sidecar
-    * metadata-sized at any scale. 32 covers the categorical columns
-    * dictionaries exist for (status, lang, source, tier). */
-  private val DictCap = 32
-
-  /** Bloom sidecar knobs: a partition above the row cap gets NO bloom
-    * line (always reads — the DictCap rule at bloom scale), and the
-    * fpp target sets the bits-per-row. At the cap the worst line is
-    * ~7.3 bits/row × 200k rows ≈ 183 KB raw (~240 KB base64) — bounded
-    * sidecar growth; a corpus whose partitions routinely exceed the cap
-    * would move blooms to per-partition binary sidecar files (the
-    * Iceberg Puffin shape) rather than raise it. */
-  private val BloomRowCap = 200000L
-
   /** Per-FILE cap on recorded deletion-vector row positions
     * ([[mergeDeleteMor]]): under it, the file's doomed rows are named
     * exactly and the read applies a positional filter; over it, the
@@ -88,7 +61,6 @@ object MergeOps {
     * key in a 10-row file is still a sparse delete). */
   private val DvPosDensity = 0.05
   private val DvPosFloor = 64L
-  private val BloomFpp = 0.03
 
   /** Scope scan shared by the MOR delete and update writers
     * ([[mergeDeleteMor]], [[mergeUpdateMor]]): one bounded pass over
@@ -502,10 +474,11 @@ object MergeOps {
     *     write changed in place) is the touch set; `emptyGuard` refuses
     *     a manifest left empty (an empty table cannot be read back);
     *  3. derives every sidecar from the base: stats by `stats`
-    *     ([[StatsCarry]]) plus lines fresh from the staged footers for
-    *     the requested keys (and `freshLines`); dv/uv lines of restaged
-    *     partitions drop — the restage read them live, so it is their
-    *     materialization point — the rest carry, plus `newDv` /
+    *     ([[StatsCarry]]) plus the staged entries' fresh lines for the
+    *     requested keys ([[Versioned.freshStats]]) and `freshLines`;
+    *     dv/uv lines of restaged partitions drop — the restage read
+    *     them live, so it is their materialization point — the rest
+    *     carry, plus `newDv` /
     *     `newUv(staged names)`; the ledger gains `ledgerId`; `extra`
     *     writes verb-owned sidecars;
     *  4. declares CHANGED as the touch set unless `declareTouch` is off
@@ -561,11 +534,11 @@ object MergeOps {
         require(man.exists(e => !restaged(e._1)) || staged.nonEmpty, msg))
       // computed once: the staged bytes are immutable, so every attempt
       // publishes the same fresh lines
-      val fresh = freshLines ++ (stage.flatMap(_.partCol) match {
-        case Some(pc) if statsKeys.nonEmpty || dictKeys.nonEmpty ||
-                         bloomKeys.nonEmpty =>
-          freshStatsLinesStaged(s, dir, stageRel, pc, statsKeys, dictKeys,
-                                bloomKeys)
+      val fresh = freshLines ++ (stage match {
+        case Some(Stage(rows, Some(pc), _, _))
+            if statsKeys.nonEmpty || dictKeys.nonEmpty || bloomKeys.nonEmpty =>
+          Versioned.freshStats(s, dir, staged, pc,
+            Versioned.StagedRows(rows.schema), statsKeys, dictKeys, bloomKeys)
         case _ => Nil
       })
       // a stage that restages FOREIGN-layout entries moves their rows
@@ -635,285 +608,16 @@ object MergeOps {
   private def statsLineReplaced(statsKeys: Seq[String],
                                 dictKeys: Seq[String],
                                 bloomKeys: Seq[String])
-      : String => Boolean = { line =>
-    val parts = line.split('\t')
-    // an unnamed legacy bound line (no longer written) names no column
-    // a refresh could recompute: it carries
-    if (parts.length == 3) false
-    else if (parts(2) == "dict") dictKeys.contains(parts(1))
-    else if (parts(2) == "bloom") bloomKeys.contains(parts(1))
-    // per-file row-count lines regenerate on EVERY stats job (cheap,
-    // and a dropped line is safe — the metadata-count reader falls
-    // back to parquet footers when a file has no recorded count)
-    else if (parts(2) == "rows") true
-    else statsKeys.contains(parts(1))
-  }
-
-  /** Per-partition cap on per-FILE row-count entries
-    * ([[freshStatsLines]]' `rows` lines — the Iceberg
-    * manifest-recorded-counts tier): a partition with more data files
-    * gets no line (the DictCap rule — the reader then prices COUNT
-    * from parquet footers; stats are never a correctness gate). */
-  private val RowsLineFileCap = 512
-
-  private def freshStatsLines(df: DataFrame, partCol: String,
-                              statsKeys: Seq[String],
-                              dictKeys: Seq[String] = Nil,
-                              bloomKeys: Seq[String] = Nil): Seq[String] = {
-    // PER-FILE ROW COUNTS (round 16 — Iceberg's manifest-recorded
-    // counts, the upgrade path named for the metadata COUNT at 100 TB):
-    // `part \t __rows__ \t rows \t leaf:N,…` rides the stats sidecar
-    // under its carry rules. Exactness is enforced at READ time by
-    // construction: the catalog uses a recorded count only when the
-    // entry's LISTED data files all carry one, and file names are
-    // immutable for an entry's life — a carried line naming a restaged
-    // partition's dead files simply never matches, so the reader falls
-    // back to footers (never a stale answer). Requires a file-source
-    // df (`_metadata`): callers passing a composed live read (e.g.
-    // refreshStats) skip the lines — missing lines only cost footers.
-    val rowsLines: Seq[String] =
-      try df.groupBy(col(partCol),
-            col("_metadata.file_path").as("__rows_f"))
-        .count().collect().toSeq
-        .groupBy(r => Versioned.partDirName(partCol, r.get(0)))
-        .toSeq.flatMap { case (part, rs) =>
-          if (rs.length > RowsLineFileCap) None
-          else Some(s"$part\t__rows__\trows\t" + rs.map { r =>
-            val f = r.getString(1)
-            s"${f.substring(f.lastIndexOf('/') + 1)}:${r.getLong(2)}"
-          }.sorted.mkString(","))
-        }
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Nil
-      }
-    freshStatsTail(df, partCol, statsKeys, dictKeys, bloomKeys, rowsLines)
-  }
-
-  /** The dict/bloom/range halves of [[freshStatsLines]], shared with the
-    * footer-fed staged variant below; `rowsLines` rides through so the
-    * composed line order stays identical for either producer. */
-  private def freshStatsTail(df: DataFrame, partCol: String,
-                             statsKeys: Seq[String],
-                             dictKeys: Seq[String],
-                             bloomKeys: Seq[String],
-                             rowsLines: Seq[String],
-                             footerBounds: Option[Seq[(String,
-                               Seq[(String, (Long, Long))])]] = None)
-      : Seq[String] = {
-    val bloomLines: Seq[String] =
-      if (bloomKeys.isEmpty) Seq.empty
-      else {
-        graft.functions.GraftExtensions.register(
-          df.sparkSession, "graft_bloom_agg")
-        // one small pre-pass for sizing: the aggregate needs ONE
-        // constant bit width across groups, so it is sized for the
-        // largest under-cap partition; over-cap partitions get NO line
-        // (no line → always read — the DictCap rule, stats are never a
-        // correctness gate). Row count upper-bounds distinct count, so
-        // the fpp target only tightens.
-        val counts = df.groupBy(col(partCol)).count().collect()
-          .map(r => Versioned.partDirName(partCol, r.get(0)) ->
-            r.getLong(1)).toMap
-        val underCap = counts.filter(_._2 <= BloomRowCap)
-        if (underCap.isEmpty) Seq.empty
-        else {
-          val nSize = math.max(1L, underCap.values.max)
-          val numBits = org.apache.spark.util.sketch.BloomFilter
-            .optimalNumOfBits(nSize, BloomFpp)
-          val aggs = bloomKeys.map(k =>
-            call_function("graft_bloom_agg",
-              xxhash64(col(k).cast("string")), lit(nSize), lit(numBits))
-              .as(s"__bloom_$k"))
-          df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
-            .collect().toSeq.flatMap { r =>
-              val part = Versioned.partDirName(partCol, r.get(0))
-              if (!underCap.contains(part)) Nil
-              else bloomKeys.zipWithIndex.flatMap { case (k, i) =>
-                Option(r.get(1 + i)).map(b =>
-                  s"$part\t$k\tbloom\t" + java.util.Base64.getEncoder
-                    .encodeToString(b.asInstanceOf[Array[Byte]]))
-              }
-            }
-        }
-      }
-    val dictLines: Seq[String] =
-      if (dictKeys.isEmpty) Seq.empty
-      else {
-        // collect_set drops NULLs — correct for the dictionary's one
-        // use (equality/IN pruning): NULL never satisfies an equality,
-        // so a set without it stays a complete answer key. slice to
-        // cap+1 so an over-cap partition is detectable without ever
-        // shipping an unbounded set to the driver.
-        val aggs = dictKeys.map(k =>
-          slice(sort_array(collect_set(col(k).cast("string"))),
-                1, DictCap + 1).as(s"__dict_$k"))
-        df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
-          .collect().toSeq.flatMap { r =>
-            val part = Versioned.partDirName(partCol, r.get(0))
-            dictKeys.zipWithIndex.flatMap { case (k, i) =>
-              val vs = r.getSeq[String](1 + i)
-              if (vs.isEmpty || vs.length > DictCap) None
-              else Some(s"$part\t$k\tdict\t" + vs
-                .map(java.net.URLEncoder.encode(_, "UTF-8"))
-                .mkString(","))
-            }
-          }
-      }
-    def checkIntegral(k: String): Unit = {
-      val dt = df.schema(k).dataType
-      // No DATE here: Spark disallows DateType→LongType casts, so a date
-      // key would pass this check and then die at analysis with exactly
-      // the confusing cast error the check exists to prevent (r9 advice).
-      require(Seq("long", "integer", "short", "byte")
-                .contains(dt.typeName),
-        s"statsKeys column '$k' must be integral for zone-map bounds, " +
-          s"got ${dt.typeName}")
-    }
-    def boundsOf(ks: Seq[String])
-        : Seq[(String, Seq[(String, (Long, Long))])] = {
-      if (footerBounds.isDefined) return footerBounds.get
-      ks.foreach(checkIntegral)
-      val aggs = ks.flatMap(k => Seq(min(col(k).cast("long")),
-                                     max(col(k).cast("long"))))
-      df.groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          Versioned.partDirName(partCol, r.get(0)) ->
-            ks.zipWithIndex.flatMap { case (k, i) =>
-              // an all-NULL column in a partition has no bounds (min/max
-              // return null): emit NO line for it — a missing bound
-              // always reads, so correctness never rides on the stats
-              if (r.isNullAt(1 + 2 * i)) None
-              else Some(k -> (r.getAs[Number](1 + 2 * i).longValue,
-                              r.getAs[Number](2 + 2 * i).longValue))
-            }
-        }.toSeq
-    }
-    val rangeLines =
-      if (statsKeys.isEmpty) Seq.empty
-      else rangeLinesOf(boundsOf(statsKeys))
-    rangeLines ++ dictLines ++ bloomLines ++ rowsLines
-  }
-
-  /** The named range lines (`part \t col \t lo \t hi`) of
-    * per-partition bounds. */
-  private def rangeLinesOf(bounds: Seq[(String, Seq[(String, (Long, Long))])])
-      : Seq[String] =
-    bounds.flatMap { case (part, cols) =>
-      cols.map { case (c, (lo, hi)) => s"$part\t$c\t$lo\t$hi" } }
-
-  /** [[freshStatsLines]] for a freshly STAGED dir (round 17, guide §6 /
-    * §1.2): the per-file row counts and the integral zone-map bounds the
-    * data-pass aggregates computed are already sitting in the staged
-    * parquet FOOTERS the write just produced — read them driver-side
-    * (one bounded footer read per staged file, the same files the
-    * aggregate job would have scanned) and skip the one-Spark-job-per-
-    * stats-bearing-commit tax. Dict/bloom sidecars genuinely need the
-    * data pass and keep it. Falls back to the data-pass variant whenever
-    * a footer lacks exact statistics for a requested bound column (a
-    * foreign writer, a non-integral physical type — where the fallback
-    * then raises the same loud checkIntegral contract), so stats stay
-    * exact-or-absent, never guessed. */
-  private def freshStatsLinesStaged(s: SparkSession, corpusDir: String,
-                                    stageRel: String, partCol: String,
-                                    statsKeys: Seq[String],
-                                    dictKeys: Seq[String] = Nil,
-                                    bloomKeys: Seq[String] = Nil)
-      : Seq[String] = {
-    def df = Versioned.readParquetCached(s, None,
-      Seq(s"$corpusDir/$stageRel"))
-    footerStats(s, s"$corpusDir/$stageRel", partCol, statsKeys) match {
-      case None =>
-        freshStatsLines(df, partCol, statsKeys, dictKeys, bloomKeys)
-      case Some((rowsLines, bounds)) =>
-        // rangeLines straight from the footer bounds — no df at all
-        if (dictKeys.isEmpty && bloomKeys.isEmpty)
-          rangeLinesOf(bounds) ++ rowsLines
-        else freshStatsTail(df, partCol, statsKeys, dictKeys,
-                            bloomKeys, rowsLines, Some(bounds))
-    }
-  }
-
-  /** Driver-side footer scan of a staged dir: per-partition
-    * (`rows` sidecar lines, per-column exact (lo, hi) bounds for
-    * `boundCols`). None ⇒ some footer cannot answer exactly (missing or
-    * truncatable statistics, a non-plain-integral physical type, an
-    * unreadable file) — the caller must fall back to the data pass. */
-  private def footerStats(s: SparkSession, stagedDir: String,
-                          partCol: String, boundCols: Seq[String])
-      : Option[(Seq[String], Seq[(String, Seq[(String, (Long, Long))])])] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{
-      INT32, INT64}
-    val conf = s.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(stagedDir)
-    val fs = base.getFileSystem(conf)
-    val parts =
-      try fs.listStatus(base).toSeq.filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      catch { case _: java.io.FileNotFoundException => return None }
-    if (parts.isEmpty) return None
-    val rows = Seq.newBuilder[String]
-    val bounds = Seq.newBuilder[(String, Seq[(String, (Long, Long))])]
-    for (pd <- parts) {
-      val files = Versioned.dataFiles(s, stagedDir, pd.getPath.getName)
-      val counts = Seq.newBuilder[(String, Long)]
-      val lo = scala.collection.mutable.Map.empty[String, Long]
-      val hi = scala.collection.mutable.Map.empty[String, Long]
-      for (f <- files) {
-        val blocks =
-          try {
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromStatus(f, conf))
-            try rd.getFooter.getBlocks.asScala.toSeq finally rd.close()
-          } catch { case _: java.io.IOException => return None }
-        counts += ((f.getPath.getName, blocks.map(_.getRowCount).sum))
-        for (c <- boundCols; b <- blocks) {
-          val cc = b.getColumns.asScala
-            .find(_.getPath.toDotString == c).getOrElse(return None)
-          val pt = cc.getPrimitiveType
-          // plain signed ints only: any logical annotation beyond a
-          // signed int-width (DATE, TIMESTAMP, DECIMAL, unsigned) means
-          // the footer value is not the column's long cast — decline
-          val plainInt = (pt.getPrimitiveTypeName == INT32 ||
-            pt.getPrimitiveTypeName == INT64) &&
-            (pt.getLogicalTypeAnnotation match {
-              case null => true
-              case i: org.apache.parquet.schema.LogicalTypeAnnotation
-                    .IntLogicalTypeAnnotation => i.isSigned
-              case _ => false
-            })
-          if (!plainInt) return None
-          val st = cc.getStatistics
-          if (st == null || st.isEmpty) return None
-          if (st.hasNonNullValue) {
-            val (mn, mx) = (st.genericGetMin, st.genericGetMax) match {
-              case (a: java.lang.Integer, b: java.lang.Integer) =>
-                (a.longValue, b.longValue)
-              case (a: java.lang.Long, b: java.lang.Long) =>
-                (a.longValue, b.longValue)
-              case _ => return None
-            }
-            lo(c) = math.min(lo.getOrElse(c, Long.MaxValue), mn)
-            hi(c) = math.max(hi.getOrElse(c, Long.MinValue), mx)
-          }
-          // all-null chunk: contributes no bound, exactly like the
-          // data-pass min/max — but only when the footer really says
-          // every value is null; anything else is "unknown", decline
-          else if (!st.isNumNullsSet || st.getNumNulls != b.getRowCount)
-            return None
-        }
-      }
-      val part = pd.getPath.getName
-      val cs = counts.result()
-      if (cs.length <= RowsLineFileCap && cs.nonEmpty)
-        rows += s"$part\t__rows__\trows\t" + cs
-          .map { case (f, n) => s"$f:$n" }.sorted.mkString(",")
-      bounds += ((part,
-        boundCols.flatMap(c => lo.get(c).map(l => c -> (l, hi(c))))))
-    }
-    Some((rows.result(), bounds.result()))
+      : String => Boolean = line => Versioned.statsLine(line) match {
+    // an unnamed legacy bound line names no column a refresh recomputes
+    case Versioned.RangeStats(_, c, _, _) =>
+      c != Versioned.LegacyCol && statsKeys.contains(c)
+    case Versioned.DictStats(_, c, _) => dictKeys.contains(c)
+    case Versioned.BloomStats(_, c, _) => bloomKeys.contains(c)
+    // per-file row counts regenerate on every stats job (a dropped line
+    // is safe: COUNT falls back to footers for a file with no count)
+    case _: Versioned.RowsStats => true
+    case _: Versioned.OtherStats => false
   }
 
   /** Merge `batch` into the versioned parquet corpus at `corpusDir`:
@@ -2200,16 +1904,13 @@ object MergeOps {
     * partition the name/range/dict tiers pruned never deserializes its
     * bloom bitset (the [[graft.engine.LazyBloom]] contract — decoded
     * driver heap is O(survivors × probed columns), not O(all
-    * partitions)). A pure function of the tier maps: [[prunedEntries]]
-    * loads them, and the catalog's name-tier-only calls pass them
-    * empty. */
+    * partitions)). A pure function of the zone maps: [[prunedEntries]]
+    * loads them, and the catalog's name-tier-only calls pass
+    * [[Versioned.NoZoneMaps]]. */
   private[graft] def skipEntries(man: Seq[(String, String)],
       ranges: Seq[(String, Long, Long)],
       values: Seq[(String, Seq[String])],
-      stats: Map[String, Map[String, (Long, Long)]],
-      dicts: Map[String, Map[String, Set[String]]],
-      blooms: Map[String, Map[String, graft.engine.LazyBloom]])
-      : Seq[(String, String)] = {
+      zm: Versioned.ZoneMaps): Seq[(String, String)] = {
     val hashed = values.map { case (c, vals) =>
       (c, vals.map(bloomProbeHash)) }
     // the name tier is LAYOUT-AWARE (metadata-tier partition
@@ -2223,45 +1924,43 @@ object MergeOps {
         Versioned.partDirName(c, x).drop(c.length + 1)).toSet) }
     man.filter { case (n, _) =>
       val layout = n.takeWhile(_ != '=')
-      def nameOk = !n.contains('=') ||
-        nameWanted.forall { case (c, wantedVals) =>
-          !layout.equalsIgnoreCase(c) ||
-            wantedVals.contains(n.drop(layout.length + 1)) }
-      def rangeOk = stats.get(n).forall { cols =>
+      // a value on the entry's OWN partition column is the name tier's
+      // alone: the dict and bloom tiers hold the value Spark re-infers
+      // from the dir name, which need not be the name's spelling (`p=007`
+      // records 7, and would prune the `007` the name tier keeps)
+      def own(c: String) = n.contains('=') && layout.equalsIgnoreCase(c)
+      def nameOk = nameWanted.forall { case (c, wantedVals) =>
+        !own(c) || wantedVals.contains(n.drop(layout.length + 1)) }
+      def rangeOk = zm.ranges.get(n).forall { cols =>
         ranges.forall { case (c, lo, hi) =>
           cols.get(c).forall { case (slo, shi) => shi >= lo && slo <= hi }
         }
       }
-      def dictOk = dicts.get(n).forall { cols =>
+      def dictOk = zm.dicts.get(n).forall { cols =>
         values.forall { case (c, vals) =>
-          cols.get(c).forall(set => vals.exists(set.contains))
+          own(c) || cols.get(c).forall(set => vals.exists(set.contains))
         }
       }
-      def bloomOk = blooms.get(n).forall { cols =>
+      def bloomOk = zm.blooms.get(n).forall { cols =>
         hashed.forall { case (c, hs) =>
-          cols.get(c).forall(bf => hs.exists(bf.mightContainLong))
+          own(c) || cols.get(c).forall(bf => hs.exists(bf.mightContainLong))
         }
       }
       nameOk && rangeOk && dictOk && bloomOk
     }
   }
 
-  /** The ONE tier-loading step in front of [[skipEntries]]: reads only
-    * the sidecars the hints consult — range bounds when there are
-    * ranges, dictionaries and the probed columns' blooms when there are
-    * values — and returns the entries of `man` every tier admits. */
+  /** The ONE tier-loading step in front of [[skipEntries]]: reads the
+    * stats sidecar once when there is a hint ([[Versioned.zoneMaps]],
+    * blooms of the probed columns only) and returns the entries of
+    * `man` every tier admits. */
   private[graft] def prunedEntries(s: SparkSession, corpusDir: String,
       v: Long, man: Seq[(String, String)],
       ranges: Seq[(String, Long, Long)],
       values: Seq[(String, Seq[String])]): Seq[(String, String)] =
     skipEntries(man, ranges, values,
-      if (ranges.isEmpty) Map.empty
-      else Versioned.readStatsMulti(s, corpusDir, v),
-      if (values.isEmpty) Map.empty
-      else Versioned.readStatsDict(s, corpusDir, v),
-      if (values.isEmpty) Map.empty
-      else Versioned.readStatsBloom(s, corpusDir, v,
-        Some(values.map(_._1).toSet)))
+      if (ranges.isEmpty && values.isEmpty) Versioned.NoZoneMaps
+      else Versioned.zoneMaps(s, corpusDir, v, Some(values.map(_._1).toSet)))
 
   /** The ONE pruned read of version `v`: the [[prunedEntries]]
     * survivors read live (deletion vectors applied), with the hints'
@@ -2676,10 +2375,8 @@ object MergeOps {
       "refreshStats needs at least one of statsKeys/dictKeys/bloomKeys")
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val live = Versioned.readEntriesLive(s, corpusDir, v, man,
-                                         Some(partCol))
-    val lines = freshStatsLines(live, partCol, statsKeys, dictKeys,
-                                bloomKeys)
+    val lines = Versioned.freshStats(s, corpusDir, man, partCol,
+      Versioned.LiveRows(v), statsKeys, dictKeys, bloomKeys)
     // Refresh REPLACES only what it recomputed (the requested columns'
     // lines, in their form); everything else carries verbatim — an
     // ANALYZE of the dictionary must not cost the table its range

@@ -52,7 +52,7 @@ object SqlQueries {
     MergeOps.mergeUpsert(s, dir, docs, "doc_id", "src_grp",
                          bloomKeys = Seq("doc_id"))
     val probes = Seq("2", "23", "41")
-    val blooms = Versioned.readStatsBloom(s, dir, 1L, Some(Set("doc_id")))
+    val blooms = Versioned.zoneMaps(s, dir, 1L, Some(Set("doc_id"))).blooms
     val kept = Versioned.manifest(s, dir, 1L).count { case (n, _) =>
       blooms.get(n).forall(cols => cols.get("doc_id").forall(bf =>
         probes.exists(v => bf.mightContainLong(MergeOps.bloomProbeHash(v)))))

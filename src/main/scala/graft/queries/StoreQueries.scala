@@ -650,7 +650,7 @@ object StoreQueries {
                 .cast("long").as("src_grp"))
     mergeUpsert(s, dir, docs, "doc_id", "src_grp",
                 dictKeys = Seq("source"))
-    require(Versioned.readStatsDict(s, dir, 1L)
+    require(Versioned.zoneMaps(s, dir, 1L).dicts
         .count(_._2("source").contains("src13")) == 1,
       "exactly one source group's dictionary must hold src13 — " +
         "the point lookup must actually prune")
@@ -684,7 +684,7 @@ object StoreQueries {
     mergeUpsert(s, dir, docs, "doc_id", "src_grp",
                 bloomKeys = Seq("doc_id"))
     val probes = Seq("2", "23", "41")   // all land in source group 0
-    val blooms = Versioned.readStatsBloom(s, dir, 1L)
+    val blooms = Versioned.zoneMaps(s, dir, 1L).blooms
     val kept = Versioned.manifest(s, dir, 1L).count { case (n, _) =>
       blooms.get(n).forall(cols => cols.get("doc_id").forall(bf =>
         probes.exists(v => bf.mightContainLong(bloomProbeHash(v)))))
@@ -716,7 +716,7 @@ object StoreQueries {
     mergeUpsert(s, dir, docs, "doc_id", "src_grp",
                 statsKeys = Seq("doc_id"), dictKeys = Seq("source"),
                 bloomKeys = Seq("doc_id"))
-    val dicts = Versioned.readStatsDict(s, dir, 1L)
+    val dicts = Versioned.zoneMaps(s, dir, 1L).dicts
     require(dicts.count(_._2("source").contains("src13")) == 1,
       "the dictionary tier must pin exactly one source group")
     readCorpusSkipPruned(s, dir, "src_grp",
@@ -883,10 +883,10 @@ object StoreQueries {
       .localCheckpoint() // pin the pre-merge snapshot the batch derives from
     val shedGrp = "src_grp=" + flipped.collect()(0).getAs[Long]("src_grp")
     mergeUpsert(s, dir, flipped, "doc_id", "src_grp")               // v2
-    require(!Versioned.readStatsDict(s, dir, 2L).contains(shedGrp),
+    require(!Versioned.zoneMaps(s, dir, 2L).dicts.contains(shedGrp),
       s"the dict-less restage must shed $shedGrp's dictionary")
     refreshStats(s, dir, "src_grp", dictKeys = Seq("source"))      // v3
-    require(Versioned.readStatsDict(s, dir, 3L)
+    require(Versioned.zoneMaps(s, dir, 3L).dicts
         .get(shedGrp).exists(_("source").contains("src13")),
       s"the refresh must re-arm $shedGrp's dictionary with src13")
     readCorpusSkipPruned(s, dir, "src_grp",

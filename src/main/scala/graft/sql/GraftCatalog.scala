@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.hadoop.fs.Path
 
-import graft.engine.Versioned
+import graft.engine.{Footers, Versioned}
 import graft.ops.MergeOps
 
 /** The SQL FRONT DOOR for the versioned store: a DataSourceV2
@@ -108,6 +108,8 @@ class GraftCatalog extends TableCatalog
   }
 
   override def name(): String = catalogName
+
+  override def toString: String = s"GraftCatalog($catalogName)"
 
   private def dirOf(ident: Identifier): String =
     (ident.namespace :+ ident.name)
@@ -719,6 +721,8 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
 
   override def name(): String = ident
 
+  override def toString: String = s"GraftTable($ident)"
+
   /** Schema from ONE entry's footers (the newest-staged idiom) — never
     * a full file listing, however many partitions the table has —
     * plus any declared-but-unmaterialized columns ([[ExtraCols]]:
@@ -1153,16 +1157,11 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     }
     // footer statistics are EXACT (never truncated) for integral
     // physical types — which includes DATE (INT32 days) and TIMESTAMP
-    // (INT64 micros/millis, the unit checked per chunk in
-    // dataColBound): "latest event ts" is the other constant
+    // (INT64 micros/millis): "latest event ts" is the other constant
     // maintainer poll, so it answers metadata-only too (round 16)
-    def boundable(dt: DataType): Boolean = dt match {
-      case DateType | TimestampType | TimestampNTZType => true
-      case other => integral(other)
-    }
     val isPart = (c: String) => partCol.exists(_.equalsIgnoreCase(c))
     val minMaxCols = specs.collect { case Mn(c) => c case Mx(c) => c }
-    if (!minMaxCols.forall(c => boundable(fullSchema(c).dataType)))
+    if (!minMaxCols.forall(c => Footers.boundable(fullSchema(c).dataType)))
       return None
     // MOR vectors outstanding: footer BOUNDS could name a tombstoned
     // or re-imaged row — MIN/MAX decline. COUNT(*) survives (round
@@ -1185,7 +1184,7 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
         !singleLayout)
       return None
     val kept = MergeOps.skipEntries(scanMan, ranges, values,
-      Map.empty, Map.empty, Map.empty)
+      Versioned.NoZoneMaps)
     // exact doomed-row count per kept entry, from the dv sidecars
     // alone: every line fully position-mapped, positions unioned per
     // file across stacked generations (MorRef.qualified: bare legacy
@@ -1203,15 +1202,14 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     }.toMap
     val conf = spark.sparkContext.hadoopConfiguration
     // one footer per surviving data file, read once, shared by every
-    // requested function
+    // requested function ([[Footers]]: the one exactness rule)
+    val footerCols = minMaxCols.filterNot(isPart).distinct
+      .map(c => c -> fullSchema(c).dataType)
     def footersOf(entries: Seq[(String, String)]) =
       entries.flatMap { case (_, rel) =>
         Versioned.dataFiles(spark, dir, rel).map { st =>
           GraftScanObservable.lastAggFooterReads += 1
-          org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            conf, st,
-            org.apache.parquet.format.converter.ParquetMetadataConverter
-              .NO_FILTER)
+          Footers.read(conf, st, footerCols)
         }
       }
     // the Iceberg manifest-recorded-counts tier (round 16): COUNT
@@ -1219,14 +1217,15 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     // recorded a row count for EVERY file actually present
     // ([[Versioned.recordedRows]]) — the footer-per-file RPCs become
     // the fallback, not the path
-    lazy val statsRows = Versioned.readStatsRows(spark, dir, version)
+    lazy val statsRows =
+      Versioned.zoneMaps(spark, dir, version, Some(Set.empty)).rows
+    // canonical long = the integral value, epoch DAYS (date) or MICROS
+    // (timestamp) — the unit Footers normalizes chunk statistics to
     def cast(c: String, v: Long): Any = fullSchema(c).dataType match {
       case LongType => v
       case IntegerType => v.toInt
       case ShortType => v.toShort
       case ByteType => v.toByte
-      // canonical long = epoch DAYS (date) / MICROS (timestamp) — the
-      // unit dataColBound normalized the chunk statistics to
       case DateType =>
         java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v))
       case TimestampType =>
@@ -1236,67 +1235,15 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
           .microsToLocalDateTime(v)
       case other => throw new IllegalStateException(s"unexpected $other")
     }
-    def dataColBound(footers: Seq[
-          org.apache.parquet.hadoop.metadata.ParquetMetadata],
-        c: String, wantMin: Boolean): Option[Any] = {
-      var acc: Option[Long] = None
-      for (f <- footers; b <- f.getBlocks.asScala) {
-        if (b.getRowCount > 0L) {
-          val chunk = b.getColumns.asScala
-            .find(_.getPath.toDotString == c)
-          chunk match {
-            case None => ()  // pre-evolution file: null-filled, no bound
-            case Some(cc) =>
-              val st = cc.getStatistics
-              if (st == null || st.isEmpty)
-                throw new IllegalStateException("no stats")  // decline
-              else if (st.hasNonNullValue) {
-                val raw = (if (wantMin) st.genericGetMin()
-                           else st.genericGetMax())
-                  .asInstanceOf[Number].longValue
-                // normalize to the canonical long `cast` expects; any
-                // physical shape stats cannot answer EXACTLY (INT96
-                // timestamps, NANOS truncation, a mismatched UTC
-                // adjustment) throws → the whole pushdown declines
-                import org.apache.parquet.schema.{
-                  LogicalTypeAnnotation, PrimitiveType}
-                val prim = cc.getPrimitiveType
-                val v = fullSchema(c).dataType match {
-                  case DateType =>
-                    if (prim.getPrimitiveTypeName !=
-                        PrimitiveType.PrimitiveTypeName.INT32)
-                      throw new IllegalStateException("date not INT32")
-                    raw
-                  case TimestampType | TimestampNTZType =>
-                    prim.getLogicalTypeAnnotation match {
-                      case t: LogicalTypeAnnotation
-                          .TimestampLogicalTypeAnnotation =>
-                        val wantUtc =
-                          fullSchema(c).dataType == TimestampType
-                        if (t.isAdjustedToUTC != wantUtc)
-                          throw new IllegalStateException(
-                            "timestamp adjustment mismatch")
-                        t.getUnit match {
-                          case LogicalTypeAnnotation.TimeUnit.MICROS =>
-                            raw
-                          case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                            Math.multiplyExact(raw, 1000L)
-                          case _ => throw new IllegalStateException(
-                            "nanos stats are not micro-exact")
-                        }
-                      case _ => throw new IllegalStateException(
-                        "not an annotated INT64 timestamp")
-                    }
-                  case _ => raw
-                }
-                acc = Some(acc.fold(v)(a =>
-                  if (wantMin) math.min(a, v) else math.max(a, v)))
-              }
-          }
-        }
+    // a declined footer throws: the whole pushdown declines
+    def dataColBound(footers: Seq[Footers.Footer], c: String,
+                     wantMin: Boolean): Option[Any] =
+      Footers.merge(footers.map(_.bounds(c))) match {
+        case Footers.Exact(lo, hi) => Some(cast(c, if (wantMin) lo else hi))
+        case Footers.NoBound => None
+        case Footers.Decline =>
+          throw new IllegalStateException(s"footers cannot bound $c")
       }
-      acc.map(cast(c, _))
-    }
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     def dirValueRaw(n: String): Option[String] = {
       val raw = ExternalCatalogUtils.unescapePathName(
@@ -1337,8 +1284,7 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
       specs.map {
         case Cnt =>
           val base = Versioned.recordedRows(spark, dir, entries, statsRows)
-            .getOrElse(footers
-            .map(_.getBlocks.asScala.map(_.getRowCount).sum).sum)
+            .getOrElse(footers.map(_.rows).sum)
           val n = base -
             entries.map(e => doomedByEntry.getOrElse(e._1, 0L)).sum
           (StructField("count(*)", LongType, nullable = false), n)
@@ -1431,7 +1377,7 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
     val fsys = new Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     lazy val nameKept = MergeOps.skipEntries(man, ranges, values,
-      Map.empty, Map.empty, Map.empty)
+      Versioned.NoZoneMaps)
     val bytes = scala.util.Try {
       nameKept.map(_._2).distinct
         .map(rel => fsys.getContentSummary(new Path(s"$dir/$rel"))
@@ -1444,7 +1390,8 @@ class GraftScan(spark: SparkSession, dir: String, version: Long,
     // planning (too-big costs a shuffle, too-small OOMs a broadcast) —
     // so only the dv case keeps the estimate, absent lines drop it
     val rows = scala.util.Try(Versioned.recordedRows(spark, dir, nameKept,
-      Versioned.readStatsRows(spark, dir, version))).toOption.flatten
+      Versioned.zoneMaps(spark, dir, version, Some(Set.empty)).rows))
+      .toOption.flatten
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         bytes.fold(java.util.OptionalLong.empty())(

@@ -40,7 +40,7 @@ class Wave22Spec extends SparkTestBase {
     val dir = freshDir("graft_dict")
     MergeOps.mergeUpsert(spark, dir, corpus(), "k", "y",
       dictKeys = Seq("status"))
-    val dicts = Versioned.readStatsDict(spark, dir, 1L)
+    val dicts = Versioned.zoneMaps(spark, dir, 1L).dicts
     assert(dicts("y=1")("status") == Set("A") &&
            dicts("y=2")("status") == Set("A", "B") &&
            dicts("y=4")("status") == Set("B", "C"), s"got $dicts")
@@ -67,7 +67,7 @@ class Wave22Spec extends SparkTestBase {
       .toDF("k", "status", "y")
     MergeOps.mergeUpsert(spark, dir, wide.union(corpus().where(col("y") > 1)),
       "k", "y", dictKeys = Seq("status"))
-    val dicts = Versioned.readStatsDict(spark, dir, 1L)
+    val dicts = Versioned.zoneMaps(spark, dir, 1L).dicts
     assert(!dicts.contains("y=1"),
       s"80 distinct values must be over the cap: ${dicts.get("y=1")}")
     // unpruned but correct: v7 lives in the dictionary-less partition
@@ -78,7 +78,7 @@ class Wave22Spec extends SparkTestBase {
       statsKeys = Seq("k"), dictKeys = Seq("status"))
     assert(Versioned.readStatsMulti(spark, dir2, 1L)("y=1")("k") ==
       (1L, 10L), "range reader must skip dict lines")
-    assert(Versioned.readStatsDict(spark, dir2, 1L)("y=3")("status") ==
+    assert(Versioned.zoneMaps(spark, dir2, 1L).dicts("y=3")("status") ==
       Set("B"), "dict reader must skip range lines")
     // the range and dictionary tiers both work off the shared sidecar
     assert(MergeOps.readCorpusSkipPruned(spark, dir2, "y",
@@ -97,18 +97,18 @@ class Wave22Spec extends SparkTestBase {
     // pruning stays CORRECT (reads y=4, finds nothing)
     MergeOps.mergeDelete(spark, dir,
       (31L to 40L by 2).toDF("k"), "k", "y")                        // v2
-    assert(Versioned.readStatsDict(spark, dir, 2L)("y=4")("status") ==
+    assert(Versioned.zoneMaps(spark, dir, 2L).dicts("y=4")("status") ==
       Set("B", "C"), "delete must carry the (superset) dictionary")
     assert(prunedKeys(dir, Seq("C")).isEmpty &&
       plainKeys(dir, Seq("C")).isEmpty)
     MergeOps.compactPartitions(spark, dir, "y", maxFilesPerPart = 0) // v3
-    assert(Versioned.readStatsDict(spark, dir, 3L)("y=2")("status") ==
+    assert(Versioned.zoneMaps(spark, dir, 3L).dicts("y=2")("status") ==
       Set("A", "B"), "compaction must carry dictionaries verbatim")
     // a dict-less upsert restaging y=2 drops its lines: conservative
     // (always read), never stale
     MergeOps.mergeUpsert(spark, dir,
       Seq((15L, "Q", 2L)).toDF("k", "status", "y"), "k", "y")       // v4
-    val d4 = Versioned.readStatsDict(spark, dir, 4L)
+    val d4 = Versioned.zoneMaps(spark, dir, 4L).dicts
     assert(!d4.contains("y=2") && d4.contains("y=3"),
       s"restaged partition sheds its dict, others carry: $d4")
     // the new value in the dictless partition is found
@@ -137,7 +137,7 @@ class Wave22Spec extends SparkTestBase {
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir, "data"))
       .map(_.getPath.getName).toSet == dataBefore,
       "a refresh must not restage any data dir")
-    val d4 = Versioned.readStatsDict(spark, dir, 4L)
+    val d4 = Versioned.zoneMaps(spark, dir, 4L).dicts
     assert(d4("y=2")("status") == Set("A", "B", "Q"),
       s"the shed partition re-arms with its CURRENT set: ${d4.get("y=2")}")
     assert(d4("y=4")("status") == Set("B"),
@@ -155,7 +155,7 @@ class Wave22Spec extends SparkTestBase {
     val m5 = Versioned.readStatsMulti(spark, dir, 5L)
     assert(m5("y=2")("k") == (11L, 20L) && m5("y=4")("k") == (32L, 40L),
       s"refreshed bounds must be exact for live content: $m5")
-    assert(Versioned.readStatsDict(spark, dir, 5L)("y=2")("status") ==
+    assert(Versioned.zoneMaps(spark, dir, 5L).dicts("y=2")("status") ==
       Set("A", "B", "Q"), "a range-only refresh must carry dictionaries")
   }
 
@@ -227,7 +227,7 @@ class Wave22Spec extends SparkTestBase {
       .toDF("k", "status", "y")
     MergeOps.mergeUpsert(spark, dir, rows, "k", "y",
       dictKeys = Seq("status"))
-    assert(Versioned.readStatsDict(spark, dir, 1L)("y=1")("status") ==
+    assert(Versioned.zoneMaps(spark, dir, 1L).dicts("y=1")("status") ==
       Set("A"))
     assert(prunedKeys(dir, Seq("A")) == Set(1L))
     assert(prunedKeys(dir, Seq("B")) == Set(3L, 4L),

@@ -24,7 +24,7 @@ class Wave33Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, quarterCorpus(400), "k", "p",
                          bloomKeys = Seq("k"))
     // k=41 lives in partition p=1 only
-    val blooms = Versioned.readStatsBloom(spark, dir, 1L)
+    val blooms = Versioned.zoneMaps(spark, dir, 1L).blooms
     assert(blooms.size == 4 && blooms.values.forall(_.contains("k")),
       "every partition must have recorded a doc-level bloom on k")
     val pruned = MergeOps.readCorpusSkipPruned(spark, dir, "p",
@@ -59,7 +59,7 @@ class Wave33Spec extends SparkTestBase {
     // changelog rule) — that partition must now always read
     MergeOps.mergeUpsert(spark, dir,
       Seq((999L, 9.9, "2")).toDF("k", "v", "p"), "k", "p")
-    val blooms2 = Versioned.readStatsBloom(spark, dir, 2L)
+    val blooms2 = Versioned.zoneMaps(spark, dir, 2L).blooms
     assert(!blooms2.contains("p=2") && blooms2.size == 3,
       "the restaged partition's bloom line must drop")
     // 999 is only in the lineless partition: found via the always-read
@@ -84,14 +84,14 @@ class Wave33Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir,
       Seq((601L, 6.1, "1")).toDF("k", "v", "p"), "k", "p",
       bloomKeys = Seq("k"))                                          // v2
-    val b2 = Versioned.readStatsBloom(spark, dir, 2L)
+    val b2 = Versioned.zoneMaps(spark, dir, 2L).blooms
     assert(b2.size == 4, "untouched partitions' lines carry, the " +
       "restaged partition re-records")
     assert(b2("p=1")("k").mightContainLong(
         MergeOps.bloomProbeHash("601")),
       "the fresh line must cover the new key")
     MergeOps.applyRetention(spark, dir, _ != "p=3")                  // v3
-    val b3 = Versioned.readStatsBloom(spark, dir, 3L)
+    val b3 = Versioned.zoneMaps(spark, dir, 3L).blooms
     assert(b3.keySet == b2.keySet - "p=3",
       "retention must carry surviving partitions' bloom lines and drop " +
         "the retired partition's")
@@ -100,7 +100,7 @@ class Wave33Spec extends SparkTestBase {
       .map(_.getLong(0)).toSeq.sorted
     assert(got == Seq(42L, 601L))
     Versioned.rollback(spark, dir, 2L)                               // v4
-    assert(Versioned.readStatsBloom(spark, dir, 4L).keySet == b2.keySet,
+    assert(Versioned.zoneMaps(spark, dir, 4L).blooms.keySet == b2.keySet,
       "rollback must byte-copy the bloom lines with the rest")
   }
 
@@ -128,7 +128,7 @@ class Wave33Spec extends SparkTestBase {
     assert(got == want, s"composed pruning must be invisible: $got")
     // tier-intersection bite: the dictionary alone pins partition 1
     // ('hot' appears nowhere else), so at most one partition survives
-    val dicts = Versioned.readStatsDict(spark, dir, 1L)
+    val dicts = Versioned.zoneMaps(spark, dir, 1L).dicts
     assert(dicts.count(_._2("c").contains("hot")) == 1)
     // and an absent-everywhere value prunes ALL partitions through the
     // bloom+dict intersection — exact empty with the right schema
@@ -149,7 +149,7 @@ class Wave33Spec extends SparkTestBase {
     // the near-miss: a range-only refresh once routed bloom lines into
     // the range branch and dropped them
     MergeOps.refreshStats(spark, dir, "p", statsKeys = Seq("k"))     // v2
-    assert(Versioned.readStatsBloom(spark, dir, 2L).size == 4,
+    assert(Versioned.zoneMaps(spark, dir, 2L).blooms.size == 4,
       "a range refresh must carry the blooms untouched")
     assert(Versioned.readStatsMulti(spark, dir, 2L).size == 4)
     // delete a key, then re-ANALYZE the bloom: the fresh filter is
@@ -157,7 +157,7 @@ class Wave33Spec extends SparkTestBase {
     MergeOps.mergeDelete(spark, dir, Seq(Tuple1(41L)).toDF("k"),
       "k", "p")                                                      // v3
     MergeOps.refreshStats(spark, dir, "p", bloomKeys = Seq("k"))     // v4
-    val b4 = Versioned.readStatsBloom(spark, dir, 4L)
+    val b4 = Versioned.zoneMaps(spark, dir, 4L).blooms
     assert(b4.size == 4 &&
       !b4("p=1")("k").mightContainLong(MergeOps.bloomProbeHash("41")),
       "the refreshed bloom must be built from live rows only")
@@ -166,7 +166,7 @@ class Wave33Spec extends SparkTestBase {
     // z-order compaction can refresh blooms in the same commit
     MergeOps.compactZOrder(spark, dir, "p", ("k", "k"),
       statsKeys = Seq("k"), bloomKeys = Seq("k"))                    // v5
-    val b5 = Versioned.readStatsBloom(spark, dir, 5L)
+    val b5 = Versioned.zoneMaps(spark, dir, 5L).blooms
     assert(b5.size == 4 &&
       b5("p=2")("k").mightContainLong(MergeOps.bloomProbeHash("42")))
     val got = MergeOps.readCorpusSkipPruned(spark, dir, "p",

@@ -45,11 +45,11 @@ class Wave35Spec extends SparkTestBase {
     val dir = freshDir("graft_repart_stats")
     MergeOps.mergeUpsert(spark, dir, pqCorpus(120), "k", "p",
                          statsKeys = Seq("k"), bloomKeys = Seq("k"))  // v1
-    val oldParts = Versioned.readStatsBloom(spark, dir, 1L).keySet
+    val oldParts = Versioned.zoneMaps(spark, dir, 1L).blooms.keySet
     assert(oldParts.forall(_.startsWith("p=")))
     MergeOps.repartitionTable(spark, dir, "p", "q",
       statsKeys = Seq("k"), bloomKeys = Seq("k"))                    // v2
-    val b2 = Versioned.readStatsBloom(spark, dir, 2L)
+    val b2 = Versioned.zoneMaps(spark, dir, 2L).blooms
     assert(b2.keySet == Set("q=E", "q=O"),
       s"bloom lines must re-key to the new layout, got ${b2.keySet}")
     assert(Versioned.readStatsMulti(spark, dir, 2L).keySet ==

@@ -10,7 +10,7 @@ import graft.ops.MergeOps
   * reaches parquet as a pushable `In`/`EqualTo` DataFilter and
   * row-group stats skip INSIDE the partitions the sidecars kept;
   * (b) LAZY bloom sidecars: [[graft.engine.LazyBloom]] defers bitset
-  * deserialization to first probe and `readStatsBloom(cols=…)` drops
+  * deserialization to first probe and `zoneMaps(bloomCols=…)` drops
   * unprobed columns' lines up front, bounding decoded driver heap at
   * O(probed partitions × probed columns). */
 class Wave36Spec extends SparkTestBase {
@@ -100,13 +100,13 @@ class Wave36Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, quarterCorpus(200), "k", "p",
                          bloomKeys = Seq("k", "p"))
     // the reader's own path: cols=Some(k) never even keeps p's lines
-    val restricted = Versioned.readStatsBloom(spark, dir, 1L,
-      Some(Set("k")))
+    val restricted = Versioned.zoneMaps(spark, dir, 1L,
+      Some(Set("k"))).blooms
     assert(restricted.values.forall(_.keySet == Set("k")),
       "cols-restricted read must drop unprobed columns' lines")
     // unrestricted read: every handle starts un-decoded; probing one
     // (partition, column) decodes exactly that handle
-    val all = Versioned.readStatsBloom(spark, dir, 1L)
+    val all = Versioned.zoneMaps(spark, dir, 1L).blooms
     assert(all.values.flatMap(_.values).forall(!_.isDecoded),
       "no bitset may deserialize before a probe")
     all("p=1")("k").mightContainLong(MergeOps.bloomProbeHash("41"))
@@ -134,8 +134,8 @@ class Wave36Spec extends SparkTestBase {
     // the reader consulted blooms only for dict survivors — rebuild the
     // same lazy map it used and replay the tier order to pin the
     // decode bound: dict prunes 3 of 4, so ≤1 bloom decodes
-    val dicts = Versioned.readStatsDict(spark, dir, 1L)
-    val blooms = Versioned.readStatsBloom(spark, dir, 1L, Some(Set("c")))
+    val dicts = Versioned.zoneMaps(spark, dir, 1L).dicts
+    val blooms = Versioned.zoneMaps(spark, dir, 1L, Some(Set("c"))).blooms
     val h = MergeOps.bloomProbeHash("hot")
     val survivors = Versioned.manifest(spark, dir, 1L).filter {
       case (n, _) =>

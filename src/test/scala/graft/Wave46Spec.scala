@@ -95,7 +95,7 @@ class Wave46Spec extends SparkTestBase {
       .toDF("k", "v", "p")
     MergeOps.mergeUpsert(spark, dir, df, "k", "p",
                          statsKeys = Seq("k"))                       // v1
-    assert(Versioned.readStatsRows(spark, dir, 1L).nonEmpty,
+    assert(Versioned.zoneMaps(spark, dir, 1L).rows.nonEmpty,
       "a stats job must record per-file row counts")
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sql.GraftCatalog].getName)
@@ -141,7 +141,7 @@ class Wave46Spec extends SparkTestBase {
     val stats = Versioned.readStatsMulti(spark, dir, 2L)
     assert(stats.nonEmpty && stats.values.forall(_.contains("k")),
       s"refresh_stats must record k bounds: $stats")
-    assert(Versioned.readStatsDict(spark, dir, 2L)
+    assert(Versioned.zoneMaps(spark, dir, 2L).dicts
       .values.forall(_.contains("p")), "and the p dictionary")
     spark.sql(
       s"CALL graft.system.expire_partitions('$tbl', 'p=O')")         // v3
