@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   InMemoryFileIndex}
 import org.apache.spark.sql.graftbridge.ClassicBridge
@@ -1378,14 +1379,6 @@ object Versioned {
     * written, since a live count is not a file's count. */
   private[graft] final case class LiveRows(v: Long) extends StatsOf
 
-  /** The column the zone-map data pass groups by: the URL-encoded name
-    * of the dir holding each row's data file, i.e. its entry's name. */
-  private val EntryCol = "__stats_entry"
-
-  private def withEntry(df: DataFrame): DataFrame =
-    df.withColumn(EntryCol, org.apache.spark.sql.functions.regexp_extract(
-      col("_metadata.file_path"), "([^/]+)/[^/]+$", 1))
-
   /** THE zone-map producer: fresh stats lines of `entries` for the
     * requested keys, every line named by the manifest entry it
     * describes.
@@ -1396,10 +1389,10 @@ object Versioned {
     *     bound exactly in every entry (the partition column is not in
     *     the files), and each entry's row total, which sizes the bloom.
     *  3. Data pass, only for dictionaries, blooms and the ranges the
-    *     footers declined: ONE aggregate grouped by the dir of each
-    *     row's data file, decoded to the entry name on the driver after
-    *     the bounded (#entries) collect. The value Spark re-infers from
-    *     a dir name is no key: it reads `p=007` back as `p=7`.
+    *     footers declined: ONE aggregate grouped by each row's entry
+    *     ([[withEntry]], rule 1), resolved on the driver after the
+    *     bounded (#entries) collect. The value Spark re-infers from a
+    *     dir name is no key: it reads `p=007` back as `p=7`.
     * An all-NULL column has no bound and an empty or over-cap set no
     * dictionary: no line, so that entry always reads. */
   private[graft] def freshStats(s: SparkSession, dir: String,
@@ -1474,27 +1467,26 @@ object Versioned {
             col(k).cast("string"))), 1, DictCap + 1)) ++
           blooms.map(k => call_function("graft_bloom_agg",
             xxhash64(col(k).cast("string")), lit(nSize), lit(numBits)))
-        val names = entries.map(_._1).toSet
+        val entryAt = entryOf(entries)
         val (d0, b0) = (1 + 2 * dataRanged.length,
                         1 + 2 * dataRanged.length + dictKeys.length)
         data.groupBy(col(EntryCol)).agg(aggs.head, aggs.tail: _*)
           .collect().toSeq.flatMap { r =>
-            val name =
-              new java.net.URI("file:/" + r.getString(0)).getPath.drop(1)
-            if (!names(name)) Nil
-            else dataRanged.zipWithIndex.flatMap { case (k, i) =>
-              if (r.isNullAt(1 + 2 * i)) None
-              else Some(RangeStats(name, k,
-                r.getAs[Number](1 + 2 * i).longValue,
-                r.getAs[Number](2 + 2 * i).longValue))
-            } ++ dictKeys.zipWithIndex.flatMap { case (k, i) =>
-              val vs = r.getSeq[String](d0 + i)
-              if (vs.isEmpty || vs.length > DictCap) None
-              else Some(DictStats(name, k, vs))
-            } ++ blooms.zipWithIndex.flatMap { case (k, i) =>
-              Option(r.get(b0 + i)).filter(_ => underCap.contains(name))
-                .map(b => BloomStats(name, k, java.util.Base64.getEncoder
-                  .encodeToString(b.asInstanceOf[Array[Byte]])))
+            entryAt(r.getString(0)).map(_._1).toSeq.flatMap { name =>
+              dataRanged.zipWithIndex.flatMap { case (k, i) =>
+                if (r.isNullAt(1 + 2 * i)) None
+                else Some(RangeStats(name, k,
+                  r.getAs[Number](1 + 2 * i).longValue,
+                  r.getAs[Number](2 + 2 * i).longValue))
+              } ++ dictKeys.zipWithIndex.flatMap { case (k, i) =>
+                val vs = r.getSeq[String](d0 + i)
+                if (vs.isEmpty || vs.length > DictCap) None
+                else Some(DictStats(name, k, vs))
+              } ++ blooms.zipWithIndex.flatMap { case (k, i) =>
+                Option(r.get(b0 + i)).filter(_ => underCap.contains(name))
+                  .map(b => BloomStats(name, k, java.util.Base64.getEncoder
+                    .encodeToString(b.asInstanceOf[Array[Byte]])))
+              }
             }
           }
       }
@@ -1506,20 +1498,12 @@ object Versioned {
     * by staging dir and each group is read with that dir as `basePath`,
     * so Spark re-derives the partition column exactly as a plain
     * partitioned-directory read would (same value escaping, same type
-    * inference). `partValues` prunes to the named values BEFORE any file
-    * is listed — the manifest is the partition index. */
-  def readCurrent(s: SparkSession, dir: String, partCol: Option[String],
-                  partValues: Option[Seq[String]] = None): DataFrame = {
+    * inference). */
+  def readCurrent(s: SparkSession, dir: String,
+                  partCol: Option[String]): DataFrame = {
     val v = currentVersion(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
-    val man = manifest(s, dir, v)
-    val kept = (partCol, partValues) match {
-      case (Some(c), Some(vals)) =>
-        val want = vals.map(x => partDirName(c, x)).toSet
-        man.filter(e => want.contains(e._1))
-      case _ => man
-    }
-    readEntriesLive(s, dir, v, kept, partCol)
+    readEntriesLive(s, dir, v, manifest(s, dir, v), partCol)
   }
 
   /** [[readEntries]] with version `v`'s merge-on-read refs APPLIED
@@ -1623,7 +1607,9 @@ object Versioned {
                 .map(_.join(keys, Seq(kc), "left_anti")).toSeq ++
               readSplit(posByName.keySet, df => {
                 val hit = posByName.map { case (f, ps) =>
-                  col("_metadata.file_path").endsWith("/" + f) &&
+                  // the path as `_metadata.file_path` spells it
+                  col("_metadata.file_path")
+                    .endsWith("/" + new Path(f).toUri.getRawPath) &&
                     col("_metadata.row_index").isInCollection(ps)
                 }.reduce(_ || _)
                 df.where(!hit)
@@ -1692,7 +1678,7 @@ object Versioned {
               val dvParts = dvListed.flatMap { case (root, files) =>
                 files.flatMap(f => Iterator.iterate(f.getPath.getParent)(
                     _.getParent).takeWhile(p => p != null && p != root)
-                  .flatMap(p => layoutOf(p.getName)))
+                  .flatMap(p => partOf(p.getName).map(_._1)))
               }.toSet
               val dataCols = dv.columns.filterNot(dvParts)
               require(dataCols.length == 1,
@@ -1768,23 +1754,104 @@ object Versioned {
   def wholeTableEntryAt(stageRel: String): Seq[(String, String)] =
     Seq((WholeTable, stageRel))
 
-  /** Legacy form of [[wholeTableEntryAt]] for the version-only layout. */
-  def wholeTableEntries(v: Long): Seq[(String, String)] =
-    wholeTableEntryAt(s"data/$v")
-
   /** The directory name Spark's partitionBy writer gives a partition
-    * value — same escaping, so manifest pruning matches the physical
-    * layout for ANY value (spaces, unicode, nulls). */
-  def partDirName(partCol: String, value: Any): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    * value (same escaping, nulls to the default partition). A name, not
+    * an identity: an entry is found from a name through
+    * [[entriesNamed]]. */
+  def partDirName(partCol: String, value: Any): String =
     if (value == null) s"$partCol=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
     else s"$partCol=${ExternalCatalogUtils.escapePathName(String.valueOf(value))}"
+
+  /** A `col=value` entry name parsed: its column, and its value as a
+    * read un-escapes it before any typing (None for the default, null,
+    * partition). None for the whole-table entry. */
+  private[graft] def partOf(name: String): Option[(String, Option[String])] =
+    name.indexOf('=') match {
+      case -1 => None
+      case i =>
+        val raw = name.substring(i + 1)
+        Some((name.substring(0, i),
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
+          else Some(ExternalCatalogUtils.unescapePathName(raw))))
+    }
+
+  // ---- PARTITION IDENTITY: the two rules by which every writer and
+  // reader finds the manifest entries it touches ----
+
+  /** RULE 1: a row belongs to the entry whose dir holds its data file.
+    * [[withEntry]] tags each row of a file scan (apply it per scan: the
+    * metadata column resolves only against a file source) with that
+    * dir's last segment as `_metadata.file_path` spells it, URL-encoded;
+    * [[entryOf]] resolves a tag on the driver. An update image, staged
+    * under its holder's name, tags as its holder. */
+  private[graft] val EntryCol = "__entry"
+
+  private[graft] def withEntry(df: DataFrame): DataFrame =
+    df.withColumn(EntryCol, org.apache.spark.sql.functions.regexp_extract(
+      col("_metadata.file_path"), "([^/]+)/[^/]+$", 1))
+
+  /** [[withEntry]]'s tag of one data file, from its URI string. */
+  private[graft] def entryTag(fileUri: String): String = {
+    val d = fileUri.substring(0, fileUri.lastIndexOf('/'))
+    d.substring(d.lastIndexOf('/') + 1)
   }
 
-  /** The partition column a dir name `col=value` carries (None for the
-    * whole-table entry). */
-  private def layoutOf(name: String): Option[String] =
-    if (name.contains('=')) Some(name.takeWhile(_ != '=')) else None
+  /** The entry of `man` a tag names: an entry's decoded last dir segment
+    * is unique in a manifest (a partition entry's dir is its name, the
+    * whole-table entry's its stage dir). */
+  private[graft] def entryOf(man: Seq[(String, String)])
+      : String => Option[(String, String)] = {
+    val byDir = man.map(e => e._2.substring(e._2.lastIndexOf('/') + 1) -> e)
+      .toMap
+    tag => byDir.get(new java.net.URI("file:/" + tag).getPath.drop(1))
+  }
+
+  /** RULE 2: two `col=value` names name one partition when some read may
+    * surface one value for both. A read infers each dir's type (numeric,
+    * else timestamp or date, else string), widens it across a version
+    * group and casts each un-escaped value to the result; so two names
+    * match when their columns agree and their un-escaped values are
+    * equal strings, equal numbers (`007` and `7`, compared as doubles,
+    * the widest) or equal timestamps (a date as its midnight). Returns
+    * the entries of `man` that `names` name, each entry's keys computed
+    * once per call.
+    *
+    * The soundness argument, once: a match may be WIDER than a read's (a
+    * string-typed group reads `007` and `7` apart), which costs a writer
+    * one more restaged entry and a reader one more entry its residual
+    * filter drops. It is never NARROWER — every type a read may resolve
+    * equates two dirs only when one of these keys does — and a narrower
+    * match would lose rows: a delete missing the entry that holds its
+    * key, an upsert staging a second copy beside it, a pruned read
+    * skipping it. */
+  private[graft] def entriesNamed(man: Seq[(String, String)],
+                                  names: Iterable[String])
+      : Seq[(String, String)] = {
+    val want = names.iterator.flatMap(identityKeys).toSet
+    if (want.isEmpty) Nil else man.filter(e => identityKeys(e._1).exists(want))
+  }
+
+  private def identityKeys(name: String): Seq[Any] = partOf(name) match {
+    case None => Seq(name)
+    case Some((c, v)) =>
+      import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode,
+        Literal}
+      import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+      val tz = Option(org.apache.spark.sql.internal.SQLConf.get
+        .sessionLocalTimeZone)
+      v.fold(Seq[Any](None)) { u =>
+        val str = Literal(
+          org.apache.spark.unsafe.types.UTF8String.fromString(u))
+        Some(u) +: (
+          // + 0.0 folds -0.0 into 0.0, as a numeric read compares them
+          try Seq(java.lang.Double.parseDouble(u) + 0.0)
+          catch {
+            case _: NumberFormatException =>
+              Seq(TimestampType, TimestampNTZType).flatMap(t =>
+                Option(Cast(str, t, tz, EvalMode.TRY).eval(null)).map(t -> _))
+          })
+      }.map(c.toLowerCase(java.util.Locale.ROOT) -> _)
+  }
 
   /** THE partition-column rule: the column of the manifest's `col=value`
     * entry names, None for a whole-table store. On a MIXED-layout
@@ -1794,7 +1861,7 @@ object Versioned {
     * the whole manifest is scanned for one rather than trusting the
     * first entry's sort luck. */
   def partColOf(man: Seq[(String, String)]): Option[String] =
-    man.iterator.flatMap(e => layoutOf(e._1)).nextOption()
+    man.iterator.flatMap(e => partOf(e._1)).map(_._1).nextOption()
 
   /** The data files directly under `dir/relDir` ([[isDataFile]]). */
   def dataFiles(s: SparkSession, dir: String,

@@ -120,26 +120,19 @@ object BranchOps {
     val bv = Versioned.currentVersion(s, bd).getOrElse(
       throw new IllegalStateException(s"no branch '$name' under $root"))
     val man = Versioned.manifest(s, bd, bv)
-    val touched = batch.select(partCol).distinct().collect()
-      .map(_.get(0)).toSeq
-    if (touched.isEmpty) return
-    val touchedNames = touched.map(Versioned.partDirName(partCol, _)).toSet
-    val oldEntries = man.filter(e => touchedNames.contains(e._1))
-    val cols = batch.columns.toSeq
+    val batchNames = batch.select(partCol).distinct().collect()
+      .map(r => Versioned.partDirName(partCol, r.get(0))).toSet
+    if (batchNames.isEmpty) return
+    // the entries the batch's values name (partition identity: a value
+    // 7 names `p=007`), each restaged under its own name
+    val oldEntries = Versioned.entriesNamed(man, batchNames)
+    val touchedNames = batchNames ++ oldEntries.map(_._1)
     val merged =
       if (oldEntries.isEmpty) batch
-      else {
-        val old = Versioned.readEntriesLive(s, bd, bv, oldEntries,
-          Some(partCol), dataDir = Some(root))
-        val aligned = cols.map { c =>
-          if (old.columns.contains(c)) col(c)
-          else lit(null).cast(batch.schema(c).dataType).as(c)
-        }
-        old.select(aligned: _*)
-          .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .selectExpr(cols: _*)
-          .unionByName(batch)
-      }
+      else MergeOps.upserted(Versioned.readEntriesLive(s, bd, bv,
+          oldEntries, Some(partCol), dataDir = Some(root),
+          perScan = Versioned.withEntry), oldEntries, partCol, keyCol,
+        batch, batch.select(col(keyCol)))
     val nbv = bv + 1
     val tok = Versioned.newToken()
     val stageRel = s"data/b_${name}_${nbv}_$tok"

@@ -125,25 +125,24 @@ object IncrementalOps {
     // the ledger is written with the fold's own attempt token by the
     // commit kernel, so id and data publish together
     def fold(v: Option[Long], man: Seq[(String, String)],
-             rows: DataFrame): Unit =
+             rows: DataFrame, replaced: Set[String]): Unit =
       MergeOps.commit(s, dir, v, man,
-        Some(MergeOps.Stage(rows, Some(DayCol))),
+        Some(MergeOps.Stage(rows, Some(DayCol))), replaced = replaced,
         // a restaged day's counts and sums grew: its lines drop
         stats = MergeOps.CarryUnchanged,
         ledgerId = Some(batchId), declareTouch = false)
     Versioned.currentVersion(s, dir) match {
-      case None => fold(None, Nil, roll(batch))
+      case None => fold(None, Nil, roll(batch), Set.empty)
       case Some(v) =>
         if (Versioned.ledgerContains(appliedIds(s, dir, v), batchId)) return
         val part = roll(batch)
         // Bounded driver-side list: the batch's DAY values (#days, not
         // #rows) — the manifest-pruning predicate, as in mergeUpsert.
         val touched = part.select(DayCol).distinct().collect()
-          .map(_.getString(0)).toSeq
+          .map(r => Versioned.partDirName(DayCol, r.getString(0))).toSet
         if (touched.isEmpty) return
         val man = Versioned.manifest(s, dir, v)
-        val touchedNames = touched.map(Versioned.partDirName(DayCol, _)).toSet
-        val oldEntries = man.filter(e => touchedNames.contains(e._1))
+        val oldEntries = Versioned.entriesNamed(man, touched)
         val merged =
           if (oldEntries.isEmpty) part
           else mergeP(
@@ -153,7 +152,7 @@ object IncrementalOps {
               .withColumn(DayCol, col(DayCol).cast("string"))
               .selectExpr(part.columns: _*)
               .unionByName(part))
-        fold(Some(v), man, merged)
+        fold(Some(v), man, merged, oldEntries.map(_._1).toSet)
     }
   }
 

@@ -135,37 +135,30 @@ object MergeOps {
   /** The HOLDER entries of a MOR write ([[mergeDeleteMor]],
     * [[mergeUpdateMor]]) whose rows `keys` shadow, each with the files
     * it holds them in and their positions ([[scanHitScopes]]; a file
-    * with no positions stays at the scope tier). Candidates ("bearing"):
-    * the `touched` same-layout entries plus every FOREIGN-layout entry
-    * (value pruning cannot see into an older spec's dirs — unevolved
-    * tables have none, so the common case scans exactly the touched
-    * partitions). Files are recorded under their verDir-QUALIFIED
-    * relative path (`<entry relpath>/<leaf>`, round 16): the read
-    * side's positional filter matches the full path suffix, so a
-    * same-named file in ANOTHER version dir of the partition group can
-    * never take this file's positions. When the scan cannot answer (a
-    * foreign verDir whose files PREDATE keyCol — column evolution, the
-    * same fallback as [[foreignLayoutTouch]]), every touched partition
-    * and every foreign entry is a holder with no files: unscoped lines,
-    * always correct (a whole-partition shadow of a non-holder is a
-    * no-op). */
+    * with no positions stays at the scope tier). Candidates: the
+    * entries the `touched` names name ([[Versioned.entriesNamed]]) and
+    * every FOREIGN-layout entry (value pruning cannot see into an older
+    * spec's dirs). A hit file belongs to the entry whose dir holds it
+    * ([[Versioned.entryOf]]), recorded under its verDir-qualified path
+    * (`<entry relpath>/<leaf>`): a same-named file in another version
+    * dir never takes its positions. When the scan cannot answer (a
+    * foreign verDir whose files predate keyCol), every candidate is a
+    * holder with no files: unscoped lines, always correct. */
   private def morHolders(s: SparkSession, corpusDir: String,
                          man: Seq[(String, String)], partCol: String,
                          touched: Seq[String], keyCol: String,
                          keys: DataFrame)
       : Map[String, Seq[(String, Seq[Long])]] = {
-    val layoutPrefix = s"$partCol="
-    val bearing = man.filter(e =>
-      !e._1.startsWith(layoutPrefix) || touched.contains(e._1))
+    val bearing = Versioned.entriesNamed(man, touched) ++
+      man.filterNot(_._1.startsWith(s"$partCol="))
     scanHitScopes(s, corpusDir, bearing, keyCol, keys) match {
-      case None =>
-        (touched ++ bearing.map(_._1).filterNot(_.startsWith(layoutPrefix)))
-          .map(_ -> Seq.empty[(String, Seq[Long])]).toMap
+      case None => bearing.map(_._1 -> Seq.empty[(String, Seq[Long])]).toMap
       case Some(hits) =>
-        hits.flatMap { case (path, ps) =>
-          bearing.find(e => path.contains(s"/${e._2}/")).map { e =>
-            val leaf = path.substring(path.lastIndexOf('/') + 1)
-            e._1 -> (s"${e._2}/$leaf", ps)
+        val holderOf = Versioned.entryOf(bearing)
+        hits.flatMap { case (uri, ps) =>
+          holderOf(Versioned.entryTag(uri)).map { e =>
+            e._1 -> (s"${e._2}/${new Path(new java.net.URI(uri)).getName}",
+              ps)
           }
         }
         .groupBy(_._1)
@@ -730,13 +723,12 @@ object MergeOps {
           tableConstraints(s, corpusDir, v), batch.columns.toSeq)
         checkConstraints(batch, persisted)
         // Bounded driver-side list: distinct PARTITION VALUES of the batch
-        // (#partitions, not #rows) — it becomes the manifest-pruning
-        // predicate on the corpus read below.
-        val touched = batch.select(partCol).distinct().collect()
-          .map(_.get(0)).toSeq
-        if (touched.isEmpty) return
+        // (#partitions, not #rows), named — the manifest-pruning predicate
+        // on the corpus read below ([[Versioned.entriesNamed]]).
+        val touchedNames = batch.select(partCol).distinct().collect()
+          .map(r => Versioned.partDirName(partCol, r.get(0))).toSet
+        if (touchedNames.isEmpty) return
         val man = Versioned.manifest(s, corpusDir, v)
-        val touchedNames = touched.map(Versioned.partDirName(partCol, _)).toSet
         // METADATA-TIER PARTITION EVOLUTION (Iceberg's spec-evolution
         // shape): entries whose `col=` prefix differs from THIS write's
         // partCol were written under an earlier spec. Evolving is just
@@ -787,47 +779,32 @@ object MergeOps {
             if (kr.isEmpty && kv.isEmpty) foreign
             else prunedEntries(s, corpusDir, v, foreign, kr, kv)
           }
-        // COLLISION expansion (the foreignLayoutTouch rule): a migrated
-        // candidate survivor stages into the current-spec dir of ITS
-        // partition value — if an untouched same-layout entry carries
-        // that name, publish would replace it by staged name and drop
-        // its rows, so every such entry must restage into the merge.
+        // COLLISION expansion ([[restageClosure]]'s rule): a
+        // migrated candidate survivor stages into the current-spec dir
+        // of ITS partition value — if an untouched same-layout entry
+        // names that partition, publish would replace it by staged name
+        // and drop its rows, so every such entry must restage into the
+        // merge. Same-layout survivors stage back under their own
+        // entry's name ([[homed]]), batch rows under theirs.
         val migratedNames: Set[String] =
           if (foreignCand.isEmpty) Set.empty
           else migratedDirNames(s, corpusDir, foreignCand, partCol)
-        val touchedAll = touchedNames ++ foreignCand.map(_._1) ++
-          migratedNames
-        val oldEntries =
-          man.filter(e => touchedNames.contains(e._1) ||
-            migratedNames.contains(e._1)) ++ foreignCand
-        val cols = batch.columns.toSeq
+        val oldEntries = Versioned.entriesNamed(man,
+          touchedNames ++ migratedNames) ++ foreignCand
+        val touchedAll = touchedNames ++ migratedNames ++
+          oldEntries.map(_._1)
         // Survivors = old rows in touched partitions whose key the batch
         // does NOT replace; merged = survivors + batch. Brand-new
         // partitions have no old side at all.
         val merged =
           if (oldEntries.isEmpty) batch
-          else {
-            // Schema evolution: the batch's schema is authoritative for
-            // the partitions it touches — survivors align to it, with
-            // columns the old rows predate null-filled at the batch's
-            // type (the write-side twin of scan_evolved's union read).
-            // Key and partition columns must exist on both sides by
-            // construction of the join and the partitionBy below. LIVE
-            // read: deletion vectors on the touched partitions apply
-            // here and their lines drop below — the restage is the
-            // materialization point, and a batch re-inserting a
-            // previously-DV'd key must win.
-            val old = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
-                                                Some(partCol))
-            val aligned = cols.map { c =>
-              if (old.columns.contains(c)) col(c)
-              else lit(null).cast(batch.schema(c).dataType).as(c)
-            }
-            old.select(aligned: _*)
-              .join(batch.select(col(keyCol)), Seq(keyCol), "left_anti")
-              .selectExpr(cols: _*)
-              .unionByName(batch)
-          }
+          // LIVE read: deletion vectors on the touched partitions apply
+          // here and their lines drop below — the restage is the
+          // materialization point, and a batch re-inserting a
+          // previously-DV'd key must win
+          else upserted(Versioned.readEntriesLive(s, corpusDir, v,
+              oldEntries, Some(partCol), perScan = Versioned.withEntry),
+            oldEntries, partCol, keyCol, batch, batch.select(col(keyCol)))
         // Restaged partitions' stats drop unless this write recomputes
         // them from the staged files; their DV lines drop (tombstones
         // materialized in the live read above); a lost claim rebases
@@ -907,62 +884,6 @@ object MergeOps {
     }
   }
 
-  /** MIXED-LAYOUT write support (metadata-tier partition evolution —
-    * the round-14 fuzz catch, seed 131): every restaging writer that
-    * finds its touched set by `partDirName(partCol, value)` is blind
-    * to FOREIGN-layout entries — a hit row living under an older
-    * spec's dir has a partition VALUE whose current-spec name matches
-    * no foreign entry, so the old copy silently survived the restage.
-    * This helper closes both halves of the gap for a writer whose hit
-    * rows are selected by `hits`:
-    *
-    *  - `_1` foreignTouched: foreign-layout manifest entries whose
-    *    BASE files hold at least one hit row (one bounded pass reading
-    *    `_metadata.file_path`, attributed back to entries — a
-    *    conservative superset: a tombstoned hit row forces a restage
-    *    whose LIVE read then resolves it correctly). These entries
-    *    must restage through the write, migrating their survivors to
-    *    the current spec — the lazy-migration rule mergeUpsert's
-    *    candidate probe established.
-    *  - `_2` migratedNames: current-spec partition dir names of EVERY
-    *    row in those entries — the COLLISION set. A migrated survivor
-    *    stages into one of these dirs, and publish replaces manifest
-    *    entries by staged NAME, so an untouched same-layout entry with
-    *    a colliding name must also restage into the merge or its rows
-    *    would be silently dropped with the replaced entry.
-    *
-    * Unevolved tables have no foreign entries — (Nil, empty), zero
-    * cost, the common case. */
-  private def foreignLayoutTouch(s: SparkSession, corpusDir: String,
-                                 man: Seq[(String, String)],
-                                 partCol: String,
-                                 hits: DataFrame => DataFrame)
-      : (Seq[(String, String)], Set[String]) = {
-    val layoutPrefix = s"$partCol="
-    val foreign = man.filterNot(_._1.startsWith(layoutPrefix))
-    if (foreign.isEmpty) return (Nil, Set.empty)
-    val base = foreign.groupBy(e => Versioned.verDirOf(e._2)).toSeq
-      .map { case (verDir, es) =>
-        Versioned.readParquetCached(s, Some(s"$corpusDir/$verDir"),
-            es.map(e => s"$corpusDir/${e._2}"))
-          .withColumn("__ml_f", col("_metadata.file_path"))
-      }.reduce(_.unionByName(_, allowMissingColumns = true))
-    // A predicate referencing a column the old layout's files predate
-    // cannot be evaluated against them — fall back to treating EVERY
-    // foreign entry as touched (a conservative restage superset; the
-    // live merge read aligns and null-fills, so content stays right).
-    val paths =
-      try hits(base).select("__ml_f").distinct()
-        .collect().map(_.getString(0)).toSeq
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          foreign.map(e => s"x/${e._2}/x")
-      }
-    val touched = foreign.filter(e => paths.exists(_.contains(s"/${e._2}/")))
-    if (touched.isEmpty) return (Nil, Set.empty)
-    (touched, migratedDirNames(s, corpusDir, touched, partCol))
-  }
-
   /** Current-spec partition dir names every row of `entries` would
     * stage under — the collision surface of a migration. Rows that
     * PREDATE the current partition column null-fill it on the aligned
@@ -994,24 +915,84 @@ object MergeOps {
       df.withColumn(partCol, col(partCol).cast("string"))
     else df
 
-  /** Collision expansion for a MAINTENANCE restage of `targets`
-    * (compaction/materialization — the whole entry restages, no hit
-    * predicate): any manifest entry whose name matches the current-spec
-    * dir name of a row in a FOREIGN-layout target must restage too
-    * (the [[foreignLayoutTouch]] `_2` rule — publish replaces entries
-    * by staged name, so a colliding untouched entry's rows would
-    * silently drop). A same-layout-only target set returns unchanged:
-    * it stages back under its own names. */
-  private def expandForMigration(s: SparkSession, corpusDir: String,
-                                 man: Seq[(String, String)],
-                                 targets: Seq[(String, String)],
-                                 partCol: String): Seq[(String, String)] = {
-    val layoutPrefix = s"$partCol="
-    val foreign = targets.filterNot(_._1.startsWith(layoutPrefix))
-    if (foreign.isEmpty) return targets
-    val migrated = migratedDirNames(s, corpusDir, foreign, partCol)
+  /** Spell the partition column of a [[Versioned.withEntry]]-tagged
+    * read of `entries` as its rows stage: a row of a `partCol=` entry
+    * keeps that entry's own value (`p=007` stays `007`, though it reads
+    * back as 7), any other row (a foreign-layout row migrating) its
+    * value as the writer names it. A restage spelled so stages every
+    * entry back under its own name. */
+  private def homed(tagged: DataFrame, entries: Seq[(String, String)],
+                    partCol: String): DataFrame = {
+    val homes = typedLit(entries.collect {
+      case (n, rel) if n.startsWith(s"$partCol=") =>
+        Versioned.entryTag(new Path(s"$rel/f").toUri.getRawPath) ->
+          Versioned.partOf(n).get._2.orNull
+    }.toMap)
+    val own =
+      if (tagged.columns.contains(partCol)) col(partCol).cast("string")
+      else lit(null).cast("string")
+    tagged.withColumn(partCol,
+        coalesce(homes(col(Versioned.EntryCol)), own))
+      .drop(Versioned.EntryCol)
+  }
+
+  /** THE UPSERT MERGE ([[mergeUpsert]], the changelog, a branch upsert):
+    * the rows of `old` (a tagged live read of `entries`) whose key
+    * `replaced` does not carry, aligned to the authoritative `batch`
+    * schema (columns old rows predate null-fill), plus `batch`. Both
+    * sides spell the partition column as they stage ([[homed]]) before
+    * the union, whose type coercion would otherwise re-spell one. */
+  private[ops] def upserted(old: DataFrame,
+                            entries: Seq[(String, String)],
+                            partCol: String, keyCol: String,
+                            batch: DataFrame, replaced: DataFrame)
+      : DataFrame = {
+    val o = homed(old, entries, partCol)
+    val cols = batch.columns.toSeq
+    o.select(cols.map { c =>
+        if (o.columns.contains(c)) col(c)
+        else lit(null).cast(batch.schema(c).dataType).as(c)
+      }: _*)
+      .join(replaced, Seq(keyCol), "left_anti")
+      .selectExpr(cols: _*)
+      .unionByName(batch.withColumn(partCol, col(partCol).cast("string")))
+  }
+
+  /** The RESTAGE CLOSURE of `targets`: publish replaces entries by
+    * staged name, so every entry a restaged row may stage onto restages
+    * too, or its rows silently drop with the replaced entry. A row
+    * stages under the name its read value spells, which names its own
+    * entry's partition ([[Versioned.entriesNamed]]: `p=007` restages as
+    * `p=7`, onto a `p=7` entry); a FOREIGN-layout target's rows migrate
+    * into the current-spec dirs of their values. Returns `targets`, then
+    * every other entry those names name. */
+  private def restageClosure(s: SparkSession, corpusDir: String,
+                             man: Seq[(String, String)],
+                             targets: Seq[(String, String)],
+                             partCol: String): Seq[(String, String)] = {
+    val foreign = targets.filterNot(_._1.startsWith(s"$partCol="))
     val names = targets.map(_._1).toSet
-    targets ++ man.filter(e => migrated.contains(e._1) && !names(e._1))
+    val migrated =
+      if (foreign.isEmpty) Set.empty[String]
+      else migratedDirNames(s, corpusDir, foreign, partCol)
+    targets ++ Versioned.entriesNamed(man, names ++ migrated)
+      .filterNot(e => names(e._1))
+  }
+
+  /** The entries a copy-on-write restage of the rows `hits` touches
+    * ([[mergeDelete]], the WHERE verbs, the changelog): the entry of
+    * every hit row, read off its [[Versioned.withEntry]] tag (rule 1 —
+    * one bounded #entries collect, the same in every layout), closed
+    * over collisions ([[restageClosure]]), in manifest order. */
+  private def hitEntries(s: SparkSession, corpusDir: String,
+                         man: Seq[(String, String)], partCol: String,
+                         hits: DataFrame): Seq[(String, String)] = {
+    val entryAt = Versioned.entryOf(man)
+    val hit = hits.select(Versioned.EntryCol).distinct().collect()
+      .flatMap(r => entryAt(r.getString(0))).toSet
+    if (hit.isEmpty) return Nil
+    man.filter(restageClosure(s, corpusDir, man, man.filter(hit), partCol)
+      .toSet)
   }
 
   /** Row-level DELETE (the GDPR / right-to-be-forgotten write every
@@ -1049,28 +1030,19 @@ object MergeOps {
     // LIVE reads throughout: a key already tombstoned by a MOR delete is
     // not present, so re-deleting it is the no-op idempotence promises,
     // and the restage below materializes the touched partitions' DVs.
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol))
-    val touched = corpus.join(keys.select(keyCol).distinct(),
-        Seq(keyCol), "left_semi")
-      .select(partCol).distinct().collect().map(_.get(0)).toSeq
+    // The entries holding a doomed key, in every layout (foreign ones'
+    // survivors migrate to the current spec), plus their collisions.
+    val touched = hitEntries(s, corpusDir, man, partCol,
+      Versioned.readEntriesLive(s, corpusDir, v, man, Some(partCol),
+          perScan = Versioned.withEntry)
+        .join(keys.select(keyCol).distinct(), Seq(keyCol), "left_semi"))
     if (touched.isEmpty) return
-    // mixed layouts: fold in foreign-layout entries holding a doomed
-    // key (their survivors migrate to the current spec) and any
-    // same-layout entry a migrated survivor would collide with
-    val (foreignTouched, migratedNames) = foreignLayoutTouch(
-      s, corpusDir, man, partCol,
-      df => df.join(keys.select(keyCol).distinct(), Seq(keyCol),
-                    "left_semi"))
-    val touchedNames = touched.map(Versioned.partDirName(partCol, _)).toSet ++
-      migratedNames ++ foreignTouched.map(_._1)
-    val oldEntries = man.filter(e => touchedNames.contains(e._1))
-    val survivors = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
+    val survivors = Versioned.readEntriesLive(s, corpusDir, v, touched,
         Some(partCol))
       .join(keys.select(keyCol).distinct(), Seq(keyCol), "left_anti")
     commit(s, corpusDir, Some(v), man,
       Some(Stage(survivors, Some(partCol), Seq(keyCol))),
-      replaced = touchedNames, stats = CarrySuperset,
+      replaced = touched.map(_._1).toSet, stats = CarrySuperset,
       emptyGuard = Some(s"delete would remove every row of $corpusDir — " +
         "an empty table cannot be read back; delete the table instead"))
   }
@@ -1113,8 +1085,9 @@ object MergeOps {
 
   /** The WHERE verbs' find-touched probe, pre-pruned through the shared
     * skipping kernel: manifest entries every tier with an opinion
-    * admits for [[predPruneHints]]' conjuncts, plus the live frame over
-    * just those entries. Returns (full manifest, None) when no conjunct
+    * admits for [[predPruneHints]]' conjuncts, plus the live hit rows
+    * of just those entries, tagged ([[Versioned.withEntry]]). Returns
+    * (full manifest, None) when no conjunct
     * is extractable, nothing prunes, or the pruned subset cannot
     * evaluate the predicate (its files predate a referenced column —
     * the full-manifest union null-fills it, so fall back). An EMPTY
@@ -1133,7 +1106,8 @@ object MergeOps {
     else if (entries.isEmpty) (Nil, None)
     else
       try (entries, Some(Versioned.readEntriesLive(s, corpusDir, v,
-        entries, Some(partCol)).where(coalesce(pred, lit(false)))))
+        entries, Some(partCol), perScan = Versioned.withEntry)
+        .where(coalesce(pred, lit(false)))))
       catch {
         case _: org.apache.spark.sql.AnalysisException => (man, None)
       }
@@ -1158,34 +1132,26 @@ object MergeOps {
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
     val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol))
+        Some(partCol), perScan = Versioned.withEntry)
     val hit = coalesce(pred, lit(false))
     // find-touched probe pre-pruned through the skipping kernel
     // (round 17): entries the zone-map/dict/bloom/name tiers prune for
     // the predicate's extractable conjuncts provably hold no hit row,
-    // so the probe (and the foreign-layout pass below) reads only the
-    // candidates — predicate-write cost ∝ candidate partitions, not
-    // corpus.
+    // so the probe reads only the candidates — predicate-write cost
+    // ∝ candidate partitions, not corpus. The entries holding a hit
+    // row restage, in every layout, plus their collisions.
     val (candEntries, prunedHits) = prunedLiveForPredicate(s, corpusDir,
       v, man, partCol, pred, corpus)
     if (candEntries.isEmpty) return
-    val touched = prunedHits.getOrElse(corpus.where(hit))
-      .select(partCol).distinct().collect().map(_.get(0)).toSeq
+    val touched = hitEntries(s, corpusDir, man, partCol,
+      prunedHits.getOrElse(corpus.where(hit)))
     if (touched.isEmpty) return
-    // mixed layouts: foreign-layout entries holding a hit row restage
-    // (survivors migrate), plus any collision entry (see
-    // foreignLayoutTouch)
-    val (foreignTouched, migratedNames) = foreignLayoutTouch(
-      s, corpusDir, candEntries, partCol, _.where(hit))
-    val touchedNames = touched.map(Versioned.partDirName(partCol, _)).toSet ++
-      migratedNames ++ foreignTouched.map(_._1)
-    val oldEntries = man.filter(e => touchedNames.contains(e._1))
-    val survivors = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
+    val survivors = Versioned.readEntriesLive(s, corpusDir, v, touched,
         Some(partCol))
       .where(!hit)
     commit(s, corpusDir, Some(v), man,
       Some(Stage(survivors, Some(partCol), sortCol.toSeq)),
-      replaced = touchedNames, stats = CarrySuperset,
+      replaced = touched.map(_._1).toSet, stats = CarrySuperset,
       emptyGuard = Some(s"DELETE WHERE would remove every row of " +
         s"$corpusDir — an empty table cannot be read back; delete the " +
         "table instead"))
@@ -1215,8 +1181,9 @@ object MergeOps {
         "through an explicit delete+insert")
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol))
+    val tagged = Versioned.readEntriesLive(s, corpusDir, v, man,
+        Some(partCol), perScan = Versioned.withEntry)
+    val corpus = tagged.drop(Versioned.EntryCol)
     // a SET column absent from the data would otherwise be SILENTLY
     // dropped by the per-column select below — refuse loudly (the
     // schema-evolution route is a write that CARRIES the column)
@@ -1230,21 +1197,15 @@ object MergeOps {
     }
     val hit = coalesce(pred, lit(false))
     // probe pre-pruned through the skipping kernel — see mergeDeleteWhere
+    // (the hit entries, as there: every layout, plus collisions — a
+    // foreign entry's updated rows and survivors migrate)
     val (candEntries, prunedHits) = prunedLiveForPredicate(s, corpusDir,
       v, man, partCol, pred, corpus)
     if (candEntries.isEmpty) return
-    val touched = prunedHits.getOrElse(corpus.where(hit))
-      .select(partCol).distinct().collect().map(_.get(0)).toSeq
+    val touched = hitEntries(s, corpusDir, man, partCol,
+      prunedHits.getOrElse(tagged.where(hit)))
     if (touched.isEmpty) return
-    // mixed layouts: foreign-layout entries holding a hit row restage
-    // (their updated rows and survivors migrate), plus any collision
-    // entry (see foreignLayoutTouch)
-    val (foreignTouched, migratedNames) = foreignLayoutTouch(
-      s, corpusDir, candEntries, partCol, _.where(hit))
-    val touchedNames = touched.map(Versioned.partDirName(partCol, _)).toSet ++
-      migratedNames ++ foreignTouched.map(_._1)
-    val oldEntries = man.filter(e => touchedNames.contains(e._1))
-    val old0 = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
+    val old0 = Versioned.readEntriesLive(s, corpusDir, v, touched,
         Some(partCol))
     // align the restaged partitions to the CORPUS schema (the
     // changelog alignment rule): a touched partition whose files
@@ -1266,7 +1227,7 @@ object MergeOps {
     // files is the only check that sees the transformed values
     commit(s, corpusDir, Some(v), man,
       Some(Stage(updated, Some(partCol), Seq(keyCol))),
-      replaced = touchedNames, stats = CarryUnchanged,
+      replaced = touched.map(_._1).toSet, stats = CarryUnchanged,
       statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
       constraints = persistedConstraintCols(
         tableConstraints(s, corpusDir, v), old.columns.toSeq))
@@ -1304,8 +1265,9 @@ object MergeOps {
         "through an explicit delete+insert")
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol))
+    val tagged = Versioned.readEntriesLive(s, corpusDir, v, man,
+        Some(partCol), perScan = Versioned.withEntry)
+    val corpus = tagged.drop(Versioned.EntryCol)
     // same loud contract as mergeUpdateWhere: a SET column absent from
     // the data would be silently dropped by the per-column select
     setMap.keys.filterNot(c => corpus.columns.contains(c)).toSeq.sorted match {
@@ -1327,42 +1289,36 @@ object MergeOps {
       v, man, partCol, pred, corpus)
     if (candEntries.isEmpty) return
     val hitSrc = prunedHits
-      .filter(_.columns.toSet == corpus.columns.toSet)
-      .getOrElse(corpus.where(hit))
-    val images = hitSrc.select(corpus.columns.toSeq.map { c =>
+      .filter(_.columns.toSet == tagged.columns.toSet)
+      .getOrElse(tagged.where(hit))
+    // each image stages where the read looks for it, `<uv dir>/<holder
+    // name>` ([[homed]]): under its own same-layout entry's name, and
+    // under the current-spec value's dir when a foreign entry holds it
+    // (that entry migrates below, into that dir)
+    val images = homed(hitSrc.select(tagged.columns.toSeq.map { c =>
       setMap.get(c) match {
         case Some(e) => e.as(c)
         case None => col(c)
       }
-    }: _*)
+    }: _*), candEntries, partCol)
     val tok = Versioned.newToken()
     val uvRel = s"uvdata/${v + 1}_$tok"
     val touched = writeMorStage(s, corpusDir, images, partCol, uvRel)
     if (touched.isEmpty) return
     validateStaged(s, corpusDir, uvRel, persistedConstraintCols(
       tableConstraints(s, corpusDir, v), corpus.columns.toSeq))
-    // FILE SCOPE (round 14, the dv analogue — see mergeDeleteMor): one
-    // bounded pass over the candidate entries' BASE dirs finds which
-    // data files hold an imaged key ([[morHolders]]), so the read-side
-    // substitution shadows only those files' rows — by row position
-    // where the density guard says the positional tier can pay. The
-    // same pass is the metadata-tier evolution detector: an imaged key
-    // living under an older spec's layout cannot be substituted in
-    // place — the per-partition image subdir lookup is keyed by the
-    // CURRENT spec's names, so a foreign-layout base row would silently
-    // keep its stale value beside the new image. Those HOLDER entries
-    // migrate in this same commit (a pure live restage under the
-    // current spec, plus collision entries — the foreignLayoutTouch
-    // rule), after which the images substitute against the migrated
-    // base like any other partition's. Under the column-evolution
-    // fallback EVERY foreign entry is a holder (all migrate; a needless
-    // migration is a content-preserving restage, never wrong).
+    // FILE SCOPE (see mergeDeleteMor): the files holding an imaged key
+    // ([[morHolders]]). A FOREIGN holder's image sits under a
+    // current-spec dir no foreign entry is named by: those holders
+    // migrate in this same commit (with their collisions), after which
+    // the images substitute against the migrated base. A needless
+    // migration is a content-preserving restage, never wrong.
     val holders = morHolders(s, corpusDir, man, partCol, touched, keyCol,
       images.select(col(keyCol)).distinct())
     val foreignHolders = holders.keySet.filterNot(_.startsWith(s"$partCol="))
     val migrate =
       if (foreignHolders.isEmpty) Nil
-      else expandForMigration(s, corpusDir, man,
+      else restageClosure(s, corpusDir, man,
         man.filter(e => foreignHolders.contains(e._1)), partCol)
     // pure migration: the update is NOT applied by the restage — the
     // images substitute on read exactly as they do for in-place
@@ -1370,17 +1326,27 @@ object MergeOps {
     // the live read and their lines drop. An update can widen bounds:
     // stats of imaged and migrated partitions drop.
     commit(s, corpusDir, Some(v), man,
+      // (a same-layout collision keeps its name: its images sit there)
       if (migrate.isEmpty) None
-      else Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, migrate,
-        Some(partCol)), Some(partCol), Seq(keyCol))),
+      else Some(Stage(homed(Versioned.readEntriesLive(s, corpusDir, v,
+        migrate, Some(partCol), perScan = Versioned.withEntry), migrate,
+        partCol), Some(partCol), Seq(keyCol))),
       replaced = migrate.map(_._1).toSet, alsoChanged = touched.toSet,
       stats = CarryUnchanged, tok = tok,
       // a partition whose base just migrated has new file names — its
       // scope (computed from the pre-migration base) is stale, so the
       // line falls back to the whole-partition form
-      newUv = stagedNames => touched.map(p =>
+      newUv = stagedNames => touched.map { p =>
+        // an image dir no committed entry is named by would never be
+        // read: refuse rather than lose the update
+        require(stagedNames(p) ||
+            man.exists(_._1 == p) && !migrate.exists(_._1 == p),
+          s"UPDATE under $corpusDir: images staged under $p, which no " +
+            "entry of the new version is named — migrate the table " +
+            "first (repartitionTable)")
         Versioned.morLine(Versioned.Uv, p, uvRel, Some(keyCol),
-          if (stagedNames(p)) Nil else holders.getOrElse(p, Nil))))
+          if (stagedNames(p)) Nil else holders.getOrElse(p, Nil))
+      })
   }
 
   /** MERGE-ON-READ row-level DELETE (Delta/Iceberg deletion vectors, at
@@ -1436,45 +1402,33 @@ object MergeOps {
           "left_semi"), partCol)
         .select(col(keyCol), col(partCol)).distinct(), partCol, dvRel)
     if (touched.isEmpty) return
-    // FILE SCOPE + HOLDER-ENTRY KEYING (round 14, [[morHolders]]). One
-    // more bounded pass over the candidate entries' BASE dirs, reading
-    // each row's file identity, finds which manifest entries — and which
-    // data FILES within them — contain a doomed key. Two things fall out:
-    //  - Per-file deletion-vector granularity (Delta/Iceberg's): the
-    //    read side anti-joins ONLY the named files' rows and streams
-    //    every other file of the partition verbatim
-    //    ([[graft.engine.Versioned.readEntriesLive]]); where the density
-    //    guard says the positional tier can pay, a file's doomed ROW
-    //    POSITIONS replace even that anti-join with a codegen'd filter.
-    //  - METADATA-TIER EVOLUTION correctness: lines key by the HOLDER
-    //    entry's own manifest name, not partDirName(partCol, value) —
-    //    a doomed key living under an older spec's layout gets its ref
-    //    attached to the entry that actually holds it (the old keying
-    //    could never match a foreign-layout entry's name, so its
-    //    tombstones silently never applied).
-    // Scopes come from the BASE files, ignoring earlier tombstones: a
-    // superset is always correct, and any base file holding a doomed
-    // key must be covered. Data dirs are immutable and any restage
-    // drops the line, so file names and positions stay valid for the
-    // ref's life.
+    // FILE SCOPE + HOLDER KEYING ([[morHolders]]): one more bounded pass
+    // over the candidates' BASE files finds the entries — and the files
+    // within them — holding a doomed key. The read side anti-joins only
+    // those files' rows (or filters their doomed row POSITIONS where the
+    // density guard says that pays), and lines and the touch set key by
+    // the HOLDER's own name: a key under an older spec's layout or under
+    // a dir a read re-spells (`p=007` reads back as 7) is shadowed in the
+    // entry that holds it. Base-file scopes ignore earlier tombstones (a
+    // superset is always correct); data dirs are immutable and a
+    // restage drops the line, so names and positions stay valid.
     val holders = morHolders(s, corpusDir, man, partCol, touched, keyCol,
       keys)
-    // Defensive floor: a LIVE doomed key always has a base row (uv
-    // images substitute for existing keys only), so a non-empty
-    // tombstone write implies base hits. If that invariant ever broke,
-    // fall back to the legacy whole-partition lines rather than lose
-    // the delete.
-    val newLines =
-      (if (holders.isEmpty) touched.map(_ -> Nil)
-       else holders.toSeq.sortBy(_._1))
-        .map { case (n, fs) => Versioned.morLine(Versioned.Dv, n, dvRel,
-          None, fs) }
+    // Defensive floor: a live doomed key always has a base row, so a
+    // non-empty tombstone write implies hits; should that ever break,
+    // whole-partition lines rather than a lost delete.
+    val held =
+      if (holders.isEmpty)
+        Versioned.entriesNamed(man, touched).map(_._1 -> Nil)
+      else holders.toSeq.sortBy(_._1)
     // nothing restages: stats (row removal keeps bounds valid
     // supersets) and update-vector refs carry verbatim — the read order
     // (substitute, then anti-join) makes a tombstone shadow any earlier
     // image of the same key
-    commit(s, corpusDir, Some(v), man, alsoChanged = touched.toSet,
-      stats = CarryAll, newDv = newLines, tok = tok)
+    commit(s, corpusDir, Some(v), man, alsoChanged = held.map(_._1).toSet,
+      stats = CarryAll, tok = tok,
+      newDv = held.map { case (n, fs) =>
+        Versioned.morLine(Versioned.Dv, n, dvRel, None, fs) })
   }
 
   /** Materialize every outstanding deletion vector (Delta's
@@ -1501,7 +1455,7 @@ object MergeOps {
     val man = Versioned.manifest(s, corpusDir, v)
     // mixed layouts: a foreign-layout bearing entry's rows migrate to
     // the current spec in this restage — fold in collision entries
-    val bearing = expandForMigration(s, corpusDir, man,
+    val bearing = restageClosure(s, corpusDir, man,
       man.filter(e => refs.contains(e._1)), partCol)
     commit(s, corpusDir, Some(v), man,
       Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, bearing,
@@ -1570,25 +1524,27 @@ object MergeOps {
     val persisted = persistedConstraintCols(
       tableConstraints(s, corpusDir, v), upserts.columns.toSeq)
     checkConstraints(upserts, persisted)
-    val deleteKeys = changes.where(col(opCol) === "d")
-      .select(keyCol).distinct()
     val man = Versioned.manifest(s, corpusDir, v)
-    val upsertParts = upserts.select(partCol).distinct().collect()
-      .map(_.get(0)).toSeq
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol))
-    val deleteParts = corpus.join(deleteKeys, Seq(keyCol), "left_semi")
-      .select(partCol).distinct().collect().map(_.get(0)).toSeq
-    // mixed layouts: foreign-layout entries holding ANY changed key
-    // restage through the apply (survivors migrate), plus collision
-    // entries (see foreignLayoutTouch)
-    val (foreignTouched, migratedNames) = foreignLayoutTouch(
-      s, corpusDir, man, partCol,
-      df => df.join(changes.select(keyCol).distinct(), Seq(keyCol),
-                    "left_semi"))
-    val touchedNames = (upsertParts ++ deleteParts)
-      .map(Versioned.partDirName(partCol, _)).toSet ++
-      migratedNames ++ foreignTouched.map(_._1)
+    val changedKeys = changes.select(keyCol).distinct()
+    // Touched: the entries the upsert rows' values name, plus every
+    // entry holding a deleted key ([[hitEntries]]). On an evolved store
+    // every changed key probes: an upserted key under a foreign layout
+    // migrates (a same-layout one lives in a named entry, by the stable
+    // key→partition rule).
+    val upsertNames = upserts.select(partCol).distinct().collect()
+      .map(r => Versioned.partDirName(partCol, r.get(0))).toSet
+    val probe =
+      if (man.forall(_._1.startsWith(s"$partCol="))) changes
+        .where(col(opCol) === "d").select(keyCol).distinct()
+      else changedKeys
+    val hit = hitEntries(s, corpusDir, man, partCol,
+      Versioned.readEntriesLive(s, corpusDir, v, man, Some(partCol),
+          perScan = Versioned.withEntry)
+        .join(probe, Seq(keyCol), "left_semi"))
+      .map(_._1).toSet ++
+      Versioned.entriesNamed(man, upsertNames).map(_._1)
+    val oldEntries = man.filter(e => hit(e._1))
+    val touchedNames = upsertNames ++ hit
     if (touchedNames.isEmpty) {
       // No rows to move. An UNidentified apply publishes nothing; an
       // identified one still must RECORD the id — a ledger tick: one
@@ -1603,26 +1559,12 @@ object MergeOps {
           ledgerId = ledgerId)
       return
     }
-    val oldEntries = man.filter(e => touchedNames.contains(e._1))
-    val cols = upserts.columns.toSeq
-    val changedKeys = changes.select(keyCol).distinct()
+    // LIVE: touched partitions' DVs materialize in this restage
     val merged =
       if (oldEntries.isEmpty) upserts
-      else {
-        // survivors align to the batch schema (null-filling columns old
-        // rows predate) exactly as mergeUpsert's evolution rule does;
-        // LIVE: touched partitions' DVs materialize in this restage
-        val old = Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
-                                            Some(partCol))
-        val aligned = cols.map { c =>
-          if (old.columns.contains(c)) col(c)
-          else lit(null).cast(upserts.schema(c).dataType).as(c)
-        }
-        old.select(aligned: _*)
-          .join(changedKeys, Seq(keyCol), "left_anti")
-          .selectExpr(cols: _*)
-          .unionByName(upserts)
-      }
+      else upserted(Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
+          Some(partCol), perScan = Versioned.withEntry), oldEntries,
+        partCol, keyCol, upserts, changedKeys)
     commit(s, corpusDir, Some(v), man,
       Some(Stage(merged, Some(partCol), Seq(keyCol))),
       replaced = touchedNames, stats = CarryUnchanged, statsKeys = statsKeys,
@@ -1898,9 +1840,11 @@ object MergeOps {
     * (equality/IN) predicate, plus the manifest NAME itself for values
     * on an entry's partition column — the zeroth tier every table
     * format gets for free: `col=value` dir names ARE the partition
-    * index, no sidecar needed. A partition with no line in some tier is
-    * admitted by that tier (stats are an optimization, never a
-    * correctness gate). Tiers short-circuit cheapest-first, so a
+    * index, no sidecar needed; a name admits a value through the
+    * partition-identity rule ([[Versioned.entriesNamed]]: `p=007`
+    * admits 7, the value a read surfaces). A partition with no line in
+    * some tier is admitted by that tier (stats are an optimization,
+    * never a correctness gate). Tiers short-circuit cheapest-first, so a
     * partition the name/range/dict tiers pruned never deserializes its
     * bloom bitset (the [[graft.engine.LazyBloom]] contract — decoded
     * driver heap is O(survivors × probed columns), not O(all
@@ -1919,18 +1863,16 @@ object MergeOps {
     // entries of other layouts pass to the sidecar tiers — per-layout
     // pruning over a mixed manifest, Iceberg's spec-evolution read
     // shape
-    val nameWanted = values.map { case (c, vals) =>
-      (c, vals.map(x =>
-        Versioned.partDirName(c, x).drop(c.length + 1)).toSet) }
-    man.filter { case (n, _) =>
-      val layout = n.takeWhile(_ != '=')
+    val nameWanted = values.map { case (c, vals) => (c, Versioned
+      .entriesNamed(man, vals.map(Versioned.partDirName(c, _))).toSet) }
+    man.filter { case (n, rel) =>
+      val layout = Versioned.partOf(n).map(_._1)
       // a value on the entry's OWN partition column is the name tier's
       // alone: the dict and bloom tiers hold the value Spark re-infers
-      // from the dir name, which need not be the name's spelling (`p=007`
-      // records 7, and would prune the `007` the name tier keeps)
-      def own(c: String) = n.contains('=') && layout.equalsIgnoreCase(c)
-      def nameOk = nameWanted.forall { case (c, wantedVals) =>
-        !own(c) || wantedVals.contains(n.drop(layout.length + 1)) }
+      // from the dir name, a rendering the hint need not share
+      def own(c: String) = layout.exists(_.equalsIgnoreCase(c))
+      def nameOk = nameWanted.forall { case (c, named) =>
+        !own(c) || named((n, rel)) }
       def rangeOk = zm.ranges.get(n).forall { cols =>
         ranges.forall { case (c, lo, hi) =>
           cols.get(c).forall { case (slo, shi) => shi >= lo && slo <= hi }
@@ -2043,7 +1985,7 @@ object MergeOps {
     if (frag0.isEmpty) return
     // mixed layouts: a foreign-layout fragmented entry migrates to the
     // current spec in this restage — fold in collision entries
-    val frag = expandForMigration(s, corpusDir, man, frag0, partCol)
+    val frag = restageClosure(s, corpusDir, man, frag0, partCol)
     // LIVE read: compaction is the natural materialization point for any
     // deletion vectors on the fragmented partitions (Delta's OPTIMIZE
     // does the same) — their tombstones fold into the rewrite, and a
@@ -2450,12 +2392,11 @@ object MergeOps {
       case Some(v) =>
         // Bounded driver-side list: ≤ `buckets` values, the manifest-
         // pruning predicate for both the diff read and the restage.
-        val touched = batch.select(BCol).distinct().collect()
-          .map(_.get(0)).toSeq
-        if (touched.isEmpty) return
+        val names = batch.select(BCol).distinct().collect()
+          .map(r => Versioned.partDirName(BCol, r.get(0))).toSet
+        if (names.isEmpty) return
         val man = Versioned.manifest(s, historyDir, v)
-        val names = touched.map(Versioned.partDirName(BCol, _)).toSet
-        val entries = man.filter(e => names.contains(e._1))
+        val entries = Versioned.entriesNamed(man, names)
         val slice =
           if (entries.isEmpty) {
             // brand-new buckets only: nothing to diff against
@@ -2487,7 +2428,8 @@ object MergeOps {
         // restaged buckets gained rows with a new valid_from and closed
         // valid_to: their lines drop, untouched buckets' carry
         commit(s, historyDir, Some(v), man, Some(Stage(slice, Some(BCol))),
-          stats = CarryUnchanged, declareTouch = false)
+          replaced = entries.map(_._1).toSet, stats = CarryUnchanged,
+          declareTouch = false)
     }
   }
 

@@ -770,52 +770,42 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
     mine
   }
 
-  private def identOf(name: String): InternalRow = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val f = partitionSchema().head
-    val raw = name.substring(name.indexOf('=') + 1)
-    val value =
-      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-      else {
-        import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-        Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)),
-          f.dataType,
-          Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
-      }
-    InternalRow(value)
+  /** An entry name's value as this table reads it back: the un-escaped
+    * dir value cast to the partition column's type, so the spec
+    * `p = 7` of an int column finds `p=007`. */
+  private def valueOf(name: String): Any = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    Versioned.partOf(name).flatMap(_._2).map(raw =>
+      Cast(Literal(raw), partitionSchema().head.dataType,
+        Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null))
+      .orNull
   }
 
-  private def nameOfIdent(row: InternalRow): String = {
-    val f = partitionSchema().head
-    val scala0 = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(f.dataType)(row.get(0, f.dataType))
-    Versioned.partDirName(partCol.get, scala0)
-  }
+  /** This layout's entries whose value is `ident0`'s. */
+  private def entriesAt(verb: String, ident0: InternalRow)
+      : Seq[(String, String)] = layoutEntries(verb).filter(e =>
+    valueOf(e._1) == ident0.get(0, partitionSchema().head.dataType))
 
   override def listPartitionIdentifiers(
       names: Array[String], ident0: InternalRow): Array[InternalRow] = {
-    val entries = layoutEntries("SHOW PARTITIONS")
-    val pc = partCol.get
-    val wanted: Option[String] =
-      if (names.isEmpty) None
+    val entries =
+      if (names.isEmpty) layoutEntries("SHOW PARTITIONS")
       else {
-        require(names.length == 1 && names(0).equalsIgnoreCase(pc),
+        require(names.length == 1 && names(0).equalsIgnoreCase(partCol.get),
           s"SHOW PARTITIONS $ident: unknown partition column(s) " +
             names.mkString(", "))
-        Some(nameOfIdent(ident0))
+        entriesAt("SHOW PARTITIONS", ident0)
       }
-    entries.map(_._1)
-      .filter(n => wanted.forall(_ == n))
-      .map(identOf).toArray
+    entries.map(e => InternalRow(valueOf(e._1))).toArray
   }
 
   override def partitionExists(ident0: InternalRow): Boolean =
-    layoutEntries("SHOW PARTITIONS").exists(_._1 == nameOfIdent(ident0))
+    entriesAt("SHOW PARTITIONS", ident0).nonEmpty
 
   override def dropPartition(ident0: InternalRow): Boolean = {
-    val name = nameOfIdent(ident0)
-    if (!layoutEntries("DROP PARTITION").exists(_._1 == name)) false
-    else { MergeOps.applyRetention(spark, dir, n => n != name); true }
+    val names = entriesAt("DROP PARTITION", ident0).map(_._1).toSet
+    if (names.isEmpty) false
+    else { MergeOps.applyRetention(spark, dir, n => !names(n)); true }
   }
 
   override def createPartition(ident0: InternalRow,
@@ -997,25 +987,30 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
 
   /** A partition-column equality/IN is CONSUMED (not returned for
     * post-scan re-evaluation) exactly when the manifest is SINGLE-
-    * layout on that column: every entry's `col=value` dir name then IS
-    * the column's value for every row inside, so the name-tier prune
-    * applies the filter completely — classic Hive partition pruning,
-    * and the prerequisite for pushing aggregates below a partition
-    * filter (Spark only pushes an aggregate when no filter remains to
-    * re-evaluate). On a MIXED-layout manifest (mid spec-evolution)
-    * entries of other layouts pass the name tier unfiltered, so the
-    * filter stays advisory there. Everything else always stays
-    * advisory: a sidecar is never a correctness gate. */
+    * layout on that column and every entry the name tier admits spells
+    * a wanted value verbatim (its partition-identity rule may be wider
+    * than this table's read: a string column reads `007` and `7`
+    * apart): each such dir name then IS the column's value for every
+    * row inside, so the name-tier prune applies the filter completely —
+    * classic Hive partition pruning, and the prerequisite for pushing
+    * aggregates below a partition filter (Spark only pushes an
+    * aggregate when no filter remains to re-evaluate). Every other
+    * filter stays advisory: a sidecar is never a correctness gate. */
   private def exactPartitionFilter(f: Filter): Boolean = {
     def singleLayoutOn(c: String): Boolean =
-      partCol.exists(pc => pc.equalsIgnoreCase(c) &&
-        man.forall(_._1.toLowerCase(java.util.Locale.ROOT)
-          .startsWith(pc.toLowerCase(java.util.Locale.ROOT) + "=")))
+      singleLayout && partCol.exists(_.equalsIgnoreCase(c))
+    def exactNames(c: String): Boolean = hints(f)._2 match {
+      // the name tier really applies it: the filter's value hint exists
+      // (see MergeOps.filterPruneHints) and admits verbatim names only
+      case Nil => false
+      case vs => singleLayoutOn(c) &&
+        MergeOps.skipEntries(man, Nil, vs, Versioned.NoZoneMaps).forall(e =>
+          Versioned.partOf(e._1).flatMap(_._2)
+            .exists(v => vs.forall(_._2.contains(v))))
+    }
     f match {
-      // consumed only when the name tier really applies it: the
-      // filter's value hint exists (see MergeOps.filterPruneHints)
-      case EqualTo(c, _) => singleLayoutOn(c) && hints(f)._2.nonEmpty
-      case In(c, _) => singleLayoutOn(c) && hints(f)._2.nonEmpty
+      case EqualTo(c, _) => exactNames(c)
+      case In(c, _) => exactNames(c)
       // Spark plants IsNotNull beside every partition equality: a
       // `col=value` dir name IS a non-null witness for every row
       // inside, except the default-partition dir — consuming this
@@ -1027,14 +1022,18 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
 
   private var consumedNotNull: Set[String] = Set.empty
 
+  /** Every manifest entry is a `partCol=` entry (no spec evolution). */
+  private lazy val singleLayout: Boolean = partCol.exists(pc =>
+    man.forall(e => Versioned.partOf(e._1).exists(_._1.equalsIgnoreCase(pc))))
+
   /** The manifest the scan actually reads: consuming `IsNotNull(pc)`
     * removes the default-partition dir (the only place null partition
     * values live under a single-layout manifest). */
   private def scanMan: Seq[(String, String)] =
     if (consumedNotNull.isEmpty) man
     else man.filterNot { case (n, _) =>
-      consumedNotNull.exists(c =>
-        n.equalsIgnoreCase(Versioned.partDirName(c, null)))
+      Versioned.partOf(n).exists { case (c, v) =>
+        v.isEmpty && consumedNotNull.exists(c.equalsIgnoreCase) }
     }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -1175,9 +1174,6 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
     val uvRefs = Versioned.morRefs(spark, dir, version, Versioned.Uv)
     if ((dvRefs.nonEmpty || uvRefs.nonEmpty) && minMaxCols.nonEmpty)
       return None
-    def singleLayout: Boolean =
-      man.forall(_._1.toLowerCase(java.util.Locale.ROOT)
-        .startsWith(partCol.get.toLowerCase(java.util.Locale.ROOT) + "="))
     // partition-column min/max from names needs the single layout, as
     // does grouping by it
     if ((minMaxCols.exists(c => isPart(c)) || groupCol.isDefined) &&
@@ -1244,13 +1240,8 @@ class GraftScanBuilder(spark: SparkSession, dir: String, version: Long,
         case Footers.Decline =>
           throw new IllegalStateException(s"footers cannot bound $c")
       }
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    def dirValueRaw(n: String): Option[String] = {
-      val raw = ExternalCatalogUtils.unescapePathName(
-        n.drop(n.indexOf('=') + 1))
-      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
-      else Some(raw)
-    }
+    def dirValueRaw(n: String): Option[String] =
+      Versioned.partOf(n).flatMap(_._2)
     def partColBound(entries: Seq[(String, String)], c: String,
                      wantMin: Boolean): Option[Any] = {
       // non-integral parse throws -> decline
