@@ -21,7 +21,7 @@ object Tables {
     * a bench run), and the kernel's own file index leaves no listing in
     * Spark's shared `FileStatusCache`. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Versioned.readParquetCached(spark, None, Seq(s"$sfDir/$name.parquet"))
+    Versioned.readParquetCached(spark, Seq(s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

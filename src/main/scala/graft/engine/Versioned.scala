@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-  InMemoryFileIndex}
-import org.apache.spark.sql.graftbridge.ClassicBridge
+  InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.graftbridge.ClassicBridge
 import org.apache.spark.sql.functions.{col, lit, row_number}
+import org.apache.spark.sql.types.StructType
 
 /** Thrown when a writer loses a commit race: another writer claimed the
   * same version's manifest or marker first. The loser's staged data is
@@ -200,25 +201,25 @@ object Versioned {
   private def fsOf(s: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Inferred-schema memo for parquet reads of IMMUTABLE path sets.
-    *
-    * Every schemaless `read.parquet` pays a footer-inference Spark JOB
-    * (plus its driver-side planning gap) before the first real action —
-    * and a multi-pass write verb re-opens the same staged dirs 3-20×
-    * per commit (ProfileOne round 17: ~20 `parquet at Versioned` jobs of
-    * 25-40 ms inside one sql_merge lifecycle). Staged data dirs are
-    * write-once by protocol (every attempt's dir is tokenized, vacuum
-    * only ever deletes), and the bench's source tables are read-only,
-    * so an identical (basePath, root list) always carries the identical
-    * schema: memoize it and hand it to the read's file index, which
-    * skips the inference job entirely. METADATA only — never rows, never
-    * results; the exact root list is the key, so a different file subset
-    * (whose partition-value inference could differ) never shares an
-    * entry. Bounded; eviction is whole-map (entries are a few hundred
-    * bytes and keys die with their temp dirs). */
+  /** File-schema memo, keyed by a WRITE-ONCE dir (or root list): every
+    * uncached footer inference is a Spark job, and a multi-pass write
+    * verb re-opens the same staged dirs 3-20× per commit. A version dir
+    * is staged by one write and never changes (tokenized per attempt;
+    * vacuum only deletes); the bench's source tables are read-only.
+    * Data columns only: partition types are decided per read
+    * ([[scanEntries]]), never memoized. Bounded; whole-map eviction. */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The data schema of `files`, memoized under `key`. */
+  private def fileSchema(s: SparkSession, key: String,
+                         files: Seq[FileStatus]): StructType =
+    Option(schemaMemo.get(key)).getOrElse {
+      if (schemaMemo.size >= 8192) schemaMemo.clear()
+      val st = ClassicBridge.parquetSchema(s, files)
+      schemaMemo.put(key, st)
+      st
+    }
 
   /** One read's leaf listing as a read-only `FileStatusCache`: the
     * read's file index finds every root's files here, so Spark never
@@ -236,37 +237,25 @@ object Versioned {
   /** THE store-read kernel: a parquet DataFrame over `paths` (dirs or
     * files), each listed once on the driver ([[listLeaves]]) and handed
     * to Spark as a ready file index — no path check, no leaf-listing
-    * job, nothing left in Spark's shared `FileStatusCache`. The memoized
-    * schema rides along, so a repeat read also skips footer inference.
-    * `basePath` roots partition discovery as `read.parquet`'s option of
-    * that name does. */
+    * job, nothing left in Spark's shared `FileStatusCache`, no repeat
+    * footer inference. Partition columns below each path are inferred
+    * as `read.parquet` infers them. */
   private[graft] def readParquetCached(s: SparkSession,
-      basePath: Option[String], paths: Seq[String]): DataFrame =
-    readListed(s, basePath, listLeaves(s, paths))
+                                       paths: Seq[String]): DataFrame =
+    readListed(s, listLeaves(s, paths))
 
-  /** [[readParquetCached]] over data files the caller already listed
-    * (through [[listLeaves]]): each file is its own root. */
-  private[graft] def readFiles(s: SparkSession, basePath: Option[String],
-                               files: Seq[FileStatus]): DataFrame =
-    readListed(s, basePath, files.map(f => f.getPath -> Seq(f)))
-
-  /** [[readParquetCached]] over roots already listed ([[listLeaves]]). */
-  private[graft] def readListed(s: SparkSession, basePath: Option[String],
-      roots: Seq[(Path, Seq[FileStatus])]): DataFrame = {
-    val names = roots.map(_._1.toString)
-    val key = basePath.getOrElse("") + "\u0000" +
-      (if (names.length == 1) names.head
-       else names.sorted.mkString("\u0001"))
-    val options = basePath.map("basePath" -> _).toMap
-    val memo = Option(schemaMemo.get(key))
-    val index = new InMemoryFileIndex(s, roots.map(_._1), options, memo,
-      new Listed(roots.map { case (p, files) => p -> files.toArray }.toMap))
-    val df = ClassicBridge.parquet(s, index, memo, options)
-    if (memo.isEmpty) {
-      if (schemaMemo.size >= 8192) schemaMemo.clear()
-      schemaMemo.put(key, df.schema)
-    }
-    df
+  /** [[readParquetCached]] over listed roots; `spec` and `data` given
+    * ([[scanEntries]]): the index's partitions and the file schema. */
+  private def readListed(s: SparkSession,
+      roots: Seq[(Path, Seq[FileStatus])],
+      spec: Option[PartitionSpec] = None,
+      data: Option[StructType] = None): DataFrame = {
+    val index = new InMemoryFileIndex(s, roots.map(_._1), Map.empty, None,
+      new Listed(roots.map { case (p, files) => p -> files.toArray }.toMap),
+      spec)
+    ClassicBridge.parquet(s, index, data.getOrElse(fileSchema(s,
+      roots.map(_._1.toString).sorted.mkString("\u0001"),
+      roots.flatMap(_._2))))
   }
 
   /** The kernel's driver listing: each of `paths`, qualified, with the
@@ -341,7 +330,7 @@ object Versioned {
                                 partCol: Option[String]): DataFrame = {
     val newest = man.maxBy(e =>
       stageDirVersion(e._2.split("/")(1)).getOrElse(0L))
-    readEntries(s, dir, Seq(newest), partCol).limit(0)
+    readEntries(s, dir, Seq(newest), partCol, man).limit(0)
   }
 
   /** All committed versions, ascending — one bounded metadata listing.
@@ -1372,8 +1361,8 @@ object Versioned {
   private[graft] sealed trait StatsOf
   /** Entries just staged from rows of `schema`: fresh immutable files,
     * so their footers answer row counts and exact integral ranges. */
-  private[graft] final case class StagedRows(
-      schema: org.apache.spark.sql.types.StructType) extends StatsOf
+  private[graft] final case class StagedRows(schema: StructType)
+      extends StatsOf
   /** The LIVE content of committed version `v`'s entries (MOR refs
     * applied): the data pass answers every form, and no rows line is
     * written, since a live count is not a file's count. */
@@ -1401,8 +1390,7 @@ object Versioned {
       bloomKeys: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions._
     if (entries.isEmpty) return Nil
-    def requireIntegral(schema: org.apache.spark.sql.types.StructType)
-                       (k: String): Unit = {
+    def requireIntegral(schema: StructType)(k: String): Unit = {
       val dt = schema(k).dataType
       // no DATE: Spark disallows DateType→LongType casts, and a day
       // count is no bound a long hint compares with (r9 advice)
@@ -1413,7 +1401,7 @@ object Versioned {
     lazy val data = of match {
       case LiveRows(v) =>
         readEntriesLive(s, dir, v, entries, Some(partCol), perScan = withEntry)
-      case StagedRows(_) => withEntry(readParquetCached(s, None,
+      case StagedRows(_) => withEntry(readParquetCached(s,
         entries.map(e => s"$dir/${verDirOf(e._2)}").distinct))
     }
     val footerCols = of match {
@@ -1494,11 +1482,9 @@ object Versioned {
   }
 
   /** Read the current committed state. `partCol` present: entries are
-    * `col=value` dirs possibly spread across versions — they are grouped
-    * by staging dir and each group is read with that dir as `basePath`,
-    * so Spark re-derives the partition column exactly as a plain
-    * partitioned-directory read would (same value escaping, same type
-    * inference). */
+    * `col=value` dirs possibly spread across versions, read as one scan
+    * per partition layout with each value typed over the whole manifest
+    * ([[scanEntries]]). */
   def readCurrent(s: SparkSession, dir: String,
                   partCol: Option[String]): DataFrame = {
     val v = currentVersion(s, dir).getOrElse(
@@ -1533,11 +1519,10 @@ object Versioned {
     // BRANCHES, whose metadata tree lives under the table root while the
     // staged data (and tombstone dirs) stay in the root's own data dirs
     val dd = dataDir.getOrElse(dir)
+    // every partition value of this read is typed over v's manifest
+    val man = manifest(s, dir, v)
     val dvRefs = morRefs(s, dir, v, Dv)
     val uvRefs = morRefs(s, dir, v, Uv)
-    if (dvRefs.isEmpty && uvRefs.isEmpty)
-      return readListedEntries(s, dd, listEntries(s, dd, entries), partCol,
-        perScan)
     // names qualified by the HOLDER entry (MorRef.qualified): entries
     // then merge into one group below without ambiguity
     def refsOf(refs: Map[String, Seq[MorRef]], e: (String, String)) =
@@ -1560,25 +1545,18 @@ object Versioned {
         // one driver listing per entry dir, shared by the base read
         // and every split below
         val listed = listEntries(s, dd, es)
-        val base = readListedEntries(s, dd, listed, partCol, perScan)
-        lazy val byVer = listed.groupBy(l => verDirOf(l._1._2)).toSeq
-          .sortBy(_._1)
+        val base = scanEntries(s, man, listed, partCol, perScan)
         // Read the group's data files that `keep` admits (it sees the
-        // entry-QUALIFIED relative name, the scope/pos vocabulary) at
-        // the right basePath. `xform` applies PER-SCAN, before any
-        // union: metadata columns (`_metadata.file_path` / `row_index` —
-        // the positional-filter inputs) resolve only against a
-        // file-source scan, never a union's output.
+        // entry-QUALIFIED relative name, the scope/pos vocabulary), None
+        // if none. `xform` applies PER-SCAN: `_metadata.file_path` and
+        // `row_index` (the positional-filter inputs) resolve only
+        // against a file-source scan, never a union's output.
         def readSplit(keep: String => Boolean,
-                      xform: DataFrame => DataFrame = identity)
-            : Option[DataFrame] =
-          byVer.flatMap { case (verDir, ls) =>
-            val files = ls.flatMap { case ((_, rel), (_, sts)) =>
-              sts.filter(st => keep(s"$rel/${st.getPath.getName}")) }
-            if (files.isEmpty) None
-            else Some(perScan(xform(readFiles(s,
-              partCol.map(_ => s"$dd/$verDir"), files))))
-          }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+                      xform: DataFrame => DataFrame = identity) =
+          Some(listed.map { case (e, (root, sts)) =>
+            e -> (root, sts.filter(st => keep(s"${e._2}/${st.getPath.getName}")))
+          }).filter(_.exists(_._2._2.nonEmpty))
+            .map(scanEntries(s, man, _, partCol, df => perScan(xform(df))))
         // THE SHADOW KERNEL, shared by both kinds: the rows of the
         // group that `refs` do not shadow, as union parts. Unscoped (any ref
         // without a scope): one whole-group anti-join on the key.
@@ -1639,13 +1617,10 @@ object Versioned {
             // (entry, generation) — the same image dir must be read once.
             val imgs = us.map(_.rel).distinct.map { rel =>
               val ver = stageDirVersion(rel.split("/")(1)).getOrElse(0L)
-              val df = partCol match {
-                case Some(_) =>
-                  readParquetCached(s, Some(s"$dd/$rel"),
-                    es.map(e => s"$dd/$rel/${e._1}"))
-                case None => readParquetCached(s, None, Seq(s"$dd/$rel"))
-              }
-              perScan(df).withColumn("__uv_v", lit(ver))
+              val img = if (partCol.isEmpty) wholeTableEntryAt(rel)
+                else es.map(e => e._1 -> s"$rel/${e._1}")
+              scanEntries(s, man, listEntries(s, dd, img), partCol, perScan)
+                .withColumn("__uv_v", lit(ver))
             }.reduce(_.unionByName(_, allowMissingColumns = true))
             import org.apache.spark.sql.expressions.Window
             val latest = imgs
@@ -1661,46 +1636,21 @@ object Versioned {
         else {
           val rdirs = rs.map(_.rel).distinct
           val dvListed = listLeaves(s, rdirs.map(r => s"$dd/$r"))
-          val dv = dvListed.map(l => readListed(s, None, Seq(l)))
-            .reduce(_.unionByName(_))
-          // tombstone dirs are partitioned by the partition column of
-          // the SPEC THAT WROTE THEM — under metadata-tier partition
-          // evolution that may differ from the partCol this read was
-          // asked for, so the key column is inferred against each ref
-          // dir's OWN `col=value` layout, never the caller's: the one
-          // data column that is not any ref dir's partition column — a
-          // LOUD contract: a future tombstone writer adding a column
-          // would silently anti-join on an arbitrary pick otherwise
-          val kc = partCol match {
-            case Some(_) =>
-              // each dv dir's `col=value` names, from the listing the
-              // read above already holds: the parent dirs of its files
-              val dvParts = dvListed.flatMap { case (root, files) =>
-                files.flatMap(f => Iterator.iterate(f.getPath.getParent)(
-                    _.getParent).takeWhile(p => p != null && p != root)
-                  .flatMap(p => partOf(p.getName).map(_._1)))
-              }.toSet
-              val dataCols = dv.columns.filterNot(dvParts)
-              require(dataCols.length == 1,
-                s"tombstone dirs ${rdirs.mkString(", ")} must carry " +
-                  s"exactly (key, <their own partition column>) — got " +
-                  s"columns [${dv.columns.mkString(", ")}] with " +
-                  s"dir-derived partition columns " +
-                  s"[${dvParts.mkString(", ")}]; the dv writer contract " +
-                  "changed without updating the read-side key inference")
-              dataCols.head
-            case None =>
-              require(dv.columns.length == 1,
-                s"unpartitioned tombstone dirs ${rdirs.mkString(", ")} " +
-                  s"must carry exactly the key column — got " +
-                  s"[${dv.columns.mkString(", ")}]")
-              dv.columns.head
-          }
+          // a tombstone FILE holds exactly the key column (its spec's
+          // partition column is in the dir names) — LOUD, or a writer
+          // adding a column would make the anti-join's pick arbitrary
+          val kcs = dvListed.flatMap(l =>
+            fileSchema(s, l._1.toString, l._2).fieldNames).distinct
+          require(kcs.length == 1, s"tombstone dirs ${rdirs.mkString(", ")}" +
+            s" must hold exactly the key column, got [${kcs.mkString(", ")}]")
+          val kc = kcs.head
+          val dv = dvListed.map(l => readListed(s, Seq(l)).select(kc))
+            .reduce(_.union(_))
           // file scoping only when no uv substitution ran (substituted
           // rows have no base-file identity) and EVERY ref carries a
           // scope: one deleted key taxes one file's rows, not the
           // partition; any unscoped (legacy) ref disables the split
-          shadow(substituted, rs, kc, dv.select(kc).distinct(),
+          shadow(substituted, rs, kc, dv.distinct(),
               us.isEmpty && rs.forall(_.scope.isDefined))
             .reduceOption(_.unionByName(_, allowMissingColumns = true))
             // every file scoped out of existence (a restage raced the
@@ -1710,16 +1660,18 @@ object Versioned {
       }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Union-read a set of manifest entries (see [[readCurrent]]). An empty
-    * entry set is the caller's "partition absent" case — callers handle it
-    * before calling (we cannot conjure a schema from nothing). A
+  /** Read a set of manifest entries (see [[readCurrent]]), values typed
+    * over `man` (the manifest they come from) and `entries`. An empty
+    * entry set is the caller's "partition absent" case — callers handle
+    * it before calling (we cannot conjure a schema from nothing). A
     * referenced data dir that vanished since the manifest resolve raises
     * [[ConcurrentCommitException]] ([[listLeaves]]). */
   def readEntries(s: SparkSession, dir: String,
                   entries: Seq[(String, String)],
-                  partCol: Option[String]): DataFrame = {
+                  partCol: Option[String],
+                  man: Seq[(String, String)] = Nil): DataFrame = {
     require(entries.nonEmpty, "readEntries needs at least one entry")
-    readListedEntries(s, dir, listEntries(s, dir, entries), partCol)
+    scanEntries(s, man, listEntries(s, dir, entries), partCol, identity)
   }
 
   /** Each entry with its dir listed by the kernel ([[listLeaves]]). */
@@ -1728,26 +1680,65 @@ object Versioned {
       : Seq[((String, String), (Path, Seq[FileStatus]))] =
     entries.zip(listLeaves(s, entries.map(e => s"$dir/${e._2}")))
 
-  /** [[readEntries]] over entries already listed. */
-  private def readListedEntries(s: SparkSession, dir: String,
+  /** THE store scan rule: listed manifest entries (each with the
+    * files of its dir a read wants; none at all fails as `read.parquet`
+    * does) as a DataFrame. `perScan` applies to each file scan before any
+    * union, so a `_metadata.*` column resolves. Partitioned: ONE scan
+    * per layout (the column an entry name carries; a foreign layout
+    * scans apart), its values from an explicit spec that types every
+    * name of the layout in `man` and `listed` at once
+    * ([[ClassicBridge.partitionSpec]]) — a pruned read types a value as
+    * the full read does, and no commit re-types an entry it did not
+    * touch. Version dirs that disagree on the file schema read its
+    * by-name union, a missing column as null; only a column whose TYPE
+    * differs splits a layout into scans unioned by name. */
+  private[graft] def scanEntries(s: SparkSession, man: Seq[(String, String)],
       listed: Seq[((String, String), (Path, Seq[FileStatus]))],
       partCol: Option[String],
-      perScan: DataFrame => DataFrame = identity): DataFrame =
-    partCol match {
-      case None => perScan(readListed(s, None, listed.map(_._2)))
-      case Some(_) =>
-        // allowMissingColumns: version groups may disagree on schema
-        // after a schema-evolving merge (a later version's partitions
-        // carry columns older ones predate) — missing columns null-fill,
-        // the same union semantics scan_evolved pins for file sources.
-        listed.groupBy(l => verDirOf(l._1._2)).toSeq.sortBy(_._1)
-          .map { case (verDir, ls) =>
-            perScan(readListed(s, Some(s"$dir/$verDir"), ls.map(_._2)))
-          }.reduce(_.unionByName(_, allowMissingColumns = true))
-    }
+      perScan: DataFrame => DataFrame): DataFrame = {
+    def layout(name: String) = partCol.flatMap(_ => partOf(name).map(_._1))
+    // an entry's dir below its version dir, all under ONE base path "/"
+    def leaf(rel: String) = new Path("/" + rel.drop(verDirOf(rel).length + 1))
+    val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+    def named(st: StructType, n: String) = st.find(f => resolver(f.name, n))
+    val wanted = listed.filter(_._2._2.nonEmpty).sortBy { case ((_, rel), _) =>
+      (stageDirVersion(rel.split("/")(1)).getOrElse(0L), verDirOf(rel)) }
+    wanted.map(l => layout(l._1._1)).distinct.flatMap { lay =>
+      val ls = wanted.filter(l => layout(l._1._1) == lay)
+      val typed = lay.map(_ => ClassicBridge.partitionSpec(
+        (man.filter(e => layout(e._1) == lay) ++ ls.map(_._1))
+          .map(e => leaf(e._2)).distinct, Set(new Path("/"))))
+      val values = typed.toSeq.flatMap(_.partitions)
+        .map(p => p.path -> p.values).toMap
+      // each entry's file schema, memoized by its version dir; distinct
+      // schemas merge greedily into groups agreeing on every shared type
+      val schemas = ls.map { case ((_, rel), (root, files)) =>
+        fileSchema(s, Iterator.iterate(root)(_.getParent)
+          .drop(rel.count(_ == '/') - 1).next().toString, files) }
+      val (merged, groupOf) = schemas.distinct.foldLeft(
+          (Vector.empty[StructType], Map.empty[StructType, Int])) {
+        case ((gs, at), st) =>
+          gs.indexWhere(g => st.forall(f =>
+              named(g, f.name).forall(_.dataType == f.dataType))) match {
+            case -1 => (gs :+ st, at + (st -> gs.length))
+            case i => (gs.updated(i, StructType(gs(i) ++
+              st.filterNot(f => named(gs(i), f.name).isDefined))),
+              at + (st -> i))
+          }
+      }
+      merged.indices.map { i =>
+        val gl = ls.zip(schemas).collect { case (l, st) if groupOf(st) == i => l }
+        perScan(readListed(s, gl.map(_._2), typed.map(t => PartitionSpec(
+          t.partitionColumns, gl.flatMap { case ((_, rel), (_, files)) =>
+            files.map(_.getPath.getParent).distinct
+              .map(PartitionPath(values(leaf(rel)), _)) })), Some(merged(i))))
+      }
+    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(readListed(s, listed.map(_._2)))
+  }
 
   /** The version dir (`data/<v>_<token>`) a manifest relpath lives in —
-    * the `basePath` of a partitioned read and vacuum's keep key. */
+    * vacuum's keep key; a read keys its schema memo by this dir. */
   def verDirOf(rel: String): String = rel.split("/").take(2).mkString("/")
 
   /** Manifest entry for an unpartitioned table staged at `stageRel`. */
@@ -1807,9 +1798,9 @@ object Versioned {
   }
 
   /** RULE 2: two `col=value` names name one partition when some read may
-    * surface one value for both. A read infers each dir's type (numeric,
-    * else timestamp or date, else string), widens it across a version
-    * group and casts each un-escaped value to the result; so two names
+    * surface one value for both. A read infers each name's type (numeric,
+    * else timestamp or date, else string), widens it across the layout's
+    * names and casts each un-escaped value to the result; so two names
     * match when their columns agree and their un-escaped values are
     * equal strings, equal numbers (`007` and `7`, compared as doubles,
     * the widest) or equal timestamps (a date as its midnight). Returns
@@ -1856,8 +1847,8 @@ object Versioned {
   /** THE partition-column rule: the column of the manifest's `col=value`
     * entry names, None for a whole-table store. On a MIXED-layout
     * manifest (mid metadata-tier spec evolution) any `col=` entry will
-    * do: readers only use Some-ness to choose the per-version-group
-    * `basePath` read, which re-derives each group's own dir column — so
+    * do: readers only use Some-ness to choose a partitioned read, which
+    * scans each layout with its own dir column ([[scanEntries]]) — so
     * the whole manifest is scanned for one rather than trusting the
     * first entry's sort luck. */
   def partColOf(man: Seq[(String, String)]): Option[String] =

@@ -146,7 +146,7 @@ object IncrementalOps {
         val merged =
           if (oldEntries.isEmpty) part
           else mergeP(
-            Versioned.readEntries(s, dir, oldEntries, Some(DayCol))
+            Versioned.readEntries(s, dir, oldEntries, Some(DayCol), man)
               // partition-dir values like 2024-03-01 infer back as DATE;
               // re-cast so the union and the rewrite stay string-keyed
               .withColumn(DayCol, col(DayCol).cast("string"))

@@ -77,28 +77,30 @@ object MergeOps {
     * those files, each group ≤ the cap by pass-1 qualification.
     * Returns one (file path, positions) per hit file — positions empty
     * when the file stays at the scope tier — or None when a foreign
-    * verDir predates keyCol (column evolution: the caller publishes
-    * unscoped lines, the always-correct fallback). */
+    * layout's files predate keyCol (column evolution: the caller
+    * publishes unscoped lines, the always-correct fallback); a version
+    * dir of the current layout that predates keyCol reads it as null
+    * ([[Versioned.scanEntries]]) and so holds no hit. */
   private def scanHitScopes(s: SparkSession, corpusDir: String,
+                            man: Seq[(String, String)], partCol: String,
                             bearing: Seq[(String, String)],
                             keyCol: String, keys: DataFrame)
       : Option[Seq[(String, Seq[Long])]] = {
     if (bearing.isEmpty) return Some(Seq.empty)
-    def baseRead(reads: Seq[DataFrame]) = reads.map(
-        _.select(col(keyCol),
-                 col("_metadata.file_path").as("__mor_f"),
-                 col("_metadata.row_index").as("__mor_i")))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    // one driver listing per bearing entry, by basePath; pass 2 reads a
-    // subset of the same files
-    val listed: Seq[(String, Seq[(Path, Seq[FileStatus])])] = bearing
+    // the key and each row's file and position, selected per scan (a
+    // foreign layout's scan without keyCol fails analysis here)
+    def baseRead(listed: Seq[((String, String), (Path, Seq[FileStatus]))]) =
+      Versioned.scanEntries(s, man, listed, Some(partCol), _.select(
+        col(keyCol),
+        col("_metadata.file_path").as("__mor_f"),
+        col("_metadata.row_index").as("__mor_i")))
+    // one driver listing per bearing entry; pass 2 reads a subset of the
+    // same files
+    val listed = bearing
       .zip(Versioned.listLeaves(s, bearing.map(e => s"$corpusDir/${e._2}")))
-      .groupBy(l => Versioned.verDirOf(l._1._2)).toSeq.sortBy(_._1)
-      .map { case (verDir, ls) => s"$corpusDir/$verDir" -> ls.map(_._2) }
     val k = keys.select(col(keyCol)).distinct()
     try {
-      val counts = baseRead(listed.map { case (bp, roots) =>
-          Versioned.readListed(s, Some(bp), roots) })
+      val counts = baseRead(listed)
         .join(k.withColumn("__mor_hit", lit(1)), Seq(keyCol), "left")
         .groupBy(col("__mor_f"))
         .agg(count(lit(1)).as("__rows"),
@@ -112,14 +114,10 @@ object MergeOps {
       }.map(_._1).toSet
       // `_metadata.file_path` is the file's URI string
       val sparsePaths = sparse.map(p => new Path(new java.net.URI(p)))
-      val sparseByVer = listed
-        .map { case (bp, roots) =>
-          bp -> roots.flatMap(_._2).filter(f => sparsePaths(f.getPath)) }
-        .filter(_._2.nonEmpty)
       val posByFile: Map[String, Seq[Long]] =
-        if (sparseByVer.isEmpty) Map.empty
-        else baseRead(sparseByVer.map { case (bp, files) =>
-            Versioned.readFiles(s, Some(bp), files) })
+        if (sparse.isEmpty) Map.empty
+        else baseRead(listed.map { case (e, (root, files)) =>
+            e -> (root, files.filter(f => sparsePaths(f.getPath))) })
           .join(k, Seq(keyCol), "left_semi")
           .groupBy(col("__mor_f"))
           .agg(sort_array(collect_list(col("__mor_i"))).as("__ps"))
@@ -142,7 +140,7 @@ object MergeOps {
     * ([[Versioned.entryOf]]), recorded under its verDir-qualified path
     * (`<entry relpath>/<leaf>`): a same-named file in another version
     * dir never takes its positions. When the scan cannot answer (a
-    * foreign verDir whose files predate keyCol), every candidate is a
+    * foreign layout whose files predate keyCol), every candidate is a
     * holder with no files: unscoped lines, always correct. */
   private def morHolders(s: SparkSession, corpusDir: String,
                          man: Seq[(String, String)], partCol: String,
@@ -151,7 +149,7 @@ object MergeOps {
       : Map[String, Seq[(String, Seq[Long])]] = {
     val bearing = Versioned.entriesNamed(man, touched) ++
       man.filterNot(_._1.startsWith(s"$partCol="))
-    scanHitScopes(s, corpusDir, bearing, keyCol, keys) match {
+    scanHitScopes(s, corpusDir, man, partCol, bearing, keyCol, keys) match {
       case None => bearing.map(_._1 -> Seq.empty[(String, Seq[Long])]).toMap
       case Some(hits) =>
         val holderOf = Versioned.entryOf(bearing)
@@ -371,7 +369,7 @@ object MergeOps {
                              stageRel: String,
                              cs: Seq[(String, Column)]): Unit = {
     if (cs.isEmpty) return
-    try checkConstraints(Versioned.readParquetCached(s, None, Seq(s"$corpusDir/$stageRel")), cs,
+    try checkConstraints(Versioned.readParquetCached(s, Seq(s"$corpusDir/$stageRel")), cs,
       what = "staged write (read-back)")
     catch {
       case e: IllegalArgumentException =>
@@ -901,8 +899,8 @@ object MergeOps {
 
   /** Make a corpus-derived frame SAFE to stage `partitionBy(partCol)`:
     * a mixed-layout live read can surface the current partition column
-    * as VOID (a basePath read over a dir whose only value is the
-    * default partition infers NullType) or drop it entirely (every
+    * as VOID (a layout whose only value is the default partition
+    * infers NullType) or drop it entirely (every
     * group predates the column) — both crash the writer. partitionBy
     * never persists the column's TYPE into the data files (it only
     * names dirs, and null names the default dir regardless), so a
@@ -1064,7 +1062,7 @@ object MergeOps {
       UnwrapCastInBinaryComparison}
     import org.apache.spark.sql.catalyst.plans.logical.{
       Filter => LFilter, LocalRelation}
-    import org.apache.spark.sql.graftbridge.ClassicBridge
+    import org.apache.spark.sql.execution.datasources.graftbridge.ClassicBridge
     val cond =
       try src.where(pred).queryExecution.analyzed match {
         case f: LFilter =>
@@ -2404,7 +2402,8 @@ object MergeOps {
               .withColumn("valid_to", lit(null).cast("long"))
               .selectExpr(outCols: _*)
           } else {
-            val hist = Versioned.readEntries(s, historyDir, entries, Some(BCol))
+            val hist = Versioned.readEntries(s, historyDir, entries,
+              Some(BCol), man)
             val open = hist.where(col("valid_to").isNull)
             val diff = batch.alias("c")
               .join(open.alias("o"),

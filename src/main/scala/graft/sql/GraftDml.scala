@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation,
   DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
 
-import org.apache.spark.sql.graftbridge.ClassicBridge
+import org.apache.spark.sql.execution.datasources.graftbridge.ClassicBridge
 
 import graft.ops.MergeOps
 
