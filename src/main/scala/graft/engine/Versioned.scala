@@ -588,9 +588,10 @@ object Versioned {
 
   /** Kinds whose lines are keyed by partition dir name and describe
     * exactly ONE manifest: a writer carries the lines of the partitions
-    * it keeps and drops those it restages; rollback, torn-claim repair
-    * and a branch fork copy the source version's lines whole
-    * ([[copyPartitionSidecars]]). */
+    * it keeps and drops those it restages; rollback and torn-claim
+    * repair copy the source version's lines whole
+    * ([[copyPartitionSidecars]]), and a branch fork carries them whole
+    * through the commit kernel. */
   private[graft] val PartitionKeyed = Seq(Stats, Dv, Uv)
 
   /** The merge-on-read kinds ([[MorRef]]); each stages its row dirs under
@@ -694,16 +695,13 @@ object Versioned {
     finally out.close()
   }
 
-  /** Copy `from`'s partition-keyed sidecars of version `fromV` to
-    * attempt `token` of version `toV` under `to`, keeping the lines of
-    * the partitions `keep` admits; a kind left with no line is not
-    * written. */
+  /** Copy `from`'s partition-keyed sidecars of version `fromV` whole to
+    * attempt `token` of version `toV` under `to`; a kind with no line is
+    * not written. */
   private[graft] def copyPartitionSidecars(s: SparkSession, from: String,
-      fromV: Long, to: String, toV: Long, token: String,
-      keep: String => Boolean = _ => true): Unit =
+      fromV: Long, to: String, toV: Long, token: String): Unit =
     PartitionKeyed.foreach { side =>
       val lines = sidecarLines(s, from, fromV, side)
-        .filter(l => keep(statsLinePart(l)))
       if (lines.nonEmpty) writeSidecar(s, to, toV, token, side, lines)
     }
 
@@ -1364,9 +1362,12 @@ object Versioned {
   private[graft] final case class StagedRows(schema: StructType)
       extends StatsOf
   /** The LIVE content of committed version `v`'s entries (MOR refs
-    * applied): the data pass answers every form, and no rows line is
-    * written, since a live count is not a file's count. */
-  private[graft] final case class LiveRows(v: Long) extends StatsOf
+    * applied; `man` is v's manifest): the data pass answers every form,
+    * and no rows line is written, since a live count is not a file's
+    * count. */
+  private[graft] final case class LiveRows(v: Long,
+                                           man: Seq[(String, String)])
+      extends StatsOf
 
   /** THE zone-map producer: fresh stats lines of `entries` for the
     * requested keys, every line named by the manifest entry it
@@ -1399,8 +1400,9 @@ object Versioned {
           s"got ${dt.typeName}")
     }
     lazy val data = of match {
-      case LiveRows(v) =>
-        readEntriesLive(s, dir, v, entries, Some(partCol), perScan = withEntry)
+      case LiveRows(v, man) =>
+        readEntriesLive(s, dir, v, man, entries, Some(partCol),
+          perScan = withEntry)
       case StagedRows(_) => withEntry(readParquetCached(s,
         entries.map(e => s"$dir/${verDirOf(e._2)}").distinct))
     }
@@ -1409,7 +1411,7 @@ object Versioned {
         val ks = statsKeys.filterNot(_ == partCol)
         ks.foreach(requireIntegral(schema))
         ks.map(k => k -> schema(k).dataType)
-      case LiveRows(_) => Nil
+      case _: LiveRows => Nil
     }
     val conf = s.sparkContext.hadoopConfiguration
     val footers: Seq[(String, Seq[(String, Footers.Footer)])] =
@@ -1422,7 +1424,7 @@ object Versioned {
       case StagedRows(_) => footers.collect {
         case (name, fs) if fs.nonEmpty && fs.length <= RowsLineFileCap =>
           RowsStats(name, fs.map { case (f, ft) => f -> ft.rows }) }
-      case LiveRows(_) => Nil
+      case _: LiveRows => Nil
     }
     val bounds = footerCols.map { case (k, _) => k -> footers.map {
       case (name, fs) => name -> Footers.merge(fs.map(_._2.bounds(k))) } }
@@ -1489,7 +1491,8 @@ object Versioned {
                   partCol: Option[String]): DataFrame = {
     val v = currentVersion(s, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
-    readEntriesLive(s, dir, v, manifest(s, dir, v), partCol)
+    val man = manifest(s, dir, v)
+    readEntriesLive(s, dir, v, man, man, partCol)
   }
 
   /** [[readEntries]] with version `v`'s merge-on-read refs APPLIED
@@ -1507,8 +1510,11 @@ object Versioned {
     * key→partition precondition a tombstone can never match a row in a
     * partition that merely shares a ref, so the per-group union is
     * exact. `perScan` applies to every file scan before any union or
-    * join, so a metadata column it reads (`_metadata.*`) resolves. */
+    * join, so a metadata column it reads (`_metadata.*`) resolves.
+    * `man` is version `v`'s manifest, which every partition value of
+    * the read is typed over; `entries` are some of its entries. */
   def readEntriesLive(s: SparkSession, dir: String, v: Long,
+                      man: Seq[(String, String)],
                       entries: Seq[(String, String)],
                       partCol: Option[String],
                       dataDir: Option[String] = None,
@@ -1519,8 +1525,6 @@ object Versioned {
     // BRANCHES, whose metadata tree lives under the table root while the
     // staged data (and tombstone dirs) stay in the root's own data dirs
     val dd = dataDir.getOrElse(dir)
-    // every partition value of this read is typed over v's manifest
-    val man = manifest(s, dir, v)
     val dvRefs = morRefs(s, dir, v, Dv)
     val uvRefs = morRefs(s, dir, v, Uv)
     // names qualified by the HOLDER entry (MorRef.qualified): entries
@@ -1914,7 +1918,8 @@ object Versioned {
     require(fs.exists(new Path(dir, s"commits/$v")),
       s"version $v was never committed under $dir")
     requireAboveFloor(s, dir, v)
-    readEntriesLive(s, dir, v, manifest(s, dir, v), partCol)
+    val man = manifest(s, dir, v)
+    readEntriesLive(s, dir, v, man, man, partCol)
   }
 
   /** Time travel's loud below-floor guard: a version below the retention

@@ -2,16 +2,15 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables._
 import graft.engine.Versioned
 
 /** BRANCHES for the versioned store — the write-audit-publish pattern
   * (Iceberg branches / LakeFS, at this store's granularity): fork a
   * named branch off main's current version METADATA-ONLY, land risky
   * writes on the branch (main readers never see them), audit the
-  * branch content, and atomically FAST-FORWARD main to the branch head
-  * through the same OCC claim every writer uses — or drop the branch
-  * and nothing ever happened.
+  * branch content, and atomically land the branch head on main through
+  * the same OCC claim every writer uses — or drop the branch and
+  * nothing ever happened.
   *
   * Layout: a branch is its own commit tree under
   * `root/branches/<name>/` (commits/, manifest/, stats/, dv/ — the
@@ -19,19 +18,19 @@ import graft.engine.Versioned
   * torn-state repair all work unchanged), while its DATA stages under
   * the ROOT's `data/` as `b_<name>_<bv>_<token>` dirs — manifest
   * entries stay root-relative, which is what makes publish a pure
-  * metadata copy. The fork commit (branch v1) duplicates main's
-  * manifest/stats/dv lines verbatim: zero data movement at any table
-  * size. [[Versioned.vacuum]] pins every live branch head's referenced
-  * dirs (and all `b_<name>_*` stages of live branches, in-flight ones
-  * included); dropping the branch releases them to the next vacuum.
+  * metadata copy. [[Versioned.vacuum]] pins every live branch head's
+  * referenced dirs (and all `b_<name>_*` stages of live branches,
+  * in-flight ones included); dropping the branch releases them to the
+  * next vacuum.
   *
-  * Publish contract: main must still be at the fork version — branches
-  * are for AUDITING a batch of work, not for long-lived divergence; if
-  * main advanced, re-fork and re-apply (a publish-time rebase is the
-  * upsert path's job, not the branch's). The publish also AUDITS
-  * automatically: main's persisted CHECK constraints are validated on
-  * the branch's changed partitions before the fast-forward — the WAP
-  * gate lives in the engine, not in caller discipline. */
+  * Every branch commit — the fork, each upsert, the publish — is one
+  * [[MergeOps.commit]]: the kernel stages, derives and carries the
+  * sidecar lines, declares the touch set, publishes and rebases. This
+  * object decides only what is a branch's own: the fork claim
+  * (`fork.txt`), the stage naming vacuum keys on, the WAP audit (main's
+  * persisted CHECK constraints validated on the branch's changed
+  * partitions before anything lands — the gate lives in the engine,
+  * not in caller discipline) and the messages a branch user reads. */
 object BranchOps {
 
   private def bdir(root: String, name: String) = s"$root/branches/$name"
@@ -46,10 +45,21 @@ object BranchOps {
       s"branch name '$name' must be [A-Za-z0-9.-]+ (no underscore — it " +
         "delimits the branch's staged-dir names)")
 
-  /** Fork `name` off main's CURRENT version — metadata only. Branch v1
-    * duplicates main's manifest, stats, and dv sidecars verbatim; the
-    * fork version is recorded write-once (`fork.txt`, also the claim
-    * that makes racing creates lose loudly). */
+  /** The stage a commit at branch version `v` writes under the root. */
+  private def stageName(name: String)(v: Long, tok: String): String =
+    s"data/b_${name}_${v}_$tok"
+
+  /** The branch's current version: its head. */
+  private def headVersion(s: SparkSession, root: String,
+                          name: String): Long =
+    Versioned.currentVersion(s, bdir(root, name)).getOrElse(
+      throw new IllegalStateException(s"no branch '$name' under $root"))
+
+  /** Fork `name` off main's CURRENT version — metadata only: branch v1
+    * is one kernel commit of main's manifest, stats, dv and uv lines
+    * verbatim, declaring no touch set (zero data movement at any table
+    * size). The fork version is recorded write-once (`fork.txt`, also
+    * the claim that makes racing creates lose loudly). */
   def createBranch(s: SparkSession, root: String, name: String): Unit = {
     requireName(name)
     val v = Versioned.currentVersion(s, root).getOrElse(
@@ -67,10 +77,11 @@ object BranchOps {
               "record is claimed) — drop it first", e)
       }
     try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    val bd = bdir(root, name)
-    val tok = Versioned.newToken()
-    Versioned.copyPartitionSidecars(s, root, v, bd, 1L, tok)
-    Versioned.publish(s, bd, 1L, tok, Versioned.manifest(s, root, v))
+    def lines(side: String) = Versioned.sidecarLines(s, root, v, side)
+    MergeOps.commit(s, bdir(root, name), None, Nil,
+      prestaged = Versioned.manifest(s, root, v), stats = MergeOps.CarryNone,
+      freshLines = lines(Versioned.Stats), newDv = lines(Versioned.Dv),
+      newUv = _ => lines(Versioned.Uv), declareTouch = false)
   }
 
   /** The main version `name` forked from. */
@@ -102,78 +113,52 @@ object BranchOps {
       throw new IllegalStateException(
         s"branch '$name' under $root has no committed version — a " +
           "crashed create; drop and re-create it"))
-    Versioned.readEntriesLive(s, bd, bv, Versioned.manifest(s, bd, bv),
-      Some(partCol), dataDir = Some(root))
+    val man = Versioned.manifest(s, bd, bv)
+    Versioned.readEntriesLive(s, bd, bv, man, man, Some(partCol),
+      dataDir = Some(root))
   }
 
-  /** Upsert `batch` into the BRANCH — [[MergeOps.mergeUpsert]]'s exact
-    * restage semantics (stable key→partition precondition included),
-    * committed on the branch's own version chain; main readers never
-    * see it. Main's persisted constraints are deliberately NOT enforced
-    * here: a branch may hold dirty intermediate state — the gate is
-    * [[publishBranch]]'s audit. Stats lines for touched partitions
-    * drop (the changelog rule); untouched lines carry. */
+  /** Upsert `batch` into the BRANCH: [[MergeOps.mergeUpsert]]'s merge on
+    * the branch's own version chain (metadata under the branch, data
+    * under the root) — the same restage, foreign-layout key probe and
+    * touch declaration; main readers never see it. Main's persisted
+    * constraints are deliberately NOT enforced here (the branch chain
+    * has no `constraints` sidecar): a branch may hold dirty
+    * intermediate state — the gate is [[publishBranch]]'s audit. */
   def branchUpsert(s: SparkSession, root: String, name: String,
                    batch: DataFrame, keyCol: String,
-                   partCol: String): Unit = {
-    val bd = bdir(root, name)
-    val bv = Versioned.currentVersion(s, bd).getOrElse(
-      throw new IllegalStateException(s"no branch '$name' under $root"))
-    val man = Versioned.manifest(s, bd, bv)
-    val batchNames = batch.select(partCol).distinct().collect()
-      .map(r => Versioned.partDirName(partCol, r.get(0))).toSet
-    if (batchNames.isEmpty) return
-    // the entries the batch's values name (partition identity: a value
-    // 7 names `p=007`), each restaged under its own name
-    val oldEntries = Versioned.entriesNamed(man, batchNames)
-    val touchedNames = batchNames ++ oldEntries.map(_._1)
-    val merged =
-      if (oldEntries.isEmpty) batch
-      else MergeOps.upserted(Versioned.readEntriesLive(s, bd, bv,
-          oldEntries, Some(partCol), dataDir = Some(root),
-          perScan = Versioned.withEntry), oldEntries, partCol, keyCol,
-        batch, batch.select(col(keyCol)))
-    val nbv = bv + 1
-    val tok = Versioned.newToken()
-    val stageRel = s"data/b_${name}_${nbv}_$tok"
-    merged.sortWithinPartitions(col(partCol), col(keyCol))
-      .write.mode("overwrite").partitionBy(partCol)
-      .parquet(s"$root/$stageRel")
-    val staged = Versioned.listStagedPartDirs(s, root, stageRel, partCol)
-    val stagedNames = staged.map(_._1).toSet
-    Versioned.copyPartitionSidecars(s, bd, bv, bd, nbv, tok,
-      keep = n => !touchedNames(n))
-    Versioned.publish(s, bd, nbv, tok,
-      man.filterNot(e =>
-        touchedNames.contains(e._1) || stagedNames.contains(e._1)) ++ staged)
-  }
+                   partCol: String): Unit =
+    MergeOps.mergeUpsertImpl(s, bdir(root, name),
+      Some(headVersion(s, root, name)), batch, keyCol, partCol,
+      statsKeys = Nil, ledgerId = None, dictKeys = Nil, constraints = Nil,
+      bloomKeys = Nil, dataDir = Some(root), stageName = stageName(name))
 
-  /** Atomically land the branch's work on main. Two shapes:
+  /** Atomically land the branch's work on main: one kernel commit of
+    * the branch head's entries for its CHANGE SET (diffed against the
+    * FORK state, which branch v1 carries even after main's retention
+    * sweeps it), derived from main's CURRENT version with the branch
+    * head's stats, dv and uv lines for those partitions. A branch that
+    * never diverged lands nothing. Two shapes:
     *
     *  - main still at the fork version → FAST-FORWARD: the publish
     *    commit is the branch head verbatim.
-    *  - main ADVANCED, but every intervening commit DECLARES a touched
-    *    set ([[Versioned.Touch]]) disjoint from the branch's own
-    *    CHANGE SET (diffed against the FORK state, which branch v1
-    *    carries even after main's retention sweeps it) → REBASE: the
-    *    publish takes main-current's entries/sidecar-lines for the
-    *    partitions the branch never changed and the branch head's for
-    *    the ones it did — exact by the same partition-locality argument
-    *    as the upsert rebase (disjoint intervening commits cannot have
-    *    changed what the branch's partitions contained at the fork).
-    *    Overlap or an undeclared commit still refuses loudly: re-fork.
+    *  - main ADVANCED, but every commit since the fork DECLARES a
+    *    touched set ([[Versioned.Touch]]) disjoint from the change set
+    *    → the kernel's REBASE ([[MergeOps.commit]] with `since` the
+    *    fork, checked before the first attempt): main-current's entries
+    *    and lines for the partitions the branch never changed, the
+    *    branch head's for the ones it did — exact by the same
+    *    partition-locality argument as the upsert rebase. Overlap or an
+    *    undeclared commit refuses loudly: [[rebaseBranch]].
     *
     * AUDITS first: main's persisted CHECK constraints are validated on
     * the branch's changed partitions only (the feed pruning rule). The
-    * publish commit DECLARES the changed set as its touch declaration,
-    * so disjoint upserts rebase across a publish like any other
-    * declared commit; it retries through fresh rebases (bounded) when
-    * racing writers land mid-publish. The branch is left in place
-    * (drop it when done). */
+    * publish commit DECLARES the change set as its touch set, so
+    * disjoint upserts rebase across a publish like any other declared
+    * commit. The branch is left in place (drop it when done). */
   def publishBranch(s: SparkSession, root: String, name: String): Unit = {
     val bd = bdir(root, name)
-    val bv = Versioned.currentVersion(s, bd).getOrElse(
-      throw new IllegalStateException(s"no branch '$name' under $root"))
+    val bv = headVersion(s, root, name)
     val forkV = forkVersion(s, root, name)
     // the branch's OWN change set, diffed against the FORK state —
     // branch v1 is the fork's manifest/sidecar copy, so this needs no
@@ -184,67 +169,29 @@ object BranchOps {
     if (changed.isEmpty) return
     // the WAP audit: main's table contract must hold on what lands —
     // validated on the CHANGED partitions only (the feed pruning rule)
-    val mainCur0 = Versioned.currentVersion(s, root).getOrElse(
+    val mainCur = Versioned.currentVersion(s, root).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    val cs = MergeOps.tableConstraints(s, root, mainCur0)
-    if (cs.nonEmpty && changed.nonEmpty) {
-      val changedEntries = head.filter(e => changed(e._1))
-      if (changedEntries.nonEmpty) {
-        val live = Versioned.readEntriesLive(s, bd, bv, changedEntries,
-          Versioned.partColOf(changedEntries), dataDir = Some(root))
-        MergeOps.checkConstraints(live,
-          cs.map { case (n, e) => (n, expr(e)) },
-          what = s"publish of branch '$name' (audit)")
-      }
-    }
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val mainCur = Versioned.currentVersion(s, root).getOrElse(
-        throw new IllegalStateException(
-          s"no committed version under $root"))
-      if (mainCur != forkV) {
-        val intervening = Versioned.committedVersions(s, root)
-          .filter(w => w > forkV && w <= mainCur)
-        val disjoint = intervening.forall { w =>
-          scala.util.Try(Versioned.committedLines(s, root, w,
-            Versioned.Touch)).toOption.flatten
-            .exists(!_.exists(changed))
-        }
-        require(disjoint,
-          s"main advanced past branch '$name''s fork ($forkV -> " +
-            s"$mainCur) under $root with commits touching the branch's " +
-            "own partitions (or not declaring their touch set) — " +
-            "rebaseBranch replays its work onto a fresh fork from " +
-            "current (or re-create and re-apply by hand)")
-      }
-      val nv = mainCur + 1
-      val tok = Versioned.newToken()
-      // rebase-merge of metadata: main-current for unchanged
-      // partitions, branch head for changed ones (for a pure
-      // fast-forward mainCur == forkV and this IS the branch head)
-      Versioned.PartitionKeyed.foreach { side =>
-        val lines = (Versioned.sidecarLines(s, root, mainCur, side)
-          .filterNot(l => changed(Versioned.statsLinePart(l))) ++
-          Versioned.sidecarLines(s, bd, bv, side)
-            .filter(l => changed(Versioned.statsLinePart(l)))).sorted
-        if (lines.nonEmpty)
-          Versioned.writeSidecar(s, root, nv, tok, side, lines)
-      }
-      Versioned.writeSidecar(s, root, nv, tok, Versioned.Touch,
-        changed.toSeq.sorted)
-      val newMan = Versioned.manifest(s, root, mainCur)
-        .filterNot(e => changed(e._1)) ++ head.filter(e => changed(e._1))
-      try {
-        Versioned.publish(s, root, nv, tok, newMan)
-        return
-      } catch {
-        case e: graft.engine.ConcurrentCommitException =>
-          if (attempts >= 5) throw e
-          // a racer landed mid-publish: loop — the disjointness check
-          // re-runs against the new intervening set
-      }
-    }
+    val cs = MergeOps.tableConstraints(s, root, mainCur)
+    val changedEntries = head.filter(e => changed(e._1))
+    if (cs.nonEmpty && changedEntries.nonEmpty)
+      MergeOps.checkConstraints(
+        Versioned.readEntriesLive(s, bd, bv, head, changedEntries,
+          Versioned.partColOf(changedEntries), dataDir = Some(root)),
+        cs.map { case (n, e) => (n, expr(e)) },
+        what = s"publish of branch '$name' (audit)")
+    def lines(side: String) = Versioned.sidecarLines(s, bd, bv, side)
+      .filter(l => changed(Versioned.statsLinePart(l)))
+    MergeOps.commit(s, root, Some(mainCur),
+      Versioned.manifest(s, root, mainCur), prestaged = changedEntries, replaced = changed,
+      stats = MergeOps.CarryUnchanged, freshLines = lines(Versioned.Stats),
+      newDv = lines(Versioned.Dv), newUv = _ => lines(Versioned.Uv),
+      rebase = true, since = Some(forkV),
+      refusal = Some(cur => new IllegalArgumentException(
+        s"main advanced past branch '$name''s fork ($forkV -> $cur) " +
+          s"under $root with commits touching the branch's own " +
+          "partitions (or not declaring their touch set) — rebaseBranch " +
+          "replays its work onto a fresh fork from current (or " +
+          "re-create and re-apply by hand)")))
   }
 
   /** Recover from a REFUSED publish without hand-work: re-fork from
@@ -274,14 +221,13 @@ object BranchOps {
   def rebaseBranch(s: SparkSession, root: String, name: String,
                    keyCol: String, partCol: String): String = {
     val bd = bdir(root, name)
-    val bv = Versioned.currentVersion(s, bd).getOrElse(
-      throw new IllegalStateException(s"no branch '$name' under $root"))
+    val bv = headVersion(s, root, name)
     val (forkMan, headMan, changed) =
       Versioned.changedParts(s, bd, Some(1L), bv)
     require(changed.nonEmpty,
       s"branch '$name' under $root never diverged — nothing to rebase; " +
         "drop it and re-fork")
-    val headRows = Versioned.readEntriesLive(s, bd, bv,
+    val headRows = Versioned.readEntriesLive(s, bd, bv, headMan,
       headMan.filter(e => changed(e._1)), Some(partCol),
       dataDir = Some(root))
     val forkEntries = forkMan.toMap.toSeq.filter(e => changed(e._1))
@@ -289,7 +235,7 @@ object BranchOps {
     val forkAligned =
       if (forkEntries.isEmpty) headRows.limit(0)
       else {
-        val f = Versioned.readEntriesLive(s, bd, 1L, forkEntries,
+        val f = Versioned.readEntriesLive(s, bd, 1L, forkMan, forkEntries,
           Some(partCol), dataDir = Some(root))
         f.select(cols.map { c =>
           if (f.columns.contains(c)) col(c)

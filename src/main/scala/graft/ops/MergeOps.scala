@@ -479,14 +479,28 @@ object MergeOps {
     * The touch declaration is what [[publishOrRebase]] trusts: it names
     * every partition whose live content the commit may have changed, so
     * a racing upsert whose own changed set is disjoint may re-publish
-    * its staged dirs onto this commit. With `rebase` (upserts only) the
-    * stage is pinned against vacuum from before its first byte until
-    * the claim resolves, and a lost claim rebases through
-    * [[publishOrRebase]], every attempt re-deriving step 3 from its own
-    * base. */
+    * its staged dirs onto this commit. With `rebase` (upserts and a
+    * branch publish) a written stage is pinned against vacuum from
+    * before its first byte until the claim resolves, and a lost claim
+    * rebases through [[publishOrRebase]], every attempt re-deriving
+    * step 3 from its own base; `refusal` names the exception an
+    * overlapping or undeclared intervening commit raises. `since`
+    * (default `base`) is the version the write's content derives from
+    * when that is older than `base`: a branch publish derives its
+    * metadata from main's current version but its entries from the
+    * fork, so every commit after `since` is checked before the first
+    * attempt.
+    *
+    * Where the chain lives: `dir` holds the metadata (a branch's is
+    * `branches/<name>`), `dataDir` (default `dir`) the data — the stage
+    * is written and read back there, named by `stageName`, and its pin
+    * lands in that root's `intents/`, where vacuum reads it.
+    * `prestaged` entries already sit under the data root (a branch's
+    * work, main's entries at a fork) and publish beside the stage's. */
   private[ops] def commit(s: SparkSession, dir: String,
                           base: Option[Long], man: Seq[(String, String)],
                           stage: Option[Stage] = None,
+                          prestaged: Seq[(String, String)] = Nil,
                           replaced: Set[String] = Set.empty,
                           alsoChanged: Set[String] = Set.empty,
                           stats: StatsCarry,
@@ -502,22 +516,31 @@ object MergeOps {
                           emptyGuard: Option[String] = None,
                           declareTouch: Boolean = true,
                           rebase: Boolean = false,
+                          refusal: Option[Long => Exception] = None,
+                          since: Option[Long] = None,
+                          dataDir: Option[String] = None,
+                          stageName: (Long, String) => String =
+                            Versioned.newStageRel,
                           tok: String = Versioned.newToken()): Unit = {
-    val stageRel = Versioned.newStageRel(base.fold(1L)(_ + 1), tok)
+    val data = dataDir.getOrElse(dir)
+    val stageRel = stageName(base.fold(1L)(_ + 1), tok)
     // pin BEFORE the first staged byte: the moment a racing winner
     // commits our number, this dir sits unreferenced at a version
     // ≤ current — vacuum's reclaim shape — yet a rebase may still
     // publish it (the pin-before-stage order is what makes vacuum's
     // later pin read sound); the heartbeat keeps a multi-hour stage
     // from aging past vacuum's pinGraceMs
-    if (rebase) Versioned.pinStage(s, dir, tok, Seq(stageRel))
-    val beat = if (rebase) Some(Versioned.pinHeartbeat(s, dir, tok)) else None
+    val pinned = rebase && stage.isDefined
+    if (pinned) Versioned.pinStage(s, data, tok, Seq(stageRel))
+    val beat =
+      if (pinned) Some(Versioned.pinHeartbeat(s, data, tok)) else None
     try {
-      val staged = stage.fold(Seq.empty[(String, String)]) { st =>
-        val entries = writeStage(s, dir, st, stageRel)
-        validateStaged(s, dir, stageRel, constraints)
+      val written = stage.fold(Seq.empty[(String, String)]) { st =>
+        val entries = writeStage(s, data, st, stageRel)
+        validateStaged(s, data, stageRel, constraints)
         entries
       }
+      val staged = prestaged ++ written
       val stagedNames = staged.map(_._1).toSet
       val restaged = replaced ++ stagedNames
       val changed = restaged ++ alsoChanged
@@ -528,7 +551,7 @@ object MergeOps {
       val fresh = freshLines ++ (stage match {
         case Some(Stage(rows, Some(pc), _, _))
             if statsKeys.nonEmpty || dictKeys.nonEmpty || bloomKeys.nonEmpty =>
-          Versioned.freshStats(s, dir, staged, pc,
+          Versioned.freshStats(s, data, written, pc,
             Versioned.StagedRows(rows.schema), statsKeys, dictKeys, bloomKeys)
         case _ => Nil
       })
@@ -581,12 +604,12 @@ object MergeOps {
       }
       if (rebase) {
         Hooks.onBeforePublish()
-        publishOrRebase(s, dir, base.get, changed, ledgerId,
-                        b => attempt(Some(b)))
+        publishOrRebase(s, dir, since.getOrElse(base.get), base.get,
+                        changed, ledgerId, refusal, b => attempt(Some(b)))
       } else attempt(base)
     } finally beat.foreach { b =>
       b.close()
-      Versioned.unpinStage(s, dir, tok)
+      Versioned.unpinStage(s, data, tok)
     }
   }
 
@@ -681,7 +704,11 @@ object MergeOps {
     try f(m) finally m.unpersist(false)
   }
 
-  private def mergeUpsertImpl(s: SparkSession, corpusDir: String,
+  /** [[mergeUpsert]]'s body on the chain whose metadata lives under
+    * `corpusDir` and whose data lives under `dataDir` (default
+    * `corpusDir`), staging under `stageName` — a branch upsert is this
+    * merge on the branch chain ([[BranchOps.branchUpsert]]). */
+  private[ops] def mergeUpsertImpl(s: SparkSession, corpusDir: String,
                   v0: Option[Long],
                   batch: DataFrame,
                   keyCol: String, partCol: String,
@@ -689,7 +716,10 @@ object MergeOps {
                   ledgerId: Option[String],
                   dictKeys: Seq[String],
                   constraints: Seq[(String, Column)],
-                  bloomKeys: Seq[String]): Unit = {
+                  bloomKeys: Seq[String],
+                  dataDir: Option[String] = None,
+                  stageName: (Long, String) => String =
+                    Versioned.newStageRel): Unit = {
     checkConstraints(batch, constraints)
     // write-time clustering: a task-local sort by (partition, key)
     // before the partitioned write — the dynamic-partition writer's
@@ -705,7 +735,7 @@ object MergeOps {
       case None =>
         commit(s, corpusDir, None, Nil, staging(batch), stats = CarryNone,
           statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
-          ledgerId = ledgerId)
+          ledgerId = ledgerId, dataDir = dataDir, stageName = stageName)
       case Some(v) =>
         // a replayed identified write no-ops: its id is already in the
         // committed ledger, so the work (and the version) must not repeat
@@ -786,7 +816,8 @@ object MergeOps {
         // entry's name ([[homed]]), batch rows under theirs.
         val migratedNames: Set[String] =
           if (foreignCand.isEmpty) Set.empty
-          else migratedDirNames(s, corpusDir, foreignCand, partCol)
+          else migratedDirNames(s, dataDir.getOrElse(corpusDir),
+            foreignCand, partCol)
         val oldEntries = Versioned.entriesNamed(man,
           touchedNames ++ migratedNames) ++ foreignCand
         val touchedAll = touchedNames ++ migratedNames ++
@@ -800,8 +831,9 @@ object MergeOps {
           // here and their lines drop below — the restage is the
           // materialization point, and a batch re-inserting a
           // previously-DV'd key must win
-          else upserted(Versioned.readEntriesLive(s, corpusDir, v,
-              oldEntries, Some(partCol), perScan = Versioned.withEntry),
+          else upserted(Versioned.readEntriesLive(s, corpusDir, v, man,
+              oldEntries, Some(partCol), dataDir,
+              perScan = Versioned.withEntry),
             oldEntries, partCol, keyCol, batch, batch.select(col(keyCol)))
         // Restaged partitions' stats drop unless this write recomputes
         // them from the staged files; their DV lines drop (tombstones
@@ -810,7 +842,8 @@ object MergeOps {
         commit(s, corpusDir, Some(v), man, staging(merged),
           replaced = touchedAll, stats = CarryUnchanged,
           statsKeys = statsKeys, dictKeys = dictKeys, bloomKeys = bloomKeys,
-          constraints = persisted, ledgerId = ledgerId, rebase = true)
+          constraints = persisted, ledgerId = ledgerId, rebase = true,
+          dataDir = dataDir, stageName = stageName)
     }
   }
 
@@ -845,11 +878,30 @@ object MergeOps {
     * rides on the declaration being present, only on it being true.
     * Delete/changelog writers do NOT rebase: their touched set is
     * discovered from the corpus (a disjoint intervening insert could
-    * hold a key they should have removed), so they always re-derive. */
-  private def publishOrRebase(s: SparkSession, corpusDir: String, v: Long,
+    * hold a key they should have removed), so they always re-derive.
+    * The first attempt publishes onto `v`; the write's content derives
+    * from `since` ≤ `v` (a branch publish: the fork), so the commits in
+    * (`since`, `v`] pass the same check before it. */
+  private def publishOrRebase(s: SparkSession, corpusDir: String,
+                              since: Long, v: Long,
                               ourTouch: Set[String],
                               ledgerId: Option[String],
+                              refusal: Option[Long => Exception],
                               attemptPublish: Long => Unit): Unit = {
+    def disjoint(cur: Long): Boolean =
+      Versioned.committedVersions(s, corpusDir)
+        .filter(w => w > since && w <= cur)
+        .forall { w =>
+          scala.util.Try(Versioned.committedLines(s, corpusDir, w,
+              Versioned.Touch)).toOption.flatten
+            .exists(!_.exists(ourTouch))
+        }
+    def refuse(cur: Long, cause: => Exception): Exception =
+      refusal.fold(cause)(_(cur))
+    if (since < v && !disjoint(v))
+      throw refuse(v, new graft.engine.ConcurrentCommitException(
+        s"a commit after version $since under $corpusDir touches this " +
+          "write's partitions or declares no touch set — re-derive"))
     try attemptPublish(v)
     catch {
       case first: graft.engine.ConcurrentCommitException =>
@@ -861,14 +913,7 @@ object MergeOps {
             throw first)
           if (cur <= v) throw first  // claim lost to a repair at our own
                                      // version — re-derive, never rebase
-          val intervening = Versioned.committedVersions(s, corpusDir)
-            .filter(w => w > v && w <= cur)
-          val disjoint = intervening.forall { w =>
-            scala.util.Try(Versioned.committedLines(s, corpusDir, w,
-                Versioned.Touch)).toOption.flatten
-              .exists(!_.exists(ourTouch))
-          }
-          if (!disjoint) throw first
+          if (!disjoint(cur)) throw refuse(cur, first)
           // an intervening commit may have applied our exactly-once id
           // (a racing replay of the same identified batch): no-op, the
           // work is committed
@@ -1031,11 +1076,11 @@ object MergeOps {
     // The entries holding a doomed key, in every layout (foreign ones'
     // survivors migrate to the current spec), plus their collisions.
     val touched = hitEntries(s, corpusDir, man, partCol,
-      Versioned.readEntriesLive(s, corpusDir, v, man, Some(partCol),
+      Versioned.readEntriesLive(s, corpusDir, v, man, man, Some(partCol),
           perScan = Versioned.withEntry)
         .join(keys.select(keyCol).distinct(), Seq(keyCol), "left_semi"))
     if (touched.isEmpty) return
-    val survivors = Versioned.readEntriesLive(s, corpusDir, v, touched,
+    val survivors = Versioned.readEntriesLive(s, corpusDir, v, man, touched,
         Some(partCol))
       .join(keys.select(keyCol).distinct(), Seq(keyCol), "left_anti")
     commit(s, corpusDir, Some(v), man,
@@ -1103,7 +1148,7 @@ object MergeOps {
     if (entries.length == man.length) (man, None)
     else if (entries.isEmpty) (Nil, None)
     else
-      try (entries, Some(Versioned.readEntriesLive(s, corpusDir, v,
+      try (entries, Some(Versioned.readEntriesLive(s, corpusDir, v, man,
         entries, Some(partCol), perScan = Versioned.withEntry)
         .where(coalesce(pred, lit(false)))))
       catch {
@@ -1129,7 +1174,7 @@ object MergeOps {
                        sortCol: Option[String] = None): Unit = {
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
+    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man, man,
         Some(partCol), perScan = Versioned.withEntry)
     val hit = coalesce(pred, lit(false))
     // find-touched probe pre-pruned through the skipping kernel
@@ -1144,7 +1189,7 @@ object MergeOps {
     val touched = hitEntries(s, corpusDir, man, partCol,
       prunedHits.getOrElse(corpus.where(hit)))
     if (touched.isEmpty) return
-    val survivors = Versioned.readEntriesLive(s, corpusDir, v, touched,
+    val survivors = Versioned.readEntriesLive(s, corpusDir, v, man, touched,
         Some(partCol))
       .where(!hit)
     commit(s, corpusDir, Some(v), man,
@@ -1153,6 +1198,53 @@ object MergeOps {
       emptyGuard = Some(s"DELETE WHERE would remove every row of " +
         s"$corpusDir — an empty table cannot be read back; delete the " +
         "table instead"))
+  }
+
+  /** The UPDATE prologue ([[mergeUpdateWhere]], [[mergeUpdateMor]]) at
+    * the current version `v` with manifest `man`: the SET map, the
+    * [[Versioned.withEntry]]-tagged live read, the hit predicate
+    * (NULL-predicate rows untouched) and the hit probe pre-pruned
+    * through the skipping kernel ([[prunedLiveForPredicate]]): the
+    * candidate entries and, when pruning bit, the hit rows among them. */
+  private final case class UpdateProbe(v: Long, man: Seq[(String, String)],
+                                       setMap: Map[String, Column],
+                                       tagged: DataFrame, hit: Column,
+                                       cand: Seq[(String, String)],
+                                       prunedHits: Option[DataFrame])
+
+  /** Check the SET list, read the current version and probe it for hit
+    * rows: None when there is no committed version or every entry is
+    * provably hit-free. Neither the key nor the partition column may be
+    * a SET target, and a SET column absent from the data is refused
+    * loudly (the per-column select would silently drop it; the
+    * schema-evolution route is a write that CARRIES the column). */
+  private def updateProbe(s: SparkSession, corpusDir: String, pred: Column,
+                          set: Seq[(String, Column)], keyCol: String,
+                          partCol: String): Option[UpdateProbe] = {
+    require(set.nonEmpty, "UPDATE needs at least one SET column")
+    val setMap = set.toMap
+    require(!setMap.contains(keyCol) && !setMap.contains(partCol),
+      "UPDATE cannot SET the key or partition column — a row's identity " +
+        "and location are fixed (stable key→partition); route moves " +
+        "through an explicit delete+insert")
+    val v = Versioned.currentVersion(s, corpusDir).getOrElse(return None)
+    val man = Versioned.manifest(s, corpusDir, v)
+    val tagged = Versioned.readEntriesLive(s, corpusDir, v, man, man,
+        Some(partCol), perScan = Versioned.withEntry)
+    val corpus = tagged.drop(Versioned.EntryCol)
+    setMap.keys.filterNot(c => corpus.columns.contains(c)).toSeq.sorted match {
+      case Nil => ()
+      case missing => throw new IllegalArgumentException(
+        s"UPDATE under $corpusDir: SET column(s) " +
+          s"${missing.mkString(", ")} do not exist in the data — " +
+          "schema evolution routes through an upsert/changelog write " +
+          "that carries the column")
+    }
+    val (cand, prunedHits) = prunedLiveForPredicate(s, corpusDir, v, man,
+      partCol, pred, corpus)
+    if (cand.isEmpty) None
+    else Some(UpdateProbe(v, man, setMap, tagged, coalesce(pred, lit(false)),
+      cand, prunedHits))
   }
 
   /** SQL UPDATE WHERE: apply the `set` column transforms to every
@@ -1171,39 +1263,15 @@ object MergeOps {
                        statsKeys: Seq[String] = Nil,
                        dictKeys: Seq[String] = Nil,
                        bloomKeys: Seq[String] = Nil): Unit = {
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
-    val setMap = set.toMap
-    require(!setMap.contains(keyCol) && !setMap.contains(partCol),
-      "UPDATE cannot SET the key or partition column — a row's identity " +
-        "and location are fixed (stable key→partition); route moves " +
-        "through an explicit delete+insert")
-    val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
-    val man = Versioned.manifest(s, corpusDir, v)
-    val tagged = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol), perScan = Versioned.withEntry)
+    val UpdateProbe(v, man, setMap, tagged, hit, _, prunedHits) =
+      updateProbe(s, corpusDir, pred, set, keyCol, partCol).getOrElse(return)
     val corpus = tagged.drop(Versioned.EntryCol)
-    // a SET column absent from the data would otherwise be SILENTLY
-    // dropped by the per-column select below — refuse loudly (the
-    // schema-evolution route is a write that CARRIES the column)
-    setMap.keys.filterNot(c => corpus.columns.contains(c)).toSeq.sorted match {
-      case Nil => ()
-      case missing => throw new IllegalArgumentException(
-        s"UPDATE under $corpusDir: SET column(s) " +
-          s"${missing.mkString(", ")} do not exist in the data — " +
-          "schema evolution routes through an upsert/changelog write " +
-          "that carries the column")
-    }
-    val hit = coalesce(pred, lit(false))
-    // probe pre-pruned through the skipping kernel — see mergeDeleteWhere
-    // (the hit entries, as there: every layout, plus collisions — a
-    // foreign entry's updated rows and survivors migrate)
-    val (candEntries, prunedHits) = prunedLiveForPredicate(s, corpusDir,
-      v, man, partCol, pred, corpus)
-    if (candEntries.isEmpty) return
+    // the hit entries, as in mergeDeleteWhere: every layout, plus
+    // collisions — a foreign entry's updated rows and survivors migrate
     val touched = hitEntries(s, corpusDir, man, partCol,
       prunedHits.getOrElse(tagged.where(hit)))
     if (touched.isEmpty) return
-    val old0 = Versioned.readEntriesLive(s, corpusDir, v, touched,
+    val old0 = Versioned.readEntriesLive(s, corpusDir, v, man, touched,
         Some(partCol))
     // align the restaged partitions to the CORPUS schema (the
     // changelog alignment rule): a touched partition whose files
@@ -1255,37 +1323,13 @@ object MergeOps {
   def mergeUpdateMor(s: SparkSession, corpusDir: String, pred: Column,
                      set: Seq[(String, Column)], keyCol: String,
                      partCol: String): Unit = {
-    require(set.nonEmpty, "UPDATE needs at least one SET column")
-    val setMap = set.toMap
-    require(!setMap.contains(keyCol) && !setMap.contains(partCol),
-      "UPDATE cannot SET the key or partition column — a row's identity " +
-        "and location are fixed (stable key→partition); route moves " +
-        "through an explicit delete+insert")
-    val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
-    val man = Versioned.manifest(s, corpusDir, v)
-    val tagged = Versioned.readEntriesLive(s, corpusDir, v, man,
-        Some(partCol), perScan = Versioned.withEntry)
+    val UpdateProbe(v, man, setMap, tagged, hit, candEntries, prunedHits) =
+      updateProbe(s, corpusDir, pred, set, keyCol, partCol).getOrElse(return)
     val corpus = tagged.drop(Versioned.EntryCol)
-    // same loud contract as mergeUpdateWhere: a SET column absent from
-    // the data would be silently dropped by the per-column select
-    setMap.keys.filterNot(c => corpus.columns.contains(c)).toSeq.sorted match {
-      case Nil => ()
-      case missing => throw new IllegalArgumentException(
-        s"UPDATE under $corpusDir: SET column(s) " +
-          s"${missing.mkString(", ")} do not exist in the data — " +
-          "schema evolution routes through an upsert/changelog write " +
-          "that carries the column")
-    }
-    val hit = coalesce(pred, lit(false))
-    // image source pre-pruned through the skipping kernel (round 17):
-    // hit rows can only live in entries the tiers admit, so the image
-    // scan reads only candidates; the per-column select needs the full
-    // corpus schema, so a pruned subset that predates any referenced
-    // column falls back to the full read (same result either way —
-    // pruning only skips provably hit-free partitions).
-    val (candEntries, prunedHits) = prunedLiveForPredicate(s, corpusDir,
-      v, man, partCol, pred, corpus)
-    if (candEntries.isEmpty) return
+    // the image scan reads only the candidates; the per-column select
+    // needs the full corpus schema, so a pruned subset that predates
+    // any referenced column falls back to the full read (same result
+    // either way — pruning only skips provably hit-free partitions).
     val hitSrc = prunedHits
       .filter(_.columns.toSet == tagged.columns.toSet)
       .getOrElse(tagged.where(hit))
@@ -1326,7 +1370,7 @@ object MergeOps {
     commit(s, corpusDir, Some(v), man,
       // (a same-layout collision keeps its name: its images sit there)
       if (migrate.isEmpty) None
-      else Some(Stage(homed(Versioned.readEntriesLive(s, corpusDir, v,
+      else Some(Stage(homed(Versioned.readEntriesLive(s, corpusDir, v, man,
         migrate, Some(partCol), perScan = Versioned.withEntry), migrate,
         partCol), Some(partCol), Seq(keyCol))),
       replaced = migrate.map(_._1).toSet, alsoChanged = touched.toSet,
@@ -1391,7 +1435,7 @@ object MergeOps {
     // (the scope scan reads only keyCol), so caching cost ≥ re-eval.
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man,
+    val corpus = Versioned.readEntriesLive(s, corpusDir, v, man, man,
         Some(partCol))
     val tok = Versioned.newToken()
     val dvRel = s"dvdata/${v + 1}_$tok"
@@ -1456,7 +1500,7 @@ object MergeOps {
     val bearing = restageClosure(s, corpusDir, man,
       man.filter(e => refs.contains(e._1)), partCol)
     commit(s, corpusDir, Some(v), man,
-      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, bearing,
+      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, man, bearing,
         Some(partCol)), Some(partCol), sortCol.toSeq, cluster = true)),
       replaced = bearing.map(_._1).toSet, stats = CarrySuperset,
       emptyGuard = Some(s"materializing the deletion vectors of " +
@@ -1536,7 +1580,7 @@ object MergeOps {
         .where(col(opCol) === "d").select(keyCol).distinct()
       else changedKeys
     val hit = hitEntries(s, corpusDir, man, partCol,
-      Versioned.readEntriesLive(s, corpusDir, v, man, Some(partCol),
+      Versioned.readEntriesLive(s, corpusDir, v, man, man, Some(partCol),
           perScan = Versioned.withEntry)
         .join(probe, Seq(keyCol), "left_semi"))
       .map(_._1).toSet ++
@@ -1560,7 +1604,7 @@ object MergeOps {
     // LIVE: touched partitions' DVs materialize in this restage
     val merged =
       if (oldEntries.isEmpty) upserts
-      else upserted(Versioned.readEntriesLive(s, corpusDir, v, oldEntries,
+      else upserted(Versioned.readEntriesLive(s, corpusDir, v, man, oldEntries,
           Some(partCol), perScan = Versioned.withEntry), oldEntries,
         partCol, keyCol, upserts, changedKeys)
     commit(s, corpusDir, Some(v), man,
@@ -1637,7 +1681,7 @@ object MergeOps {
     def side(v: Long, man: Seq[(String, String)]): DataFrame = {
       val es = man.filter(e => changed(e._1))
       if (es.nonEmpty)
-        Versioned.readEntriesLive(s, corpusDir, v, es, Some(partCol))
+        Versioned.readEntriesLive(s, corpusDir, v, man, es, Some(partCol))
       else {
         // no changed entries on this side (all-new or all-dropped
         // partitions live on the other) — an empty frame at this side's
@@ -1919,7 +1963,7 @@ object MergeOps {
     val kept = prunedEntries(s, corpusDir, v, man, ranges, values)
     val base =
       if (kept.isEmpty) Versioned.emptyFrame(s, corpusDir, man, partCol)
-      else Versioned.readEntriesLive(s, corpusDir, v, kept, partCol)
+      else Versioned.readEntriesLive(s, corpusDir, v, man, kept, partCol)
     val preds =
       ranges.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi } ++
         values.map { case (c, vals) => typedInResidual(base, c, vals) }
@@ -1993,7 +2037,7 @@ object MergeOps {
     // (at 100 TB the whole point of compacting is to make the NEXT
     // scans cheaper; un-prunable next scans would defeat it).
     commit(s, corpusDir, Some(v), man,
-      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, frag,
+      Some(Stage(Versioned.readEntriesLive(s, corpusDir, v, man, frag,
         Some(partCol)), Some(partCol), sortCol.toSeq, cluster = true)),
       replaced = frag.map(_._1).toSet, stats = CarryAll,
       emptyGuard = Some(s"compacting $corpusDir would leave no partition " +
@@ -2028,7 +2072,7 @@ object MergeOps {
                     bloomKeys: Seq[String] = Nil): Unit = {
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val live = Versioned.readEntriesLive(s, corpusDir, v, man,
+    val live = Versioned.readEntriesLive(s, corpusDir, v, man, man,
                                          Some(partCol))
     val (ca, cb) = zCols
     val mm = live.agg(min(col(ca)).cast("double"),
@@ -2145,7 +2189,7 @@ object MergeOps {
         "or compactZOrder")
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
-    val live = Versioned.readEntriesLive(s, corpusDir, v, man,
+    val live = Versioned.readEntriesLive(s, corpusDir, v, man, man,
                                          Some(oldPartCol))
     require(live.columns.contains(newPartCol),
       s"new partition column '$newPartCol' is not a column of the " +
@@ -2187,52 +2231,79 @@ object MergeOps {
                 keyCol: String, attrCols: Seq[String],
                 version: Long): Unit = {
     val outCols = (keyCol +: attrCols) ++ Seq("valid_from", "valid_to")
-    val dupKeys = changes.groupBy(keyCol).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).limit(5).collect()
-    require(dupKeys.isEmpty,
-      s"mergeScd2: changes batch has duplicate $keyCol values " +
-        s"(e.g. ${dupKeys.map(_.get(0)).mkString(", ")}) — one row per " +
-        "key per batch, or the one-open-row invariant breaks")
+    requireOneRowPerKey(changes, keyCol, "mergeScd2")
     Versioned.currentVersion(s, historyDir) match {
       case None =>
         commit(s, historyDir, None, Nil, Some(Stage(
-          changes.withColumn("valid_from", lit(version))
-            .withColumn("valid_to", lit(null).cast("long"))
-            .selectExpr(outCols: _*), None)),
+          opened(changes, version).selectExpr(outCols: _*), None)),
           stats = CarryNone, declareTouch = false)
       case Some(v) =>
         // pinned to v (not re-read): the version this rewrite derives
         // from must be the version its claim contends at
         val hist = Versioned.readVersion(s, historyDir, v, None)
-        val open = hist.where(col("valid_to").isNull)
-        // keys whose open version differs on ANY attribute — or brand-new.
         // Materialized once (the withMaterialized rule): uncached, the
         // change⋈open diff join re-ran FOUR times — the isEmpty probe,
         // the two open-row semi/anti legs, and the new-version union leg.
-        val diff = changes.alias("c")
-          .join(open.alias("o"), col(s"c.$keyCol") === col(s"o.$keyCol"), "left")
-          .where(col(s"o.$keyCol").isNull ||
-                 attrCols.map(a => !(col(s"c.$a") <=> col(s"o.$a")))
-                   .reduce(_ || _))
-          .select(col(s"c.$keyCol").as(keyCol) +:
-                  attrCols.map(a => col(s"c.$a").as(a)): _*)
+        val diff = scd2Diff(changes, hist, keyCol, attrCols, Nil)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           if (diff.isEmpty) return  // nothing changed: the no-op that
                                     // makes re-applying a batch idempotent
-          val diffKeys = diff.select(keyCol)
-          val next = hist.where(col("valid_to").isNotNull)             // closed: keep
-            .unionByName(open.join(diffKeys, Seq(keyCol), "left_anti"))// open, unchanged
-            .unionByName(open.join(diffKeys, Seq(keyCol), "left_semi") // open, changed:
-                           .withColumn("valid_to", lit(version)))      //   close
-            .unionByName(diff.withColumn("valid_from", lit(version))   // new version:
-                           .withColumn("valid_to", lit(null).cast("long")))// open
-            .selectExpr(outCols: _*)
           commit(s, historyDir, Some(v), Versioned.manifest(s, historyDir, v),
-            Some(Stage(next, None)), stats = CarryUnchanged,
-            declareTouch = false)
+            Some(Stage(scd2Next(hist, diff, keyCol, version, outCols), None)),
+            stats = CarryUnchanged, declareTouch = false)
         } finally diff.unpersist(false)
     }
+  }
+
+  /** SCD2's door guard ([[mergeScd2]], [[mergeScd2Bucketed]]): the
+    * one-open-row-per-key invariant fails fast on a batch carrying two
+    * rows for one key (one dimension-sized aggregate). */
+  private def requireOneRowPerKey(changes: DataFrame, keyCol: String,
+                                  verb: String): Unit = {
+    val dupKeys = changes.groupBy(keyCol).agg(count(lit(1)).as("n"))
+      .where(col("n") > 1).limit(5).collect()
+    require(dupKeys.isEmpty,
+      s"$verb: changes batch has duplicate $keyCol values " +
+        s"(e.g. ${dupKeys.map(_.get(0)).mkString(", ")}) — one row per " +
+        "key per batch, or the one-open-row invariant breaks")
+  }
+
+  /** `rows` as history rows opened at `version`. */
+  private def opened(rows: DataFrame, version: Long): DataFrame =
+    rows.withColumn("valid_from", lit(version))
+      .withColumn("valid_to", lit(null).cast("long"))
+
+  /** The SCD2 change diff: the batch rows (key, attributes, then
+    * `carried`) whose key has no open row in `hist` or whose open row
+    * differs on ANY attribute — null-safe `<=>`, so NULL transitions
+    * stay honest. */
+  private def scd2Diff(changes: DataFrame, hist: DataFrame, keyCol: String,
+                       attrCols: Seq[String],
+                       carried: Seq[String]): DataFrame =
+    changes.alias("c")
+      .join(hist.where(col("valid_to").isNull).alias("o"),
+            col(s"c.$keyCol") === col(s"o.$keyCol"), "left")
+      .where(col(s"o.$keyCol").isNull ||
+             attrCols.map(a => !(col(s"c.$a") <=> col(s"o.$a")))
+               .reduce(_ || _))
+      .select((keyCol +: (attrCols ++ carried)).map(a =>
+        col(s"c.$a").as(a)): _*)
+
+  /** The SCD2 step: `hist` after `diff` ([[scd2Diff]]) lands at
+    * `version` — the four-way union of closed rows, unchanged open
+    * rows, changed open rows closed at `version`, and the diff opened
+    * at `version`. */
+  private def scd2Next(hist: DataFrame, diff: DataFrame, keyCol: String,
+                       version: Long, outCols: Seq[String]): DataFrame = {
+    val open = hist.where(col("valid_to").isNull)
+    val diffKeys = diff.select(keyCol)
+    hist.where(col("valid_to").isNotNull)                         // closed
+      .unionByName(open.join(diffKeys, Seq(keyCol), "left_anti")) // unchanged
+      .unionByName(open.join(diffKeys, Seq(keyCol), "left_semi")  // changed:
+                     .withColumn("valid_to", lit(version)))       //   close
+      .unionByName(opened(diff, version))                         // new: open
+      .selectExpr(outCols: _*)
   }
 
   /** Read the current committed history state. */
@@ -2316,7 +2387,7 @@ object MergeOps {
     val v = Versioned.currentVersion(s, corpusDir).getOrElse(return)
     val man = Versioned.manifest(s, corpusDir, v)
     val lines = Versioned.freshStats(s, corpusDir, man, partCol,
-      Versioned.LiveRows(v), statsKeys, dictKeys, bloomKeys)
+      Versioned.LiveRows(v, man), statsKeys, dictKeys, bloomKeys)
     // Refresh REPLACES only what it recomputed (the requested columns'
     // lines, in their form); everything else carries verbatim — an
     // ANALYZE of the dictionary must not cost the table its range
@@ -2374,18 +2445,12 @@ object MergeOps {
                         buckets: Int = 16): Unit = {
     val BCol = "kb"
     val outCols = (keyCol +: attrCols) ++ Seq("valid_from", "valid_to", BCol)
-    val dupKeys = changes.groupBy(keyCol).agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).limit(5).collect()
-    require(dupKeys.isEmpty,
-      s"mergeScd2Bucketed: changes batch has duplicate $keyCol values " +
-        s"(e.g. ${dupKeys.map(_.get(0)).mkString(", ")})")
+    requireOneRowPerKey(changes, keyCol, "mergeScd2Bucketed")
     val batch = changes.withColumn(BCol, keyBucket(keyCol, buckets))
     Versioned.currentVersion(s, historyDir) match {
       case None =>
         commit(s, historyDir, None, Nil, Some(Stage(
-          batch.withColumn("valid_from", lit(version))
-            .withColumn("valid_to", lit(null).cast("long"))
-            .selectExpr(outCols: _*), Some(BCol))),
+          opened(batch, version).selectExpr(outCols: _*), Some(BCol))),
           stats = CarryNone, declareTouch = false)
       case Some(v) =>
         // Bounded driver-side list: ≤ `buckets` values, the manifest-
@@ -2396,33 +2461,14 @@ object MergeOps {
         val man = Versioned.manifest(s, historyDir, v)
         val entries = Versioned.entriesNamed(man, names)
         val slice =
-          if (entries.isEmpty) {
-            // brand-new buckets only: nothing to diff against
-            batch.withColumn("valid_from", lit(version))
-              .withColumn("valid_to", lit(null).cast("long"))
-              .selectExpr(outCols: _*)
-          } else {
+          // brand-new buckets only: nothing to diff against
+          if (entries.isEmpty) opened(batch, version).selectExpr(outCols: _*)
+          else {
             val hist = Versioned.readEntries(s, historyDir, entries,
               Some(BCol), man)
-            val open = hist.where(col("valid_to").isNull)
-            val diff = batch.alias("c")
-              .join(open.alias("o"),
-                    col(s"c.$keyCol") === col(s"o.$keyCol"), "left")
-              .where(col(s"o.$keyCol").isNull ||
-                     attrCols.map(a => !(col(s"c.$a") <=> col(s"o.$a")))
-                       .reduce(_ || _))
-              .select(col(s"c.$keyCol").as(keyCol) +:
-                      (attrCols.map(a => col(s"c.$a").as(a)) :+
-                       col(s"c.$BCol").as(BCol)): _*)
+            val diff = scd2Diff(batch, hist, keyCol, attrCols, Seq(BCol))
             if (diff.isEmpty) return
-            val diffKeys = diff.select(keyCol)
-            hist.where(col("valid_to").isNotNull)
-              .unionByName(open.join(diffKeys, Seq(keyCol), "left_anti"))
-              .unionByName(open.join(diffKeys, Seq(keyCol), "left_semi")
-                             .withColumn("valid_to", lit(version)))
-              .unionByName(diff.withColumn("valid_from", lit(version))
-                             .withColumn("valid_to", lit(null).cast("long")))
-              .selectExpr(outCols: _*)
+            scd2Next(hist, diff, keyCol, version, outCols)
           }
         // restaged buckets gained rows with a new valid_from and closed
         // valid_to: their lines drop, untouched buckets' carry

@@ -147,7 +147,7 @@ class ReadKernelSpec extends SparkTestBase {
     assert(e.getMessage.contains("re-derive"),
       s"the error must route the caller to retry, got: ${e.getMessage}")
     intercept[ConcurrentCommitException] {
-      Versioned.readEntriesLive(spark, d, 1L, man, Some("p")).collect()
+      Versioned.readEntriesLive(spark, d, 1L, man, man, Some("p")).collect()
     }
   }
 }
