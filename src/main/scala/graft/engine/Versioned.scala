@@ -333,18 +333,23 @@ object Versioned {
     readEntries(s, dir, Seq(newest), partCol, man).limit(0)
   }
 
-  /** All committed versions, ascending — one bounded metadata listing.
-    * May have gaps: a crashed or race-losing writer burns its version
-    * number (see [[nextVersion]]), so consumers iterate THIS list, never
-    * `1..current`. */
-  def committedVersions(s: SparkSession, dir: String): Seq[Long] = {
+  /** THE commit-log listing: every committed version with its marker's
+    * store mtime (the commit instant on the store's clock), ascending —
+    * one bounded `commits/` listing. May have gaps: a crashed or
+    * race-losing writer burns its version number (see [[nextVersion]]),
+    * so consumers iterate THIS list, never `1..current`. */
+  def commitLog(s: SparkSession, dir: String): Seq[(Long, Long)] = {
     val fs = fsOf(s, dir)
     val c = new Path(dir, "commits")
     if (!fs.exists(c)) Seq.empty
-    else fs.listStatus(c).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .sorted
+    else fs.listStatus(c).toSeq.flatMap(st =>
+      scala.util.Try(st.getPath.getName.toLong).toOption
+        .map(_ -> st.getModificationTime)).sortBy(_._1)
   }
+
+  /** All committed versions, ascending ([[commitLog]]). */
+  def committedVersions(s: SparkSession, dir: String): Seq[Long] =
+    commitLog(s, dir).map(_._1)
 
   /** Highest committed version, if any — one bounded metadata listing. */
   def currentVersion(s: SparkSession, dir: String): Option[Long] =
@@ -2058,8 +2063,7 @@ object Versioned {
   /** Time travel by TIMESTAMP (AS OF TIMESTAMP): the newest committed
     * version whose commit instant — the marker's STORE mtime, the same
     * clock [[repairTornCommit]]'s grace uses — is ≤ `tsMillis`. One
-    * bounded listing of `commits/` resolves it (the mtimes ride the
-    * same listStatus the version listing uses). Caveats shared with
+    * [[commitLog]] listing resolves it. Caveats shared with
     * every table format's timestamp travel: the mapping is the store
     * clock's, not the writer's, and a marker resurrected by publish
     * step 4 (a repair raced the claim) carries the resurrection time —
@@ -2068,15 +2072,9 @@ object Versioned {
     * slightly newer one than a skewed clock implies. None if nothing
     * was committed at or before the instant. */
   def versionAsOf(s: SparkSession, dir: String,
-                  tsMillis: Long): Option[Long] = {
-    val fs = fsOf(s, dir)
-    val c = new Path(dir, "commits")
-    if (!fs.exists(c)) None
-    else fs.listStatus(c).toSeq.flatMap { st =>
-      scala.util.Try(st.getPath.getName.toLong).toOption
-        .filter(_ => st.getModificationTime <= tsMillis)
-    }.maxOption
-  }
+                  tsMillis: Long): Option[Long] =
+    commitLog(s, dir).collect { case (v, ms) if ms <= tsMillis => v }
+      .maxOption
 
   /** [[readVersion]] at [[versionAsOf]]'s resolution — fails fast with
     * the table's earliest commit instant when the timestamp predates

@@ -148,7 +148,9 @@ object BranchOps {
     *    fork, checked before the first attempt): main-current's entries
     *    and lines for the partitions the branch never changed, the
     *    branch head's for the ones it did — exact by the same
-    *    partition-locality argument as the upsert rebase. Overlap or an
+    *    partition-locality argument as the upsert rebase. A version a
+    *    vacuum swept passes only if the branch's partitions read on
+    *    main as they did at the fork (branch v1). Overlap or an
     *    undeclared commit refuses loudly: [[rebaseBranch]].
     *
     * AUDITS first: main's persisted CHECK constraints are validated on
@@ -185,7 +187,7 @@ object BranchOps {
       Versioned.manifest(s, root, mainCur), prestaged = changedEntries, replaced = changed,
       stats = MergeOps.CarryUnchanged, freshLines = lines(Versioned.Stats),
       newDv = lines(Versioned.Dv), newUv = _ => lines(Versioned.Uv),
-      rebase = true, since = Some(forkV),
+      rebase = true, since = Some(forkV), sinceState = Some((bd, 1L)),
       refusal = Some(cur => new IllegalArgumentException(
         s"main advanced past branch '$name''s fork ($forkV -> $cur) " +
           s"under $root with commits touching the branch's own " +

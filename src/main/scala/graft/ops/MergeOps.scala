@@ -442,11 +442,14 @@ object MergeOps {
   private def writeMorStage(s: SparkSession, dir: String, rows: DataFrame,
                             partCol: String, rel: String): Seq[String] = {
     val names = writeStage(s, dir, Stage(rows, Some(partCol)), rel).map(_._1)
-    if (names.isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    if (names.isEmpty) dropStage(s, dir, rel)
     names
+  }
+
+  /** Remove a stage dir that landed no entry. */
+  private def dropStage(s: SparkSession, dir: String, rel: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** THE COMMIT KERNEL: every write verb's copy-on-write tail. Derives
@@ -458,7 +461,8 @@ object MergeOps {
     *
     *  1. stages `stage` under `data/<v>_<tok>`, validates the persisted
     *     `constraints` on the staged read-back ([[validateStaged]]) and
-    *     lists the staged entries;
+    *     lists the staged entries — a bootstrap (no `base`) that lands
+    *     none publishes nothing;
     *  2. RESTAGED = `replaced` ∪ staged names: those entries leave the
     *     base manifest and the staged ones join it (publish replaces by
     *     name). CHANGED = restaged ∪ `alsoChanged` (partitions a MOR
@@ -489,7 +493,9 @@ object MergeOps {
     * when that is older than `base`: a branch publish derives its
     * metadata from main's current version but its entries from the
     * fork, so every commit after `since` is checked before the first
-    * attempt.
+    * attempt. `sinceState` is the (metadata dir, version) holding the
+    * `since` state, default `dir` at `since`: a branch publish names its
+    * v1, the fork copy, which outlives a sweep of main's fork version.
     *
     * Where the chain lives: `dir` holds the metadata (a branch's is
     * `branches/<name>`), `dataDir` (default `dir`) the data — the stage
@@ -518,6 +524,7 @@ object MergeOps {
                           rebase: Boolean = false,
                           refusal: Option[Long => Exception] = None,
                           since: Option[Long] = None,
+                          sinceState: Option[(String, Long)] = None,
                           dataDir: Option[String] = None,
                           stageName: (Long, String) => String =
                             Versioned.newStageRel,
@@ -541,6 +548,12 @@ object MergeOps {
         entries
       }
       val staged = prestaged ++ written
+      // a bootstrap that stages no entry publishes nothing: an empty
+      // first version has no entry to read a schema from
+      if (base.isEmpty && staged.isEmpty) {
+        dropStage(s, data, stageRel)
+        return
+      }
       val stagedNames = staged.map(_._1).toSet
       val restaged = replaced ++ stagedNames
       val changed = restaged ++ alsoChanged
@@ -604,8 +617,10 @@ object MergeOps {
       }
       if (rebase) {
         Hooks.onBeforePublish()
-        publishOrRebase(s, dir, since.getOrElse(base.get), base.get,
-                        changed, ledgerId, refusal, b => attempt(Some(b)))
+        val from = since.getOrElse(base.get)
+        publishOrRebase(s, dir, from, base.get,
+          sinceState.getOrElse((dir, from)), changed, ledgerId, refusal,
+          b => attempt(Some(b)))
       } else attempt(base)
     } finally beat.foreach { b =>
       b.close()
@@ -881,21 +896,42 @@ object MergeOps {
     * hold a key they should have removed), so they always re-derive.
     * The first attempt publishes onto `v`; the write's content derives
     * from `since` ≤ `v` (a branch publish: the fork), so the commits in
-    * (`since`, `v`] pass the same check before it. */
+    * (`since`, `v`] pass the same check before it.
+    *
+    * A number in that range the commit log no longer lists (a version
+    * [[graft.engine.Versioned.vacuum]] swept, or one a crashed writer
+    * burned) declares nothing, so the range is disjoint only if this
+    * write's partitions read the same at `cur` as in the `since` state
+    * (`sinceState`: metadata dir and version): the same entries (dirs
+    * are write-once, so a commit that touched one names a new dir) and
+    * the same dv/uv lines. A `since` state that is itself swept proves
+    * nothing, and the write refuses. */
   private def publishOrRebase(s: SparkSession, corpusDir: String,
                               since: Long, v: Long,
+                              sinceState: (String, Long),
                               ourTouch: Set[String],
                               ledgerId: Option[String],
                               refusal: Option[Long => Exception],
                               attemptPublish: Long => Unit): Unit = {
-    def disjoint(cur: Long): Boolean =
-      Versioned.committedVersions(s, corpusDir)
+    // this write's partitions at version `w` of the chain under `dir`:
+    // their entries and dv/uv lines (None when `w` is gone)
+    def ours(dir: String, w: Long) = scala.util.Try(
+      (Versioned.manifest(s, dir, w).filter(e => ourTouch(e._1)).toSet,
+       Seq(Versioned.Dv, Versioned.Uv).map(kind =>
+         Versioned.sidecarLines(s, dir, w, kind)
+           .filter(l => ourTouch(Versioned.statsLinePart(l))).toSet))
+    ).toOption
+    lazy val atSince = ours(sinceState._1, sinceState._2)
+    def disjoint(cur: Long): Boolean = {
+      val listed = Versioned.committedVersions(s, corpusDir)
         .filter(w => w > since && w <= cur)
-        .forall { w =>
-          scala.util.Try(Versioned.committedLines(s, corpusDir, w,
-              Versioned.Touch)).toOption.flatten
-            .exists(!_.exists(ourTouch))
-        }
+      listed.forall { w =>
+        scala.util.Try(Versioned.committedLines(s, corpusDir, w,
+            Versioned.Touch)).toOption.flatten
+          .exists(!_.exists(ourTouch))
+      } && (listed.size == cur - since ||
+            atSince.exists(st => ours(corpusDir, cur).contains(st)))
+    }
     def refuse(cur: Long, cause: => Exception): Exception =
       refusal.fold(cause)(_(cur))
     if (since < v && !disjoint(v))
@@ -1641,9 +1677,8 @@ object MergeOps {
     * dirs must still exist); a diff spanning N versions is ONE call —
     * intermediate versions are never materialized. */
   def changeFeed(s: SparkSession, corpusDir: String, fromV: Long,
-                 toV: Long, keyCol: String, partCol: String): DataFrame = {
-    val (cols, diff) = keyDiff(s, corpusDir, fromV, toV, keyCol, partCol,
-      identity)
+                 toV: Long, keyCol: String): DataFrame = {
+    val (cols, diff) = keyDiff(s, corpusDir, fromV, toV, keyCol, identity)
     val img = when(col("__cf_new").isNull, col("__cf_old"))
       .otherwise(col("__cf_new"))
     diff.select(cols.map(c => img.getField(c).as(c)) :+
@@ -1651,16 +1686,17 @@ object MergeOps {
   }
 
   /** The key diff behind [[changeFeed]] and [[changelog]]: the changed
-    * partitions of both versions ([[Versioned.changedParts]], read
-    * live), aligned to the union of their columns, narrowed to
-    * `pick(columns)`, and full-outer joined on the key as `__cf_k` with
-    * the old and new images as structs `__cf_old` / `__cf_new` (null
-    * exactly when the key is absent from that version). One row per
-    * changed key, classified in `change_type`: `insert` (absent before),
-    * `delete` (absent after) or `update` (present in both, images not
-    * null-safe equal). Returns the picked columns and the diff. */
+    * partitions of both versions ([[Versioned.changedParts]], read live
+    * at the layout each side's manifest names, [[Versioned.partColOf]]),
+    * aligned to the union of their columns, narrowed to `pick(columns)`,
+    * and full-outer joined on the key as `__cf_k` with the old and new
+    * images as structs `__cf_old` / `__cf_new` (null exactly when the
+    * key is absent from that version). One row per changed key,
+    * classified in `change_type`: `insert` (absent before), `delete`
+    * (absent after) or `update` (present in both, images not null-safe
+    * equal). Returns the picked columns and the diff. */
   private def keyDiff(s: SparkSession, corpusDir: String, fromV: Long,
-                      toV: Long, keyCol: String, partCol: String,
+                      toV: Long, keyCol: String,
                       pick: Seq[String] => Seq[String])
       : (Seq[String], DataFrame) = {
     require(fromV < toV,
@@ -1680,8 +1716,9 @@ object MergeOps {
       Versioned.changedParts(s, corpusDir, Some(fromV), toV)
     def side(v: Long, man: Seq[(String, String)]): DataFrame = {
       val es = man.filter(e => changed(e._1))
+      val partCol = Versioned.partColOf(man)
       if (es.nonEmpty)
-        Versioned.readEntriesLive(s, corpusDir, v, man, es, Some(partCol))
+        Versioned.readEntriesLive(s, corpusDir, v, man, es, partCol)
       else {
         // no changed entries on this side (all-new or all-dropped
         // partitions live on the other) — an empty frame at this side's
@@ -1693,7 +1730,7 @@ object MergeOps {
           s"changeFeed: a side of the $fromV->$toV diff under $corpusDir " +
             "has an empty manifest — its schema cannot be recovered; an " +
             "emptied table cannot feed a diff")
-        Versioned.emptyFrame(s, corpusDir, man, Some(partCol))
+        Versioned.emptyFrame(s, corpusDir, man, partCol)
       }
     }
     val o = side(fromV, manFrom)
@@ -1755,7 +1792,7 @@ object MergeOps {
             "(bootstrap by calling syncMirror against an empty dstDir)")
         val from = last.max
         if (from >= srcV) return from  // up to date; nothing to commit
-        val feed = changeFeed(s, srcDir, from, srcV, keyCol, partCol)
+        val feed = changeFeed(s, srcDir, from, srcV, keyCol)
         val changes = feed.withColumn("op",
             when(col("change_type") === "delete", lit("d"))
               .when(col("change_type") === "insert", lit("i"))
@@ -2322,10 +2359,8 @@ object MergeOps {
     * classification — by key presence, with `update` meaning the
     * `valueCol` images are not null-safe equal. */
   def changelog(s: SparkSession, corpusDir: String, fromV: Long, toV: Long,
-                keyCol: String, partCol: String,
-                valueCol: String): DataFrame =
-    keyDiff(s, corpusDir, fromV, toV, keyCol, partCol,
-        _ => Seq(valueCol))._2
+                keyCol: String, valueCol: String): DataFrame =
+    keyDiff(s, corpusDir, fromV, toV, keyCol, _ => Seq(valueCol))._2
       .select(col("__cf_k").as(keyCol),
         col("__cf_old").getField(valueCol).as("old_value"),
         col("__cf_new").getField(valueCol).as("new_value"),

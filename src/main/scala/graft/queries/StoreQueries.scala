@@ -124,7 +124,7 @@ object StoreQueries {
     val dir = Artifacts.scratchDir(s, "mergecdc", d)
     val (base, batch) = repricing(s, d, dir)
     mergeUpsert(s, dir, batch, "o_orderkey", "o_orderstatus")
-    changelog(s, dir, 1L, 2L, "o_orderkey", "o_orderstatus", "o_totalprice")
+    changelog(s, dir, 1L, 2L, "o_orderkey", "o_totalprice")
       .select(col("o_orderkey"), col("change"),
               round(col("old_value"), 2).as("old_price_r"),
               round(col("new_value"), 2).as("new_price_r"))
@@ -475,7 +475,7 @@ object StoreQueries {
     val (base, _) = repricing(s, d, dir)
     val changes = cdcBatch(base)
     mergeApplyChangelog(s, dir, changes, "o_orderkey", "o_orderstatus")
-    changeFeed(s, dir, 1L, 2L, "o_orderkey", "o_orderstatus")
+    changeFeed(s, dir, 1L, 2L, "o_orderkey")
       .select(col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus").cast("string").as("o_orderstatus"),
               col("change_type"))
@@ -525,7 +525,7 @@ object StoreQueries {
     val (base, _) = repricing(s, d, src)                             // v1
     val q = graft.streaming.StreamOps.feedMirrorMaintenance(
         graft.streaming.StreamOps.feedStream(s, src, "o_orderkey",
-          "o_orderstatus", Some(0L)),
+          Some(0L)),
         dst, "o_orderkey", "o_orderstatus")
       .option("checkpointLocation", ck)
       .start()
@@ -814,7 +814,7 @@ object StoreQueries {
     // the feed across the move is queried with the OLD partCol: the
     // from-side is the one still carrying old-layout tombstones (the
     // rewrite materialized them all, so the to-side has none)
-    require(changeFeed(s, dir, 2L, 3L, "doc_id", "src_grp").isEmpty,
+    require(changeFeed(s, dir, 2L, 3L, "doc_id").isEmpty,
       "a layout move must be content-invisible to the change feed")
     require(Versioned.readVersion(s, dir, 1L, Some("src_grp")).count() ==
         docs.count(),

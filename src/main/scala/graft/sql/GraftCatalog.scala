@@ -118,9 +118,10 @@ class GraftCatalog extends TableCatalog
   /** The CDC door: `<catalog>.changes.<store>` is the store's change
     * FEED as a streaming table — schema = table schema + change_type,
     * `spark.readStream.table("graft.changes.corpus")` with the feed's
-    * options (`keyCol` required; `startVersion`/`startTag`, pacing,
-    * `pinRetention`) passed as reader options. The namespace is
-    * virtual: it resolves against the same stores the root lists. */
+    * options (`keyCol`, else the persisted property; `startVersion` /
+    * `startTag`, pacing, `pinRetention`) passed as reader options. The
+    * namespace is virtual: it resolves against the same stores the root
+    * lists. */
   private val ChangesNs = "changes"
 
   /** The virtual BRANCHES namespace (round 16 — the WAP surface in
@@ -151,15 +152,11 @@ class GraftCatalog extends TableCatalog
     }
     if (ident.namespace.sameElements(Array(ChangesNs))) {
       val dir = new Path(root, ident.name).toString
-      val v = Versioned.currentVersion(spark, dir).getOrElse(
-        throw new NoSuchTableException(ident))
-      val pc = Versioned.partColOf(Versioned.manifest(spark, dir, v))
-      // the persisted keyCol table property seeds the feed's required
-      // reader option (scan-time .option("keyCol", …) still overrides)
+      if (Versioned.currentVersion(spark, dir).isEmpty)
+        throw new NoSuchTableException(ident)
       return new graft.streaming.ChangeFeedTable(
-        graft.streaming.ChangeFeedSourceProvider.feedSchema(spark, dir, pc),
-        Map("dir" -> dir) ++ pc.map("partcol" -> _) ++
-          TableDoor.keyCol(spark, dir, Map.empty).map("keycol" -> _))
+        graft.streaming.ChangeFeedSourceProvider.feedSchema(spark, dir),
+        Map("dir" -> dir))
     }
     val dir = dirOf(ident)
     val v = Versioned.currentVersion(spark, dir).getOrElse {
@@ -586,9 +583,9 @@ private[sql] object PendingTables {
 }
 
 /** A created-but-never-written table: reads as EMPTY at the declared
-  * schema; the first INSERT/CTAS write runs the ordinary
-  * [[graft.ops.MergeOps.mergeUpsert]] (creating version 1) and then
-  * persists the declared properties, after which loadTable resolves
+  * schema; the first INSERT/CTAS write of at least one row runs the
+  * ordinary [[graft.ops.MergeOps.mergeUpsert]] (creating version 1) and
+  * then persists the declared properties, after which loadTable resolves
   * the committed store and this shim is never constructed again. */
 private[sql] class GraftPendingTable(spark: SparkSession, dir: String,
                                      ident: String, declared: StructType,
@@ -628,7 +625,8 @@ private[sql] class GraftPendingTable(spark: SparkSession, dir: String,
         "the first write into", ident, Some(props))
       require(!replace, s"INSERT OVERWRITE into $ident is not supported")
       MergeOps.mergeUpsert(spark, dir, data, key, partCol)
-      if (props.nonEmpty)
+      // a zero-row first write commits nothing: the table stays pending
+      if (props.nonEmpty && Versioned.currentVersion(spark, dir).isDefined)
         MergeOps.setTableProperties(spark, dir, props)
     })
   }
@@ -930,8 +928,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
     * change_type rows is the catalog's `changes` namespace. Reader
     * options are the feed's ([[graft.streaming.ChangeFeedStream.open]]),
     * with `startVersion` defaulting to 0 = bootstrap; the merge key
-    * follows [[TableDoor.keyCol]], and an unpartitioned store takes the
-    * `partCol` option. Batch pushdown state (pruned columns, pushed
+    * follows [[TableDoor.keyCol]]. Batch pushdown state (pruned columns, pushed
     * filters) never reaches this path: streaming scans are built
     * without the pushdown rules, so the stream emits the full table
     * schema — exactly the relation's analysis output. */
@@ -949,10 +946,7 @@ class GraftTable(spark: SparkSession, dir: String, ident: String,
         "run one write that carries the column first")
     // default 0 = BOOTSTRAP: "the table, as a stream" means the full
     // snapshot first, then the changes — Delta's readStream semantics
-    graft.streaming.ChangeFeedStream.open(spark, opts, dir,
-      TableDoor.requireKeyCol(spark, dir, opts, "readStream of", ident),
-      TableDoor.requirePartCol(partCol.orElse(opts.get("partcol")),
-        "readStream of", ident, dir, "pass .option(\"partCol\", …)"),
+    graft.streaming.ChangeFeedStream.open(spark, opts, dir, ident,
       checkpoint, schema, rowImage = true, defaultStart = Some(0L))
   }
 }

@@ -17,7 +17,9 @@ import graft.ops.MergeOps
   * sight. Each procedure is a thin adapter over the EXISTING Scala
   * maintenance call — same staged-write/OCC/crash-atomic commit, same
   * loud contracts — and returns a one-row summary (table, resulting
-  * version, plus verb-specific counters) through a `LocalScan`.
+  * version, plus verb-specific counters); the observability
+  * procedures return their own rows. One [[GraftProcedure]] delivers
+  * both through a `LocalScan`.
   *
   *  - `optimize(table, zorder_by?, sort_col?)` —
   *    [[graft.ops.MergeOps.compactZOrder]] when `zorder_by` names two
@@ -54,15 +56,32 @@ private[sql] object GraftProcedures {
     "refresh_stats", "expire_partitions", "detail", "history",
     "create_branch", "publish_branch", "drop_branch")
 
+  /** A procedure's body: the session, the store dir and the call's
+    * arguments to the result schema and rows. */
+  private[sql] type Body =
+    (SparkSession, String, InternalRow) => (StructType, Seq[Row])
+
+  /** A maintenance verb's body: runs the verb, then answers one row of
+    * (table, resulting committed version) followed by the verb's own
+    * counters. */
+  private def summary(verb: (SparkSession, String, InternalRow) =>
+      Seq[(String, DataType, Any)]): Body = (s, dir, args) => {
+    val extra = verb(s, dir, args)
+    val fields = Seq(("table", StringType: DataType, str(args, 0).get: Any),
+      ("version", LongType: DataType,
+       Versioned.currentVersion(s, dir).get: Any)) ++ extra
+    (StructType(fields.map { case (n, t, _) =>
+       StructField(n, t, nullable = false) }),
+     Seq(Row(fields.map(_._3): _*)))
+  }
+
   def load(name: String, root: String): Option[UnboundProcedure] = {
-    val mk: Option[(Seq[ProcedureParameter],
-                    (SparkSession, String, InternalRow) => Seq[(String,
-                      DataType, Any)])] = name match {
+    val mk: Option[(Seq[ProcedureParameter], Body)] = name match {
       case "optimize" => Some((Seq(
           in("table", StringType),
           opt("zorder_by", StringType),
           opt("sort_col", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val pc = partColOf(s, dir)
           str(args, 1) match {
             case Some(z) =>
@@ -81,7 +100,7 @@ private[sql] object GraftProcedures {
       case "compact_deletes" => Some((Seq(
           in("table", StringType),
           opt("sort_col", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           MergeOps.compactDeletes(s, dir, partColOf(s, dir),
             sortCol = str(args, 1))
           Nil
@@ -90,7 +109,7 @@ private[sql] object GraftProcedures {
           in("table", StringType),
           ProcedureParameter.in("keep_versions", IntegerType)
             .defaultValue("1").build()),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val r = Versioned.vacuum(s, dir, keepVersions = args.getInt(1))
           Seq(("floor", LongType, r.floor),
               ("data_dirs_deleted", IntegerType, r.dataDirsDeleted),
@@ -102,7 +121,7 @@ private[sql] object GraftProcedures {
           in("stats_keys", StringType),
           opt("dict_keys", StringType),
           opt("bloom_keys", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           def csv(o: Option[String]): Seq[String] =
             o.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
           MergeOps.refreshStats(s, dir, partColOf(s, dir),
@@ -114,7 +133,7 @@ private[sql] object GraftProcedures {
       case "create_branch" => Some((Seq(
           in("table", StringType),
           in("name", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val n = str(args, 1).getOrElse(
             throw new IllegalArgumentException(
               "create_branch needs a branch name"))
@@ -126,7 +145,7 @@ private[sql] object GraftProcedures {
       case "publish_branch" => Some((Seq(
           in("table", StringType),
           in("name", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val n = str(args, 1).getOrElse(
             throw new IllegalArgumentException(
               "publish_branch needs a branch name"))
@@ -136,7 +155,7 @@ private[sql] object GraftProcedures {
       case "drop_branch" => Some((Seq(
           in("table", StringType),
           in("name", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val n = str(args, 1).getOrElse(
             throw new IllegalArgumentException(
               "drop_branch needs a branch name"))
@@ -146,53 +165,33 @@ private[sql] object GraftProcedures {
       case "expire_partitions" => Some((Seq(
           in("table", StringType),
           in("names", StringType)),
-        (s, dir, args) => {
+        summary { (s, dir, args) =>
           val drop = str(args, 1).toSeq.flatMap(_.split(','))
             .map(_.trim).filter(_.nonEmpty).toSet
           require(drop.nonEmpty, "expire_partitions needs entry names")
           MergeOps.applyRetention(s, dir, n => !drop(n))
           Nil
         }))
-      case _ => None
-    }
-    mk.map { case (params, body) => new GraftProcedure(name, root,
-        params, body) }
-      .orElse(loadMultiRow(name, root))
-  }
-
-  /** The observability procedures return their OWN result shape (a
-    * DESCRIBE DETAIL row; DESCRIBE HISTORY rows) rather than the
-    * maintenance verbs' one-row summary. */
-  private def loadMultiRow(name: String,
-                           root: String): Option[UnboundProcedure] =
-    name match {
-      case "detail" => Some(new GraftResultProcedure(name, root,
-        Seq(in("table", StringType)),
+      case "detail" => Some((Seq(in("table", StringType)),
         (s, dir, _) => {
           val df = Versioned.storeDetail(s, dir)
           (df.schema, df.collect().toSeq)
         }))
-      case "history" => Some(new GraftResultProcedure(name, root,
-        Seq(in("table", StringType)),
-        (s, dir, _) => {
-          val fs = new Path(dir, "commits")
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val rows = fs.listStatus(new Path(dir, "commits")).toSeq
-            .flatMap { st =>
-              scala.util.Try(st.getPath.getName.toLong).toOption
-                .map(v => (v, st.getModificationTime))
-            }.sortBy(_._1).map { case (v, ms) =>
-              Row(v, new java.sql.Timestamp(ms),
-                  Versioned.manifest(s, dir, v).size.toLong)
-            }
+      case "history" => Some((Seq(in("table", StringType)),
+        (s, dir, _) =>
           (StructType(Seq(
              StructField("version", LongType, nullable = false),
              StructField("committed_at", TimestampType, nullable = false),
              StructField("entries", LongType, nullable = false))),
-           rows)
-        }))
+           Versioned.commitLog(s, dir).map { case (v, ms) =>
+             Row(v, new java.sql.Timestamp(ms),
+                 Versioned.manifest(s, dir, v).size.toLong)
+           })))
       case _ => None
     }
+    mk.map { case (params, body) =>
+      new GraftProcedure(name, root, params, body) }
+  }
 
   private def in(n: String, t: DataType): ProcedureParameter =
     ProcedureParameter.in(n, t).build()
@@ -215,19 +214,16 @@ private[sql] object GraftProcedures {
   }
 }
 
-/** One maintenance procedure: binds trivially (the parameter list IS
-  * the contract), runs the Scala verb, and returns a one-row summary
-  * (table, resulting committed version, verb-specific counters). */
-private[sql] class GraftProcedure(
-    procName: String, root: String,
-    params: Seq[ProcedureParameter],
-    body: (SparkSession, String, InternalRow) => Seq[(String, DataType,
-      Any)])
+/** One procedure: binds trivially (the parameter list IS the
+  * contract), checks the table is a graft store, runs its body and
+  * returns the body's rows through a `LocalScan`. */
+private[sql] class GraftProcedure(procName: String, root: String,
+                                  params: Seq[ProcedureParameter],
+                                  body: GraftProcedures.Body)
     extends UnboundProcedure with BoundProcedure {
 
   override def name(): String = procName
-  override def description(): String =
-    s"graft maintenance procedure $procName"
+  override def description(): String = s"graft procedure $procName"
   override def bind(inputType: StructType): BoundProcedure = this
   override def parameters(): Array[ProcedureParameter] = params.toArray
   override def isDeterministic: Boolean = false
@@ -235,52 +231,8 @@ private[sql] class GraftProcedure(
   override def call(input: InternalRow): java.util.Iterator[Scan] = {
     val spark = SparkSession.active
     require(!input.isNullAt(0), s"$procName needs a table name")
-    val table = input.getUTF8String(0).toString
-    val dir = new Path(root, table).toString
+    val dir = new Path(root, input.getUTF8String(0).toString).toString
     require(Versioned.currentVersion(spark, dir).isDefined,
-      s"no committed version under $dir — not a graft store")
-    val extra = body(spark, dir, input)
-    val version = Versioned.currentVersion(spark, dir).get
-    val fields = Seq(("table", StringType: DataType, table: Any),
-                     ("version", LongType: DataType, version: Any)) ++
-      extra
-    val schema = StructType(fields.map { case (n, t, _) =>
-      StructField(n, t, nullable = false) })
-    val row = Row(fields.map(_._3): _*)
-    val internal = CatalystTypeConverters.createToCatalystConverter(
-      schema)(row).asInstanceOf[InternalRow]
-    val scan: Scan = new LocalScan {
-      override def rows(): Array[InternalRow] = Array(internal)
-      override def readSchema(): StructType = schema
-      override def description(): String = s"graft.$procName summary"
-    }
-    java.util.List.of(scan).iterator()
-  }
-}
-
-/** An observability procedure: runs a metadata-only read and returns
-  * its rows verbatim (DESCRIBE DETAIL / HISTORY through `CALL`) —
-  * the same `LocalScan` delivery as [[GraftProcedure]], any row
-  * count. */
-private[sql] class GraftResultProcedure(
-    procName: String, root: String,
-    params: Seq[ProcedureParameter],
-    body: (SparkSession, String, InternalRow) => (StructType, Seq[Row]))
-    extends UnboundProcedure with BoundProcedure {
-
-  override def name(): String = procName
-  override def description(): String =
-    s"graft observability procedure $procName"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def parameters(): Array[ProcedureParameter] = params.toArray
-  override def isDeterministic: Boolean = false
-
-  override def call(input: InternalRow): java.util.Iterator[Scan] = {
-    val spark = SparkSession.active
-    require(!input.isNullAt(0), s"$procName needs a table name")
-    val table = input.getUTF8String(0).toString
-    val dir = new Path(root, table).toString
-    require(graft.engine.Versioned.currentVersion(spark, dir).isDefined,
       s"no committed version under $dir — not a graft store")
     val (schema, rows) = body(spark, dir, input)
     val conv = CatalystTypeConverters.createToCatalystConverter(schema)

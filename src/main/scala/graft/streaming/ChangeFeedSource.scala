@@ -51,11 +51,13 @@ import graft.sql.TableDoor
   * the identical bytes without recomputing; committed ranges' dirs are
   * swept in `commit`.
   *
-  * Options (case-insensitive): `dir` (the store root), `keyCol`,
-  * `partCol`, optional `startVersion` — absent: emit changes
-  * committed AFTER stream start; `0`: BOOTSTRAP (first batch is the
-  * full current snapshot as `insert` rows — the content diff from
-  * empty); `N>0`: first batch is the net diff from version N — and
+  * Options (case-insensitive): `dir` (the store root), `keyCol` (else
+  * the store's persisted `keyCol` property; the partition layout comes
+  * from each version's manifest), optional `startVersion` — absent:
+  * emit changes committed AFTER stream start; `0`: BOOTSTRAP (first
+  * batch is the full current snapshot as `insert` rows — the content
+  * diff from empty); `N>0`: first batch is the net diff from version N
+  * — and
   * optional `maxVersionsPerTrigger` (backlog pacing, Delta's
   * `maxFilesPerTrigger` shape at this source's granularity): each
   * trigger's offset advances at most that many SOURCE VERSIONS past
@@ -79,7 +81,8 @@ import graft.sql.TableDoor
   * is always included — version granularity is the atom, a single fat
   * version lands as its own (possibly over-cap) batch rather than
   * stalling the stream. Composes with `maxVersionsPerTrigger` as the
-  * min of both limits, and shares its persisted pacing floor.
+  * min of both limits, and paces from the same floor: the start offset
+  * Spark passes to `latestOffset`.
   *
   * `startTag` starts from a NAMED pinned version — the mirror-restart
   * idiom (a mirror tags its high-water version to hold its data
@@ -107,11 +110,9 @@ class ChangeFeedSourceProvider extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-change-feed"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val p = TableDoor.options(options)
-    feedSchema(SparkSession.active, required(p, "dir"),
-      Some(required(p, "partcol")))
-  }
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    feedSchema(SparkSession.active,
+      required(TableDoor.options(options), "dir"))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -125,9 +126,11 @@ object ChangeFeedSourceProvider {
         .mkString(", ")})"))
 
   /** The feed's schema: the store's current schema plus `change_type`. */
-  private[graft] def feedSchema(spark: SparkSession, dir: String,
-                                partCol: Option[String]): StructType = {
-    val base = Versioned.readCurrent(spark, dir, partCol).schema
+  private[graft] def feedSchema(spark: SparkSession,
+                                dir: String): StructType = {
+    val v = Versioned.currentVersion(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir"))
+    val base = ChangeFeedStream.snapshot(spark, dir, v).schema
     require(!base.fieldNames.contains("change_type"),
       s"the table under $dir already has a change_type column — the " +
         "feed cannot add its classification column")
@@ -151,9 +154,8 @@ private[graft] class ChangeFeedTable(schema: StructType,
     new ScanBuilder with Scan {
       // scan-time options override table properties: on the V1-format
       // path both maps are the same stream options (merge is a no-op);
-      // on the CATALOG path props carry what the table derived (dir,
-      // partcol, the persisted keycol) and the reader's .option(...)
-      // calls land here
+      // on the CATALOG path props carry the store dir and the reader's
+      // .option(...) calls land here
       private val merged = props ++ TableDoor.options(options)
       override def build(): Scan = this
       override def readSchema(): StructType = schema
@@ -163,8 +165,7 @@ private[graft] class ChangeFeedTable(schema: StructType,
       override def toMicroBatchStream(checkpointLocation: String)
           : MicroBatchStream =
         ChangeFeedStream.open(SparkSession.active, merged,
-          required(merged, "dir"), required(merged, "keycol"),
-          required(merged, "partcol"), checkpointLocation, schema,
+          required(merged, "dir"), name(), checkpointLocation, schema,
           rowImage = false, defaultStart = None)
     }
 }
@@ -182,9 +183,12 @@ object ChangeFeedStream {
     * checks `opts` (keys lower-cased; see [[ChangeFeedSourceProvider]]
     * for their meaning) and opens the stream over `dir`, starting at
     * `startVersion` or `startTag`, else `defaultStart` (None: changes
-    * committed after stream start). */
+    * committed after stream start). The merge key is the `keyCol`
+    * option, else the store's persisted property
+    * ([[TableDoor.requireKeyCol]]; `ident` names the table in its
+    * error). */
   private[graft] def open(spark: SparkSession, opts: Map[String, String],
-                          dir: String, keyCol: => String, partCol: => String,
+                          dir: String, ident: String,
                           checkpointLocation: String, schema: StructType,
                           rowImage: Boolean,
                           defaultStart: Option[Long]): ChangeFeedStream = {
@@ -204,11 +208,22 @@ object ChangeFeedStream {
             s"no tag '$t' under $dir — live tags: " +
               Versioned.tags(spark, dir).keys.toSeq.sorted.mkString(", ")))
       }).orElse(defaultStart)
-    new ChangeFeedStream(spark, dir, keyCol, partCol,
+    new ChangeFeedStream(spark, dir,
+      TableDoor.requireKeyCol(spark, dir, opts, "readStream of", ident),
       resolveBase(spark, checkpointLocation, dir, startV), maxV, maxB,
       checkpointLocation, schema, rowImage,
       ignoreDeletes = opts.get("ignoredeletes").exists(_.trim.toBoolean),
       pinRetention = opts.get("pinretention").exists(_.trim.toBoolean))
+  }
+
+  /** Version `v` of the store, read live at the partition layout its
+    * own manifest names ([[Versioned.partColOf]]). */
+  private[graft] def snapshot(spark: SparkSession, dir: String,
+                              v: Long): DataFrame = {
+    Versioned.requireAboveFloor(spark, dir, v)
+    val man = Versioned.manifest(spark, dir, v)
+    Versioned.readEntriesLive(spark, dir, v, man, man,
+      Versioned.partColOf(man))
   }
 
   /** Resolve-and-persist the stream's initial base version: first
@@ -249,7 +264,6 @@ object ChangeFeedStream {
 }
 
 class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
-                       partCol: String,
                        /** resolved-and-persisted by the scan: the
                          * version everything BEFORE the stream is folded
                          * into — batches emit changes strictly after it */
@@ -296,59 +310,9 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
     availableNowCeiling =
       Some(Versioned.currentVersion(spark, dir).getOrElse(baseVersion))
 
-  /** Either pacing option makes the source paced: the persisted floor
-    * and its clean-restart re-seed apply to both. */
-  private def paced: Boolean =
-    maxVersionsPerTrigger.isDefined || maxBytesPerTrigger.isDefined
-
-  /** The pacing floor's PERSISTED high-water: crash-restarts replay
-    * `planInputPartitions(prevStart, prevEnd)` before the first new
-    * `latestOffset` and re-seed the floor that way, but a CLEAN
-    * restart — last batch committed — replays nothing, and an
-    * in-memory-only floor would reset to the base: the first paced
-    * latestOffset would then return base+m, BELOW the committed
-    * offset, and after the resulting empty batch the next trigger
-    * would span the whole already-processed range as one unbounded,
-    * DUPLICATE slice (breaking both the pacing promise and the
-    * non-overlapping CDC contract for non-idempotent consumers). So
-    * every paced advance drops a marker file `graft-feed-hw/<off>`
-    * under the stream's own checkpoint dir (create-then-sweep — each
-    * marker is an atomic create, so a crash between the two leaves
-    * only a stale LOWER marker that the max() read ignores), and
-    * creation re-seeds the floor from the highest marker. Unpaced
-    * streams skip the write: their latestOffset returns `current`,
-    * which never regresses. */
-  private val hwDir = new Path(checkpointLocation, "graft-feed-hw")
-  private val hwFs =
-    hwDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readHw(): Long =
-    if (!hwFs.exists(hwDir)) baseVersion
-    else hwFs.listStatus(hwDir).toSeq
-      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-      .foldLeft(baseVersion)(math.max)
-
-  private def persistHw(off: Long): Unit = {
-    hwFs.mkdirs(hwDir)
-    val marker = new Path(hwDir, off.toString)
-    try hwFs.create(marker, false).close()
-    catch { case _: java.io.IOException if hwFs.exists(marker) => () }
-    // sweep lower markers, best-effort: the read takes the max, so a
-    // leftover only costs a directory entry
-    hwFs.listStatus(hwDir).foreach { st =>
-      if (scala.util.Try(st.getPath.getName.toLong).toOption
-            .exists(_ < off))
-        scala.util.Try(hwFs.delete(st.getPath, false))
-    }
-  }
-
-  /** Highest offset this stream instance has offered or seen — the
-    * pacing floor, so a capped [[latestOffset]] never regresses below
-    * an already-logged offset. Seeded from the persisted high-water
-    * (clean restarts), re-seeded by [[planInputPartitions]]' replayed
-    * offsets (crash restarts) — both paths keep the floor monotone. */
-  @volatile private var lastOffered: Long =
-    if (paced) readHw() else baseVersion
+  /** The filesystem of the stream's checkpoint dir (staged batches). */
+  private val ckFs = new Path(checkpointLocation)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private lazy val storeFs =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -398,69 +362,58 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
 
   override def initialOffset(): Offset = FeedOffset(baseVersion)
 
-  /** SupportsAdmissionControl entry point (what Spark actually calls
-    * once SupportsTriggerAvailableNow is in play): this source's
-    * admission control is its own option-driven pacing — the engine's
-    * ReadLimit is always allAvailable here (we declare no default
-    * limit), so both arguments delegate to the paced walk. */
+  /** Spark's admission-control entry point (what it calls on every
+    * trigger of this source). `start` is the offset Spark
+    * logged last — [[initialOffset]] before the first batch — and is
+    * the pacing floor: Spark's offset log carries it across clean and
+    * crashed restarts alike, so the source persists nothing of its own
+    * for pacing. The engine's `limit` is always allAvailable here (no
+    * default limit is declared); pacing is this source's own options.
+    * One `commits/` listing per call. */
   override def latestOffset(
       start: Offset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : Offset = latestOffset()
+      : Offset = {
+    val hi = math.max(versionOf(start), baseVersion)
+    val all = Versioned.committedVersions(spark, dir)
+    val cur = all.lastOption.fold(hi)(c =>
+      availableNowCeiling.fold(c)(math.min(c, _)))
+    // version pacing: advance at most maxVersionsPerTrigger COMMITTED
+    // versions past the floor; a backlog then drains as bounded
+    // batches, each with its own checkpoint. Walking the committed list
+    // (not hi + m arithmetic) matters once a vacuum has swept
+    // mid-backlog versions: every offset this source logs must be a
+    // version whose manifest still exists, or the batch endpoints
+    // can't be diffed — swept versions collapse into their successor's
+    // net slice.
+    val next = all.filter(v => v > hi && v <= cur)
+    val capped = maxVersionsPerTrigger.fold(next)(m =>
+      next.take(math.min(m, Int.MaxValue.toLong).toInt))
+    // byte pacing: within the version cap, extend the offset one
+    // committed version at a time while the cumulative changed-
+    // partition bytes stay under the cap — soft (the first version
+    // always lands, so one fat commit can't stall the stream). Steps
+    // are priced lazily, up to the first that overflows the cap.
+    val n = maxBytesPerTrigger match {
+      case Some(maxB) if capped.nonEmpty =>
+        val prevs = all.takeWhile(_ <= hi).lastOption +:
+          capped.init.map(Some(_))
+        val sums = prevs.iterator.zip(capped).map((deltaBytes _).tupled)
+          .scanLeft(0L)(_ + _).drop(1)  // bytes of the first 1, 2, … steps
+        1 + sums.drop(1).takeWhile(_ <= maxB).size
+      case _ => capped.size
+    }
+    FeedOffset(capped.take(n).lastOption.getOrElse(hi))
+  }
+
+  /** Spark calls the admission-control [[latestOffset]] on this source;
+    * without a start offset there is no pacing floor. */
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead")
 
   override def deserializeOffset(json: String): Offset =
     FeedOffset(json.trim.toLong)
-
-  override def latestOffset(): Offset =
-    Versioned.currentVersion(spark, dir)
-        .map(c => availableNowCeiling.fold(c)(math.min(c, _))) match {
-      case Some(cur) if cur > baseVersion =>
-        val hi = math.max(lastOffered, baseVersion)
-        // version pacing: advance at most maxVersionsPerTrigger
-        // COMMITTED versions past what was already offered; a backlog
-        // then drains as bounded batches, each with its own checkpoint.
-        // Walking the committed list (not hi + m arithmetic) matters
-        // once a vacuum has swept mid-backlog versions: every offset
-        // this source logs must be a version whose manifest still
-        // exists, or the batch endpoints can't be diffed — swept
-        // versions simply collapse into their successor's net slice.
-        val vCap = maxVersionsPerTrigger match {
-          case Some(m) =>
-            val nexts = Versioned.committedVersions(spark, dir)
-              .filter(v => v > hi && v <= cur)
-              .take(math.min(m, Int.MaxValue.toLong).toInt)
-            if (nexts.isEmpty) hi else nexts.last
-          case None => cur
-        }
-        // byte pacing: within the version cap, extend the offset one
-        // committed version at a time while the cumulative changed-
-        // partition bytes stay under the cap — soft (the first version
-        // always lands, so one fat commit can't stall the stream)
-        val off = maxBytesPerTrigger match {
-          case Some(maxB) if vCap > hi =>
-            val all = Versioned.committedVersions(spark, dir)
-            val candidates = all.filter(v => v > hi && v <= vCap)
-            var prev = all.filter(_ <= hi).lastOption
-            var chosen = hi
-            var acc = 0L
-            val it = candidates.iterator
-            var full = false
-            while (it.hasNext && !full) {
-              val v = it.next()
-              val b = deltaBytes(prev, v)
-              if (chosen == hi || acc + b <= maxB) {
-                chosen = v; acc += b; prev = Some(v)
-              } else full = true
-            }
-            chosen
-          case _ => vCap
-        }
-        if (paced && off > lastOffered)
-          persistHw(off)
-        lastOffered = math.max(lastOffered, off)
-        FeedOffset(off)
-      case _ => FeedOffset(math.max(lastOffered, baseVersion))
-    }
 
   private def versionOf(o: Offset): Long = o match {
     case f: FeedOffset => f.v
@@ -484,10 +437,10 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
     val batch =
       if (from == 0L)
         // bootstrap: the content diff from empty IS the full snapshot
-        Versioned.readVersion(spark, dir, to, Some(partCol))
+        ChangeFeedStream.snapshot(spark, dir, to)
           .withColumn("change_type", lit("insert"))
       else
-        MergeOps.changeFeed(spark, dir, from, to, keyCol, partCol)
+        MergeOps.changeFeed(spark, dir, from, to, keyCol)
     // pin the declared column order; a mid-stream schema evolution
     // surfaces LOUDLY here, both directions: a dropped pinned column
     // as Spark's unresolved-column error from the select, an ADDED
@@ -542,8 +495,8 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
 
   private def stagedSchemaMatches(dest: Path): Boolean = {
     val sp = new Path(dest, stageSchemaFile)
-    hwFs.exists(sp) && {
-      val in = hwFs.open(sp)
+    ckFs.exists(sp) && {
+      val in = ckFs.open(sp)
       val recorded =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
@@ -553,9 +506,9 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
 
   private def stage(from: Long, to: Long): Path = {
     val dest = new Path(stageRoot, s"${from}_$to")
-    if (hwFs.exists(new Path(dest, "_SUCCESS"))) {
+    if (ckFs.exists(new Path(dest, "_SUCCESS"))) {
       if (stagedSchemaMatches(dest)) return dest
-      hwFs.delete(dest, true)  // stale-pin bytes: restage under the new pin
+      ckFs.delete(dest, true)  // stale-pin bytes: restage under the new pin
     }
     val tmp = new Path(stageRoot,
       s".${from}_${to}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -586,7 +539,7 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
       }
       .saveAsSequenceFile(tmp.toString)
     if (imageMode && deleted.value > 0L && !ignoreDeletes) {
-      hwFs.delete(tmp, true)
+      ckFs.delete(tmp, true)
       throw new IllegalStateException(
         s"the change feed $from -> $to under $dir contains " +
           s"${deleted.value} DELETE row(s): a plain table stream is an " +
@@ -595,10 +548,10 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
           "`changes` namespace, or format(\"graft-change-feed\")) for " +
           "change_type rows, or pass ignoreDeletes=true to drop them")
     }
-    val out = hwFs.create(new Path(tmp, stageSchemaFile), true)
+    val out = ckFs.create(new Path(tmp, stageSchemaFile), true)
     try out.write(pinnedSchema.json.getBytes("UTF-8")) finally out.close()
-    hwFs.delete(dest, true)  // a torn earlier attempt without _SUCCESS
-    require(hwFs.rename(tmp, dest),
+    ckFs.delete(dest, true)  // a torn earlier attempt without _SUCCESS
+    require(ckFs.rename(tmp, dest),
       s"could not commit staged feed batch $tmp -> $dest")
     dest
   }
@@ -607,13 +560,10 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
       : Array[InputPartition] = {
     val from = versionOf(start)
     val to = versionOf(end)
-    // fold replayed/logged offsets into the pacing floor (crash-restart
-    // path); the persisted marker catches up lazily at the next advance
-    lastOffered = math.max(lastOffered, math.max(from, to))
     if (from >= to) return Array.empty
     val dest = stage(from, to)
     pinFloor(to)  // staged: the source is only needed beyond `to` now
-    hwFs.listStatus(dest).toSeq
+    ckFs.listStatus(dest).toSeq
       .map(_.getPath)
       .filter(p => p.getName.startsWith("part-"))
       .sortBy(_.getName)
@@ -659,7 +609,7 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
         Versioned.retentionFloor(spark, dir).forall(f => v >= f))
       Versioned.tagVersion(spark, dir, retentionTag, v)
 
-  pinFloor(math.max(readHw(), baseVersion))
+  pinFloor(baseVersion)
 
   /** A committed range's staged bytes can never be replayed — sweep
     * every stage dir whose end is at or below the committed offset
@@ -667,8 +617,8 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
   override def commit(end: Offset): Unit = {
     val committed = versionOf(end)
     pinFloor(committed)
-    if (!hwFs.exists(stageRoot)) return
-    hwFs.listStatus(stageRoot).foreach { st =>
+    if (!ckFs.exists(stageRoot)) return
+    ckFs.listStatus(stageRoot).foreach { st =>
       val n = st.getPath.getName
       val sweep =
         if (n.startsWith(".")) true  // torn tmp attempt
@@ -677,13 +627,13 @@ class ChangeFeedStream(spark: SparkSession, dir: String, keyCol: String,
             scala.util.Try(t.toLong).toOption.exists(_ <= committed)
           case _ => false
         }
-      if (sweep) scala.util.Try(hwFs.delete(st.getPath, true))
+      if (sweep) scala.util.Try(ckFs.delete(st.getPath, true))
     }
   }
 
   override def stop(): Unit = ()
   override def toString: String =
-    s"ChangeFeedStream[$dir, key=$keyCol, part=$partCol, base=$baseVersion]"
+    s"ChangeFeedStream[$dir, key=$keyCol, base=$baseVersion]"
 }
 
 /** One staged SequenceFile of UnsafeRow bytes. */

@@ -87,6 +87,24 @@ object StreamOps {
                    storePath: String): DataFrame =
     s.read.parquet(storePath).drop("batch_id")
 
+  /** THE maintenance-sink shape: an append-mode `foreachBatch` that
+    * runs one store verb per micro-batch inside
+    * [[graft.engine.Versioned.withCommitRetry]]. Losing a commit race
+    * to a concurrent writer on a shared store (a batch backfill, a
+    * compactor) is the EXPECTED event, and every verb re-derives from
+    * current state per attempt, so the sink absorbs the race instead of
+    * killing the streaming query — while pathological contention still
+    * surfaces after the bounded attempts (a dead trigger beats silent
+    * starvation). Exactly-once is each verb's own argument, stated at
+    * its sink. */
+  private def commitSink(input: DataFrame)(
+      verb: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    input.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.engine.Versioned.withCommitRetry()(verb(batch, batchId))
+      }
+
   /** Streaming maintenance of the day-level rollup
     * ([[graft.ops.IncrementalOps]]): each micro-batch's PARTIAL
     * aggregates fold into only the days it touches, through the same
@@ -97,23 +115,13 @@ object StreamOps {
     * applied set. This is the third streaming→store composition (after
     * the minhash and embedding stores): the dashboard rollup stays
     * current per trigger, and a batch backfill and the stream can share
-    * one store because both go through foldBatch. The fold runs inside
-    * [[graft.engine.Versioned.withCommitRetry]]: losing a commit race
-    * to a concurrent batch backfill is the EXPECTED event on a shared
-    * store, and the fold re-derives from current state per attempt, so
-    * the sink absorbs the race instead of killing the streaming query —
-    * while pathological contention still surfaces after the bounded
-    * attempts (a dead trigger beats silent starvation). */
+    * one store because both go through foldBatch ([[commitSink]]). */
   def rollupMaintenance(events: DataFrame,
                         rollupDir: String): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.engine.Versioned.withCommitRetry() {
-          graft.ops.IncrementalOps.foldBatch(
-            batch.sparkSession, rollupDir, batch, s"stream:$batchId")
-        }
-      }
+    commitSink(events) { (batch, batchId) =>
+      graft.ops.IncrementalOps.foldBatch(
+        batch.sparkSession, rollupDir, batch, s"stream:$batchId")
+    }
 
   /** Streaming TOMBSTONE sink (round 11): each micro-batch of doomed
     * keys row-level-deletes from a versioned corpus via
@@ -122,22 +130,14 @@ object StreamOps {
     * them copy-on-write per trigger). Exactly-once needs NO ledger
     * here: deletes are idempotent by construction — a replayed batch's
     * keys are already gone, the touched-partition semi-join finds
-    * nothing, and the sink publishes nothing. Runs inside
-    * [[graft.engine.Versioned.withCommitRetry]] so losing a commit
-    * race to a concurrent merge/compactor re-derives instead of
-    * killing the streaming query (same contract as
-    * [[rollupMaintenance]]). */
+    * nothing, and the sink publishes nothing ([[commitSink]]). */
   def deleteMaintenance(tombstones: DataFrame, corpusDir: String,
                         keyCol: String,
                         partCol: String): DataStreamWriter[Row] =
-    tombstones.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.engine.Versioned.withCommitRetry() {
-          graft.ops.MergeOps.mergeDelete(
-            batch.sparkSession, corpusDir, batch, keyCol, partCol)
-        }
-      }
+    commitSink(tombstones) { (batch, _) =>
+      graft.ops.MergeOps.mergeDelete(
+        batch.sparkSession, corpusDir, batch, keyCol, partCol)
+    }
 
   /** MERGE-ON-READ twin of [[deleteMaintenance]]: each micro-batch of
     * doomed keys lands as ONE tombstone dir + dv sidecar
@@ -148,18 +148,14 @@ object StreamOps {
     * compaction/restage materializes it. Exactly-once by the same
     * argument as the CoW sink: a replayed batch's keys are already
     * tombstoned, read as absent, and the all-miss delete publishes
-    * NOTHING. Same commit-retry contract. */
+    * NOTHING. */
   def deleteMaintenanceMor(tombstones: DataFrame, corpusDir: String,
                            keyCol: String,
                            partCol: String): DataStreamWriter[Row] =
-    tombstones.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.engine.Versioned.withCommitRetry() {
-          graft.ops.MergeOps.mergeDeleteMor(
-            batch.sparkSession, corpusDir, batch, keyCol, partCol)
-        }
-      }
+    commitSink(tombstones) { (batch, _) =>
+      graft.ops.MergeOps.mergeDeleteMor(
+        batch.sparkSession, corpusDir, batch, keyCol, partCol)
+    }
 
   /** Streaming MERGE INTO — the CDC-INGESTION sink: each micro-batch of
     * changelog rows (full row schema + `op` ∈ i/u/d) applies ATOMICALLY
@@ -170,21 +166,16 @@ object StreamOps {
     * re-commit a version even at the same content), so exactly-once is
     * the LEDGER's: the batch id lands in the store's applied-id set
     * inside the same committed version, and the replay the at-least-
-    * once foreachBatch contract allows finds `stream-cdc:<id>` applied (one high-water ledger line per source — the round-11 advice growth fix)
-    * and no-ops. Same commit-retry contract as the other maintenance
-    * sinks. */
+    * once foreachBatch contract allows finds `stream-cdc:<id>` applied
+    * (one high-water ledger line per source) and no-ops. */
   def cdcApplyMaintenance(changes: DataFrame, corpusDir: String,
                           keyCol: String,
                           partCol: String): DataStreamWriter[Row] =
-    changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.engine.Versioned.withCommitRetry() {
-          graft.ops.MergeOps.mergeApplyChangelog(
-            batch.sparkSession, corpusDir, batch, keyCol, partCol,
-            ledgerId = Some(s"stream-cdc:$batchId"))
-        }
-      }
+    commitSink(changes) { (batch, batchId) =>
+      graft.ops.MergeOps.mergeApplyChangelog(
+        batch.sparkSession, corpusDir, batch, keyCol, partCol,
+        ledgerId = Some(s"stream-cdc:$batchId"))
+    }
 
   /** Streaming REPLICATION: per trigger, advance the mirror to the
     * source's current content with ONE net change feed
@@ -194,20 +185,15 @@ object StreamOps {
     * ingest writing the source (batch merges, the delete sinks above,
     * another stream). Exactly-once is the mirror ledger's: a replayed
     * trigger finds `src:<v>` applied and no-ops; an up-to-date source
-    * publishes nothing at all; commit races against the mirror's own
-    * maintenance re-derive under the retry contract. */
+    * publishes nothing at all. */
   def mirrorMaintenance(ticks: DataFrame, srcDir: String, dstDir: String,
                         keyCol: String,
                         partCol: String): DataStreamWriter[Row] =
-    ticks.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.engine.Versioned.withCommitRetry() {
-          graft.ops.MergeOps.syncMirror(
-            batch.sparkSession, srcDir, dstDir, keyCol, partCol)
-        }
-        ()  // foreachBatch wants Unit; the synced version is diagnostics
-      }
+    commitSink(ticks) { (batch, _) =>
+      graft.ops.MergeOps.syncMirror(
+        batch.sparkSession, srcDir, dstDir, keyCol, partCol)
+      ()  // the synced version is diagnostics
+    }
 
   /** Open a versioned store's change feed as a STREAM — the read-side
     * CDC completion ([[ChangeFeedStream]]): one micro-batch per
@@ -215,9 +201,10 @@ object StreamOps {
     * restart-safe through Spark's own offset log. `startVersion`:
     * None = changes after stream start; Some(0) = bootstrap (first
     * batch is the full snapshot as inserts); Some(n) = diff from
-    * version n. */
+    * version n. The partition layout comes from the store's
+    * manifests. */
   def feedStream(s: org.apache.spark.sql.SparkSession, srcDir: String,
-                 keyCol: String, partCol: String,
+                 keyCol: String,
                  startVersion: Option[Long] = None,
                  maxVersionsPerTrigger: Option[Long] = None,
                  maxBytesPerTrigger: Option[Long] = None): DataFrame = {
@@ -225,7 +212,6 @@ object StreamOps {
       .format("graft.streaming.ChangeFeedSourceProvider")
       .option("dir", srcDir)
       .option("keyCol", keyCol)
-      .option("partCol", partCol)
     val r1 = startVersion.fold(r0)(v => r0.option("startVersion", v.toString))
     val r2 = maxVersionsPerTrigger
       .fold(r1)(m => r1.option("maxVersionsPerTrigger", m.toString))
@@ -243,34 +229,28 @@ object StreamOps {
     * immutable version range, so the identical feed re-applies and the
     * destination ledger no-ops it (the cdcApplyMaintenance argument).
     * An all-insert FIRST batch against an empty mirror bootstraps via
-    * [[graft.ops.MergeOps.mergeUpsert]] under the same ledger id. Same
-    * commit-retry contract as every maintenance sink. */
+    * [[graft.ops.MergeOps.mergeUpsert]] under the same ledger id. */
   def feedMirrorMaintenance(feed: DataFrame, dstDir: String,
                             keyCol: String,
                             partCol: String): DataStreamWriter[Row] =
-    feed.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val changes = batch.withColumn("op",
-            when(col("change_type") === "delete", lit("d"))
-              .when(col("change_type") === "insert", lit("i"))
-              .otherwise(lit("u")))
-          .drop("change_type")
-        graft.engine.Versioned.withCommitRetry() {
-          if (graft.engine.Versioned.currentVersion(s, dstDir).isEmpty) {
-            val inserts = changes.where(col("op") =!= "d").drop("op")
-            // an empty feed against a not-yet-bootstrapped mirror has
-            // nothing to found the store on — skip; the store (and its
-            // ledger) begins with the first real batch
-            if (!inserts.isEmpty)
-              graft.ops.MergeOps.mergeUpsert(s, dstDir, inserts,
-                keyCol, partCol, ledgerId = Some(s"stream-feed:$batchId"))
-          } else
-            graft.ops.MergeOps.mergeApplyChangelog(s, dstDir, changes,
-              keyCol, partCol, ledgerId = Some(s"stream-feed:$batchId"))
-        }
-      }
+    commitSink(feed) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val changes = batch.withColumn("op",
+          when(col("change_type") === "delete", lit("d"))
+            .when(col("change_type") === "insert", lit("i"))
+            .otherwise(lit("u")))
+        .drop("change_type")
+      if (graft.engine.Versioned.currentVersion(s, dstDir).isEmpty)
+        // an empty feed against a not-yet-bootstrapped mirror founds
+        // nothing (a zero-row bootstrap publishes no version); the
+        // store (and its ledger) begins with the first real batch
+        graft.ops.MergeOps.mergeUpsert(s, dstDir,
+          changes.where(col("op") =!= "d").drop("op"),
+          keyCol, partCol, ledgerId = Some(s"stream-feed:$batchId"))
+      else
+        graft.ops.MergeOps.mergeApplyChangelog(s, dstDir, changes,
+          keyCol, partCol, ledgerId = Some(s"stream-feed:$batchId"))
+    }
 
   /** Fold ONE micro-batch of embeddings-shaped rows (vec_id, label,
     * embedding float[]) into a streamed embedding index: quantized

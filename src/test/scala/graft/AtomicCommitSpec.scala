@@ -59,6 +59,18 @@ class AtomicCommitSpec extends SparkTestBase {
       "rows the batch did not touch must be byte-identical")
   }
 
+  test("a zero-row bootstrap publishes nothing: the store stays " +
+       "uncommitted and the next write lands as a readable version 1") {
+    val dir = freshDir("graft_zero_boot")
+    MergeOps.mergeUpsert(spark, dir, corpus(4).where(lit(false)), "k", "p")
+    assert(Versioned.currentVersion(spark, dir).isEmpty,
+      "a bootstrap that stages no entry must leave no version")
+    MergeOps.mergeUpsert(spark, dir, corpus(4), "k", "p")
+    assert(Versioned.currentVersion(spark, dir).contains(1L))
+    assert(Versioned.readVersion(spark, dir, 1L, Some("p")).count() == 4L)
+    assert(MergeOps.history(spark, dir, "p").count() == 1L)
+  }
+
   test("a merge after a torn stage ignores the orphan and lands cleanly") {
     val dir = freshDir("graft_atomic_retry")
     MergeOps.mergeUpsert(spark, dir, corpus(50), "k", "p")

@@ -141,6 +141,56 @@ class BranchKernelSpec extends SparkTestBase {
     assert(got.size == 9)
   }
 
+  test("a publish across a swept version that touched the branch's " +
+       "partition refuses and main keeps that version's write") {
+    val dir = freshDir("graft_bk_swept")
+    MergeOps.mergeUpsert(spark, dir, corpus(6), "k", "p")            // v1
+    MergeOps.addConstraint(spark, dir, "v_nonneg", "v >= 0", "p")    // v2
+    BranchOps.createBranch(spark, dir, "b1")
+    MergeOps.mergeUpsert(spark, dir,
+      Seq((7L, 70.0, "O")).toDF("k", "v", "p"), "k", "p")            // v3
+    MergeOps.mergeUpsert(spark, dir,
+      Seq((8L, 80.0, "E")).toDF("k", "v", "p"), "k", "p")            // v4
+    Versioned.vacuum(spark, dir, keepVersions = 1)
+    assert(Versioned.committedVersions(spark, dir) == Seq(2L, 4L))
+    BranchOps.branchUpsert(spark, dir, "b1",
+      Seq((9L, 90.0, "O")).toDF("k", "v", "p"), "k", "p")
+    val e = intercept[IllegalArgumentException] {
+      BranchOps.publishBranch(spark, dir, "b1")
+    }
+    assert(e.getMessage.contains("advanced past") &&
+      e.getMessage.contains("rebaseBranch"), e.getMessage)
+    assert(Versioned.currentVersion(spark, dir).contains(4L))
+    assert(onMain(dir).select("k").as[Long].collect().toSet ==
+      (1L to 8L).toSet, "the swept v3's k=7 must survive")
+  }
+
+  test("a losing upsert does not rebase across a swept version it " +
+       "cannot prove disjoint") {
+    val dir = freshDir("graft_bk_swept_upsert")
+    MergeOps.mergeUpsert(spark, dir, corpus(6), "k", "p")            // v1
+    // parked before its first publish, the upsert of k=9 into p=O loses
+    // v2 to k=7 (p=O), then v3 (p=E) lands and a vacuum sweeps v1, v2
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    MergeOps.Hooks.onBeforePublish = () =>
+      if (raced.compareAndSet(false, true)) {
+        MergeOps.mergeUpsert(spark, dir,
+          Seq((7L, 70.0, "O")).toDF("k", "v", "p"), "k", "p")        // v2
+        MergeOps.mergeUpsert(spark, dir,
+          Seq((8L, 80.0, "E")).toDF("k", "v", "p"), "k", "p")        // v3
+        Versioned.vacuum(spark, dir, keepVersions = 1)
+        ()
+      }
+    try intercept[graft.engine.ConcurrentCommitException] {
+      MergeOps.mergeUpsert(spark, dir,
+        Seq((9L, 90.0, "O")).toDF("k", "v", "p"), "k", "p")
+    } finally MergeOps.Hooks.onBeforePublish = () => ()
+    assert(!Versioned.committedVersions(spark, dir).contains(2L))
+    assert(Versioned.currentVersion(spark, dir).contains(3L))
+    assert(onMain(dir).select("k").as[Long].collect().toSet ==
+      (1L to 8L).toSet, "the swept v2's k=7 must survive")
+  }
+
   test("publishing a branch that never diverged lands nothing, also " +
        "after an undeclared rollback on main") {
     val dir = freshDir("graft_bk_undiverged")

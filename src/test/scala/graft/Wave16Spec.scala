@@ -329,7 +329,7 @@ class Wave16Spec extends SparkTestBase {
     // hand-stage v3 without partition A at all (a delete no merge emits)
     val man2 = Versioned.manifest(spark, dir, 2L)
     Versioned.publish(spark, dir, 3L, man2.filterNot(_._1 == "p=A"))
-    val log = MergeOps.changelog(spark, dir, 1L, 3L, "k", "p", "v")
+    val log = MergeOps.changelog(spark, dir, 1L, 3L, "k", "v")
     val got = log.select("k", "change", "old_value", "new_value")
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     assert(got == Seq(1L -> "delete", 2L -> "update", 4L -> "insert"),

@@ -368,7 +368,7 @@ class Wave19Spec extends SparkTestBase {
     // CDC sees the row deletes as deletes — downstream consumers
     // (index maintenance, cache invalidation) subscribe to the same
     // changelog for DELETE writes as for merges
-    val cdc = MergeOps.changelog(spark, dir, 1L, 2L, "k", "p", "v")
+    val cdc = MergeOps.changelog(spark, dir, 1L, 2L, "k", "v")
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("change"))
       .toMap
     assert(cdc == Map(2L -> "delete", 4L -> "delete", 5L -> "delete",
@@ -417,7 +417,7 @@ class Wave19Spec extends SparkTestBase {
     assert(st("p=d1")("k") == (1L, 3L) && st("p=d2")("k") == (5L, 6L) &&
       st("p=d3")("k") == (7L, 7L), s"fresh bounds, got $st")
     // CDC of the apply reports all three op kinds
-    val cdc = MergeOps.changelog(spark, dir, 1L, 2L, "k", "p", "v")
+    val cdc = MergeOps.changelog(spark, dir, 1L, 2L, "k", "v")
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("change"))
       .toMap
     assert(cdc == Map(2L -> "update", 4L -> "delete", 7L -> "insert"),

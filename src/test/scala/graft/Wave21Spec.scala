@@ -15,7 +15,7 @@ import graft.ops.MergeOps
 class Wave21Spec extends SparkTestBase {
 
   private def feedMap(dir: String, from: Long, to: Long) =
-    MergeOps.changeFeed(spark, dir, from, to, "k", "p").collect()
+    MergeOps.changeFeed(spark, dir, from, to, "k").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(3))).toMap
 
   private def mirrorKeys(dir: String): Map[Long, Double] =
@@ -82,7 +82,7 @@ class Wave21Spec extends SparkTestBase {
     // with w=null, which must equal the null-filled v1 image
     MergeOps.mergeUpsert(spark, dir,
       Seq((2L, 20.0, "E", 7L)).toDF("k", "v", "p", "w"), "k", "p")  // v2
-    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k", "p")
+    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k")
     val rows = feed.collect().map(r =>
       r.getLong(0) -> (r.getAs[Any]("w"), r.getString(feed.columns
         .indexOf("change_type")))).toMap

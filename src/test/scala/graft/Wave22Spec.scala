@@ -185,7 +185,7 @@ class Wave22Spec extends SparkTestBase {
     // content: exactly the pre-compaction live set; feed: empty
     assert(MergeOps.readCorpus(spark, dir, "p").collect()
       .map(_.getLong(0)).toSet == want)
-    assert(MergeOps.changeFeed(spark, dir, 2L, 3L, "k", "p").count() == 0L,
+    assert(MergeOps.changeFeed(spark, dir, 2L, 3L, "k").count() == 0L,
       "a z-order compaction must be invisible in the change feed")
     assert(Versioned.morRefs(spark, dir, 3L, Versioned.Dv).isEmpty)
     val m = Versioned.readStatsMulti(spark, dir, 3L)("p=P")

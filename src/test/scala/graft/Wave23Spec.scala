@@ -143,7 +143,7 @@ class Wave23Spec extends SparkTestBase {
       "the predicate delete's restage must materialize the tombstones")
     // the feed across the DML: deletes for every removed live key, and
     // NO row for the already-tombstoned key 2
-    val feed = MergeOps.changeFeed(spark, dir, 2L, 3L, "k", "p")
+    val feed = MergeOps.changeFeed(spark, dir, 2L, 3L, "k")
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(feed == Map(4L -> "delete", 5L -> "delete", 6L -> "delete",
       7L -> "delete", 8L -> "delete", 9L -> "delete", 10L -> "delete"),
@@ -151,7 +151,7 @@ class Wave23Spec extends SparkTestBase {
     // UPDATE across the feed: post-image updates
     MergeOps.mergeUpdateWhere(spark, dir, col("k") === 1L,
       Seq("v" -> (col("v") + 1)), "k", "p")                         // v4
-    val f2 = MergeOps.changeFeed(spark, dir, 3L, 4L, "k", "p")
+    val f2 = MergeOps.changeFeed(spark, dir, 3L, 4L, "k")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(3)))
     assert(f2.toSeq == Seq((1L, 11.0, "update")), s"feed: ${f2.toSeq}")
   }

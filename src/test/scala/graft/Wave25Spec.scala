@@ -24,13 +24,13 @@ class Wave25Spec extends SparkTestBase {
       Seq((9L, 90.0, "O")).toDF("k", "v", "p"), "k", "p")            // v3
     Versioned.vacuum(spark, dir, keepVersions = 1)                   // floor 3
     // pinned: the feed from v1 still computes, and is the right diff
-    val feed = MergeOps.changeFeed(spark, dir, 1L, 3L, "k", "p")
+    val feed = MergeOps.changeFeed(spark, dir, 1L, 3L, "k")
       .select("k", "change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(feed === Set((3L, "update"), (9L, "insert")))
     // unpinned below-floor fromV: loud floor error, not a missing file
     val e = intercept[IllegalArgumentException] {
-      MergeOps.changeFeed(spark, dir, 2L, 3L, "k", "p").collect()
+      MergeOps.changeFeed(spark, dir, 2L, 3L, "k").collect()
     }
     assert(e.getMessage.contains("retention floor"))
   }
@@ -62,7 +62,7 @@ class Wave25Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir, corpus(4), "k", "p")            // v1
     Versioned.publish(spark, dir, 2L, Nil)         // an emptied table
     val e = intercept[IllegalArgumentException] {
-      MergeOps.changeFeed(spark, dir, 1L, 2L, "k", "p").collect()
+      MergeOps.changeFeed(spark, dir, 1L, 2L, "k").collect()
     }
     assert(e.getMessage.contains("empty manifest"))
   }

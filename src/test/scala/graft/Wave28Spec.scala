@@ -29,7 +29,7 @@ class Wave28Spec extends SparkTestBase {
 
     def runStream(): Unit = {
       val q = StreamOps.feedMirrorMaintenance(
-          StreamOps.feedStream(spark, src, "k", "p", Some(0L)),
+          StreamOps.feedStream(spark, src, "k", Some(0L)),
           dst, "k", "p")
         .option("checkpointLocation", ck)
         .start()
@@ -72,7 +72,7 @@ class Wave28Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, src, corpus(5), "k", "p")            // v1
     def runOn(ck: String): Unit = {
       val q = StreamOps.feedMirrorMaintenance(
-          StreamOps.feedStream(spark, src, "k", "p", Some(0L)),
+          StreamOps.feedStream(spark, src, "k", Some(0L)),
           dst, "k", "p")
         .option("checkpointLocation", ck)
         .start()
@@ -97,7 +97,7 @@ class Wave28Spec extends SparkTestBase {
     val ck = freshDir("graft_feed_floor_ck")
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")            // v1
     def drain(): Option[Throwable] = {
-      val q = StreamOps.feedStream(spark, src, "k", "p", Some(0L))
+      val q = StreamOps.feedStream(spark, src, "k", Some(0L))
         .writeStream.outputMode("append")
         .option("checkpointLocation", ck)
         .format("parquet").option("path", out)
@@ -135,7 +135,7 @@ class Wave28Spec extends SparkTestBase {
     val ck2 = freshDir("graft_feed_floor_ck2")
     MergeOps.mergeUpsert(spark, src2, corpus(4), "k", "p")           // v1
     def drain2(): Option[Throwable] = {
-      val q = StreamOps.feedStream(spark, src2, "k", "p", Some(0L))
+      val q = StreamOps.feedStream(spark, src2, "k", Some(0L))
         .writeStream.outputMode("append")
         .option("checkpointLocation", ck2)
         .format("parquet").option("path", out2)
@@ -188,7 +188,7 @@ class Wave28Spec extends SparkTestBase {
     val ck = freshDir("graft_hw_ck")
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")
     val q = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L)),
+        StreamOps.feedStream(spark, src, "k", Some(0L)),
         dst, "k", "p")
       .option("checkpointLocation", ck)
       .start()
@@ -214,7 +214,7 @@ class Wave28Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")            // v1
     val out = freshDir("graft_feed_tail_out")
     val ck = freshDir("graft_feed_tail_ck")
-    val q = StreamOps.feedStream(spark, src, "k", "p")
+    val q = StreamOps.feedStream(spark, src, "k")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ck)
       .format("parquet").option("path", out)
@@ -232,7 +232,7 @@ class Wave28Spec extends SparkTestBase {
                  r.getString(3))).toSet
     assert(got === Set((2L, -2.0, "E", "update"), (9L, 90.0, "O", "insert")))
     // batch-path equivalence on the same range
-    val batch = MergeOps.changeFeed(spark, src, 1L, 2L, "k", "p")
+    val batch = MergeOps.changeFeed(spark, src, 1L, 2L, "k")
       .select("k", "v", "p", "change_type").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
                  r.getString(3))).toSet

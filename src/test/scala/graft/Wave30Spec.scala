@@ -103,7 +103,7 @@ class Wave30Spec extends SparkTestBase {
     MergeOps.syncMirror(spark, dir, dst, "k", "p")
     MergeOps.mergeUpdateMor(spark, dir, col("k") === 5,
       Seq("v" -> lit(555.0)), "k", "p")                              // v2
-    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k", "p")
+    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k")
       .select("k", "v", "change_type").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
     assert(feed === Set((5L, 555.0, "update")))

@@ -30,6 +30,13 @@ class Wave32Spec extends SparkTestBase {
       .toMicroBatchStream(meta).asInstanceOf[ChangeFeedStream]
   }
 
+  /** The offset the stream offers next when Spark's last logged
+    * offset is `start` (what MicroBatchExecution passes). */
+  private def latest(st: ChangeFeedStream, start: Long): Long =
+    st.latestOffset(FeedOffset(start),
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+      .json.trim.toLong
+
   /** Drain one planned range through the V2 reader factory —
     * (k, change_type) pairs at the (k, v, p, change_type) feed
     * schema. */
@@ -63,7 +70,7 @@ class Wave32Spec extends SparkTestBase {
     // the unpaced reference: the whole backlog as ONE batch
     val dstOne = freshDir("graft_pace_one")
     val q1 = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L)),
+        StreamOps.feedStream(spark, src, "k", Some(0L)),
         dstOne, "k", "p")
       .option("checkpointLocation", freshDir("graft_pace_ck1")).start()
     try q1.processAllAvailable() finally q1.stop()
@@ -76,7 +83,7 @@ class Wave32Spec extends SparkTestBase {
     val dst = freshDir("graft_pace_dst")
     val ck = freshDir("graft_pace_ck2")
     def paced() = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+        StreamOps.feedStream(spark, src, "k", Some(0L),
           maxVersionsPerTrigger = Some(2L)),
         dst, "k", "p")
       .option("checkpointLocation", ck)
@@ -110,9 +117,9 @@ class Wave32Spec extends SparkTestBase {
     val meta = freshDir("graft_base_meta")
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")            // v1
     def create() = createStream(meta,
-      Map("dir" -> src, "keycol" -> "k", "partcol" -> "p"))
+      Map("dir" -> src, "keycol" -> "k"))
     val s1 = create()   // default mode: base = current at FIRST creation
-    assert(s1.latestOffset().json.trim.toLong == 1L,
+    assert(latest(s1, s1.initialOffset().json.trim.toLong) == 1L,
       "nothing past the base yet — latest stays at the base")
     // the table advances while the offset 3 is (conceptually) logged
     // but the sink never committed — then the source is re-created
@@ -129,7 +136,7 @@ class Wave32Spec extends SparkTestBase {
     // the second drain re-serves the _SUCCESS-marked staged bytes
     val meta2 = freshDir("graft_base_meta2")
     def createAt0() = createStream(meta2,
-      Map("dir" -> src, "keycol" -> "k", "partcol" -> "p",
+      Map("dir" -> src, "keycol" -> "k",
           "startversion" -> "0"))
     def bootCount(): Long = drain(createAt0(), 0L, 3L).size.toLong
     assert(bootCount() == 6L, "bootstrap replay must emit the full snapshot")
@@ -150,7 +157,7 @@ class Wave32Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, src,
       Seq((6L, 60.0, "E")).toDF("k", "v", "p"), "k", "p")            // v3
     def create() = createStream(meta,
-      Map("dir" -> src, "keycol" -> "k", "partcol" -> "p",
+      Map("dir" -> src, "keycol" -> "k",
           "starttag" -> "hw"))
     val s1 = create()
     assert(s1.initialOffset().json.trim.toLong == 1L,
@@ -167,7 +174,7 @@ class Wave32Spec extends SparkTestBase {
     // an unknown tag fails loudly with the live tag list
     val e = intercept[IllegalArgumentException] {
       createStream(freshDir("graft_tag_m2"),
-        Map("dir" -> src, "keycol" -> "k", "partcol" -> "p",
+        Map("dir" -> src, "keycol" -> "k",
             "starttag" -> "ghost"))
     }
     assert(e.getMessage.contains("no tag 'ghost'") &&
@@ -183,7 +190,7 @@ class Wave32Spec extends SparkTestBase {
     val ck = freshDir("graft_evo_ck")
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")            // v1
     def start() = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L)),
+        StreamOps.feedStream(spark, src, "k", Some(0L)),
         dst, "k", "p")
       .option("checkpointLocation", ck).start()
     // ONE live query across the evolution: its source pinned the
@@ -235,15 +242,15 @@ class Wave32Spec extends SparkTestBase {
           .toDF("k", "v", "p"), "k", "p")
     }
     def create() = createStream(meta,
-      Map("dir" -> src, "keycol" -> "k", "partcol" -> "p",
+      Map("dir" -> src, "keycol" -> "k",
           "startversion" -> "0", "maxversionspertrigger" -> "2"))
     val s1 = create()
-    assert(s1.latestOffset().json.trim == "2")
-    assert(s1.latestOffset().json.trim == "4")
-    // clean restart after both batches committed: nothing replays, so
-    // only the persisted marker can carry the floor
+    assert(latest(s1, s1.initialOffset().json.trim.toLong) == 2L)
+    assert(latest(s1, 2L) == 4L)
+    // clean restart after both batches committed: nothing replays, and
+    // the floor is the last logged offset Spark passes as `start`
     val s2 = create()
-    val first = s2.latestOffset().json.trim.toLong
+    val first = latest(s2, 4L)
     assert(first == 5L,
       s"the re-created source must offer past the high-water 4 " +
         s"(the next bounded slice), not regress to base+2=2; got $first")
@@ -268,7 +275,7 @@ class Wave32Spec extends SparkTestBase {
     val ck = freshDir("graft_hw_once_ck")
     def once() = {
       val q = StreamOps.feedMirrorMaintenance(
-          StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+          StreamOps.feedStream(spark, src, "k", Some(0L),
             maxVersionsPerTrigger = Some(2L)),
           dst, "k", "p")
         .option("checkpointLocation", ck)
@@ -280,6 +287,8 @@ class Wave32Spec extends SparkTestBase {
       "three clean Once runs must drain the 5-version backlog")
     assert(Versioned.currentVersion(spark, dst).contains(3L),
       "each clean run must land exactly one bounded mirror commit")
+    assert(!new java.io.File(ck, "graft-feed-hw").exists,
+      "the floor is Spark's offset log: the source writes no marker")
   }
 
   test("Trigger.AvailableNow drains a PACED backlog fully in one run: " +
@@ -296,7 +305,7 @@ class Wave32Spec extends SparkTestBase {
     }
     val dst = freshDir("graft_an_dst")
     val q = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+        StreamOps.feedStream(spark, src, "k", Some(0L),
           maxVersionsPerTrigger = Some(2L)),
         dst, "k", "p")
       .option("checkpointLocation", freshDir("graft_an_ck"))
@@ -328,7 +337,7 @@ class Wave32Spec extends SparkTestBase {
     val dst = freshDir("graft_bp_dst")
     val ck = freshDir("graft_bp_ck")
     def paced() = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+        StreamOps.feedStream(spark, src, "k", Some(0L),
           maxBytesPerTrigger = Some(1L)),
         dst, "k", "p")
       .option("checkpointLocation", ck)
@@ -341,8 +350,8 @@ class Wave32Spec extends SparkTestBase {
       .toMap
     assert(readAll(dst) === srcAtV1,
       "the first byte-paced batch must stop at the first version")
-    // mid-backlog clean restart: the floor persisted, so the remaining
-    // four versions drain as four more bounded batches
+    // mid-backlog clean restart: the offset log holds the floor, so
+    // the remaining four versions drain as four more bounded batches
     val q2 = paced().start()
     try q2.processAllAvailable() finally q2.stop()
     assert(readAll(dst) === readAll(src))
@@ -352,7 +361,7 @@ class Wave32Spec extends SparkTestBase {
     // huge cap: the whole backlog coalesces into ONE batch
     val dstAll = freshDir("graft_bp_all")
     val qAll = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+        StreamOps.feedStream(spark, src, "k", Some(0L),
           maxBytesPerTrigger = Some(Long.MaxValue / 2)),
         dstAll, "k", "p")
       .option("checkpointLocation", freshDir("graft_bp_all_ck")).start()
@@ -364,7 +373,7 @@ class Wave32Spec extends SparkTestBase {
     // the version-paced min — 3 mirror commits (0→2, 2→4, 4→5)
     val dstMin = freshDir("graft_bp_min")
     val qMin = StreamOps.feedMirrorMaintenance(
-        StreamOps.feedStream(spark, src, "k", "p", Some(0L),
+        StreamOps.feedStream(spark, src, "k", Some(0L),
           maxVersionsPerTrigger = Some(2L),
           maxBytesPerTrigger = Some(Long.MaxValue / 2)),
         dstMin, "k", "p")

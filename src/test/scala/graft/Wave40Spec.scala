@@ -61,7 +61,7 @@ class Wave40Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, src, corpus(4), "k", "p")            // v1
     MergeOps.mergeUpsert(spark, src,
       Seq((5L, 50.0, "O")).toDF("k", "v", "p"), "k", "p")            // v2
-    val opts = Map("dir" -> src, "keycol" -> "k", "partcol" -> "p",
+    val opts = Map("dir" -> src, "keycol" -> "k",
                    "startversion" -> "1")
     val narrowSchema = new ChangeFeedSourceProvider()
       .inferSchema(new CaseInsensitiveStringMap(opts.asJava))

@@ -130,7 +130,7 @@ class Wave41Spec extends SparkTestBase {
     def runOnce(): Unit = {
       val q = spark.readStream
         .format("graft.streaming.ChangeFeedSourceProvider")
-        .option("dir", dir).option("keyCol", "k").option("partCol", "p")
+        .option("dir", dir).option("keyCol", "k")
         .option("startVersion", "0")
         .option("maxVersionsPerTrigger", "1")
         .option("pinRetention", "true")

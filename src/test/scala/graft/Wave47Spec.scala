@@ -63,6 +63,29 @@ class Wave47Spec extends SparkTestBase {
       "INSERT stays the store's upsert after materialization")
   }
 
+  test("an INSERT of zero rows into a created table commits nothing: " +
+       "the table still reads empty at its declared schema, a later " +
+       "one-row INSERT lands, and DROP TABLE works") {
+    val tbl = "graft_w47_zero"
+    val dir = clean(tbl)
+    register()
+    spark.sql(s"CREATE TABLE graft.$tbl (k BIGINT, v DOUBLE, p STRING) " +
+      "PARTITIONED BY (p) TBLPROPERTIES('keyCol'='k')")
+    spark.sql(s"INSERT INTO graft.$tbl SELECT * FROM VALUES " +
+      "(CAST(1 AS BIGINT), 1.0D, 'O') AS t(k, v, p) WHERE false")
+    assert(Versioned.currentVersion(spark, dir).isEmpty,
+      "an empty first write must leave the table pending")
+    val empty = spark.sql(s"SELECT * FROM graft.$tbl")
+    assert(empty.columns.toSeq === Seq("k", "v", "p"))
+    assert(empty.count() === 0L)
+    spark.sql(s"INSERT INTO graft.$tbl VALUES (1, 1.0, 'O')")
+    assert(spark.sql(s"SELECT k, v FROM graft.$tbl").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq === Seq(1L -> 1.0))
+    spark.sql(s"DROP TABLE graft.$tbl")
+    assert(!spark.sql("SHOW TABLES IN graft").collect()
+      .exists(_.getString(1) == tbl))
+  }
+
   test("CREATE TABLE contract checks are loud: no partition column, " +
        "multiple partition columns, and a partition column missing " +
        "from the schema all fail before anything persists") {

@@ -76,6 +76,27 @@ class Wave57Spec extends SparkTestBase {
       s"only the change after the tagged version streams: ${got.toSeq}")
   }
 
+  test("readStream.table streams a whole-table store's bootstrap with " +
+       "no partCol option: the layout comes from the manifest") {
+    val dir = freshDir("graft_door_flat")
+    val tbl = new java.io.File(dir).getName
+    MergeOps.mergeScd2(spark, dir,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "attr"), "k", Seq("attr"), 1L)
+    MergeOps.setTableProperties(spark, dir, Map("keyCol" -> "k"))
+    assert(Versioned.partColOf(Versioned.manifest(spark, dir, 2L)).isEmpty,
+      "precondition: an unpartitioned store")
+    register(tmpRoot)
+    val q = spark.readStream.table(s"gdoor.`$tbl`")
+      .writeStream.format("memory").queryName("graft_door_flat")
+      .option("checkpointLocation", freshDir("graft_door_flat_ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.table("graft_door_flat")
+      .select("k", "attr").as[(Long, String)].collect().toSet
+    assert(got == Set((1L, "a"), (2L, "b")),
+      s"the bootstrap must stream every row: $got")
+  }
+
   test("the catalog reads its root per call: a later root change " +
        "resolves tables that exist only under the new root") {
     val rootA = freshDir("graft_door_rootA")
@@ -100,13 +121,13 @@ class Wave57Spec extends SparkTestBase {
     assert(Versioned.manifest(spark, dir, 1L) ==
              Versioned.manifest(spark, dir, 2L),
       "precondition: a MOR delete leaves the manifest unchanged")
-    val log = MergeOps.changelog(spark, dir, 1L, 2L, "k", "p", "v")
+    val log = MergeOps.changelog(spark, dir, 1L, 2L, "k", "v")
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("change"),
         r.getAs[Any]("old_value"), r.getAs[Any]("new_value")))
       .sortBy(_._1).toSeq
     assert(log == Seq((2L, "delete", 20.0, null), (3L, "delete", 30.0, null)),
       s"changelog rows: $log")
-    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k", "p")
+    val feed = MergeOps.changeFeed(spark, dir, 1L, 2L, "k")
       .select("k", "change_type").as[(Long, String)].collect()
       .sortBy(_._1).toSeq
     assert(feed == Seq((2L, "delete"), (3L, "delete")), s"feed rows: $feed")
@@ -129,7 +150,7 @@ class Wave57Spec extends SparkTestBase {
     MergeOps.mergeUpsert(spark, dir,
       Seq((2L, 2.5, "A"), (3L, 3.0, "A")).toDF("k", "v", "p"),
       "k", "p")                                                      // v2
-    val log = MergeOps.changelog(spark, dir, 1L, 2L, "k", "p", "v")
+    val log = MergeOps.changelog(spark, dir, 1L, 2L, "k", "v")
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("change"),
         r.getAs[Any]("old_value"), r.getAs[Any]("new_value")))
       .sortBy(_._1).toSeq
